@@ -32,6 +32,29 @@ object CsvIngestJob {
   final case class Ok(outputPath: String, rows: Long) extends IngestResult
   final case class Failed(error: String) extends IngestResult
 
+  /** List the concrete data files behind an input path, in name order,
+    * and read each one's first line (driver-side, metadata scale) —
+    * header validation must check EVERY arriving file like the
+    * reference's per-object invocation did; a distributed limit(1) would
+    * check one arbitrary split. Like Spark's own listing, names starting
+    * with `_` or `.` (`_SUCCESS`, checksums) are not data. */
+  private def fileHeaders(spark: SparkSession, inPath: String): Seq[(String, Option[String])] = {
+    val p = new org.apache.hadoop.fs.Path(inPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      if (fs.getFileStatus(p).isDirectory)
+        fs.listStatus(p).filter(_.isFile).map(_.getPath)
+          .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+          .sortBy(_.getName).toSeq
+      else Seq(p)
+    // lazy: promote only needs the first header
+    files.to(LazyList).map { f =>
+      val in = new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(f), "UTF-8"))
+      try f.toString -> Option(in.readLine())
+      finally in.close()
+    }
+  }
+
   /** Faithful line-level ingest: text in → massaged text out.
     *
     * @param singleFile coalesce output to one part, preserving the
@@ -39,24 +62,6 @@ object CsvIngestJob {
     *   (`CSVIngest.java:265-269`). Leave false at scale — order of the
     *   processed zone is not semantically meaningful to the engine.
     */
-  /** List the concrete files behind an input path (driver-side, metadata
-    * scale) and read each one's first line — header validation must check
-    * EVERY arriving file like the reference's per-object invocation did;
-    * a distributed limit(1) would check one arbitrary split. */
-  private def fileHeaders(spark: SparkSession, inPath: String): Seq[(String, Option[String])] = {
-    val p = new org.apache.hadoop.fs.Path(inPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(_.isFile).map(_.getPath).toSeq
-      else Seq(p)
-    files.map { f =>
-      val in = new java.io.BufferedReader(new java.io.InputStreamReader(fs.open(f), "UTF-8"))
-      try f.toString -> Option(in.readLine())
-      finally in.close()
-    }
-  }
-
   def massageFile(spark: SparkSession, inPath: String, outPath: String,
                   mode: IngestMode = IngestMode.Actual,
                   manifest: Option[SchemaManifest] = None,
@@ -102,11 +107,17 @@ object CsvIngestJob {
               quarantineDir: Option[String] = None): IngestResult =
     try {
       val rawSchema = StructType(manifest.keys.map(StructField(_, StringType, nullable = true)))
+      // the header is the first line of the first file; CSV `header=true`
+      // would instead drop the first line of EVERY file, and every part of
+      // a multi-part massaged zone but the first starts with data. So
+      // lines equal to the header are dropped (as Spark's CSV parse of a
+      // Dataset[String] does) — a driver-side read, no extra Spark job
+      val header = fileHeaders(spark, inPath).flatMap(_._2).headOption
+      val lines = spark.read.textFile(inPath)
       val parsed: DataFrame = spark.read
-        .option("header", "true")
         .option("mode", "PERMISSIVE")
         .schema(rawSchema)
-        .csv(inPath)
+        .csv(header.fold(lines)(h => lines.filter(col("value") =!= h)))
       val good = quarantineDir match {
         // strict path: under ANSI a malformed value fails the job (-> Failed),
         // which is the right default when no quarantine is provided

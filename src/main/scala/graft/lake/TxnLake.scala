@@ -510,8 +510,8 @@ object TxnLake {
     * null counts, persisted as a versioned artifact in the log and
     * served to the planner by [[TxnCboStats]] with zero data I/O per
     * query. Deliberately NOT per-commit work: folding sketches through
-    * every commit would re-tax the write path the footer fast path
-    * just got off the job queue — stats refresh is a maintenance
+    * every commit would re-tax the staging write, whose per-file
+    * stats ride the write's own tasks — stats refresh is a maintenance
     * action, like OPTIMIZE, and the artifact records the snapshot
     * version it measured so staleness is inspectable
     * (SHOW TBLPROPERTIES `graft.stats.*`). */
@@ -1556,10 +1556,10 @@ object TxnLake {
     * Returns the number of rows deleted (0 = nothing matched, no
     * commit published). */
   /** Per-table-file doomed-row counts of a just-written DV sidecar —
-    * (file, n) pairs. FOOTER FAST PATH first (the stageFiles
-    * discipline): the sidecar was repartitioned by `file` and written
-    * without a row cap, so each part file usually holds exactly one
-    * `file` value — its footer then gives the value (string min==max,
+    * (file, n) pairs. FOOTER FAST PATH first: the sidecar was
+    * repartitioned by `file` and written without a row cap, so each
+    * part file usually holds exactly one `file` value — its footer
+    * then gives the value (string min==max,
     * zero nulls) and the count (block row counts) with no Spark job.
     * Any ambiguous part (several table files hashed into one
     * partition, missing stats) falls back to the read-back aggregate,
@@ -4812,8 +4812,10 @@ object TxnLake {
     * `partitionBy` on a DUPLICATE of the column splits files per value
     * — Spark's writer handles directory-name escaping, while the
     * original column stays in the data files, which explicit-file-list
-    * snapshot reads require. The per-file partition values come from
-    * ONE metadata-scale job over `_metadata.file_path`. */
+    * snapshot reads require. The manifest fields — partition values,
+    * rows, zone maps, blooms — come from a [[FileStatsTracker]] fed by
+    * the write itself, so staging is the write's job(s) and nothing
+    * else. */
   private[lake] def stageFiles(spark: SparkSession, dir: String, df: DataFrame,
                          partCol: String, partHint: Int,
                          statsCol: Option[String] = None,
@@ -4894,19 +4896,6 @@ object TxnLake {
           .drop(names: _*)
       }
     }
-    val writer = arranged.write.mode(SaveMode.ErrorIfExists)
-    maxRecs.fold(writer)(m => writer.option("maxRecordsPerFile", m))
-      .partitionBy("__txn_pk").parquet(dataDir)
-    // empty input detection AFTER the write (an fs glob, no Spark job):
-    // the old `df.isEmpty` pre-check was a whole extra job that re-ran
-    // the caller's update pipeline — measured as a real slice of the
-    // ~44-job lk04 commit chains
-    val fsStage = fsOf(spark, dir)
-    val wrote = fsStage.globStatus(new Path(s"$dataDir/*/*.parquet"))
-    if (wrote == null || wrote.isEmpty) {
-      fsStage.delete(new Path(dataDir), true)
-      return Seq.empty
-    }
     // multi-column zone maps: the table's stats-columns property adds
     // per-file bounds for each named column present in this staging
     // (absent columns — post-drop appends — just record no bounds).
@@ -4922,300 +4911,57 @@ object TxnLake {
     val extraStats = statsColsOf(fsOf(spark, dir), dir)
       .filter(c => df.columns.contains(c) && trackable(df.schema(c).dataType))
       .filterNot(statsCol.contains)
-    // the zmin/zmax extraction below keys off THIS flag, not bare
-    // statsCol.isDefined: a non-trackable (string/bool) stats column
-    // contributes no __mn/__mx agg columns, and reading them anyway
-    // would throw on every commit of such a table
+    // a non-trackable (string/bool) stats column records no zone map
     val zTracked = statsCol.exists(sc => trackable(df.schema(sc).dataType))
-    // FOOTER FAST PATH: the files this commit just wrote already carry
-    // everything the manifest needs — block row counts, per-chunk typed
-    // min/max, null counts — so per-file rows, partition values and
-    // zone maps come from O(files) driver-side FOOTER reads, and the
-    // read-back aggregate below (a whole extra Spark job per commit,
-    // the dominant slice of the r14 bench's 120 s multi-commit build
-    // phase) never launches. The fallback job remains for every shape
-    // footers cannot serve EXACTLY: bloom filters (row-level hashing),
-    // INT96 timestamps (no stats written), NaN-poisoned float chunks,
-    // a token-collision file mixing partition values, exotic partition
-    // value types — [[entriesFromFooters]] returns None and the agg
-    // path answers, so the fast path can only ever skip work, never
-    // change an answer. Commits minting MANY files (a big OPTIMIZE)
-    // also fall back: one Spark job amortizes better than thousands of
-    // serial footer round-trips on an object store.
-    // `spark.graft.txnlake.footerStats=false` forces the aggregate path
-    // — the A/B seam the equivalence spec drives, and an escape hatch
-    // should a writer/footer mismatch ever surface in the field
-    val footerStatsOn = spark.conf
-      .getOption("spark.graft.txnlake.footerStats").forall(_.toBoolean)
-    val fromFooters: Option[Seq[FileEntry]] =
-      if (!footerStatsOn || bloomCol.isDefined || wrote.length > 64) None
-      else entriesFromFooters(spark, dir, wrote, df.schema, partCol,
-        statsCol.filter(_ => zTracked), extraStats)
-    if (fromFooters.isDefined) return fromFooters.get
-    // metadata-scale jobs cover partition values AND (when tracked) the
-    // per-file zone map and Bloom bits: min/max ignore NULLs, so
-    // all-NULL files carry no bounds and readRange keeps them
-    // conservatively.
-    val staged = spark.read.parquet(dataDir)
-    val statByRel = wrote.map(s => dataRel(s.getPath.toUri.getPath) -> s).toMap
-    val aggCols =
-      statsCol.toSeq.filter(_ => zTracked).flatMap(sc => Seq(
-        min(col(sc).cast("double")).as("__mn"), max(col(sc).cast("double")).as("__mx"))) ++
-      extraStats.zipWithIndex.flatMap { case (c, i) => Seq(
-        min(col(c).cast("double")).as(s"__smn$i"), max(col(c).cast("double")).as(s"__smx$i")) }
-    val grouped = staged.groupBy(
-      col("_metadata.file_path").as("__fp"), col(partCol).as("__pv"))
-    // row counts ride the SAME metadata job (one extra agg column):
-    // per-file counts in the manifest make COUNT(*) a log-only read
-    // ([[rowCount]]) and give OPTIMIZE/bin-packing real sizes
-    val allAggs = aggCols :+ count(lit(1)).as("__n")
-    val meta = grouped.agg(allAggs.head, allAggs.tail: _*).collect()
-    // Bloom bits as a second NARROW pass: each row explodes into its k
-    // hash positions and a (file, word-index) bit_or folds them — work
-    // is O(rows × k), independent of the filter width (the previous
-    // one-column-per-word shape was O(rows × words) expression work and
-    // a 128-column codegen blob at 8K bits), and aggregation state
-    // stays O(set words) per file — never a collected position set.
-    val bloomWords: Map[String, Array[Long]] = bloomCol match {
-      case Some(bc) =>
-        val positions = (0 until BloomK).map(k =>
-          pmod(xxhash64(lit(k), col(bc)), lit(bloomBits.toLong)))
-        staged.select(col("_metadata.file_path").as("__fp"),
-            explode(array(positions: _*)).as("__bp"))
-          .groupBy(col("__fp"), expr("cast(__bp div 64 as int)").as("__wi"))
-          .agg(expr("bit_or(shiftleft(cast(1 as bigint), cast(__bp % 64 as int)))").as("__bw"))
-          .collect()
-          .groupBy(_.getString(0))
-          .map { case (fp, rs) =>
-            val words = new Array[Long](bloomBits / 64)
-            rs.foreach(r => words(r.getInt(1)) = r.getLong(2))
-            fp -> words
-          }
-      case None => Map.empty
+    // file statistics ride the write itself: the tracker sees every row
+    // the writer emits and keys its per-file stats by the path the
+    // commit protocol keeps, so the manifest needs no read-back job
+    val tracker = new FileStatsTracker(df.schema, partCol,
+      statsCol.filter(_ => zTracked).toSeq ++ extraStats,
+      bloomCol.map(_ -> bloomBits))
+    FileStatsTracker.writeParquet(spark, arranged, dataDir, "__txn_pk",
+      maxRecs.map(m => "maxRecordsPerFile" -> m.toString).toMap, tracker)
+    // empty input detection AFTER the write (an fs glob, no Spark job):
+    // the old `df.isEmpty` pre-check was a whole extra job that re-ran
+    // the caller's update pipeline — measured as a real slice of the
+    // ~44-job lk04 commit chains
+    val fsStage = fsOf(spark, dir)
+    val wrote = fsStage.globStatus(new Path(s"$dataDir/*/*.parquet"))
+    if (wrote == null || wrote.isEmpty) {
+      fsStage.delete(new Path(dataDir), true)
+      return Seq.empty
     }
-    meta.groupBy(_.getString(0))
-      .map { case (p, rows) =>
-        val relPath = dataRel(p)
-        val (zmin, zmax) =
-          if (zTracked) {
-            val mns = rows.flatMap(r => Option(r.getAs[Any]("__mn")).map(_.asInstanceOf[Double]))
-            val mxs = rows.flatMap(r => Option(r.getAs[Any]("__mx")).map(_.asInstanceOf[Double]))
-            (mns.minOption, mxs.maxOption)
-          } else (None, None)
-        val bloom = bloomCol.map { _ =>
-          bloomWords.getOrElse(p, new Array[Long](bloomBits / 64))
-            .map(java.lang.Long.toHexString).mkString(":")
-        }
-        val stats = extraStats.zipWithIndex.flatMap { case (c, i) =>
-          val mns = rows.flatMap(r => Option(r.getAs[Any](s"__smn$i")).map(_.asInstanceOf[Double]))
-          val mxs = rows.flatMap(r => Option(r.getAs[Any](s"__smx$i")).map(_.asInstanceOf[Double]))
-          (mns.minOption, mxs.maxOption) match {
-            case (Some(mn), Some(mx)) => Some(c -> (mn, mx))
-            case _ => None // all-NULL column in this file: no bounds
-          }
-        }.toMap
-        FileEntry(relPath, rows.map(r => render(r.get(1))).toSet, zmin, zmax,
-          bloom = bloom, spec = Some(partCol), stats = stats,
-          rows = Some(rows.map(_.getAs[Long]("__n")).sum),
-          // physical size + mtime from the staging glob — the same
-          // statuses the footer path reads; manifest-recorded bytes
-          // make DESCRIBE DETAIL / plan-time sizing log-only (Delta's
-          // per-file `size`/`modificationTime` fields), and mtime keeps
-          // `_metadata.file_modification_time` identical between the
-          // synthesized-status fast path and a real listing
-          bytes = statByRel.get(relPath).map(_.getLen),
-          mtime = statByRel.get(relPath).map(_.getModificationTime))
-      }
-      .toSeq.sortBy(_.path)
-  }
-
-  /** Manifest entries straight from the staged files' PARQUET FOOTERS —
-    * the commit-metadata fast path (no Spark job). Returns None when
-    * ANY file/column shape cannot be reproduced EXACTLY as the read-back
-    * aggregate would have computed it; the caller then runs that
-    * aggregate, so this path can only skip work, never change a recorded
-    * value. Exactness rules, per shape:
-    *
-    *   - rows: block row counts — always exact.
-    *   - partition value: the partCol chunk must be single-valued
-    *     (min == max, zero nulls → that value) or all-null (→ NULL);
-    *     a mixed or multi-valued chunk (64-bit token collision) falls
-    *     back, because the value SET is not enumerable from bounds.
-    *     Rendering must byte-match [[render]]'s `String.valueOf` of the
-    *     row object, so only types whose footer value prints identically
-    *     qualify (string/int-family/long/boolean/float/double).
-    *   - zone maps: min/max in the cast-to-double unit. Monotone casts
-    *     commute with min/max, so typed footer bounds cast AFTER the
-    *     fact equal the aggregate of cast values: int family and long
-    *     via toDouble, float/double directly (parquet pads zero bounds
-    *     to -0.0/+0.0 — normalized back, numerically identical),
-    *     decimals via unscaled×10^-scale (Decimal.toDouble semantics),
-    *     INT64 timestamps via their annotation unit → epoch seconds.
-    *     INT96 timestamps write NO stats — fall back. A chunk with
-    *     missing stats that is not provably all-null (NaN-poisoned
-    *     floats, truncated binaries) — fall back.
-    */
-  private[lake] def entriesFromFooters(spark: SparkSession, dir: String,
-                                 wrote: Array[org.apache.hadoop.fs.FileStatus],
-                                 schema: StructType, partCol: String,
-                                 zCol: Option[String],
-                                 extraStats: Seq[String]): Option[Seq[FileEntry]] = {
-    import org.apache.parquet.column.statistics.Statistics
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-
-    // typed chunk bounds -> the cast-to-double unit, or None if this
-    // primitive/annotation pair cannot be converted exactly
-    def boundsOf(st: Statistics[_],
-                 tpe: org.apache.parquet.schema.PrimitiveType): Option[(Double, Double)] = {
-      def dec(scale: Int, unscaledMin: java.math.BigInteger,
-              unscaledMax: java.math.BigInteger): Option[(Double, Double)] =
-        Some((new java.math.BigDecimal(unscaledMin, scale).doubleValue(),
-          new java.math.BigDecimal(unscaledMax, scale).doubleValue()))
-      def noNegZero(v: Double): Double = if (v == 0.0) 0.0 else v
-      (tpe.getPrimitiveTypeName, tpe.getLogicalTypeAnnotation) match {
-        case (INT32, d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
-          dec(d.getScale, java.math.BigInteger.valueOf(
-              st.genericGetMin.asInstanceOf[Integer].longValue()),
-            java.math.BigInteger.valueOf(
-              st.genericGetMax.asInstanceOf[Integer].longValue()))
-        case (INT64, d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
-          dec(d.getScale, java.math.BigInteger.valueOf(
-              st.genericGetMin.asInstanceOf[java.lang.Long].longValue()),
-            java.math.BigInteger.valueOf(
-              st.genericGetMax.asInstanceOf[java.lang.Long].longValue()))
-        case (FIXED_LEN_BYTE_ARRAY | BINARY,
-              d: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation) =>
-          dec(d.getScale,
-            new java.math.BigInteger(st.genericGetMin
-              .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes),
-            new java.math.BigInteger(st.genericGetMax
-              .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes))
-        case (INT64, t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
-          val div = t.getUnit match {
-            case LogicalTypeAnnotation.TimeUnit.MILLIS => 1e3
-            case LogicalTypeAnnotation.TimeUnit.MICROS => 1e6
-            case LogicalTypeAnnotation.TimeUnit.NANOS => 1e9
-          }
-          Some((st.genericGetMin.asInstanceOf[java.lang.Long].toDouble / div,
-            st.genericGetMax.asInstanceOf[java.lang.Long].toDouble / div))
-        case (INT32, _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) |
-             (INT32, null) =>
-          Some((st.genericGetMin.asInstanceOf[Integer].toDouble,
-            st.genericGetMax.asInstanceOf[Integer].toDouble))
-        case (INT64, _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) |
-             (INT64, null) =>
-          Some((st.genericGetMin.asInstanceOf[java.lang.Long].toDouble,
-            st.genericGetMax.asInstanceOf[java.lang.Long].toDouble))
-        case (FLOAT, _) =>
-          Some((noNegZero(st.genericGetMin.asInstanceOf[java.lang.Float].toDouble),
-            noNegZero(st.genericGetMax.asInstanceOf[java.lang.Float].toDouble)))
-        case (DOUBLE, _) =>
-          Some((noNegZero(st.genericGetMin.asInstanceOf[java.lang.Double].doubleValue()),
-            noNegZero(st.genericGetMax.asInstanceOf[java.lang.Double].doubleValue())))
-        case _ => None
-      }
-    }
-
-    // footer value -> render()'s String.valueOf of the row object; None
-    // if this type's print form is not reproducible from the footer
-    def renderOf(v: AnyRef,
-                 tpe: org.apache.parquet.schema.PrimitiveType): Option[String] =
-      (tpe.getPrimitiveTypeName, tpe.getLogicalTypeAnnotation) match {
-        case (BINARY, _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-          Some(v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-        case (INT32, _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) |
-             (INT32, null) => Some(String.valueOf(v.asInstanceOf[Integer].intValue()))
-        case (INT64, _: LogicalTypeAnnotation.IntLogicalTypeAnnotation) |
-             (INT64, null) => Some(String.valueOf(v.asInstanceOf[java.lang.Long].longValue()))
-        case (BOOLEAN, _) => Some(String.valueOf(v.asInstanceOf[java.lang.Boolean]))
-        case (FLOAT, _) => Some(String.valueOf(v.asInstanceOf[java.lang.Float].floatValue()))
-        case (DOUBLE, _) => Some(String.valueOf(v.asInstanceOf[java.lang.Double].doubleValue()))
-        case _ => None
-      }
-
-    val tracked: Seq[String] = zCol.toSeq ++ extraStats
-    val out = Seq.newBuilder[FileEntry]
-    for (fst <- wrote) {
-      val reader =
-        try org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(fst, conf))
-        catch { case _: Exception => return None }
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        // per needed column: (chunk stats, primitive type) per block;
-        // a chunk is usable if stats exist with null count set
-        def chunksFor(name: String) = blocks.map(b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == name))
-        // ---- partition value ----
-        val partChunks = chunksFor(partCol)
-        if (partChunks.exists(_.isEmpty)) return None
-        val pcs = partChunks.map(_.get)
-        val pNulls = pcs.map { c =>
-          val st = c.getStatistics
-          if (st == null || !st.isNumNullsSet) -1L else st.getNumNulls
-        }
-        if (pNulls.contains(-1L)) return None
-        val parts: Set[Option[String]] =
-          if (pNulls.sum == rows) Set(None)
-          else if (pNulls.sum == 0L) {
-            val rendered = pcs.map { c =>
-              val st = c.getStatistics
-              if (st == null || !st.hasNonNullValue) None
-              else if (st.genericGetMin != st.genericGetMax) None
-              else renderOf(st.genericGetMin.asInstanceOf[AnyRef], c.getPrimitiveType)
-            }
-            if (rendered.exists(_.isEmpty)) return None
-            val distinct = rendered.flatten.distinct
-            if (distinct.size != 1) return None // multi-valued across blocks
-            Set(Some(distinct.head))
-          } else return None // mixed null + value: set not enumerable
-        // ---- zone maps ----
-        val boundsByCol = tracked.map { name =>
-          val chunks = chunksFor(name)
-          if (chunks.exists(_.isEmpty)) name -> Left(())
-          else {
-            // per block: Left = not exactly reproducible (fall back);
-            // Right(None) = provably all-null (contributes no bounds);
-            // Right(Some(b)) = typed bounds in the cast-to-double unit
-            val perBlock: Seq[Either[Unit, Option[(Double, Double)]]] =
-              blocks.zip(chunks.map(_.get)).map { case (b, c) =>
-                val st = c.getStatistics
-                if (st == null || !st.isNumNullsSet) Left(())
-                else if (st.hasNonNullValue)
-                  boundsOf(st, c.getPrimitiveType) match {
-                    case Some(bd) => Right(Some(bd))
-                    case None => Left(())
-                  }
-                else if (st.getNumNulls == b.getRowCount) Right(None)
-                else Left(()) // stats dropped (INT96 / NaN) — not provably all-null
-              }
-            if (perBlock.exists(_.isLeft)) name -> Left(())
-            else {
-              val bs = perBlock.flatMap(_.toOption.flatten)
-              name -> Right(
-                if (bs.isEmpty) None
-                else Some((bs.map(_._1).min, bs.map(_._2).max)))
-            }
-          }
-        }.toMap
-        if (boundsByCol.values.exists(_.isLeft)) return None
-        def colBounds(name: String): Option[(Double, Double)] =
-          boundsByCol(name).toOption.flatten
-        val (zmin, zmax) = zCol.flatMap(colBounds) match {
-          case Some((lo, hi)) => (Some(lo), Some(hi))
-          case None => (None, None)
-        }
-        val stats = extraStats.flatMap(c => colBounds(c).map(c -> _)).toMap
-        out += FileEntry(dataRel(fst.getPath.toUri.getPath), parts, zmin, zmax,
-          spec = Some(partCol), stats = stats, rows = Some(rows),
-          bytes = Some(fst.getLen), mtime = Some(fst.getModificationTime))
-      } finally reader.close()
-    }
-    Some(out.result().sortBy(_.path))
+    val byFile = tracker.files
+    val keys = wrote.map(st => FileStatsTracker.fileKey(st.getPath.toString))
+    if (keys.toSet != byFile.keySet)
+      throw new IllegalStateException(s"staged files under $dataDir do not match the " +
+        s"files the write reported: listed ${keys.sorted.mkString(",")}; " +
+        s"written ${byFile.keys.toSeq.sorted.mkString(",")}")
+    val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(df.schema(partCol).dataType)
+    val zBounds = if (zTracked) 1 else 0
+    wrote.zip(keys).map { case (st, key) =>
+      val f = byFile(key)
+      // min/max ignore NULLs, so all-NULL files carry no bounds and the
+      // range readers keep them conservatively
+      val z = if (zTracked) f.bounds(0) else None
+      val stats = extraStats.zipWithIndex.flatMap { case (c, i) =>
+        f.bounds(zBounds + i).map(c -> _)
+      }.toMap
+      FileEntry(dataRel(st.getPath.toUri.getPath),
+        f.parts.iterator.map(v => render(toScala(v))).toSet, z.map(_._1), z.map(_._2),
+        bloom = Option(f.words).map(_.map(java.lang.Long.toHexString).mkString(":")),
+        spec = Some(partCol), stats = stats,
+        // per-file counts in the manifest make COUNT(*) a log-only read
+        // ([[rowCount]]) and give OPTIMIZE/bin-packing real sizes
+        rows = Some(f.rows),
+        // physical size + mtime from the staging glob; manifest-recorded
+        // bytes make DESCRIBE DETAIL / plan-time sizing log-only (Delta's
+        // per-file `size`/`modificationTime` fields), and mtime keeps
+        // `_metadata.file_modification_time` identical between the
+        // synthesized-status fast path and a real listing
+        bytes = Some(st.getLen), mtime = Some(st.getModificationTime))
+    }.toSeq.sortBy(_.path)
   }
 
   /** Bloom geometry: `bloomBits` bits (a per-table knob, default 1024
@@ -5223,25 +4969,26 @@ object TxnLake {
     * xxhash64 probes — false-positive rate ≈ (1-e^(-4n/m))^4, under 1%
     * while a file's distinct-value count n stays below ~m/10. The
     * serialized form is self-describing (bit count = 64 × word count),
-    * so readers never consult the manifest knob. [[bloomPositionsOf]]
-    * MUST stay in lockstep with the staging expression. */
+    * so readers never consult the manifest knob. */
   private[lake] val DefaultBloomBits = 1024
   private[lake] val BloomK = 4
 
-  /** The k bit positions a string value sets in an `m`-bit bloom —
-    * driver-side mirror of the staged `xxhash64(lit(k), col)`
-    * expression (same Catalyst XxHash64, same default seed), evaluated
-    * on literals at planning time. */
-  private[graft] def bloomPositionsOf(v: String, bits: Int): Seq[Int] = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal => CLit, XxHash64}
-    import org.apache.spark.unsafe.types.UTF8String
-    (0 until BloomK).map { k =>
-      val h = new XxHash64(Seq(CLit(k, org.apache.spark.sql.types.IntegerType),
-        CLit(UTF8String.fromString(v), org.apache.spark.sql.types.StringType)))
-        .eval(null).asInstanceOf[Long]
-      java.lang.Math.floorMod(h, bits.toLong).toInt
-    }
-  }
+  // probe k hashes with seed xxhash64(k): Spark's `xxhash64(lit(k), v)`
+  // chains its arguments from the default seed 42
+  private val BloomSeeds: Array[Long] = Array.tabulate(BloomK)(k =>
+    org.apache.spark.sql.catalyst.expressions.XxHash64Function
+      .hash(k, org.apache.spark.sql.types.IntegerType, 42L))
+
+  /** The k bit positions a string value sets in an `bits`-bit bloom —
+    * the one definition, used by the staging write for every row and by
+    * the readers for every probed literal. Equal to Spark's
+    * `pmod(xxhash64(lit(k), v), bits)` for k < [[BloomK]]; a NULL value
+    * hashes as the seed alone and still sets bits. */
+  private[graft] def bloomPositionsOf(v: org.apache.spark.unsafe.types.UTF8String,
+                                      bits: Int): Array[Int] =
+    BloomSeeds.map(seed => java.lang.Math.floorMod(
+      org.apache.spark.sql.catalyst.expressions.XxHash64Function
+        .hash(v, org.apache.spark.sql.types.StringType, seed), bits.toLong).toInt)
 
   /** Whether a file's serialized bloom POSSIBLY contains `v` (absent
     * bloom = conservatively yes; the word count carries the bit
@@ -5252,9 +4999,16 @@ object TxnLake {
       case Some(b) =>
         val words = b.split(":").map(java.lang.Long.parseUnsignedLong(_, 16))
         if (words.isEmpty) true
-        else bloomPositionsOf(v, words.length * 64)
-          .forall(p => (words(p / 64) & (1L << (p % 64))) != 0L)
+        else bloomPositionsOf(org.apache.spark.unsafe.types.UTF8String.fromString(v),
+            words.length * 64).forall(p => (words(p / 64) & (1L << (p % 64))) != 0L)
     }
+
+  /** Whether a file whose values lie in [mn, mx] may hold one in
+    * [lo, hi]. Negated comparisons, so a NaN bound keeps the file: a
+    * column holding NaN records max = NaN (Spark's `max`), and
+    * `mx >= lo` would be false for it. */
+  private[lake] def boundsMayOverlap(mn: Double, mx: Double, lo: Double, hi: Double): Boolean =
+    !(mx < lo) && !(mn > hi)
 
   /** ZONE-MAP range read: the snapshot restricted to `statsCol` ∈
     * [lo, hi] (inclusive), opening ONLY files whose manifest min/max
@@ -5270,7 +5024,7 @@ object TxnLake {
       s"$dir tracks no stats column — create(..., statsCol = Some(...)) to enable zone maps"))
     val keep = m.files.filter { f =>
       (f.zmin, f.zmax) match {
-        case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
+        case (Some(mn), Some(mx)) => boundsMayOverlap(mn, mx, lo, hi)
         case _ => true
       }
     }

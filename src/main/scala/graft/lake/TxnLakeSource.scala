@@ -430,7 +430,7 @@ private[lake] class TxnDvRelation(spark: SparkSession,
     val blooms = filters.flatMap(bloomValuesOf)
     manifest.files.filter { e =>
       val zoneOk = ranges.forall { case (cname, (lo, hi)) =>
-        boundsOf(e, cname).forall { case (mn, mx) => mx >= lo && mn <= hi }
+        boundsOf(e, cname).forall { case (mn, mx) => TxnLake.boundsMayOverlap(mn, mx, lo, hi) }
       }
       val partOk = !e.onSpec(manifest.partCol) ||
         psets.forall(s => e.parts.exists(s.contains))
@@ -491,7 +491,7 @@ private[graft] object TxnFileIndex {
       }
     }
     val zoneOk = colRanges.forall { case (cname, (lo, hi)) =>
-      boundsOf(cname).forall { case (mn, mx) => mx >= lo && mn <= hi }
+      boundsOf(cname).forall { case (mn, mx) => TxnLake.boundsMayOverlap(mn, mx, lo, hi) }
     }
     // legacy-spec files (pre-evolution layout) can't be value-pruned
     val partOk = !f.onSpec(partCol) ||
@@ -534,7 +534,8 @@ private[graft] object TxnFileIndex {
         .otherwise(zmn)
       val mx = Fn.when(hit, Fn.element_at(Fn.col("statsMax"), pos.cast("int")))
         .otherwise(zmx)
-      mn.isNull || mx.isNull || (mx >= lo && mn <= hi)
+      // NaN bounds keep the row, as in TxnLake.boundsMayOverlap
+      mn.isNull || mx.isNull || Fn.isnan(mn) || Fn.isnan(mx) || (mx >= lo && mn <= hi)
     }
     val partTests = if (partSets.isEmpty) Nil else {
       // fromCkptRow fills a null spec with the manifest default, so

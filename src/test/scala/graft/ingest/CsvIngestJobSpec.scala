@@ -115,4 +115,26 @@ class CsvIngestJobSpec extends AnyFunSuite with SparkTestSession {
     // partition pruning works against the promoted layout
     assert(back.where("BOROUGH = 'QN'").count() === 2)
   }
+
+  test("massageFile(singleFile=false) into several parts, then promote, keeps every row") {
+    val dir = tmpDir()
+    val header = "OBJECTID,the_geom,BOROUGH,Shape_area"
+    val rows = (1 to 600).map(i =>
+      s"""$i,"MULTIPOLYGON (((-73.80 40.79, -73.81 40.80)))",${if (i % 2 == 0) "QN" else "BK"},$i.5""")
+    val raw = dir.resolve("landmarks.csv")
+    Files.writeString(raw, (header +: rows).mkString("\n"))
+    val massaged = dir.resolve("processed").toString
+    val lake = dir.resolve("lake").toString
+    // a small split size so the one input file is massaged into several parts
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    try {
+      assert(CsvIngestJob.massageFile(spark, raw.toString, massaged, manifest = Some(manifest))
+        === CsvIngestJob.Ok(massaged, 601))
+      val parts = new java.io.File(massaged).listFiles().count(_.getName.startsWith("part-"))
+      assert(parts > 2, s"expected several massaged parts, got $parts")
+      assert(CsvIngestJob.promote(spark, massaged, lake, manifest) === CsvIngestJob.Ok(lake, 600))
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    val ids = spark.read.parquet(lake).select("OBJECTID").collect().map(_.getInt(0)).sorted
+    assert(ids.toSeq === (1 to 600))
+  }
 }

@@ -136,15 +136,6 @@ object BuildTaxProbe {
       val wrote = phase("  stage: glob")(
         fs.globStatus(new org.apache.hadoop.fs.Path(s"$dataDir/*/*.parquet")))
       println(s"[build-tax]   wrote ${wrote.length} files")
-      val extraStats = phase("  stage: statsColsOf")(
-        TxnLake.statsColsOf(fs, dir)
-          .filter(c => live.columns.contains(c))
-          .filterNot(base.statsCol.contains))
-      val ff = phase("  stage: entriesFromFooters") {
-        TxnLake.entriesFromFooters(spark, dir, wrote, arranged.schema, base.partCol,
-          base.statsCol, extraStats)
-      }
-      println(s"[build-tax]   footer path hit: ${ff.isDefined}")
       val newFiles = phase("  stageFiles (real, write+meta)") {
         TxnLake.stageFiles(spark, dir, live, base.partCol, base.files.size,
           base.statsCol, None, sortWithin = Seq(morton),

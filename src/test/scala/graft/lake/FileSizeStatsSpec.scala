@@ -9,10 +9,11 @@ import java.nio.file.Files
 /** Manifest-recorded FILE SIZES (the Delta per-file `size` field):
   * every staged entry carries the bytes the staging write produced, so
   * size questions — `DESCRIBE DETAIL`, the DV relation's plan-time
-  * `sizeInBytes` — are LOG-ONLY, no per-file stat sweep. Both staging
-  * paths (footer fast path and the read-back aggregate) must record
-  * them, they must survive checkpoints, and every consumer must go
-  * NULL/fallback — never guess — when a legacy entry lacks them. */
+  * `sizeInBytes` — are LOG-ONLY, no per-file stat sweep. Staging
+  * records them (FooterStatsSpec compares them with the file lengths
+  * for every staging shape), they must survive checkpoints, and every
+  * consumer must go NULL/fallback — never guess — when a legacy entry
+  * lacks them. */
 class FileSizeStatsSpec extends AnyFunSuite with SparkTestSession {
 
   private def freshDir(): String =
@@ -23,23 +24,6 @@ class FileSizeStatsSpec extends AnyFunSuite with SparkTestSession {
     TxnLake.create(spark, dir,
       (0 until n).map(i => (s"p${i % 3}", i.toLong, i * 1.0))
         .toDF("part", "id", "v"), "part", statsCol = Some("v"))
-  }
-
-  test("both staging paths record per-file bytes matching the filesystem") {
-    for (footer <- Seq("true", "false")) {
-      spark.conf.set("spark.graft.txnlake.footerStats", footer)
-      try {
-        val dir = freshDir()
-        mk(dir)
-        val m = TxnLake.resolve(spark, dir).get
-        assert(m.files.nonEmpty)
-        m.files.foreach { f =>
-          val real = new java.io.File(f.locate(dir)).length()
-          assert(f.bytes === Some(real),
-            s"entry bytes must equal the staged file's length (footerStats=$footer)")
-        }
-      } finally spark.conf.unset("spark.graft.txnlake.footerStats")
-    }
   }
 
   test("DESCRIBE DETAIL reports size_bytes from the log alone") {

@@ -1,149 +1,116 @@
 package graft.lake
 
 import graft.SparkTestSession
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
-/** The footer-metadata fast path (commit stats from parquet footers,
-  * zero Spark jobs) must be INVISIBLE: for every input shape it serves,
-  * the manifest it writes is field-for-field identical to what the
-  * read-back aggregate job would have written. The spec builds each
-  * table twice — once per path, via the
-  * `spark.graft.txnlake.footerStats` seam — and compares the resolved
-  * manifests modulo the nondeterministic identifiers (commit ids,
-  * file names). Shapes footers can NOT serve exactly must fall back,
-  * which the manifest comparison also proves (same fields either way).
-  */
+/** Commit file statistics have one source: the staging write's
+  * [[FileStatsTracker]]. For every input shape ([[StatsShapes]]) the
+  * manifest the table resolves to must equal, field for field, the
+  * reference recomputed from the staged files themselves — partition
+  * values, zone maps, stats-column bounds, rows, bytes, partition spec
+  * and the bloom strings byte for byte. */
 class FooterStatsSpec extends AnyFunSuite with SparkTestSession {
+  import StatsShapes._
 
   private def freshDir(): String =
     Files.createTempDirectory("graft_footerstats").resolve("t").toString
 
-  /** Manifest entries normalized for comparison: identifiers out,
-    * everything the engine prunes/plans on in. Sorted by the entry's
-    * content so file-name nondeterminism cannot reorder. */
-  private def shape(dir: String): Seq[(Set[Option[String]], Option[Double],
-      Option[Double], Map[String, (Double, Double)], Option[Long], Option[String])] =
-    TxnLake.resolve(spark, dir).get.files
-      .map(f => (f.parts, f.zmin, f.zmax, f.stats, f.rows, f.spec))
-      .sortBy(_.toString)
-
-  private def viaBoth(build: String => Unit): (String, String) = {
-    val (fast, slow) = (freshDir(), freshDir())
-    spark.conf.set("spark.graft.txnlake.footerStats", "true")
-    build(fast)
-    spark.conf.set("spark.graft.txnlake.footerStats", "false")
-    try build(slow)
-    finally spark.conf.unset("spark.graft.txnlake.footerStats")
-    (fast, slow)
+  private def assertMatchesReference(dir: String, shape: Shape): Seq[TxnLake.FileEntry] = {
+    val entries = TxnLake.resolve(spark, dir).get.files
+    assert(entries.nonEmpty)
+    assert(entries.map(fields).sortBy(_._1) ===
+      reference(spark, dir, shape, entries).sortBy(_._1))
+    assert(bloomsAdmitTheirValues(spark, dir, shape, entries))
+    entries
   }
 
-  private def assertSameManifest(build: String => Unit): Unit = {
-    val (fast, slow) = viaBoth(build)
-    assert(shape(fast) === shape(slow))
-    assert(TxnLake.read(spark, fast).orderBy(TxnLake.read(spark, fast).columns.map(col): _*).collect().toSeq ===
-      TxnLake.read(spark, slow).orderBy(TxnLake.read(spark, slow).columns.map(col): _*).collect().toSeq)
-  }
+  /** Create a table from `shape` (plus `appends` appended commits) and
+    * compare its manifest with the reference. */
+  private def check(shape: Shape, appends: Int = 0): Seq[TxnLake.FileEntry] =
+    withConf(spark, shape.conf) {
+      val dir = freshDir()
+      shape.create(spark, dir)
+      (1 to appends).foreach(_ => TxnLake.append(spark, dir, shape.data(spark)))
+      assertMatchesReference(dir, shape)
+    }
 
   test("numeric stats + string partition: identical manifests") {
-    import spark.implicits._
-    assertSameManifest { dir =>
-      TxnLake.create(spark, dir,
-        (0 until 200).map(i => (i.toLong, s"p${i % 3}", i * 1.5))
-          .toDF("id", "part", "v"), "part", statsCol = Some("v"))
-      TxnLake.append(spark, dir,
-        (200 until 260).map(i => (i.toLong, s"p${i % 3}", i * 1.5))
-          .toDF("id", "part", "v"))
-    }
+    check(numeric, appends = 1)
   }
 
   test("long partition column and negative/zero doubles: identical manifests") {
-    import spark.implicits._
-    assertSameManifest { dir =>
-      // doubles spanning -x..0..x: parquet pads zero bounds to -0.0/+0.0,
-      // which the footer path must normalize back to the aggregate's 0.0
-      TxnLake.create(spark, dir,
-        (-100 until 100).map(i => (i.toLong % 4, i.toLong, i.toDouble))
-          .toDF("part", "id", "v"), "part", statsCol = Some("v"))
-    }
+    check(longPart)
   }
 
   test("multi-column stats (setStatsColumns): identical manifests") {
-    import spark.implicits._
-    assertSameManifest { dir =>
-      TxnLake.create(spark, dir,
-        (0 until 100).map(i => (s"p${i % 2}", i.toLong, i * 0.5, i * 3))
-          .toDF("part", "id", "price", "qty"), "part", statsCol = Some("price"))
-      TxnLake.setStatsColumns(spark, dir, Seq("qty"))
-      TxnLake.append(spark, dir,
-        (100 until 160).map(i => (s"p${i % 2}", i.toLong, i * 0.5, i * 3))
-          .toDF("part", "id", "price", "qty"))
-    }
+    val entries = check(multiColumn, appends = 1)
+    assert(entries.forall(_.stats.contains("qty")))
   }
 
   test("nullable stats column incl. an all-null file: identical manifests") {
-    import spark.implicits._
-    assertSameManifest { dir =>
-      val withNulls = (0 until 60)
-        .map(i => (s"p${i % 2}", i.toLong,
-          if (i % 2 == 0) Some(i * 1.0) else None))
-        .toDF("part", "id", "v")
-      TxnLake.create(spark, dir, withNulls, "part", statsCol = Some("v"))
-      // p1 rows carry only null v -> that file must record NO bounds
-      val m = TxnLake.resolve(spark, dir).get
-      assert(m.files.exists(f => f.zmin.isEmpty && f.zmax.isEmpty),
-        "an all-null stats chunk must yield a bounds-free entry")
-    }
+    // p1 rows carry only null v -> that file must record NO bounds
+    assert(check(nullStats).exists(f => f.zmin.isEmpty && f.zmax.isEmpty),
+      "an all-null stats column must yield a bounds-free entry")
   }
 
   test("decimal stats column: identical manifests") {
-    import spark.implicits._
-    assertSameManifest { dir =>
-      TxnLake.create(spark, dir,
-        (0 until 80).map(i => (s"p${i % 2}", i.toLong, BigDecimal(i) * BigDecimal("1.25")))
-          .toDF("part", "id", "amt"), "part", statsCol = Some("amt"))
-    }
+    check(decimal)
   }
 
   test("timestamp stats column (INT96 writes no footer stats): falls back, identical manifests") {
-    import spark.implicits._
-    assertSameManifest { dir =>
-      TxnLake.create(spark, dir,
-        (0 until 50).map(i => (s"p${i % 2}", i.toLong,
-          java.sql.Timestamp.valueOf(s"2026-01-${i % 28 + 1} 10:00:00")))
-          .toDF("part", "id", "ts"), "part", statsCol = Some("ts"))
-      // the fallback must still record bounds (the agg path computes them)
-      val m = TxnLake.resolve(spark, dir).get
-      assert(m.files.forall(f => f.zmin.isDefined && f.zmax.isDefined),
-        "timestamp bounds must survive the footer fallback")
-    }
+    assert(check(int96).forall(f => f.zmin.isDefined && f.zmax.isDefined),
+      "INT96 timestamps must still record bounds")
   }
 
   test("null partition values: identical manifests") {
-    import spark.implicits._
-    assertSameManifest { dir =>
-      val df = (0 until 40)
-        .map(i => (if (i % 2 == 0) Some(s"p${i % 4}") else None, i.toLong))
-        .toDF("part", "id")
-      TxnLake.create(spark, dir, df, "part", statsCol = Some("id"))
-    }
+    assert(check(nullPartition).exists(_.parts.contains(None)))
   }
 
-  test("bloom-tracked table keeps the aggregate path: blooms recorded") {
-    import spark.implicits._
+  test("bloom-tracked table: bloom strings equal the reference byte for byte") {
+    assert(check(bloom, appends = 1).forall(_.bloom.isDefined))
+  }
+
+  test("NaN floats in partition and stats values: identical manifests") {
     val dir = freshDir()
-    TxnLake.create(spark, dir,
-      (0 until 50).map(i => (s"p${i % 2}", i.toLong, s"u$i"))
-        .toDF("part", "id", "user"), "part", bloomCol = Some("user"))
-    val m = TxnLake.resolve(spark, dir).get
-    assert(m.files.forall(_.bloom.isDefined),
-      "bloom bits require the row-level job — the footer path must not swallow them")
+    nanFloats.create(spark, dir)
+    val entries = assertMatchesReference(dir, nanFloats)
+    assert(entries.exists(_.parts == Set(Some("NaN"))))
+    assert(entries.exists(_.parts == Set(Some("0.0"))), "-0.0 records as 0.0")
+    assert(entries.exists(_.zmin.exists(_.isNaN)), "an all-NaN file's bounds are NaN")
+    // a NaN bound keeps its file: range reads equal a plain filter
+    val lake = spark.read.format("graft-txn").load(dir)
+    val plain = spark.read.parquet(entries.map(_.locate(dir)): _*)
+    for (p <- Seq(col("v") >= 0.5 && col("v") <= 20.0, col("v") >= 50.0))
+      assert(lake.filter(p).count() === plain.filter(p).count(), p.toString)
+    assert(TxnLake.readRange(spark, dir, 0.5, 20.0).count() ===
+      plain.filter(col("v").cast("double").between(0.5, 20.0)).count())
   }
 
-  test("zone-map pruning still fires on footer-derived bounds") {
+  test("forced token collision: one file records both partition values") {
+    assert(check(collision).exists(_.parts.size == 2),
+      "the fall-back instants share a token, so one file holds both")
+  }
+
+  test("NULL bloom values: identical manifests") {
+    check(nullBloom)
+  }
+
+  test("a commit of more than 64 files: identical manifests") {
+    assert(check(manyFiles).size === 70)
+  }
+
+  test("maxRecordsPerFile splits: every split file carries its own stats") {
+    assert(check(maxRecords).size === 6)
+  }
+
+  test("distributed (shuffled) staging: identical manifests") {
+    check(distributed, appends = 1)
+  }
+
+  test("zone-map pruning still fires on write-time bounds") {
     import spark.implicits._
     val dir = freshDir()
     def batch(base: Double) =
@@ -154,8 +121,9 @@ class FooterStatsSpec extends AnyFunSuite with SparkTestSession {
     val m = TxnLake.resolve(spark, dir).get
     assert(m.files.forall(f => f.zmin.isDefined && f.rows.exists(_ > 0)))
     val hit = spark.read.format("graft-txn").load(dir).filter(col("v") >= 2000.0)
+    assert(scannedFiles(hit) === 2L, "only the last commit's two files hold v >= 2000")
     assert(hit.count() === 20)
     assert(TxnLake.rowCount(spark, dir) === Some(60L),
-      "metadata-only COUNT(*) rides footer-derived per-file row counts")
+      "metadata-only COUNT(*) rides the recorded per-file row counts")
   }
 }

@@ -86,6 +86,28 @@ class TxnBloomSpec extends AnyFunSuite with SparkTestSession {
     assert(TxnLake.read(spark, dir).count() === 801)
   }
 
+  test("bloomPositionsOf equals pmod(xxhash64(lit(k), v), bits) evaluated by Spark") {
+    import spark.implicits._
+    // the staging expression that wrote every existing table's blooms:
+    // pinning the one Scala definition to it keeps those blooms valid
+    val rnd = new scala.util.Random(7)
+    val values: Seq[Option[String]] = Seq(None, Some(""), Some("é"), Some("Ωmega-日本"),
+      Some("\u0000nul"), Some("clerk-3-17")) ++
+      (0 until 200).map(_ => Some(rnd.nextString(rnd.nextInt(24))))
+    for (bits <- Seq(64, 256, 1024, 8192)) {
+      val positions = (0 until TxnLake.BloomK).map(k =>
+        pmod(xxhash64(lit(k), col("v")), lit(bits.toLong)).cast("int"))
+      val viaSpark = values.toDF("v").select(col("v"), array(positions: _*))
+        .collect().map(r => Option(r.getString(0)) -> r.getSeq[Int](1)).toSeq
+      assert(viaSpark.size === values.size)
+      viaSpark.foreach { case (v, expected) =>
+        val utf8 = v.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull
+        assert(TxnLake.bloomPositionsOf(utf8, bits).toSeq === expected,
+          s"bits=$bits value=$v")
+      }
+    }
+  }
+
   test("non-string bloom column is refused at create") {
     import spark.implicits._
     val dir = freshDir()
