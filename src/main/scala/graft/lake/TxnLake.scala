@@ -170,29 +170,31 @@ object TxnLake {
                                         copied: Set[String] = Set.empty,
                                         identity: Map[String, Long] = Map.empty)
 
-  /** A staged-but-uncommitted merge: data files already written under
+  /** A staged-but-uncommitted commit: data files already written under
     * `_graft_data`, invisible until [[commitStaged]] publishes a
-    * manifest referencing them. `cdc` is the commit's row-level CHANGE
-    * FEED (lazy — each row tagged `_change_type` insert/update/delete),
-    * materialized under `_graft_cdc/v<version>` only after the commit
-    * publishes and its version number is known. */
+    * manifest referencing them. `feedStage` is the commit's row-level
+    * CHANGE FEED, already complete in a version-independent
+    * `_graft_cdc/.tmp-<id>` dir ([[newFeedStage]]); it renames into
+    * `_graft_cdc/v<version>` once the commit wins its version
+    * ([[publishFeed]]). `stagedDirs` lists every dir this staging
+    * created (data `c<id>` dirs, a DV sidecar, the feed stage) — what
+    * an aborted commit drops ([[dropStagedFiles]]). It has no default:
+    * every staging site states what it wrote. */
   private[lake] case class Staged(baseVersion: Long, partCol: String,
                                   schemaDdl: String, touched: Set[Option[String]],
                                   prunedPaths: Set[String], newFiles: Seq[FileEntry],
                                   statsCol: Option[String] = None,
-                                  cdc: Option[DataFrame] = None,
-                                  cdcCopy: Seq[FileEntry] = Nil,
-                                  cdcStagedDir: Option[String] = None,
+                                  feedStage: Option[String] = None,
                                   bloomCol: Option[String] = None,
                                   bloomBits: Int = DefaultBloomBits,
-                                  abortDirs: Seq[String] = Nil,
                                   renames: Map[String, String] = Map.empty,
                                   tombstones: Set[String] = Set.empty,
                                   txn: Option[(String, Long)] = None,
                                   dataChange: Boolean = true,
                                   copied: Set[String] = Set.empty,
                                   identityBase: Map[String, Long] = Map.empty,
-                                  identityNew: Map[String, Long] = Map.empty)
+                                  identityNew: Map[String, Long] = Map.empty,
+                                  stagedDirs: Seq[String])
 
   private val DataDir = "_graft_data"
   private val LogDir = "_graft_log"
@@ -238,11 +240,15 @@ object TxnLake {
     * the full preimage dialect — [[ChangeTypeCol]] ∈ insert /
     * update_preimage / update_postimage / delete (deletes carry their
     * pre-image) — so sums are SUBTRACTABLE and the feed can maintain
-    * aggregates ([[IncrementalView.applyChanges]]) downstream, with
-    * [[VersionCol]] baked into the files. Written by the committing
-    * writer, O(changed rows) per commit — [[graft.streaming.CdcFeed]]
-    * tails it as a plain checkpointed file stream, so downstream
-    * incremental consumers never diff snapshots. */
+    * aggregates ([[IncrementalView.applyChanges]]) downstream. The
+    * committing writer fills a `.tmp-<id>` stage BEFORE it publishes,
+    * O(changed rows) per commit, and renames it to `v<version>` after
+    * the publish wins ([[publishFeed]] — the one site that creates a
+    * `v<N>` dir), so a feed entry appears whole. [[VersionCol]] is
+    * never stored: readers take it from the `v<N>` dir name
+    * ([[graft.streaming.CdcFeed]], which tails the root as a plain
+    * checkpointed file stream, so downstream incremental consumers
+    * never diff snapshots). */
   val CdcDir = "_graft_cdc"
   val ChangeTypeCol = "_change_type"
   val VersionCol = "_commit_version"
@@ -1171,23 +1177,26 @@ object TxnLake {
     val files = stageFiles(spark, dir, df, partCol,
       spark.conf.get("spark.sql.shuffle.partitions").toInt, statsCol, bloomCol,
       bloomBits)
+    // v0 change feed = the initial snapshot as inserts, so a CDC
+    // consumer starting from scratch bootstraps a full replica from the
+    // feed alone (the Delta CDF convention for the create version).
+    // The staged data files ARE the inserts: the stage gets byte copies
+    // and readers derive the change-type/version columns — zero write
+    // amplification through the engine. Staged before the publish and
+    // renamed into v0 after it, like every commit's feed.
+    val feedStage = newFeedStage(spark, dir)
+    feedStage.foreach(stageFeedImages(spark, dir, _, df.schema, Map.empty,
+      "insert" -> files))
     val rec = CommitRecord(0L, newCommitId(), partCol, df.schema.toDDL,
       files.flatMap(_.parts).toSet, files, Set.empty, statsCol, full = false,
       bloomCol = bloomCol, bloomBits = bloomBits)
     require(publishRecord(fs, dir, rec),
       s"concurrent create of txn table at $dir")
+    publishFeed(fs, dir, feedStage, 0L)
     // v0 checkpoint: cold resolution of a fresh table is one read
     maybeCheckpoint(spark, fs, dir,
       Manifest(0L, rec.commitId, partCol, rec.schemaDdl, rec.touched, files, statsCol,
         bloomCol = bloomCol, bloomBits = bloomBits))
-    // v0 change feed = the initial snapshot as inserts, so a CDC
-    // consumer starting from scratch bootstraps a full replica from the
-    // feed alone (the Delta CDF convention for the create version).
-    // Pure-insert commits never re-encode their rows: the staged data
-    // files ARE the post-images, so the feed entry is a raw byte copy
-    // ([[copyCdcFiles]]) and readers derive the change-type/version
-    // columns — zero write amplification through the engine.
-    if (changeFeed) copyCdcFiles(spark, dir, 0L, files)
   }
 
   /** Convert an existing hive-partitioned parquet directory into a txn
@@ -1517,16 +1526,18 @@ object TxnLake {
       base.partCol, touched.size, base.statsCol, base.bloomCol, base.bloomBits)
     // change feed: the doomed rows (delete PRE-images), the semi-join
     // complement of `remaining` — O(pruned files), not O(table)
-    val doomed =
-      if (cdcEnabled(spark, dir))
-        Some(readEntries(spark, dir, schema, pruned, renames = base.renames)
-          .join(keyDf, col(key) === col("__txn_dkey"), "left_semi")
-          .withColumn(ChangeTypeCol, lit("delete")))
-      else None
+    val feedStage = newFeedStage(spark, dir)
+    feedStage.foreach(st =>
+      readEntries(spark, dir, schema, pruned, renames = base.renames)
+        .join(keyDf, col(key) === col("__txn_dkey"), "left_semi")
+        .withColumn(ChangeTypeCol, lit("delete"))
+        .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$st"))
     commitStaged(spark, dir, Staged(base.version, base.partCol, base.schemaDdl,
-      touched, pruned.map(_.path).toSet, newFiles, base.statsCol, cdc = doomed,
+      touched, pruned.map(_.path).toSet, newFiles, base.statsCol,
+      feedStage = feedStage,
       bloomCol = base.bloomCol, bloomBits = base.bloomBits,
-      renames = base.renames, tombstones = base.tombstones),
+      renames = base.renames, tombstones = base.tombstones,
+      stagedDirs = dataDirsOf(newFiles) ++ feedStage),
       headHint = Some(base))
   }
 
@@ -1612,6 +1623,39 @@ object TxnLake {
   def deleteWhere(spark: SparkSession, dir: String, predicate: Column): Long =
     deleteWhere(spark, dir, predicate, () => ())
 
+  /** The ONE predicate pass of a deletion-vector commit (deleteWhere,
+    * updateWhere): writes the DV sidecar `dvRel` — the `(file, pos)` of
+    * every `matched` row — and returns its per-file counts. With a feed
+    * stage, the pass writes the full pre-images (tagged `changeType`,
+    * plus row identity) into the stage and the sidecar derives from
+    * THOSE bytes with a narrow two-column re-read: one live scan, and
+    * the feed and the DV come from the same evaluation. Touched files
+    * and counts come from the written sidecar's own data. Nothing
+    * matched: sidecar and stage are dropped, and the result is empty. */
+  private def stageDoomed(spark: SparkSession, dir: String, matched: DataFrame,
+                          changeType: String, dvRel: String,
+                          feedStage: Option[String]): Seq[(String, Long)] = {
+    val dvAbs = s"$dir/$dvRel"
+    val positions = feedStage match {
+      case Some(rel) =>
+        val pre = matched.withColumn(ChangeTypeCol, lit(changeType))
+        pre.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
+        // explicit schema: a zero-match predicate leaves an empty
+        // staging dir that schema inference would refuse
+        spark.read.schema(pre.schema).parquet(s"$dir/$rel")
+      case None => matched
+    }
+    positions.select(col("__txn_file").as("file"), col("__txn_pos").as("pos"))
+      .repartition(col("file")).sortWithinPartitions(col("file"), col("pos"))
+      .write.mode(SaveMode.ErrorIfExists).parquet(dvAbs)
+    val dvMeta = dvMetaOf(spark, dvAbs)
+    if (dvMeta.isEmpty) {
+      val fs = fsOf(spark, dir)
+      (dvRel +: feedStage.toSeq).foreach(r => fs.delete(new Path(dir, r), true))
+    }
+    dvMeta
+  }
+
   /** CONTENTION SEAM: identical to the public form, but runs
     * `beforeCommit` after the base snapshot is resolved and the DV
     * sidecar staged, immediately before the commit attempt — the
@@ -1637,48 +1681,10 @@ object TxnLake {
     // is one evaluation, the change feed another — they must agree
     requireDeterministic(live.filter(predicate), "deleteWhere")
     val dvRel = s"$DvDir/c${newCommitId()}"
-    val dvAbs = s"$dir/$dvRel"
-    // ONE distributed pass evaluates the predicate (don't compute the
-    // same thing twice — guide §1.2). With the change feed ON that
-    // pass writes the full DELETE PRE-IMAGES (plus each row's
-    // (file, pos) identity) into a version-independent feed staging
-    // dir, and the DV sidecar derives from THOSE bytes with a narrow
-    // two-column re-read — the old shape scanned the live table twice
-    // (narrow for the DV, then full again in a post-publish feed job)
-    // and paid a whole sequential Spark job per commit for the latter
-    // (CdcTaxProbe: ~260 ms/commit). The staging dir renames
-    // atomically into `_graft_cdc/v<N>` once the commit wins its
-    // version (commitStaged), so readers never see a half-written
-    // feed entry and the feed rows are byte-derived from the SAME
-    // single predicate evaluation as the DV. Touched files and the
-    // deleted count still come from the written sidecar's own data —
-    // the stageFiles metadata discipline.
-    val cdcStageRel =
-      if (cdcEnabled(spark, dir)) Some(s"$CdcDir/.tmp-${newCommitId()}")
-      else None
-    cdcStageRel match {
-      case Some(rel) =>
-        val stagedPre = live.filter(predicate)
-          .withColumn(ChangeTypeCol, lit("delete"))
-        stagedPre.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
-        // explicit schema: a zero-match predicate leaves an empty
-        // staging dir that schema inference would refuse
-        spark.read.schema(stagedPre.schema).parquet(s"$dir/$rel")
-          .select(col("__txn_file").as("file"), col("__txn_pos").as("pos"))
-          .repartition(col("file")).sortWithinPartitions(col("file"), col("pos"))
-          .write.mode(SaveMode.ErrorIfExists).parquet(dvAbs)
-      case None =>
-        live.filter(predicate)
-          .select(col("__txn_file").as("file"), col("__txn_pos").as("pos"))
-          .repartition(col("file")).sortWithinPartitions(col("file"), col("pos"))
-          .write.mode(SaveMode.ErrorIfExists).parquet(dvAbs)
-    }
-    val dvMeta = dvMetaOf(spark, dvAbs)
-    if (dvMeta.isEmpty) {
-      fs.delete(new Path(dvAbs), true)
-      cdcStageRel.foreach(r => fs.delete(new Path(dir, r), true))
-      return 0L
-    }
+    val feedStage = newFeedStage(spark, dir)
+    val dvMeta = stageDoomed(spark, dir, live.filter(predicate), "delete",
+      dvRel, feedStage)
+    if (dvMeta.isEmpty) return 0L
     val deleted = dvMeta.map(_._2).sum
     val touchedPaths = dvMeta.map(_._1).toSet
     // each entry's cumulative DOOMED-ROW COUNT rides the manifest
@@ -1696,15 +1702,14 @@ object TxnLake {
           Some(f.doomed.getOrElse(0L) + perFile(f.path)) else None))
     val touched = updated.flatMap(_.parts).toSet
     beforeCommit()
-    // the pre-staged feed dir (delete pre-images, written above in the
-    // same pass that produced the DV) renames into its version inside
-    // commitStaged — no post-publish feed job
+    // the feed stage (delete pre-images, written above in the same pass
+    // that produced the DV) renames into its version inside commitStaged
     commitStaged(spark, dir, Staged(base.version, base.partCol, base.schemaDdl,
-      touched, touchedPaths, updated, base.statsCol, cdc = None,
-      cdcStagedDir = cdcStageRel,
+      touched, touchedPaths, updated, base.statsCol, feedStage = feedStage,
       bloomCol = base.bloomCol, bloomBits = base.bloomBits,
-      abortDirs = Seq(dvRel) ++ cdcStageRel, renames = base.renames,
-      tombstones = base.tombstones), headHint = Some(base))
+      renames = base.renames, tombstones = base.tombstones,
+      // `updated` re-adds LIVE files: only the sidecar and stage are ours
+      stagedDirs = Seq(dvRel) ++ feedStage), headHint = Some(base))
     deleted
   }
 
@@ -1731,7 +1736,17 @@ object TxnLake {
     * Returns the number of rows updated (0 = nothing matched, no
     * commit published). */
   def updateWhere(spark: SparkSession, dir: String, predicate: Column,
-                  set: Map[String, Column]): Long = {
+                  set: Map[String, Column]): Long =
+    updateWhere(spark, dir, predicate, set, () => ())
+
+  /** CONTENTION SEAM (the [[deleteWhere]] discipline): `beforeCommit`
+    * runs after the DV sidecar, the post-image files and the change
+    * feed are staged, immediately before the commit attempt — so specs
+    * can interleave a conflicting writer and pin what an aborted update
+    * leaves behind. */
+  private[graft] def updateWhere(spark: SparkSession, dir: String,
+                                 predicate: Column, set: Map[String, Column],
+                                 beforeCommit: () => Unit): Long = {
     require(set.nonEmpty, "updateWhere needs at least one SET column")
     val fs = fsOf(spark, dir)
     val base = resolve(fs, dir)
@@ -1748,40 +1763,13 @@ object TxnLake {
     // staging post-images for another — checked on the ANALYZED filter
     // condition, where nondeterminism is actually resolved
     requireDeterministic(live.filter(predicate), "updateWhere")
-    // 1. DV sidecar over the matched positions (deleteWhere discipline).
-    // With the change feed ON, the SINGLE predicate evaluation writes
-    // full UPDATE PRE-IMAGES + row identity into feed staging, and both
-    // the DV and the matched row set derive from those bytes — one live
-    // scan instead of two, and the post-publish feed job disappears
-    // (post-images ride as byte copies of the staged files, below).
+    // 1. DV sidecar over the matched positions and, with the feed on,
+    // the UPDATE PRE-IMAGES ([[stageDoomed]]) — one live scan
     val dvRel = s"$DvDir/c${newCommitId()}"
-    val dvAbs = s"$dir/$dvRel"
-    val cdcStageRel =
-      if (cdcEnabled(spark, dir)) Some(s"$CdcDir/.tmp-${newCommitId()}")
-      else None
-    cdcStageRel match {
-      case Some(rel) =>
-        val stagedPre = live.filter(predicate)
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-        stagedPre.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
-        // explicit schema: a zero-match predicate leaves an empty
-        // staging dir that schema inference would refuse
-        spark.read.schema(stagedPre.schema).parquet(s"$dir/$rel")
-          .select(col("__txn_file").as("file"), col("__txn_pos").as("pos"))
-          .repartition(col("file")).sortWithinPartitions(col("file"), col("pos"))
-          .write.mode(SaveMode.ErrorIfExists).parquet(dvAbs)
-      case None =>
-        live.filter(predicate)
-          .select(col("__txn_file").as("file"), col("__txn_pos").as("pos"))
-          .repartition(col("file")).sortWithinPartitions(col("file"), col("pos"))
-          .write.mode(SaveMode.ErrorIfExists).parquet(dvAbs)
-    }
-    val dvMeta = dvMetaOf(spark, dvAbs)
-    if (dvMeta.isEmpty) {
-      fs.delete(new Path(dvAbs), true)
-      cdcStageRel.foreach(r => fs.delete(new Path(dir, r), true))
-      return 0L
-    }
+    val feedStage = newFeedStage(spark, dir)
+    val dvMeta = stageDoomed(spark, dir, live.filter(predicate),
+      "update_preimage", dvRel, feedStage)
+    if (dvMeta.isEmpty) return 0L
     val updatedCount = dvMeta.map(_._2).sum
     val touchedPaths = dvMeta.map(_._1).toSet
     val perFile = dvMeta.toMap
@@ -1797,12 +1785,12 @@ object TxnLake {
     // set are the same rows BY CONSTRUCTION, so even a
     // per-query-seeded deterministic predicate (current_timestamp)
     // cannot split them.
-    val matchedPre = cdcStageRel match {
+    val matchedPre = feedStage match {
       case Some(rel) =>
         spark.read.parquet(s"$dir/$rel")
           .drop(ChangeTypeCol, "__txn_file", "__txn_pos")
       case None =>
-        val dvPos = spark.read.parquet(dvAbs)
+        val dvPos = spark.read.parquet(s"$dir/$dvRel")
           .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
         live.join(dvPos,
           col("__txn_file") === col("__dv_file") &&
@@ -1838,29 +1826,20 @@ object TxnLake {
     val touched = withDv.flatMap(_.parts).toSet ++ newFiles.flatMap(_.parts)
     // change feed: pre-images were staged by the predicate pass above;
     // post-images are the staged files THEMSELVES, byte-copied into the
-    // staging dir under the `upd_` prefix (readers derive the change
-    // type from the prefix, `_commit_version` from the v-dir name —
-    // the copyCdcFiles discipline) — no re-read, no re-encode, no
-    // post-publish Spark job. The whole feed entry then renames into
-    // its version atomically at commit.
-    cdcStageRel.foreach { rel =>
-      if (base.renames.isEmpty)
-        copyCdcFilesInto(spark, dir, new Path(dir, rel), newFiles,
-          prefix = "upd_")
-      else
-        // renamed tables: staged files carry PHYSICAL column names a
-        // by-name feed read would null-fill — write the post-images
-        // explicitly in logical names (the append path's same guard)
-        readEntries(spark, dir, schema, newFiles, renames = base.renames)
-          .withColumn(ChangeTypeCol, lit("update_postimage"))
-          .write.mode(SaveMode.Append).parquet(s"$dir/$rel")
-    }
+    // stage under the `upd_` prefix (read back in logical names on a
+    // renamed table) — no second evaluation of the SET. The whole feed
+    // entry then renames into its version at commit.
+    feedStage.foreach(stageFeedImages(spark, dir, _, schema, base.renames,
+      "update_postimage" -> newFiles))
+    beforeCommit()
     commitStaged(spark, dir, Staged(base.version, base.partCol, base.schemaDdl,
-      touched, touchedPaths, withDv ++ newFiles, base.statsCol, cdc = None,
-      cdcStagedDir = cdcStageRel,
+      touched, touchedPaths, withDv ++ newFiles, base.statsCol,
+      feedStage = feedStage,
       bloomCol = base.bloomCol, bloomBits = base.bloomBits,
-      abortDirs = Seq(dvRel) ++ cdcStageRel, renames = base.renames,
-      tombstones = base.tombstones), headHint = Some(base))
+      renames = base.renames, tombstones = base.tombstones,
+      // `withDv` re-adds LIVE files: drop only what this update wrote
+      stagedDirs = Seq(dvRel) ++ dataDirsOf(newFiles) ++ feedStage),
+      headHint = Some(base))
     updatedCount
   }
 
@@ -2041,7 +2020,7 @@ object TxnLake {
             Set.empty, Nil, head.statsCol, bloomCol = head.bloomCol,
             bloomBits = head.bloomBits, renames = head.renames,
             tombstones = head.tombstones, dataChange = false,
-            copied = fresh.toSet)
+            copied = fresh.toSet, stagedDirs = Nil)
       }
       beforeCommit()
       // an identity-watermark conflict (another append advanced the
@@ -2096,18 +2075,21 @@ object TxnLake {
       base.partCol, spark.conf.get("spark.sql.shuffle.partitions").toInt,
       base.statsCol, base.bloomCol, base.bloomBits)
     if (newFiles.isEmpty) None
-    else Some(Staged(base.version, base.partCol, base.schemaDdl,
-      newFiles.flatMap(_.parts).toSet, Set.empty, newFiles, base.statsCol,
-      // a blind append's change feed is the appended rows themselves —
-      // served by byte-copying the staged files, not a second encode.
-      // Renamed tables can't byte-copy (the files carry PHYSICAL names;
-      // the feed contract is logical) — they pay the explicit encode.
-      cdc = if (cdcEnabled(spark, dir) && base.renames.nonEmpty)
-        Some(aligned.withColumn(ChangeTypeCol, lit("insert"))) else None,
-      cdcCopy = if (cdcEnabled(spark, dir) && base.renames.isEmpty) newFiles else Nil,
-      bloomCol = base.bloomCol, bloomBits = base.bloomBits,
-      renames = base.renames, tombstones = base.tombstones,
-      identityBase = idBase, identityNew = idNew))
+    else {
+      // a blind append's change feed is the appended rows themselves,
+      // staged from the staged files (byte copies; a read-back in
+      // logical names on a renamed table) — never a second run of `rows`
+      val feedStage = newFeedStage(spark, dir)
+      feedStage.foreach(stageFeedImages(spark, dir, _, schema, base.renames,
+        "insert" -> newFiles))
+      Some(Staged(base.version, base.partCol, base.schemaDdl,
+        newFiles.flatMap(_.parts).toSet, Set.empty, newFiles, base.statsCol,
+        feedStage = feedStage,
+        bloomCol = base.bloomCol, bloomBits = base.bloomBits,
+        renames = base.renames, tombstones = base.tombstones,
+        identityBase = idBase, identityNew = idNew,
+        stagedDirs = dataDirsOf(newFiles) ++ feedStage))
+    }
   }
 
   /** Transactional full-snapshot OVERWRITE: replace the table's entire
@@ -2167,26 +2149,20 @@ object TxnLake {
     val newFiles = stageFiles(spark, dir, toPhysical(aligned, renames),
       base.partCol, spark.conf.get("spark.sql.shuffle.partitions").toInt,
       base.statsCol, base.bloomCol, base.bloomBits)
-    // change feed: delete pre-images must be written explicitly (they
-    // exist nowhere else once replaced); the inserts byte-copy from the
-    // staged files — an overwrite's feed costs one table write, not two
-    // (renamed tables encode explicitly; see stageAppend)
-    val cdcOn = cdcEnabled(spark, dir)
-    val oldRows =
-      if (cdcOn) {
-        val dels = readEntries(spark, dir, schema, base.files,
-            renames = renames)
-          .withColumn(ChangeTypeCol, lit("delete"))
-        Some(if (renames.isEmpty) dels
-             else dels.unionByName(aligned.withColumn(ChangeTypeCol, lit("insert")),
-               allowMissingColumns = true))
-      } else None
+    // change feed: every old row as a delete pre-image and every new
+    // row as an insert — truncate's feed plus an append's. Both are
+    // whole-file images: byte copies where the bytes are the rows, one
+    // read-back job for DV'd old files and renamed tables
+    val feedStage = newFeedStage(spark, dir)
+    feedStage.foreach(stageFeedImages(spark, dir, _, schema, renames,
+      "delete" -> base.files, "insert" -> newFiles))
     commitStaged(spark, dir, Staged(base.version, base.partCol, schema.toDDL,
       base.files.flatMap(_.parts).toSet ++ newFiles.flatMap(_.parts),
       base.files.map(_.path).toSet, newFiles, base.statsCol,
-      cdc = oldRows, cdcCopy = if (cdcOn && renames.isEmpty) newFiles else Nil,
+      feedStage = feedStage,
       bloomCol = base.bloomCol, bloomBits = base.bloomBits,
-      renames = renames, tombstones = base.tombstones, txn = txn))
+      renames = renames, tombstones = base.tombstones, txn = txn,
+      stagedDirs = dataDirsOf(newFiles) ++ feedStage))
   }
 
   final case class OptimizeStats(filesBefore: Int, filesAfter: Int,
@@ -2281,7 +2257,8 @@ object TxnLake {
       // row-preserving rewrite (Delta's dataChange=false): the live
       // rowset is unchanged (DV purges drop only already-doomed rows),
       // so streaming consumers skip this commit instead of aborting
-      dataChange = false), headHint = Some(base))
+      dataChange = false, stagedDirs = dataDirsOf(newFiles)),
+      headHint = Some(base))
     val head = resolve(fsOf(spark, dir), dir).get
     OptimizeStats(base.files.size, head.files.size, touched.size, head.version)
   }
@@ -2372,8 +2349,8 @@ object TxnLake {
       touched, base.files.map(_.path).toSet, newFiles, base.statsCol,
       bloomCol = base.bloomCol, bloomBits = base.bloomBits,
       renames = base.renames, tombstones = base.tombstones,
-      dataChange = false), // re-cluster: rows unchanged, layout only
-      headHint = Some(base))
+      dataChange = false, // re-cluster: rows unchanged, layout only
+      stagedDirs = dataDirsOf(newFiles)), headHint = Some(base))
     val head = resolve(fsOf(spark, dir), dir).get
     OptimizeStats(base.files.size, head.files.size, touched.size, head.version)
   }
@@ -2736,13 +2713,15 @@ object TxnLake {
     * pre-images — a CDC consumer (index maintenance, replication, an
     * incremental MV) that silently kept serving truncated rows would
     * be a divergence no error path ever surfaces. And it stays
-    * metadata-plane: DV-free files are byte-COPIED into the feed as
-    * `del_*.parquet` (the pure-insert copy mechanism in reverse —
-    * readers derive 'delete' from the prefix), so no data transits
-    * the engine; only files carrying deletion vectors (whose dead
-    * rows must NOT re-surface as pre-images) or renamed-schema tables
-    * (copied bytes carry physical names) pay an explicit rewrite, and
-    * only for those files. */
+    * metadata-plane: DV-free files are byte-COPIED into the feed stage
+    * as `del_*.parquet` ([[stageFeedImages]] — readers derive 'delete'
+    * from the prefix), so no data transits the engine; only files
+    * carrying deletion vectors (whose dead rows must NOT re-surface as
+    * pre-images) or renamed-schema tables (copied bytes carry physical
+    * names) pay an explicit rewrite, and only for those files. The
+    * stage is filled against each attempt's head before the publish,
+    * renamed into the won version after it, and dropped when the
+    * attempt loses the version race. */
   def truncate(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
     var attempts = 0
@@ -2753,35 +2732,25 @@ object TxnLake {
         .getOrElse(throw new IllegalArgumentException(s"$dir is not a txn table (no $LogDir)"))
       if (head.files.isEmpty) return // already empty
       val touched = head.files.flatMap(_.parts).toSet
+      val feedStage = newFeedStage(spark, dir)
+      feedStage.foreach(stageFeedImages(spark, dir, _,
+        StructType.fromDDL(head.schemaDdl), head.renames, "delete" -> head.files))
       val rec = CommitRecord(head.version + 1, newCommitId(), head.partCol,
         head.schemaDdl, touched, Nil, head.files.map(_.path).toSet,
         head.statsCol, full = false, bloomCol = head.bloomCol,
         bloomBits = head.bloomBits, renames = head.renames,
         tombstones = head.tombstones)
       if (publishRecord(fs, dir, rec)) {
+        publishFeed(fs, dir, feedStage, rec.version)
         maybeCheckpoint(spark, fs, dir,
           Manifest(rec.version, rec.commitId, rec.partCol, rec.schemaDdl,
             touched, Nil, rec.statsCol, bloomCol = rec.bloomCol,
             bloomBits = rec.bloomBits, renames = rec.renames,
             tombstones = rec.tombstones, txns = head.txns, copied = head.copied,
             identity = head.identity))
-        if (cdcEnabled(spark, dir)) {
-          // explicit rewrite ONLY where the byte-copy would lie:
-          // DV-bearing files (dead rows must not re-surface) and
-          // renamed tables (copied bytes carry physical names)
-          val (explicit, copyable) =
-            if (head.renames.nonEmpty) (head.files, Seq.empty[FileEntry])
-            else head.files.partition(_.dv.nonEmpty)
-          if (explicit.nonEmpty) {
-            val schema = StructType.fromDDL(head.schemaDdl)
-            writeCdc(spark, dir, rec.version,
-              readEntries(spark, dir, schema, explicit, renames = head.renames)
-                .withColumn(ChangeTypeCol, lit("delete")))
-          }
-          copyCdcFiles(spark, dir, rec.version, copyable, prefix = "del_")
-        }
         return
       }
+      feedStage.foreach(r => fs.delete(new Path(dir, r), true))
     }
   }
 
@@ -3301,14 +3270,13 @@ object TxnLake {
           .select(cols.map(col).toIndexedSeq: _*)
       }
     // NOTE (r20, measured and REVERTED): persisting `aligned` for the
-    // commit so the post-publish feed job would not replay the source
+    // commit so the merge's feed job would not replay the source
     // plan was A/B'd with CdcTaxProbe — the cache made the merge feed
     // delta WORSE (337 -> 508 ms/commit at probe scale): the
     // materialization pass plus InMemoryRelation planning cost more
     // than the recompute it saved. The feed job's real bill is the
     // pruned-file re-reads + classification joins, which only a
     // staged-bytes derivation would remove.
-    val cdcOn = cdcEnabled(spark, dir)
     // WHEN NOT MATCHED BY SOURCE plumbing: validate the clauses up
     // front (deterministic conditions — the Delta UPDATE/DELETE rule,
     // because each condition is evaluated twice: once planning the
@@ -3448,62 +3416,64 @@ object TxnLake {
     // rows as update_preimages and, under a delete clause, the doomed
     // target rows as delete pre-images. Only staged when the table
     // opted into change capture: the classification joins are real
-    // work a non-consuming table should not pay for.
-    val cdcRows =
-      if (!cdcOn) None
-      else {
-        val upsertCdc = applied.select(cols.map(col).toIndexedSeq: _*)
-          .join(prunedDf.select(col(key).as("__txn_mk")).distinct(),
-            col(key) === col("__txn_mk"), "left")
-          .withColumn(ChangeTypeCol,
-            when(col("__txn_mk").isNull, lit("insert"))
-              .otherwise(lit("update_postimage")))
-          .drop("__txn_mk")
-        val appliedKeys = deleteWhen match {
-          case Some(_) => srcKeys.join(delKeys,
-            col("__txn_ukey") === col("__txn_dk"), "left_anti")
-          case None => srcKeys
-        }
-        val preImg = prunedDf
-          .join(appliedKeys, col(key) === col("__txn_ukey"), "left_semi")
-          .select(cols.map(col).toIndexedSeq: _*)
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-        val matchedCdc = deleteWhen match {
-          case Some(_) => upsertCdc.unionByName(preImg).unionByName(prunedDf
-            .join(delKeys, col(key) === col("__txn_dk"), "left_semi")
-            .select(cols.map(col).toIndexedSeq: _*)
-            .withColumn(ChangeTypeCol, lit("delete")))
-          case None => upsertCdc.unionByName(preImg)
-        }
-        // by-source rows: DELETE clauses emit delete pre-images,
-        // UPDATE clauses the same preimage-dialect pre/post pair the
-        // matched-update path writes — consumers fold all five classes
-        // with one code path. Classification re-runs on the pruned
-        // files (deterministic conditions, enforced above, so the
-        // rewrite and the feed agree row-for-row).
-        val bsCdc = bsAffected.toSeq.flatMap { _ =>
-          val classified = unmatchedT.withColumn("__txn_bs", bsIdx)
-          bySource.zipWithIndex.flatMap {
-            case (_: BySourceDelete, i) => Seq(
-              classified.filter(col("__txn_bs") === i)
-                .select(cols.map(col).toIndexedSeq: _*)
-                .withColumn(ChangeTypeCol, lit("delete")))
-            case (u: BySourceUpdate, i) =>
-              val hit = classified.filter(col("__txn_bs") === i)
-              Seq(hit.select(cols.map(col).toIndexedSeq: _*)
-                    .withColumn(ChangeTypeCol, lit("update_preimage")),
-                  applyBySourceSet(hit, u)
-                    .withColumn(ChangeTypeCol, lit("update_postimage")))
-          }
-        }
-        Some(bsCdc.foldLeft(matchedCdc)(_ unionByName _))
+    // work a non-consuming table should not pay for. Written into the
+    // feed stage here, before the commit publishes.
+    val feedStage = newFeedStage(spark, dir)
+    feedStage.foreach { st =>
+      val upsertCdc = applied.select(cols.map(col).toIndexedSeq: _*)
+        .join(prunedDf.select(col(key).as("__txn_mk")).distinct(),
+          col(key) === col("__txn_mk"), "left")
+        .withColumn(ChangeTypeCol,
+          when(col("__txn_mk").isNull, lit("insert"))
+            .otherwise(lit("update_postimage")))
+        .drop("__txn_mk")
+      val appliedKeys = deleteWhen match {
+        case Some(_) => srcKeys.join(delKeys,
+          col("__txn_ukey") === col("__txn_dk"), "left_anti")
+        case None => srcKeys
       }
+      val preImg = prunedDf
+        .join(appliedKeys, col(key) === col("__txn_ukey"), "left_semi")
+        .select(cols.map(col).toIndexedSeq: _*)
+        .withColumn(ChangeTypeCol, lit("update_preimage"))
+      val matchedCdc = deleteWhen match {
+        case Some(_) => upsertCdc.unionByName(preImg).unionByName(prunedDf
+          .join(delKeys, col(key) === col("__txn_dk"), "left_semi")
+          .select(cols.map(col).toIndexedSeq: _*)
+          .withColumn(ChangeTypeCol, lit("delete")))
+        case None => upsertCdc.unionByName(preImg)
+      }
+      // by-source rows: DELETE clauses emit delete pre-images,
+      // UPDATE clauses the same preimage-dialect pre/post pair the
+      // matched-update path writes — consumers fold all five classes
+      // with one code path. Classification re-runs on the pruned
+      // files (deterministic conditions, enforced above, so the
+      // rewrite and the feed agree row-for-row).
+      val bsCdc = bsAffected.toSeq.flatMap { _ =>
+        val classified = unmatchedT.withColumn("__txn_bs", bsIdx)
+        bySource.zipWithIndex.flatMap {
+          case (_: BySourceDelete, i) => Seq(
+            classified.filter(col("__txn_bs") === i)
+              .select(cols.map(col).toIndexedSeq: _*)
+              .withColumn(ChangeTypeCol, lit("delete")))
+          case (u: BySourceUpdate, i) =>
+            val hit = classified.filter(col("__txn_bs") === i)
+            Seq(hit.select(cols.map(col).toIndexedSeq: _*)
+                  .withColumn(ChangeTypeCol, lit("update_preimage")),
+                applyBySourceSet(hit, u)
+                  .withColumn(ChangeTypeCol, lit("update_postimage")))
+        }
+      }
+      bsCdc.foldLeft(matchedCdc)(_ unionByName _)
+        .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$st")
+    }
     // the staged manifest carries the EVOLVED schema: readers of this
     // version null-fill added columns for files that predate them
     Some(Staged(base.version, partCol, schema.toDDL, touched,
-      pruned.map(_.path).toSet, newFiles, base.statsCol, cdc = cdcRows,
+      pruned.map(_.path).toSet, newFiles, base.statsCol, feedStage = feedStage,
       bloomCol = base.bloomCol, bloomBits = base.bloomBits,
-      renames = renames, tombstones = base.tombstones))
+      renames = renames, tombstones = base.tombstones,
+      stagedDirs = dataDirsOf(newFiles) ++ feedStage))
   }
 
   /** Publish a staged merge, with optimistic-concurrency retry: if the
@@ -3624,6 +3594,11 @@ object TxnLake {
         txnVer = staged.txn.map(_._2), dataChange = staged.dataChange,
         copied = staged.copied, identity = staged.identityNew)
       if (publishRecord(fs, dir, rec)) {
+        // the feed was staged complete before the publish (every
+        // commit kind); it renames into the won version here, so
+        // readers never see a half-written entry and no feed work runs
+        // after the publish
+        publishFeed(fs, dir, staged.feedStage, rec.version)
         maybeCheckpoint(spark, fs, dir,
           Manifest(rec.version, rec.commitId, rec.partCol, rec.schemaDdl, rec.touched,
             // applyRecord keeps a lazy head LAZY (dead-set fold) — the
@@ -3638,27 +3613,6 @@ object TxnLake {
             identity = staged.identityNew.foldLeft(head.identity) {
               case (acc, (c, v)) =>
                 acc + (c -> math.max(v, acc.getOrElse(c, Long.MinValue))) }))
-        // the change feed needs the WON version number, so it lands
-        // after publish. A PRE-STAGED feed dir (update/delete — the
-        // single-evaluation discipline) renames into its version
-        // atomically: readers never see a half-written feed dir and no
-        // post-publish Spark job runs. A lazily-planned feed (merge /
-        // overwrite) still writes here; its plan re-reads only base
-        // files, which commits never delete (vacuum-only), so replay
-        // is safe. A crash in this window loses the feed entry, never
-        // table data — [[changes]]' snapshot diff stays the recovery
-        // path.
-        staged.cdc.foreach(rows => writeCdc(spark, dir, rec.version, rows))
-        staged.cdcStagedDir.foreach { rel =>
-          val tmp = new Path(dir, rel)
-          val vdir = new Path(dir, f"$CdcDir/v${rec.version}%08d")
-          // the won version is fresh, so vdir cannot exist; a failed
-          // rename would silently lose the feed entry — fail loudly
-          if (!fs.rename(tmp, vdir))
-            throw new IllegalStateException(
-              s"could not publish staged change feed $tmp -> $vdir")
-        }
-        if (staged.cdcCopy.nonEmpty) copyCdcFiles(spark, dir, rec.version, staged.cdcCopy)
         return true
       }
       // lost the version-number race; loop re-resolves and re-checks
@@ -4029,45 +3983,59 @@ object TxnLake {
 
   // ---- internals ----
 
-  /** Materialize one commit's change rows under `_graft_cdc/v<version>`
-    * with [[VersionCol]] baked into the files (not the path), so the
-    * feed reads with ONE explicit schema — no partition inference, and
-    * pre-evolution feed files null-fill later columns exactly like the
-    * table's own readers. One directory per version keeps retention a
-    * directory drop ([[vacuum]]). */
-  private def writeCdc(spark: SparkSession, dir: String, version: Long,
-                       changeRows: DataFrame): Unit =
-    changeRows.withColumn(VersionCol, lit(version))
-      .write.mode(SaveMode.ErrorIfExists)
-      .parquet(f"$dir/$CdcDir/v$version%08d")
+  /** A fresh CHANGE-FEED STAGE for one commit — `_graft_cdc/.tmp-<id>`
+    * when the table captures a feed ([[cdcEnabled]]), else None. Every
+    * feed-writing commit fills its stage BEFORE publishing: explicit
+    * change rows written by the caller, whole-file images through
+    * [[stageFeedImages]]. [[publishFeed]] renames it into the won
+    * version; an aborted commit drops it with the rest of its staging
+    * ([[dropStagedFiles]]); a crashed writer's stage is an orphan
+    * [[vacuum]] sweeps after its grace. The name is version-independent,
+    * so a commit that loses the version race and rebases keeps it. */
+  private def newFeedStage(spark: SparkSession, dir: String): Option[String] =
+    if (cdcEnabled(spark, dir)) Some(s"$CdcDir/.tmp-${newCommitId()}") else None
 
-  /** Feed entry for a PURE-INSERT commit (or, with `prefix = "del_"`,
-    * a whole-file delete like TRUNCATE): the data files are
-    * byte-copied into `_graft_cdc/v<N>/<prefix>*.parquet` — no second
-    * encode, no shuffle, no Spark job; readers derive the missing
-    * `_change_type` ('insert' or 'delete' by filename prefix) and
-    * `_commit_version` (from the v-dir name) columns by projection
-    * ([[graft.streaming.CdcFeed]]), the
-    * schema-by-name null-fill making mixed explicit/copied feed dirs
-    * read uniformly. Copies run from a small driver pool: on object
-    * stores a FileSystem copy is a server-side COPY (metadata-plane —
-    * no data bytes transit the driver), and on HDFS a DistCp-style
-    * distributed copy can slot in here; either way the feed costs
-    * 0 engine writes where it used to cost a full second table write. */
-  private def copyCdcFiles(spark: SparkSession, dir: String, version: Long,
-                           files: Seq[FileEntry],
-                           prefix: String = "ins_"): Unit =
-    copyCdcFilesInto(spark, dir,
-      new Path(f"$dir/$CdcDir/v$version%08d"), files, prefix)
+  /** Feed-file prefix per whole-file change type: readers derive the
+    * `_change_type` of a byte-copied file from it
+    * ([[graft.streaming.CdcFeed]]). */
+  private val FeedCopyPrefix = Map(
+    "insert" -> "ins_", "delete" -> "del_", "update_postimage" -> "upd_")
 
-  /** The destination-dir form: update pre-publishes its post-image
-    * copies into the feed STAGING dir, so the whole feed entry renames
-    * into its version atomically at commit. */
-  private def copyCdcFilesInto(spark: SparkSession, dir: String,
-                               destDir: Path, files: Seq[FileEntry],
-                               prefix: String): Unit = {
+  /** Stage the live rows of whole files as change images — `images`
+    * pairs a change type (insert / delete / update_postimage) with its
+    * files: the new files of a create, append or overwrite, the old
+    * files an overwrite or truncate drops, an update's post-images.
+    * Where the file bytes ARE the feed rows they are byte-copied under
+    * the type's prefix — no engine write, no Spark job. They are not
+    * when the table has column renames (files carry PHYSICAL names, the
+    * feed contract is logical) or a file carries deletion vectors (its
+    * dead rows must not re-surface); those files are read back, in
+    * logical names and with vectors applied, and written in ONE job.
+    * The read-back takes the files themselves, so the feed holds
+    * exactly the committed values — never a second evaluation of the
+    * writer's input plan. Copies run from a small driver pool: on
+    * object stores a FileSystem copy is a server-side COPY (no data
+    * bytes transit the driver). */
+  private def stageFeedImages(spark: SparkSession, dir: String, stage: String,
+                              schema: StructType, renames: Map[String, String],
+                              images: (String, Seq[FileEntry])*): Unit = {
+    val explicit = images.flatMap { case (changeType, files) =>
+      val (copy, read) =
+        if (renames.isEmpty) files.partition(_.dv.isEmpty) else (Nil, files)
+      copyFeedFiles(spark, dir, stage, copy, FeedCopyPrefix(changeType))
+      if (read.isEmpty) None
+      else Some(readEntries(spark, dir, schema, read, renames = renames)
+        .withColumn(ChangeTypeCol, lit(changeType)))
+    }
+    explicit.reduceOption(_ unionByName _)
+      .foreach(_.write.mode(SaveMode.Append).parquet(s"$dir/$stage"))
+  }
+
+  private def copyFeedFiles(spark: SparkSession, dir: String, stage: String,
+                            files: Seq[FileEntry], prefix: String): Unit = {
     if (files.isEmpty) return
     val fs = fsOf(spark, dir)
+    val destDir = new Path(dir, stage)
     fs.mkdirs(destDir)
     val conf = spark.sparkContext.hadoopConfiguration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -4084,6 +4052,25 @@ object TxnLake {
     }.foreach(_.get())
     finally pool.shutdown()
   }
+
+  /** Rename a won commit's feed stage to `_graft_cdc/v<version>` — the
+    * ONE site that creates a feed version dir, called right after the
+    * publish by [[commitStaged]], [[truncate]] and [[create]]. The won
+    * version is fresh, so the target cannot exist. A stage nothing
+    * wrote to (a commit with no change rows) publishes no dir; a failed
+    * rename of a written stage would silently lose the entry — fail
+    * loudly. A crash between the publish and this rename leaves the
+    * version without its entry ([[changes]]' snapshot diff stays the
+    * recovery path). */
+  private def publishFeed(fs: FileSystem, dir: String, stage: Option[String],
+                          version: Long): Unit =
+    stage.foreach { rel =>
+      val tmp = new Path(dir, rel)
+      val vdir = new Path(dir, f"$CdcDir/v$version%08d")
+      if (fs.exists(tmp) && !fs.rename(tmp, vdir))
+        throw new IllegalStateException(
+          s"could not publish staged change feed $tmp -> $vdir")
+    }
 
   private[lake] def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -5033,18 +5020,17 @@ object TxnLake {
       .filter(col(sc).cast("double").between(lo, hi))
   }
 
-  /** Abort cleanup for a lost commit: drop exactly what THIS commit
-    * staged. A rewriting commit staged fresh `_graft_data/c<id>` dirs
-    * (derived from its new files' paths); a deletion-vector commit
-    * re-adds LIVE data files — dropping their dirs would destroy
-    * committed data — so it names its own sidecar dir via `abortDirs`
-    * instead. */
+  /** Abort cleanup for a lost commit: drop exactly the dirs THIS
+    * commit's staging created ([[Staged.stagedDirs]]) — never a dir
+    * derived from `newFiles`, which for a deletion-vector commit also
+    * re-adds LIVE data files whose dirs hold committed data. */
   private def dropStagedFiles(fs: FileSystem, dir: String, staged: Staged): Unit =
-    if (staged.abortDirs.nonEmpty)
-      staged.abortDirs.foreach(d => fs.delete(new Path(dir, d), true))
-    else
-      staged.newFiles.map(_.path.split("/")(1)).distinct
-        .foreach(c => fs.delete(new Path(dir, s"$DataDir/$c"), true))
+    staged.stagedDirs.foreach(d => fs.delete(new Path(dir, d), true))
+
+  /** The fresh `_graft_data/c<id>` dirs holding freshly staged files
+    * (one per [[stageFiles]] call) — what a [[Staged]] lists for them. */
+  private[lake] def dataDirsOf(staged: Seq[FileEntry]): Seq[String] =
+    staged.map(f => s"$DataDir/${f.path.split("/")(1)}").distinct
 
   private def castToTarget(updates: DataFrame, target: DataFrame): DataFrame =
     updates.select(target.schema.fields.filter(f => updates.columns.contains(f.name))

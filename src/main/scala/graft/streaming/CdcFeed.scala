@@ -54,17 +54,22 @@ object CdcFeed {
         "use TxnLake.changes for a snapshot diff")
   }
 
-  /** Pure-insert commits (TRUNCATE's whole-file deletes, and UPDATE's
-    * post-images) byte-copy their data files into the feed (zero write
-    * amplification — [[TxnLake]] `copyCdcFiles`), so those
-    * files carry neither `_change_type` nor `_commit_version`; the
-    * schema-by-name read null-fills them and this projection derives
-    * both — the type from the controlled basename prefix (`ins_*` =
-    * 'insert', `del_*` = 'delete', `upd_*` = 'update_postimage';
-    * anchored on the basename so a table
-    * PATH containing either substring cannot flip it), the version
-    * from the `v<N>` dir name. Explicitly-written change files keep
-    * their stored columns (coalesce no-op). */
+  /** Feed files never store `_commit_version`: every commit stages its
+    * entry before it knows its version and renames the stage to
+    * `v<N>` after the publish ([[TxnLake]] `publishFeed`), so the
+    * version comes from the `v<N>` dir name. Whole-file images (a
+    * create's, append's or overwrite's inserts, an overwrite's or
+    * TRUNCATE's deletes, UPDATE's post-images) are byte copies of data
+    * files ([[TxnLake]] `stageFeedImages` — zero write amplification),
+    * so they carry no `_change_type` either: the schema-by-name read
+    * null-fills both and this projection derives them — the type from
+    * the controlled basename prefix (`ins_*` = 'insert', `del_*` =
+    * 'delete', `upd_*` = 'update_postimage'; anchored on the basename
+    * so a table PATH containing either substring cannot flip it).
+    * Explicitly-written change rows keep their stored `_change_type`,
+    * and entries written with `_commit_version` baked in (the layout
+    * of older feed dirs) keep theirs — both coalesces are no-ops
+    * there. */
   private[graft] def derive(df: DataFrame): DataFrame =
     df.withColumn("__cdc_file", col("_metadata.file_path"))
       .withColumn(TxnLake.VersionCol, coalesce(col(TxnLake.VersionCol),

@@ -176,7 +176,8 @@ object BuildTaxProbe {
         TxnLake.commitStaged(spark, dir, TxnLake.Staged(base.version, base.partCol,
           base.schemaDdl, touched, base.files.map(_.path).toSet, newFiles,
           base.statsCol, renames = base.renames, tombstones = base.tombstones,
-          dataChange = false), headHint = Some(base))
+          dataChange = false, stagedDirs = TxnLake.dataDirsOf(newFiles)),
+          headHint = Some(base))
       }
       phase("  final resolve")(TxnLake.resolve(spark, dir).get)
     }

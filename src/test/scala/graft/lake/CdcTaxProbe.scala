@@ -3,15 +3,17 @@ package graft.lake
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev driver: CHANGE-FEED WRITE TAX (VERDICT r19 next #2). Mutating
-  * commits on a changeFeed table pay a SECOND sequential Spark job
-  * after publish (`writeCdc`); this probe isolates it by running the
-  * same update/merge sequence with and without the feed:
+/** Dev driver: CHANGE-FEED WRITE TAX. Every commit on a changeFeed
+  * table fills a feed stage before it publishes (explicit change rows
+  * and/or byte copies) and renames it into its version after; this
+  * probe isolates that cost by running the same update/delete/merge
+  * sequence with and without the feed:
   *
-  *   - `update, no feed`   — staging job + commit protocol only
-  *   - `update, feed`      — + the sequential CDC write job
-  *   - the delta           — what overlapping/batching the CDC write
-  *                           can recover per commit
+  *   - `no feed`   — staging job + commit protocol only
+  *   - `feed`      — + the pre-publish feed staging (merge: one
+  *                   classification job; update/delete: pre-images
+  *                   written by the predicate pass, post-images copied)
+  *   - the delta   — the feed's cost per commit
   *
   * Run: sbt "Test/runMain graft.lake.CdcTaxProbe [nCommits]"
   */

@@ -60,7 +60,7 @@ class FooterStatsSpec extends AnyFunSuite with SparkTestSession {
     check(decimal)
   }
 
-  test("timestamp stats column (INT96 writes no footer stats): falls back, identical manifests") {
+  test("INT96 timestamp stats column: identical manifests") {
     assert(check(int96).forall(f => f.zmin.isDefined && f.zmax.isDefined),
       "INT96 timestamps must still record bounds")
   }

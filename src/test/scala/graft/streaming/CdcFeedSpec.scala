@@ -52,18 +52,118 @@ class CdcFeedSpec extends AnyFunSuite with SparkTestSession {
       (1L, "a", "p1", "delete", 3L), (6L, "f", "p3", "delete", 3L)))
   }
 
+  /** Every row of `df` as one string over its columns in name order,
+    * sorted: a multiset comparison that ignores column order. */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(c => col(c).cast("string")).toIndexedSeq: _*)
+      .collect().map(_.mkString("|")).toSeq.sorted
+
+  /** One history per group of commit kinds, each on a fresh feed
+    * table. Keys are unique per version, every update changes a value
+    * and the overwrites replace every key with a new one, so the
+    * snapshot diff speaks the feed's dialect row for row. */
+  private def histories(): Seq[(String, String)] = {
+    import spark.implicits._
+    def rows(rs: (Long, String, String)*): DataFrame = rs.toDF("id", "name", "part")
+    def seeded(tag: String): String = {
+      val dir = freshDir(s"graft_cdc_$tag")
+      TxnLake.create(spark, dir, rows((1L, "a", "p1"), (2L, "b", "p1"),
+        (3L, "c", "p2"), (4L, "d", "p2")), "part", changeFeed = true)
+      dir
+    }
+    // create → append → upsert → delete-by-keys
+    val keyed = mutatedTable()
+    // deleteWhere and updateWhere leave deletion vectors on the seed
+    // files they touch: truncate reads those back and byte-copies the
+    // rest (at least the update's post-image file)
+    val dml = seeded("dml")
+    TxnLake.deleteWhere(spark, dml, col("id") === 1L)
+    TxnLake.updateWhere(spark, dml, col("id") === 3L, Map("name" -> lit("c2")))
+    TxnLake.truncate(spark, dml)
+    // appendOnce → overwrite → MERGE with a delete clause and
+    // by-source delete and update clauses
+    val writes = seeded("writes")
+    TxnLake.appendOnce(spark, writes, rows((5L, "e", "p3")), "app", 1L)
+    TxnLake.overwrite(spark, writes, rows((10L, "j", "p1"), (11L, "k", "p1"),
+      (12L, "l", "p2"), (13L, "m", "p2"), (14L, "n", "p3")))
+    TxnLake.merge(spark, writes,
+      rows((10L, "j2", "p1"), (11L, "k2", "p1"), (15L, "o", "p3")), "id",
+      deleteWhen = col("name") === "k",
+      bySource = Seq(TxnLake.BySourceDelete(Some(col("id") === 12L)),
+        TxnLake.BySourceUpdate(Map("name" -> lit("m2")), Some(col("part") === "p2"))))
+    // a renamed column: every feed image must be in logical names
+    val renamed = seeded("renamed")
+    TxnLake.renameColumn(spark, renamed, "name", "label")
+    def lrows(rs: (Long, String, String)*): DataFrame = rs.toDF("id", "label", "part")
+    TxnLake.append(spark, renamed, lrows((5L, "e", "p3")))
+    TxnLake.updateWhere(spark, renamed, col("id") === 2L, Map("label" -> lit("b2")))
+    TxnLake.deleteWhere(spark, renamed, col("id") === 3L)
+    TxnLake.upsert(spark, renamed, lrows((4L, "d2", "p2"), (6L, "f", "p3")), "id")
+    TxnLake.overwrite(spark, renamed, lrows((7L, "g", "p1"), (8L, "h", "p2")))
+    TxnLake.truncate(spark, renamed)
+    Seq("keyed" -> keyed, "dml" -> dml, "writes" -> writes, "renamed" -> renamed)
+  }
+
   test("feed matches the snapshot-diff changes() version by version") {
+    histories().foreach { case (name, dir) =>
+      val head = TxnLake.currentVersion(spark, dir)
+      def columns(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+      val current = columns(TxnLake.read(spark, dir))
+      def schemaAt(v: Long) = columns(TxnLake.readVersion(spark, dir, v))
+      // the diff spans only versions at the head's schema (a rename is
+      // a metadata-only commit and a diff barrier)
+      val comparable = (0L to head).filter(v =>
+        schemaAt(v) == current && (v == 0L || schemaAt(v - 1) == current))
+      assert(comparable.contains(head) && comparable.size >= 4, s"$name: $comparable")
+      val diffed = comparable.map { v =>
+        // v0 has no predecessor to diff — its feed entry is the
+        // snapshot as inserts, pinned against readVersion
+        (if (v == 0L) TxnLake.readVersion(spark, dir, 0L)
+           .withColumn(TxnLake.ChangeTypeCol, lit("insert"))
+         else TxnLake.changes(spark, dir, v - 1, v, "id", preimages = true))
+          .withColumn(TxnLake.VersionCol, lit(v))
+      }.reduce(_ unionByName _)
+      val feed = CdcFeed.batch(spark, dir)
+        .filter(col(TxnLake.VersionCol).isin(comparable: _*))
+      assert(rowsOf(feed) === rowsOf(diffed), s"history '$name'")
+    }
+  }
+
+  test("a feed entry with _commit_version stored in its files (the older " +
+      "layout) reads unchanged in the batch feed and the readChangeFeed stream") {
     val dir = mutatedTable()
-    // v0 has no predecessor to diff — its feed entry is the snapshot as
-    // inserts, pinned against readVersion
-    val v0 = TxnLake.readVersion(spark, dir, 0L)
-      .withColumn(TxnLake.ChangeTypeCol, lit("insert"))
-      .withColumn(TxnLake.VersionCol, lit(0L))
-    val diffed = (1L to 3L).map { v =>
-      TxnLake.changes(spark, dir, v - 1, v, "id", preimages = true)
-        .withColumn(TxnLake.VersionCol, lit(v))
-    }.foldLeft(v0)(_ unionByName _)
-    assert(changeSet(CdcFeed.batch(spark, dir)) === changeSet(diffed))
+    val want = rowsOf(CdcFeed.batch(spark, dir))
+    // rewrite v2 (the upsert) as older writers laid entries out:
+    // explicit rows with _change_type AND _commit_version in the files
+    val v2 = CdcFeed.batch(spark, dir).filter(col(TxnLake.VersionCol) === 2L)
+    val stored = spark.createDataFrame(
+      spark.sparkContext.parallelize(v2.collect().toSeq), v2.schema)
+    val v2Dir = new java.io.File(dir, TxnLake.CdcDir + "/v00000002")
+    org.apache.commons.io.FileUtils.deleteDirectory(v2Dir)
+    stored.write.parquet(v2Dir.getPath)
+    assert(spark.read.parquet(v2Dir.getPath).columns.contains(TxnLake.VersionCol))
+    assert(rowsOf(CdcFeed.batch(spark, dir)) === want)
+    val q = spark.readStream.format("graft-txn")
+      .option("readChangeFeed", "true").load(dir)
+      .writeStream.format("memory").queryName("cdc_stored_version")
+      .option("checkpointLocation", freshDir("graft_cdc_stored_ck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    assert(rowsOf(spark.table("cdc_stored_version")) === want)
+  }
+
+  test("new feed files store no _commit_version: it comes from the v<N> dir") {
+    val dir = mutatedTable()
+    val vDirs = new java.io.File(dir, TxnLake.CdcDir).listFiles()
+      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
+    assert(vDirs.map(_.getName).sorted.toSeq ===
+      Seq("v00000000", "v00000001", "v00000002", "v00000003"))
+    vDirs.foreach(d => assert(
+      !spark.read.parquet(d.getPath).columns.contains(TxnLake.VersionCol), d.getName))
+    // every stage was renamed into its version: none is left behind
+    assert(new java.io.File(dir, TxnLake.CdcDir).list().toSeq.sorted ===
+      vDirs.map(_.getName).sorted.toSeq)
   }
 
   test("streamed feed equals the batch feed (stream == batch)") {
