@@ -519,20 +519,22 @@ object StreamingQueries {
       |ORDER BY user_id, event_type""".stripMargin
 
   /** st18 — EXACTLY-ONCE streaming ingest into the transactional lake
-    * ([[graft.streaming.LakeSink]]): a checkpointed file stream drains
-    * the events slice in several micro-batches (maxFilesPerTrigger=1),
-    * each committing through [[graft.lake.TxnLake.appendOnce]] with a
-    * persisted `(appId, batchId)` transaction marker — then the query
+    * through the `graft-txn` format sink ([[graft.lake.TxnSink]]): a
+    * checkpointed file stream drains the events slice in several
+    * micro-batches (maxFilesPerTrigger=1), each committing through
+    * [[graft.lake.TxnLake.appendOnce]] with a persisted
+    * `(txnAppId, batchId)` transaction marker — then the query
     * SIMULATES THE CRASH-REPLAY, re-submitting the ENTIRE input under
-    * the last committed batch id. The marker refuses it; the oracle is
-    * the plain batch aggregate of the slice, so the hash match proves
-    * the replay contributed zero rows (the Delta txnAppId/txnVersion
-    * recipe, idempotence also pinned in `LakeSinkSpec`). At 100 TB each
+    * the last committed batch id, exactly the commit the sink makes for
+    * a replayed batch. The marker refuses it; the oracle is the plain
+    * batch aggregate of the slice, so the hash match proves the replay
+    * contributed zero rows (the Delta txnAppId/txnVersion recipe,
+    * idempotence also pinned in `TxnSinkSpec`). At 100 TB each
     * micro-batch is one blind O(batch) append; replay safety costs one
     * metadata read per batch. */
   private def st18(s: SparkSession, d: String): DataFrame = {
     import graft.lake.TxnLake
-    import graft.streaming.LakeSink
+    import org.apache.spark.sql.streaming.Trigger
     val root = java.nio.file.Files.createTempDirectory("graft_st18")
     val in = root.resolve("in").toString
     val out = root.resolve("t").toString
@@ -540,12 +542,14 @@ object StreamingQueries {
       .select(col("event_id"), col("user_id"), col("event_type"))
       .repartition(3).write.parquet(in)
     val sch = s.read.parquet(in).schema
-    LakeSink.startAppend(
-      s.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(in),
-      out, "event_type", "st18", root.resolve("ckpt").toString)
+    s.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(in)
+      .writeStream.format("graft-txn")
+      .option("txnAppId", "st18").option("partCol", "event_type")
+      .option("checkpointLocation", root.resolve("ckpt").toString)
+      .trigger(Trigger.AvailableNow()).start(out)
       .awaitTermination()
     val last = TxnLake.lastCommittedTxn(s, out, "st18").getOrElse(0L)
-    LakeSink.applyBatch(s.read.parquet(in), out, "event_type", "st18", last)
+    TxnLake.appendOnce(s, out, s.read.parquet(in), "st18", last)
     TxnLake.read(s, out)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("user_id")).as("sum_users"),

@@ -10,10 +10,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, NumericType, StructType, TimestampType}
 
 /** Commit-manifest ("txn log") protocol for partitioned parquet lake
-  * tables — the transactional replacement for [[MergeInto]]'s
-  * rename-based directory swap (same snapshot/OCC mechanics Delta and
-  * Iceberg use, reduced to what plain parquet + an atomic file create
-  * can carry).
+  * tables — graft's one lake write protocol (same snapshot/OCC
+  * mechanics Delta and Iceberg use, reduced to what plain parquet + an
+  * atomic file create can carry; no directory rename is ever a commit).
   *
   * Layout under the table root:
   * {{{
@@ -1199,24 +1198,6 @@ object TxnLake {
         bloomCol = bloomCol, bloomBits = bloomBits))
   }
 
-  /** Convert an existing hive-partitioned parquet directory into a txn
-    * table (one-time full rewrite — the migration [[MergeInto]] takes
-    * when a merge hits partition values the directory swap cannot
-    * express). Spark's hive reader unescapes directory names and maps
-    * `__HIVE_DEFAULT_PARTITION__` to NULL, so escaped and NULL
-    * partitions round-trip into manifest values. The superseded hive
-    * directories are removed after version 0 publishes: a plain
-    * `spark.read.parquet(dir)` afterwards fails loudly (nothing
-    * non-hidden left to read) rather than silently serving stale data. */
-  def convert(spark: SparkSession, dir: String, partCol: String): Unit = {
-    val fs = fsOf(spark, dir)
-    val snapshot = spark.read.parquet(dir)
-    create(spark, dir, snapshot, partCol) // materializes BEFORE the old layout goes
-    fs.listStatus(new Path(dir))
-      .filterNot(_.getPath.getName.startsWith("_graft"))
-      .foreach(st => fs.delete(st.getPath, true))
-  }
-
   /** Snapshot read of the latest committed version. The returned
     * DataFrame is bound to that version's exact file list — concurrent
     * commits never change what it yields. */
@@ -1640,9 +1621,7 @@ object TxnLake {
       case Some(rel) =>
         val pre = matched.withColumn(ChangeTypeCol, lit(changeType))
         pre.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
-        // explicit schema: a zero-match predicate leaves an empty
-        // staging dir that schema inference would refuse
-        spark.read.schema(pre.schema).parquet(s"$dir/$rel")
+        readStage(spark, dir, rel, pre.schema)
       case None => matched
     }
     positions.select(col("__txn_file").as("file"), col("__txn_pos").as("pos"))
@@ -1654,6 +1633,21 @@ object TxnLake {
       (dvRel +: feedStage.toSeq).foreach(r => fs.delete(new Path(dir, r), true))
     }
     dvMeta
+  }
+
+  /** Reads the part files of the feed stage `rel` that this commit
+    * just wrote, by path and with an explicit `schema` (a zero-match
+    * predicate may stage no part file, and an empty frame of `schema`
+    * stands in). The stage dir itself is never handed to `spark.read`:
+    * its `.tmp-` name is hidden to Spark, which warns "All paths were
+    * ignored" for a hidden root path instead of filtering it. */
+  private def readStage(spark: SparkSession, dir: String, rel: String,
+                        schema: StructType): DataFrame = {
+    val parts = fsOf(spark, dir).listStatus(new Path(dir, rel))
+      .filter(_.isFile).map(_.getPath)
+      .filterNot { p => val n = p.getName; n.startsWith("_") || n.startsWith(".") }
+    if (parts.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).parquet(parts.map(_.toString).toIndexedSeq: _*)
   }
 
   /** CONTENTION SEAM: identical to the public form, but runs
@@ -1787,8 +1781,7 @@ object TxnLake {
     // cannot split them.
     val matchedPre = feedStage match {
       case Some(rel) =>
-        spark.read.parquet(s"$dir/$rel")
-          .drop(ChangeTypeCol, "__txn_file", "__txn_pos")
+        readStage(spark, dir, rel, live.schema).drop("__txn_file", "__txn_pos")
       case None =>
         val dvPos = spark.read.parquet(s"$dir/$dvRel")
           .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
@@ -1895,10 +1888,10 @@ object TxnLake {
     * append `rows` tagged with an application transaction marker
     * `(appId, version)` persisted in the commit record. A later call
     * with the same appId and a version <= the last committed one is a
-    * SILENT NO-OP — the primitive that makes a Structured Streaming
-    * `foreachBatch` sink exactly-once under micro-batch replay
-    * ([[graft.streaming.LakeSink]]): the checkpoint replays batch N
-    * after a crash, the marker says N already landed, nothing doubles.
+    * SILENT NO-OP — the primitive that makes the Structured Streaming
+    * `graft-txn` format sink ([[TxnSink]]) exactly-once under
+    * micro-batch replay: the checkpoint replays batch N after a crash,
+    * the marker says N already landed, nothing doubles.
     * The check re-runs inside the OCC retry loop, so two concurrent
     * replays of the same batch can never both commit.
     *
@@ -2178,8 +2171,8 @@ object TxnLake {
     * aborts exactly like any conflicting merge — data is never lost,
     * only the compaction retried — and readers of older versions keep
     * resolving the pre-compaction files until [[vacuum]] drops them.
-    * This is [[Compaction]]'s job re-expressed as a lake commit: no
-    * directory swap, no reader ever sees a half-rewritten table.
+    * Small-file compaction as a lake commit: no directory swap, no
+    * reader ever sees a half-rewritten table.
     *
     * With `purgeDv = true`, partitions holding files with outstanding
     * DELETION VECTORS are compacted regardless of fragmentation: the

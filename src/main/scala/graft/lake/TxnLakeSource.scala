@@ -804,11 +804,7 @@ private[graft] class TxnFileIndex(spark: SparkSession,
           // codegen-domain relaxation of the same conjuncts: kills
           // most non-survivors before the typed per-row decode (the
           // typed predicate still decides every survivor).
-          // `spark.graft.txnlake.planPrefilter=false` is the A/B seam.
-          val pre =
-            if (spark.conf.getOption("spark.graft.txnlake.planPrefilter")
-                  .exists(!_.toBoolean)) None
-            else TxnFileIndex.planPrefilter(pc, sc, rn, cr, ps, l.defaultSpec)
+          val pre = TxnFileIndex.planPrefilter(pc, sc, rn, cr, ps, l.defaultSpec)
           val survivors = l.prunedEntries(spark,
             f => TxnFileIndex.entrySurvives(f, pc, sc, rn, cr, ps, bs), pre)
           // survivors all carry bytes (lazy-mode gate) → zero fs calls

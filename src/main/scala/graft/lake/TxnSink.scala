@@ -6,11 +6,10 @@ import org.apache.spark.sql.graft.StreamingFrameBridge
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Direct `df.writeStream.format("graft-txn").start(dir)` — the table
-  * itself as a streaming SINK, Delta-parity. Until now exactly-once
-  * streaming writes required the `foreachBatch` recipes
-  * ([[graft.streaming.LakeSink]] / `UpsertSink`); this is the format
-  * front door, so plain `writeStream` pipelines land on the lake with
-  * no user-written batch lambda.
+  * itself as a streaming SINK, Delta-parity, and graft's one append
+  * sink: plain `writeStream` pipelines land on the lake exactly once
+  * with no user-written batch lambda. Keyed upserts, which need a
+  * `foreachBatch` MERGE, go through [[graft.streaming.UpsertSink]].
   *
   * Semantics (Delta's `DeltaSink` contract, re-expressed on the V1
   * `Sink` API):

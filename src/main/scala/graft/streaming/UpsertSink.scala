@@ -1,43 +1,25 @@
 package graft.streaming
 
-import graft.lake.{MergeInto, TxnLake}
-import org.apache.hadoop.fs.Path
+import graft.lake.TxnLake
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Effectively-exactly-once streaming sink: `foreachBatch` + keyed
-  * upsert.
+/** Effectively-exactly-once keyed streaming sink: `foreachBatch` + a
+  * transactional upsert into a [[TxnLake]] table.
   *
   * Structured Streaming replays a batch after failure, so `foreachBatch`
   * bodies execute AT-LEAST-once; appending from one would duplicate
   * rows. Making the batch write idempotent — a keyed MERGE
-  * ([[MergeInto.upsert]]) instead of an append — upgrades the
-  * end-to-end contract: replaying batch N rewrites the same keys to the
-  * same values, so duplicates cannot accumulate. This is the same
-  * mechanism Delta's `foreachBatch` + `MERGE` recipe uses; here it runs
-  * on plain parquet with a rename-commit swap.
-  *
-  * Scale path: swap [[MergeInto.upsert]] for
-  * [[MergeInto.upsertPartitioned]] so each micro-batch rewrites only the
-  * partitions its keys touch.
+  * ([[TxnLake.upsert]]) instead of an append — upgrades the end-to-end
+  * contract: replaying batch N rewrites the same keys to the same
+  * values, so duplicates cannot accumulate. This is the same mechanism
+  * Delta's `foreachBatch` + `MERGE` recipe uses. Append-only streams
+  * without a key use the `graft-txn` format sink ([[graft.lake.TxnSink]])
+  * instead.
   */
 object UpsertSink {
 
-  /** Start an upsert sink for `stream` into the parquet dir `targetDir`,
-    * merging on `key`. One-shot (AvailableNow) by default so batch-style
-    * tests and backfills drain the source and stop. */
-  def start(stream: DataFrame, targetDir: String, key: String,
-            checkpointDir: String, oneShot: Boolean = true): StreamingQuery = {
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, targetDir, key)
-      }
-    (if (oneShot) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
-
-  /** Streaming-lakehouse sink: the same foreachBatch discipline landing
-    * in a [[TxnLake]] table — every micro-batch becomes one atomic
+  /** Streaming-lakehouse sink: every micro-batch becomes one atomic
     * manifest commit, so concurrent readers get snapshot isolation,
     * [[TxnLake.history]] is the batch audit trail, and
     * [[TxnLake.changes]] serves downstream incremental consumers
@@ -47,7 +29,9 @@ object UpsertSink {
     * the replayed-batch write CONTENT-idempotent (a replay commits one
     * more version whose snapshot is byte-equal — versions record the
     * attempt, the data cannot drift). `partCol` only applies on first
-    * create; later batches read it from the manifest. */
+    * create; later batches read it from the manifest. One-shot
+    * (AvailableNow) by default so batch-style tests and backfills drain
+    * the source and stop. */
   def startTxn(stream: DataFrame, targetDir: String, key: String, partCol: String,
                checkpointDir: String, oneShot: Boolean = true): StreamingQuery = {
     val writer = stream.writeStream
@@ -59,8 +43,10 @@ object UpsertSink {
     (if (oneShot) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
-  /** Per-micro-batch body of [[startTxn]] (testable exactly-once unit):
-    * dedup the batch deterministically, then one transactional upsert. */
+  /** Per-micro-batch body of [[startTxn]], factored out so the
+    * exactly-once claim is directly testable: Structured Streaming
+    * re-invokes this with the SAME batch rows after a failure. Dedup the
+    * batch deterministically, then one transactional upsert. */
   def applyBatchTxn(batch: DataFrame, targetDir: String, key: String,
                     partCol: String): Unit = {
     if (batch.isEmpty) return
@@ -71,29 +57,11 @@ object UpsertSink {
     ()
   }
 
-  /** The per-micro-batch body, factored out so the exactly-once claim is
-    * directly testable: Structured Streaming re-invokes this with the
-    * SAME batch rows after a failure, and applying it twice must leave
-    * the target byte-equal to applying it once. */
-  def applyBatch(batch: DataFrame, targetDir: String, key: String): Unit = {
-    val spark = batch.sparkSession
-    val deduped = dedupBatch(batch, key)
-    val target = new Path(targetDir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(target)) MergeInto.upsert(spark, targetDir, deduped, key)
-    // first batch goes through the same staging+rename commit as the
-    // merge path: a direct write could die half-done, and the replay
-    // would then see a partial targetDir and take the upsert branch
-    // against unreadable data
-    else MergeInto.swapWrite(spark, deduped, targetDir)
-    ()
-  }
-
   /** Keep ONE row per key, deterministically: max over the payload
     * struct (lexicographic by column). dropDuplicates would pick an
     * arbitrary row, so a replayed batch could commit a DIFFERENT winner
     * than the original attempt — idempotence needs the reduction itself
-    * to be order-independent. Shared by both sink flavors. */
+    * to be order-independent. */
   private def dedupBatch(batch: DataFrame, key: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, max, struct}
     val cols = batch.columns

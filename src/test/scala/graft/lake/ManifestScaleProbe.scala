@@ -18,22 +18,17 @@ import org.apache.spark.sql.functions._
   *   - retained driver heap of the decoded entry list, for scale
   *     context (both formats decode to the same Seq when materialized)
   *
-  * Run: sbt "Test/runMain graft.lake.ManifestScaleProbe [maxEntries] [noprefilter]"
-  * (`noprefilter` disables the codegen plan-prefilter via the
-  * `spark.graft.txnlake.planPrefilter=false` A/B seam, for same-box
-  * before/after measurement of the lazy listFiles cost.)
+  * Run: sbt "Test/runMain graft.lake.ManifestScaleProbe [maxEntries]"
   */
 object ManifestScaleProbe {
   def main(args: Array[String]): Unit = {
     val maxN = if (args.nonEmpty) args(0).toInt else 100000
-    val noPrefilter = args.length > 1 && args(1) == "noprefilter"
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if (noPrefilter) spark.conf.set("spark.graft.txnlake.planPrefilter", "false")
     val conf = spark.sparkContext.hadoopConfiguration
 
     def ms(t0: Long): Double = (System.nanoTime() - t0) / 1e6

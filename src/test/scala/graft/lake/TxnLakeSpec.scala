@@ -137,44 +137,6 @@ class TxnLakeSpec extends AnyFunSuite with SparkTestSession {
     assert(got === Seq((1L, "a", nasty), (2L, "b2", null), (3L, "c", nasty)))
   }
 
-  test("MergeInto migrates a hive table to the txn log when the swap can't name the partition") {
-    import spark.implicits._
-    val dir = freshDir()
-    // Spark's own writer Hive-escapes these directory names; the old
-    // rename swap require-refused them (VERDICT r8 #1)
-    Seq((1L, "a", "2024/07"), (2L, "b", "a:b"), (3L, "c", "plain"))
-      .toDF("id", "name", "part").write.partitionBy("part").parquet(dir)
-    MergeInto.upsertPartitioned(spark, dir,
-      Seq((2L, "b2", "a:b"), (4L, "d", "x=y")).toDF("id", "name", "part"), "id", "part")
-    assert(TxnLake.isTxnTable(spark, dir), "merge must have migrated to the commit log")
-    val got = TxnLake.read(spark, dir).orderBy("id").collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[String]("name"), r.getAs[String]("part"))).toSeq
-    assert(got === Seq((1L, "a", "2024/07"), (2L, "b2", "a:b"), (3L, "c", "plain"),
-      (4L, "d", "x=y")), "escaped partition values must round-trip through the merge")
-    // the superseded hive layout is gone: plain readers fail loudly
-    // instead of silently serving stale data
-    assert(!Files.list(java.nio.file.Paths.get(dir)).iterator().hasNext ||
-      Files.list(java.nio.file.Paths.get(dir)).iterator().next() != null) // dir exists
-    assertThrows[Exception](spark.read.parquet(dir).collect())
-    // and further merges keep flowing through the same entry point
-    MergeInto.upsertPartitioned(spark, dir,
-      Seq((1L, "a2", "2024/07")).toDF("id", "name", "part"), "id", "part")
-    assert(TxnLake.read(spark, dir).filter(col("id") === 1L)
-      .collect().head.getAs[String]("name") === "a2")
-  }
-
-  test("MergeInto migrates on NULL partition values instead of refusing") {
-    import spark.implicits._
-    val dir = freshDir()
-    Seq((1L, "a", "p1"), (2L, "b", "p2")).toDF("id", "name", "part")
-      .write.partitionBy("part").parquet(dir)
-    MergeInto.upsertPartitioned(spark, dir,
-      Seq((3L, "c", null)).toDF("id", "name", "part"), "id", "part")
-    val got = TxnLake.read(spark, dir).orderBy("id").collect()
-      .map(r => (r.getAs[Long]("id"), Option(r.getAs[String]("part")))).toSeq
-    assert(got === Seq(1L -> Some("p1"), 2L -> Some("p2"), 3L -> None))
-  }
-
   test("concurrent commits on disjoint partitions both land (rebase)") {
     import spark.implicits._
     val dir = freshTxnTable()

@@ -9,9 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** [[TxnSink]] — `df.writeStream.format("graft-txn")` (the Delta-parity
-  * streaming SINK): per-batch marker-checked commits, Append and
-  * Complete output modes, first-batch create, restart with no
-  * duplicates, Update-mode refusal. */
+  * streaming SINK, graft's one append sink): per-batch marker-checked
+  * commits, Append and Complete output modes, first-batch create,
+  * restart with no duplicates, Update-mode refusal. The sink must be
+  * exactly-once: a replayed micro-batch (same appId + batchId, or an
+  * older one) is a silent no-op, per application, across checkpoints
+  * and VACUUM, and under concurrent replays. */
 class TxnSinkSpec extends AnyFunSuite with SparkTestSession {
 
   import spark.implicits._
@@ -70,18 +73,109 @@ class TxnSinkSpec extends AnyFunSuite with SparkTestSession {
     assert(TxnLake.read(spark, tbl).count() === 15L)
   }
 
-  test("a replayed batch id is a silent no-op (appendOnce marker inside the sink)") {
-    val in = mkInput(1 to 9)
-    val tbl = fresh("tbl")
-    val sink = new TxnSink(spark, tbl, Map("partCol" -> "part", "txnAppId" -> "replay"),
+  /** An append-mode sink driven directly, batch by batch — the unit a
+    * streaming query's micro-batch (and its crash-replay) calls. */
+  private def appendSink(tbl: String, appId: String): TxnSink =
+    new TxnSink(spark, tbl, Map("partCol" -> "part", "txnAppId" -> appId),
       Nil, org.apache.spark.sql.streaming.OutputMode.Append())
-    val batch = (1 to 9).map(i => (i.toLong, s"p${i % 3}", i * 2L)).toDF("id", "part", "v")
+
+  private def rows(ids: Long*): DataFrame =
+    ids.map(i => (i, s"p${i % 3}", i * 2L)).toDF("id", "part", "v")
+
+  test("a replayed batch id is a silent no-op (appendOnce marker inside the sink)") {
+    val tbl = fresh("tbl")
+    val sink = appendSink(tbl, "replay")
+    val batch = rows(1L to 9L: _*)
     sink.addBatch(0L, batch)
     sink.addBatch(0L, batch) // crash-replay of the same micro-batch
     assert(TxnLake.read(spark, tbl).count() === 9L)
     sink.addBatch(1L, batch) // a NEW batch id commits
     assert(TxnLake.read(spark, tbl).count() === 18L)
     assert(TxnLake.lastCommittedTxn(spark, tbl, "replay") === Some(1L))
+    // an OLDER batch id (late replay after progress) is also refused
+    sink.addBatch(0L, rows(90L))
+    assert(TxnLake.read(spark, tbl).count() === 18L)
+    // markers are per APPLICATION: another writer's batch 0 lands
+    appendSink(tbl, "other-app").addBatch(0L, rows(70L))
+    assert(TxnLake.read(spark, tbl).count() === 19L)
+    // interleaved ordinary commits don't confuse the marker lookup
+    TxnLake.append(spark, tbl, rows(80L))
+    sink.addBatch(1L, batch)
+    assert(TxnLake.read(spark, tbl).count() === 20L)
+    assert(TxnLake.lastCommittedTxn(spark, tbl, "replay") === Some(1L))
+    assert(TxnLake.lastCommittedTxn(spark, tbl, "other-app") === Some(0L))
+    assert(TxnLake.lastCommittedTxn(spark, tbl, "nobody") === None)
+  }
+
+  test("markers survive the log checkpoint cadence and time travel still works") {
+    val tbl = fresh("tbl")
+    val sink = appendSink(tbl, "app")
+    // enough batches to cross a checkpoint boundary (interval 10)
+    (0L until 14L).foreach(i => sink.addBatch(i, rows(i)))
+    sink.addBatch(5L, rows(99L)) // replay of a pre-checkpoint batch
+    assert(TxnLake.read(spark, tbl).count() === 14L)
+    assert(TxnLake.lastCommittedTxn(spark, tbl, "app") === Some(13L))
+    // each batch is one atomic version (v0 = the sink's empty create):
+    // history replays exactly, on both sides of the checkpoint
+    (0L to 14L).foreach { v =>
+      assert(TxnLake.readVersion(spark, tbl, v).count() === v, s"version $v")
+    }
+  }
+
+  test("markers survive VACUUM dropping the records that carried them") {
+    val tbl = fresh("tbl")
+    val sink = appendSink(tbl, "app")
+    // the stream lands batches 0..4, then goes quiet
+    (0L until 5L).foreach(i => sink.addBatch(i, rows(i)))
+    // unrelated (marker-less) writers advance the log past the
+    // checkpoint interval, then vacuum drops EVERY record that carried
+    // an "app" marker — the folded `txns` map in the surviving
+    // checkpoint is now the only carrier of the exactly-once horizon
+    (0L until 8L).foreach(i => TxnLake.append(spark, tbl, rows(100L + i)))
+    TxnLake.vacuum(spark, tbl, keepVersions = 2, graceMs = 0L)
+    // a replay of a long-vacuumed batch must STILL be a silent no-op
+    sink.addBatch(3L, rows(3L))
+    assert(TxnLake.read(spark, tbl).count() === 13L)
+    assert(TxnLake.lastCommittedTxn(spark, tbl, "app") === Some(4L))
+    // the horizon keeps advancing normally after the vacuum
+    sink.addBatch(5L, rows(5L))
+    assert(TxnLake.read(spark, tbl).count() === 14L)
+  }
+
+  test("CONCURRENT replays of one batch: exactly one commit wins the race") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val out = Files.createTempDirectory("graft_lake_race").resolve("t").toString
+    TxnLake.create(spark, out, Seq((0L, "p")).toDF("id", "part"), "part")
+    // 4 writers replay THE SAME (appId, batch) simultaneously — the
+    // marker re-check inside the OCC retry loop must let exactly one
+    // through; the losers drop their staged files silently
+    val rows = Seq((1L, "p"), (2L, "p")).toDF("id", "part")
+    val wins = Await.result(
+      Future.sequence((1 to 4).map(_ => Future(
+        TxnLake.appendOnce(spark, out, rows, "racer", 7L)))),
+      5.minutes).count(identity)
+    assert(wins === 1, s"exactly one concurrent replay must commit, got $wins")
+    assert(TxnLake.read(spark, out).count() === 3, "no duplicate rows")
+    assert(TxnLake.lastCommittedTxn(spark, out, "racer") === Some(7L))
+    // distinct APPLICATIONS racing: markers are per-app, all land
+    val wins2 = Await.result(
+      Future.sequence((10 to 13).map(b => Future(
+        TxnLake.appendOnce(spark, out,
+          Seq((b.toLong, "p")).toDF("id", "part"), s"app-$b", 0L)))),
+      5.minutes).count(identity)
+    assert(wins2 === 4, "distinct applications must all commit")
+    assert(TxnLake.read(spark, out).count() === 7)
+    // out-of-order versions under ONE app are STALE REPLAYS by contract
+    // (foreachBatch is serial per query): after version 9 commits, a
+    // late-arriving 8 must no-op — exactly Delta's txnVersion rule
+    assert(TxnLake.appendOnce(spark, out,
+      Seq((90L, "p")).toDF("id", "part"), "racer", 9L) === true)
+    assert(TxnLake.appendOnce(spark, out,
+      Seq((80L, "p")).toDF("id", "part"), "racer", 8L) === false)
+    assert(TxnLake.read(spark, out).count() === 8)
   }
 
   test("complete mode: each batch replaces the table; final state = full aggregate") {

