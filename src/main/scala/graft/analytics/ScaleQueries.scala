@@ -2213,7 +2213,7 @@ object ScaleQueries {
     * position sidecars — zero data files rewritten (pinned in
     * `DeletionVectorSpec`) — then OPTIMIZE(purgeDv) folds the vectors
     * into fresh files. The query aggregates the SAME snapshot through
-    * both read paths — the merge-on-read positional anti-join ('mor')
+    * both read paths — the merge-on-read in-scan position filter ('mor')
     * and the purged vector-free scan ('purged') — and the oracle
     * recomputes both phases from the base table with the predicates
     * negated, so a hash match proves the sidecar subtraction and the

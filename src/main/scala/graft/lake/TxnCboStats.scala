@@ -103,8 +103,8 @@ object TxnCboStats extends Rule[LogicalPlan] {
       // the attach entirely so the plan is byte-identical to before.
       // Same discipline for a DV'd entry WITHOUT a doomed count (legacy
       // or sidecar-fallback commits): its deleted rows are knowable
-      // only by opening the sidecar — a Spark job, too heavy inside an
-      // optimizer rule — and attaching the undiminished sum would feed
+      // only by decoding the sidecars — file reads inside an optimizer
+      // rule — and attaching the undiminished sum would feed
       // CBO an over-stated row count on mixed tables, so abstain and
       // let size-based estimation stand.
       if (m.files.exists(_.rows.isEmpty) ||

@@ -29,7 +29,9 @@ import org.apache.spark.sql.types.StructType
   * commit granularity. Offsets are plain version numbers, so restart
   * replay reconstructs batches purely from the immutable feed dirs.
   * Retention contract: checkpointed versions must outlive
-  * [[TxnLake.vacuum]], as with Delta CDF. */
+  * [[TxnLake.vacuum]], as with Delta CDF. A batch holding entries
+  * across a column rename from the version the stream's schema binds
+  * fails ([[graft.streaming.CdcFeed.requireNoRenameBetween]]). */
 private[graft] class TxnCdcStream(spark: SparkSession, dir: String,
                                   options: Map[String, String]) extends Source
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
@@ -53,6 +55,9 @@ private[graft] class TxnCdcStream(spark: SparkSession, dir: String,
     s"$dir has no ${TxnLake.CdcDir} feed — create the table with " +
       "changeFeed = true (or use the plain table stream)")
 
+  // the version whose column names `schema` binds: every batch's
+  // entries must share them (the rename read barrier)
+  private val schemaVersion: Long = TxnLake.currentVersion(spark, dir)
   override val schema: StructType = CdcFeed.schemaOf(spark, dir)
 
   private var lastOffered: Option[Long] = None
@@ -105,8 +110,9 @@ private[graft] class TxnCdcStream(spark: SparkSession, dir: String,
     }
     // whole commits between the offsets, reconstructed from the
     // immutable v-dirs — replay-identical after restart
-    val dirs = feedEntries().filter { case (v, _) => fromV.forall(v > _) && v <= endV }
-      .map { case (_, name) => s"$dir/${TxnLake.CdcDir}/$name" }
+    val entries = feedEntries().filter { case (v, _) => fromV.forall(v > _) && v <= endV }
+    CdcFeed.requireNoRenameBetween(spark, dir, entries.map(_._1), schemaVersion)
+    val dirs = entries.map { case (_, name) => s"$dir/${TxnLake.CdcDir}/$name" }
     val batch =
       if (dirs.isEmpty)
         spark.createDataFrame(

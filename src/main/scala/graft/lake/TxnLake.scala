@@ -229,9 +229,9 @@ object TxnLake {
   /** Root of DELETION-VECTOR sidecars (merge-on-read row deletes): one
     * `c<commit>` parquet directory per [[deleteWhere]] commit, rows
     * `(file, pos)` — the data-relative path and parquet row index of
-    * each deleted row. Data files are never rewritten; readers subtract
-    * referenced DV positions at scan time and [[optimize]] purges them
-    * by rewriting. */
+    * each deleted row. Data files are never rewritten; readers drop
+    * referenced DV positions inside the scan ([[DeletionVectors]]) and
+    * [[optimize]] purges them by rewriting. */
   private[lake] val DvDir = "_graft_dv"
 
   /** Root of the commit-time CHANGE-DATA feed (Delta CDF-style): one
@@ -1231,6 +1231,20 @@ object TxnLake {
     vs.max
   }
 
+  /** The physical → logical name of every column at each retained log
+    * version, ascending: the names a version's files and change-feed
+    * entries were written under ([[renameColumn]] changes them).
+    * Metadata only — one record read per version, no data file. */
+  private[graft] def columnNamesByVersion(spark: SparkSession,
+                                          dir: String): Seq[(Long, Map[String, String])] = {
+    val fs = fsOf(spark, dir)
+    listVersions(fs, dir).sorted.map { v =>
+      val r = readRecord(fs, manifestPath(dir, v))
+      v -> StructType.fromDDL(r.schemaDdl).fieldNames
+        .map(p => p -> r.renames.getOrElse(p, p)).toMap
+    }
+  }
+
   /** TIME TRAVEL BY TIMESTAMP: the newest version whose commit
     * published at-or-before `tsMillis`, resolved off each record's
     * IN-COMMIT TIMESTAMP — persisted inside the log record at publish
@@ -1342,8 +1356,9 @@ object TxnLake {
     * sidecar files opened, O(manifest) — which is what makes
     * `SELECT count(*)` on a 100 TB table instant (the Delta/Iceberg
     * stats-only count). Entries whose DVs predate doomed-count
-    * tracking fall back to counting the narrow (file, pos) sidecars —
-    * O(deleted rows), only the sidecars live files reference. Returns
+    * tracking fall back to decoding the (file, pos) sidecars on the
+    * driver ([[DeletionVectors]]) — O(deleted rows), only the sidecars
+    * live files reference, no Spark job. Returns
     * None when any live entry predates row-count tracking (legacy
     * manifest without `rows`) — callers fall back to a scan; never
     * guesses. */
@@ -1360,43 +1375,17 @@ object TxnLake {
     // deletes only evaluate on live rows so sidecar positions are
     // disjoint) — the count is then a pure log read even under heavy
     // deletes, zero sidecar I/O. Entries written before the field
-    // existed fall through to the sidecar job below.
+    // existed fall through to the sidecar decode below.
     val dvEntries = m.files.filter(_.dv.nonEmpty)
     if (dvEntries.forall(_.doomed.isDefined))
       return Some(base - dvEntries.flatMap(_.doomed).sum)
     // a sidecar can doom rows of files that were since rewritten (and
-    // re-added without the DV), so each sidecar's count is restricted
-    // to the live paths that still REFERENCE it — deleteWhere evaluates
-    // on live (already-DV-filtered) rows, so no position is doomed
-    // twice across sidecars and the per-sidecar counts are disjoint
-    val bySidecar = m.files.flatMap(f => f.dv.map(_ -> f.path))
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val deleted =
-      if (bySidecar.isEmpty) 0L
-      else {
-        import spark.implicits._
-        // ONE job over all referenced sidecars, not one driver round
-        // trip per delete commit: each row's sidecar identity is
-        // recovered from its own path (commit ids are UUIDs, so the
-        // DvDir/c<id> suffix is unique even across cloned roots), and
-        // a broadcast (sidecar, file) reference set keeps exactly the
-        // rows live files still reference
-        // sidecar identity = the TRAILING "_graft_dv/c<id>" component —
-        // lastIndexOf / an end-anchored regex, never a first-occurrence
-        // scan, because a table ROOT path may itself contain the DvDir
-        // string as a substring and a first-match key would empty the
-        // join (silent wrong counts)
-        val refs = bySidecar.toSeq.flatMap { case (rel, paths) =>
-          paths.map(p => (rel.substring(rel.lastIndexOf(DvDir)), p))
-        }.toDF("__dv", "__file")
-        spark.read.parquet(bySidecar.keys.map(locateDv(dir, _)).toSeq: _*)
-          .select(col("file"), regexp_extract(col("_metadata.file_path"),
-            s"($DvDir/[^/]+)/[^/]*$$", 1).as("__dvid"))
-          .join(broadcast(refs),
-            col("__dvid") === col("__dv") && col("file") === col("__file"),
-            "left_semi")
-          .count()
-      }
+    // re-added without the DV), so each entry counts only its own
+    // positions in the sidecars it still REFERENCES — deleteWhere
+    // evaluates on live (already-DV-filtered) rows, so no position is
+    // doomed twice across sidecars
+    val deleted = DeletionVectors.ofEntries(spark, dir, dvEntries)
+      .valuesIterator.map(_.getLongCardinality).sum
     Some(base - deleted)
   }
 
@@ -1526,12 +1515,16 @@ object TxnLake {
     * live row satisfying `predicate` deleted WITHOUT rewriting a single
     * data file. The doomed rows' `(file, row_index)` positions are
     * written once as a parquet sidecar under `_graft_dv/c<commit>/`
-    * (distributed write, O(deleted rows) — never a driver collect), and
+    * straight from the predicate scan's tasks (O(deleted rows), no
+    * shuffle, never a driver collect); the per-file counts come from
+    * decoding that sidecar on the driver ([[DeletionVectors]]), and
     * one atomic commit re-publishes the affected files' manifest
-    * entries with the sidecar appended to their `dv` list. Readers of
-    * this and later versions subtract the positions at scan time
-    * ([[readEntries]]); readers of older versions never see the
-    * sidecar — time travel is untouched.
+    * entries with the sidecar appended to their `dv` list and their
+    * `doomed` counts raised. The whole delete is one Spark job, two
+    * with the change feed on (the pre-images, then the sidecar from
+    * them). Readers of this and later versions drop the positions
+    * inside the scan ([[readEntries]]); readers of older versions
+    * never see the sidecar — time travel is untouched.
     *
     * This is the delete a 100 TB table wants when the doomed rows are a
     * sliver of the files they sit in: [[delete]]'s copy-on-write
@@ -1547,75 +1540,22 @@ object TxnLake {
     *
     * Returns the number of rows deleted (0 = nothing matched, no
     * commit published). */
-  /** Per-table-file doomed-row counts of a just-written DV sidecar —
-    * (file, n) pairs. FOOTER FAST PATH first: the sidecar was
-    * repartitioned by `file` and written without a row cap, so each
-    * part file usually holds exactly one `file` value — its footer
-    * then gives the value (string min==max,
-    * zero nulls) and the count (block row counts) with no Spark job.
-    * Any ambiguous part (several table files hashed into one
-    * partition, missing stats) falls back to the read-back aggregate,
-    * so this can only skip work, never change a count. */
-  private def dvMetaOf(spark: SparkSession, dvAbs: String): Seq[(String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(dvAbs)
-    val fs = p.getFileSystem(conf)
-    val parts = Option(fs.globStatus(new Path(s"$dvAbs/*.parquet")))
-      .getOrElse(Array.empty)
-    val fast: Option[Seq[(String, Long)]] =
-      if (parts.length > 64) None
-      else {
-        val acc = Seq.newBuilder[(String, Long)]
-        val ok = parts.forall { st =>
-          val reader =
-            try org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-            catch { case _: Exception => return fallbackDvMeta(spark, dvAbs) }
-          try {
-            val blocks = reader.getFooter.getBlocks.asScala.toSeq
-            val vals = blocks.map { b =>
-              b.getColumns.asScala.find(_.getPath.toDotString == "file") match {
-                case Some(c) =>
-                  val s = c.getStatistics
-                  if (s == null || !s.isNumNullsSet || s.getNumNulls != 0L ||
-                      !s.hasNonNullValue || s.genericGetMin != s.genericGetMax) None
-                  else Some((s.genericGetMin
-                    .asInstanceOf[org.apache.parquet.io.api.Binary]
-                    .toStringUsingUTF8, b.getRowCount))
-                case None => None
-              }
-            }
-            if (vals.exists(_.isEmpty)) false
-            else { acc ++= vals.flatten; true }
-          } finally reader.close()
-        }
-        if (ok) Some(acc.result()) else None
-      }
-    fast.map(_.groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq)
-      .getOrElse(fallbackDvMeta(spark, dvAbs))
-  }
-
-  private def fallbackDvMeta(spark: SparkSession, dvAbs: String): Seq[(String, Long)] =
-    spark.read.parquet(dvAbs)
-      .groupBy(col("file")).agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-
   def deleteWhere(spark: SparkSession, dir: String, predicate: Column): Long =
     deleteWhere(spark, dir, predicate, () => ())
 
   /** The ONE predicate pass of a deletion-vector commit (deleteWhere,
     * updateWhere): writes the DV sidecar `dvRel` — the `(file, pos)` of
-    * every `matched` row — and returns its per-file counts. With a feed
+    * every `matched` row, straight from the scan's tasks — and returns
+    * its per-file positions, decoded from the sidecar just written
+    * ([[DeletionVectors.decode]], driver-side, no job). With a feed
     * stage, the pass writes the full pre-images (tagged `changeType`,
     * plus row identity) into the stage and the sidecar derives from
     * THOSE bytes with a narrow two-column re-read: one live scan, and
-    * the feed and the DV come from the same evaluation. Touched files
-    * and counts come from the written sidecar's own data. Nothing
+    * the feed and the DV come from the same evaluation. Nothing
     * matched: sidecar and stage are dropped, and the result is empty. */
   private def stageDoomed(spark: SparkSession, dir: String, matched: DataFrame,
                           changeType: String, dvRel: String,
-                          feedStage: Option[String]): Seq[(String, Long)] = {
+                          feedStage: Option[String]): DeletionVectors.Vectors = {
     val dvAbs = s"$dir/$dvRel"
     val positions = feedStage match {
       case Some(rel) =>
@@ -1625,14 +1565,13 @@ object TxnLake {
       case None => matched
     }
     positions.select(col("__txn_file").as("file"), col("__txn_pos").as("pos"))
-      .repartition(col("file")).sortWithinPartitions(col("file"), col("pos"))
       .write.mode(SaveMode.ErrorIfExists).parquet(dvAbs)
-    val dvMeta = dvMetaOf(spark, dvAbs)
-    if (dvMeta.isEmpty) {
+    val doomed = DeletionVectors.decode(spark.sparkContext.hadoopConfiguration, dvAbs)
+    if (doomed.isEmpty) {
       val fs = fsOf(spark, dir)
       (dvRel +: feedStage.toSeq).foreach(r => fs.delete(new Path(dir, r), true))
     }
-    dvMeta
+    doomed
   }
 
   /** Reads the part files of the feed stage `rel` that this commit
@@ -1676,16 +1615,16 @@ object TxnLake {
     requireDeterministic(live.filter(predicate), "deleteWhere")
     val dvRel = s"$DvDir/c${newCommitId()}"
     val feedStage = newFeedStage(spark, dir)
-    val dvMeta = stageDoomed(spark, dir, live.filter(predicate), "delete",
+    val doomed = stageDoomed(spark, dir, live.filter(predicate), "delete",
       dvRel, feedStage)
-    if (dvMeta.isEmpty) return 0L
-    val deleted = dvMeta.map(_._2).sum
-    val touchedPaths = dvMeta.map(_._1).toSet
+    if (doomed.isEmpty) return 0L
     // each entry's cumulative DOOMED-ROW COUNT rides the manifest
     // (sidecar positions are disjoint — deletes evaluate on live rows —
     // so counts add exactly): metadata COUNT(*) and plan-time rowCount
     // become exact under DVs with ZERO sidecar reads
-    val perFile = dvMeta.toMap
+    val perFile = doomed.map { case (f, bits) => f -> bits.getLongCardinality }
+    val deleted = perFile.values.sum
+    val touchedPaths = perFile.keySet
     val updated = base.files.filter(f => touchedPaths.contains(f.path))
       .map(f => f.copy(dv = f.dv :+ dvRel,
         // only CONTINUE a complete count: an entry whose existing DVs
@@ -1761,34 +1700,31 @@ object TxnLake {
     // the UPDATE PRE-IMAGES ([[stageDoomed]]) — one live scan
     val dvRel = s"$DvDir/c${newCommitId()}"
     val feedStage = newFeedStage(spark, dir)
-    val dvMeta = stageDoomed(spark, dir, live.filter(predicate),
+    val doomed = stageDoomed(spark, dir, live.filter(predicate),
       "update_preimage", dvRel, feedStage)
-    if (dvMeta.isEmpty) return 0L
-    val updatedCount = dvMeta.map(_._2).sum
-    val touchedPaths = dvMeta.map(_._1).toSet
-    val perFile = dvMeta.toMap
+    if (doomed.isEmpty) return 0L
+    val perFile = doomed.map { case (f, bits) => f -> bits.getLongCardinality }
+    val updatedCount = perFile.values.sum
+    val touchedPaths = perFile.keySet
     val withDv = base.files.filter(f => touchedPaths.contains(f.path))
       .map(f => f.copy(dv = f.dv :+ dvRel,
         // same legacy-DV guard as deleteWhere: never start a partial count
         doomed = if (f.dv.isEmpty || f.doomed.isDefined)
           Some(f.doomed.getOrElse(0L) + perFile(f.path)) else None))
     // 2. matched rows from the MATERIALIZED single evaluation — the
-    // staged feed bytes when the feed is on, else the DV itself (a
-    // narrow (file, pos) semi-join, broadcast at DV scale). Never a
-    // second predicate evaluation: the doomed set and the post-image
-    // set are the same rows BY CONSTRUCTION, so even a
-    // per-query-seeded deterministic predicate (current_timestamp)
-    // cannot split them.
+    // staged feed bytes when the feed is on, else the touched files'
+    // rows AT the sidecar's positions (the in-scan DV filter with keep
+    // polarity; the new positions are live rows, so older vectors need
+    // no second pass). Never a second predicate evaluation: the doomed
+    // set and the post-image set are the same rows BY CONSTRUCTION, so
+    // even a per-query-seeded deterministic predicate
+    // (current_timestamp) cannot split them.
     val matchedPre = feedStage match {
       case Some(rel) =>
         readStage(spark, dir, rel, live.schema).drop("__txn_file", "__txn_pos")
       case None =>
-        val dvPos = spark.read.parquet(s"$dir/$dvRel")
-          .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
-        live.join(dvPos,
-          col("__txn_file") === col("__dv_file") &&
-            col("__txn_pos") === col("__dv_pos"), "left_semi")
-          .drop("__txn_file", "__txn_pos")
+        scanPositions(spark, dir, schema, base.files.filter(f => touchedPaths.contains(f.path)),
+          doomed, keep = true, keepMeta = false, base.renames)
     }
     // post-images: SET over the matched logical rows, each result cast
     // back to the table's own column types (storeAssignmentPolicy
@@ -4683,18 +4619,6 @@ object TxnLake {
     else
       spark.read.schema(schema).parquet(paths.map(p => s"$dir/$p"): _*)
 
-  /** Snapshot read of a set of manifest entries with their DELETION
-    * VECTORS applied: rows whose `(file, row_index)` appears in any of
-    * the entries' DV sidecars are subtracted via an anti-join on the
-    * parquet reader's `_metadata` columns — the merge-on-read path. DV
-    * sidecars are tiny next to the data (O(deleted rows), two narrow
-    * columns), so AQE plans the anti-join as a broadcast in the common
-    * case; a table whose DVs have grown past broadcast scale pays one
-    * co-partitioning shuffle until [[optimize]]`(purgeDv = true)`
-    * rewrites the vectors away — exactly the read-amplification trade
-    * merge-on-read formats (Iceberg v2 positional deletes, Delta DVs)
-    * make. Entries without DVs take the plain vectorized-scan path
-    * untouched. */
   /** Physical→logical projection (one simultaneous select, so cyclic
     * rename chains — swaps — resolve correctly); identity sans renames.
     * Reserved meta columns are never rename targets, so they pass
@@ -4753,36 +4677,49 @@ object TxnLake {
       org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
   }
 
+  /** Snapshot read of a set of manifest entries with their DELETION
+    * VECTORS applied — the merge-on-read path. The sidecars the entries
+    * reference are decoded on the driver into one bitmap per file
+    * ([[DeletionVectors.ofEntries]]: a direct parquet read of the
+    * fixed `(file, pos)` schema, no Spark job), and the scan drops the
+    * doomed rows by `_metadata.row_index` as it reads each file — no
+    * join, so building the frame starts no job and filters pushed into
+    * the read still reach parquet. The bitmaps ride the plan to the
+    * tasks: O(deleted rows), compressed, until
+    * [[optimize]]`(purgeDv = true)` rewrites the vectors away — the
+    * read-amplification trade merge-on-read formats (Iceberg v2
+    * positional deletes, Delta DVs) make. Entries without DVs take the
+    * plain vectorized-scan path untouched. */
   private[lake] def readEntries(spark: SparkSession, dir: String, schema: StructType,
                                 entries: Seq[FileEntry],
                                 keepMeta: Boolean = false,
-                                renames: Map[String, String] = Map.empty): DataFrame = {
-    val dvDirs = entries.flatMap(_.dv).distinct.sorted
-    if (dvDirs.isEmpty && !keepMeta)
-      return toLogical(
-        if (entries.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        else scanEntries(spark, dir, schema, entries),
-        renames)
+                                renames: Map[String, String] = Map.empty): DataFrame =
+    scanPositions(spark, dir, schema, entries,
+      DeletionVectors.ofEntries(spark, dir, entries), keep = false, keepMeta, renames)
+
+  /** Scan of `entries` filtered by the row positions in `vectors`
+    * INSIDE the scan ([[DeletionVectors.filter]]): `keep = false` drops
+    * them (a snapshot read), `keep = true` keeps only them (the rows a
+    * just-staged sidecar dooms). `keepMeta` adds each row's identity,
+    * `__txn_file` (table-relative path) and `__txn_pos` (row index). */
+  private def scanPositions(spark: SparkSession, dir: String, schema: StructType,
+                            entries: Seq[FileEntry], vectors: DeletionVectors.Vectors,
+                            keep: Boolean, keepMeta: Boolean,
+                            renames: Map[String, String]): DataFrame = {
+    val withMeta = if (!keepMeta) schema else StructType(schema.fields :+
+      org.apache.spark.sql.types.StructField("__txn_file", org.apache.spark.sql.types.StringType) :+
+      org.apache.spark.sql.types.StructField("__txn_pos", org.apache.spark.sql.types.LongType))
     if (entries.isEmpty)
-      return toLogical(spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        if (keepMeta) StructType(schema.fields :+
-          org.apache.spark.sql.types.StructField("__txn_file", org.apache.spark.sql.types.StringType) :+
-          org.apache.spark.sql.types.StructField("__txn_pos", org.apache.spark.sql.types.LongType))
-        else schema), renames)
-    val df = scanEntries(spark, dir, schema, entries)
-      .withColumn("__txn_file",
-        expr(dataRelSql("_metadata.file_path")))
-      .withColumn("__txn_pos", col("_metadata.row_index"))
-    val out =
-      if (dvDirs.isEmpty) df
-      else {
-        val dv = spark.read.parquet(dvDirs.map(locateDv(dir, _)): _*)
-          .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
-        df.join(dv, col("__txn_file") === col("__dv_file") &&
-          col("__txn_pos") === col("__dv_pos"), "left_anti")
-      }
-    toLogical(if (keepMeta) out else out.drop("__txn_file", "__txn_pos"), renames)
+      return toLogical(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withMeta),
+        renames)
+    val scan = scanEntries(spark, dir, schema, entries)
+    val live = if (vectors.isEmpty && !keep) scan
+      else DeletionVectors.filter(scan, vectors, keep)
+    toLogical(
+      if (!keepMeta) live
+      else live.withColumn("__txn_file", expr(dataRelSql("_metadata.file_path")))
+        .withColumn("__txn_pos", col("_metadata.row_index")),
+      renames)
   }
 
   /** Write `df` as immutable files under a fresh `_graft_data/c<id>/`

@@ -209,8 +209,8 @@ class TxnLakeSource extends RelationProvider with CreatableRelationProvider
       // prune the MANIFEST first (zone map / bloom / partition checks
       // stay valid under DVs — a deletion vector only removes rows, so
       // every surviving stat is still an over-approximation), then the
-      // surviving files are read through TxnLake's own path (DV
-      // anti-join + logical projection) with the filters re-applied
+      // surviving files are read through TxnLake's own path (in-scan
+      // DV filter + logical projection) with the filters re-applied
       // INSIDE that plan, so parquet row-group skipping and pushdown
       // still fire within each surviving file. Catalyst re-evaluates
       // every filter on the returned rows (unhandledFilters default),
@@ -268,9 +268,11 @@ private[lake] class TxnReadOnlyParquetFormat extends ParquetFileFormat {
   * snapshot's manifest. Pushed filters (logical names) prune files
   * against the manifest's zone maps, blooms and partition-value sets
   * BEFORE any data file opens; the survivors are served through
-  * [[TxnLake.readEntries]] (deletion-vector anti-join + physical→
-  * logical projection) with the translatable filters re-applied inside
-  * that plan so parquet pushdown still reaches the scan. */
+  * [[TxnLake.readEntries]] (the surviving files' deletion vectors
+  * decoded on the driver and applied inside the scan by row index, no
+  * join and no Spark job to build the frame; physical→logical
+  * projection) with the translatable filters re-applied inside that
+  * plan so parquet pushdown still reaches the scan. */
 private[lake] class TxnDvRelation(spark: SparkSession,
                                   private[lake] val dir: String,
                                   physSchema: StructType,

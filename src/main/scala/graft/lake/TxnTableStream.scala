@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Model (Delta's DeltaSource shape, re-expressed on the V1 `Source`
   * API so `getBatch` can return a declarative DataFrame and every
-  * downstream layer — vectorized parquet reader, DV anti-join,
+  * downstream layer — vectorized parquet reader, in-scan DV filter,
   * name-mapping projection — is the lake's existing batch machinery):
   *
   *  - INITIAL SNAPSHOT: with no checkpoint and no `startingVersion` /

@@ -491,13 +491,10 @@ object GraftSqlDml {
               s"timestamp string literal, got ${other.sql}")
         }
         val from = bound(args(1), "start", start = true)
-        val feed = graft.streaming.CdcFeed.batch(spark, dir, from)
-        val bounded =
-          if (args.size == 3)
-            feed.filter(col(TxnLake.VersionCol) <=
-              bound(args(2), "end", start = false))
-          else feed
-        SubqueryAlias("table_changes", bounded.queryExecution.analyzed)
+        val feed = if (args.size == 3)
+          graft.streaming.CdcFeed.batch(spark, dir, from, bound(args(2), "end", start = false))
+        else graft.streaming.CdcFeed.batch(spark, dir, from)
+        SubqueryAlias("table_changes", feed.queryExecution.analyzed)
       case tt @ org.apache.spark.sql.catalyst.analysis.RelationTimeTravel(rel, ts, ver) =>
         resolveTarget(spark, rel) match {
           case None => tt

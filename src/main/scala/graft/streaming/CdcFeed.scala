@@ -36,15 +36,59 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
   */
 object CdcFeed {
 
-  /** The feed's schema: the table's CURRENT schema (older feed files
-    * null-fill later columns, exactly like the table's own readers)
-    * plus the change-type and commit-version columns. */
-  def schemaOf(spark: SparkSession, dir: String): StructType =
-    TxnLake.read(spark, dir).schema
+  /** The feed's schema: the table's schema at `version` (the CURRENT
+    * one when negative; older feed files null-fill later columns,
+    * exactly like the table's own readers) plus the change-type and
+    * commit-version columns. */
+  def schemaOf(spark: SparkSession, dir: String, version: Long = -1L): StructType =
+    (if (version < 0) TxnLake.read(spark, dir) else TxnLake.readVersion(spark, dir, version))
+      .schema
       .add(TxnLake.ChangeTypeCol, StringType)
       .add(TxnLake.VersionCol, LongType)
 
   private def feedGlob(dir: String): String = s"$dir/${TxnLake.CdcDir}/v*"
+
+  /** The feed READ BARRIER at a column rename (Delta CDF's rule for
+    * non-additive schema changes): feed entries keep the logical names
+    * of their own version, and a reader binds one schema, so entries on
+    * the far side of a [[TxnLake.renameColumn]] from `schemaVersion`
+    * would read the renamed column as NULL. Fails with
+    * [[CdcRenameBarrierException]] naming the rename's version when any
+    * of `entryVersions` sits across one. Metadata only. */
+  private[graft] def requireNoRenameBetween(spark: SparkSession, dir: String,
+                                            entryVersions: Seq[Long],
+                                            schemaVersion: Long): Unit = {
+    if (entryVersions.isEmpty) return
+    val names = TxnLake.columnNamesByVersion(spark, dir)
+    def at(v: Long): Option[Map[String, String]] =
+      names.takeWhile(_._1 <= v).lastOption.map(_._2)
+    at(schemaVersion).foreach { target =>
+      def differs(m: Map[String, String]): Boolean =
+        m.exists { case (p, l) => target.get(p).exists(_ != l) }
+      entryVersions.distinct.sorted.foreach { v =>
+        if (at(v).exists(differs)) {
+          val (lo, hi) = (math.min(v, schemaVersion), math.max(v, schemaVersion))
+          val renamed = names.sliding(2).collectFirst {
+            case Seq((_, a), (u, b)) if u > lo && u <= hi && a != b => u
+          }.getOrElse(hi)
+          throw new CdcRenameBarrierException(dir, renamed, v, schemaVersion)
+        }
+      }
+    }
+  }
+
+  /** Retained feed versions at or after `fromVersion`, with their
+    * dirs, ascending — one listing of the feed root. */
+  private def feedDirs(spark: SparkSession, dir: String,
+                       fromVersion: Long): Seq[(Long, String)] = {
+    val root = new Path(dir, TxnLake.CdcDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(root).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.matches("v\\d+"))
+      .map(st => (st.getPath.getName.drop(1).toLong, st.getPath.toString))
+      .filter(_._1 >= fromVersion)
+      .sortBy(_._1)
+  }
 
   private def requireFeed(spark: SparkSession, dir: String): Unit = {
     val root = new Path(dir, TxnLake.CdcDir)
@@ -84,28 +128,29 @@ object CdcFeed {
             .otherwise(lit("insert"))))
       .drop("__cdc_file")
 
-  /** Batch read of the feed: every retained change at `fromVersion` or
-    * later, one row per changed row per commit, tagged
-    * `_change_type` in the preimage dialect and `_commit_version`. */
-  def batch(spark: SparkSession, dir: String, fromVersion: Long = 0L): DataFrame = {
+  /** Batch read of the feed: every retained change from `fromVersion`
+    * to `toVersion` (the head when negative), one row per changed row
+    * per commit, tagged `_change_type` in the preimage dialect and
+    * `_commit_version`, in the column names of `toVersion`. A range
+    * holding entries from the other side of a column rename fails with
+    * [[CdcRenameBarrierException]] ([[requireNoRenameBetween]]). */
+  def batch(spark: SparkSession, dir: String, fromVersion: Long = 0L,
+            toVersion: Long = -1L): DataFrame = {
     requireFeed(spark, dir)
-    val schema = schemaOf(spark, dir)
+    val head = TxnLake.currentVersion(spark, dir)
+    val end = if (toVersion >= 0) math.min(toVersion, head) else head
     // ONE driver listing resolves the v-dirs, and the read takes the
     // CONCRETE dir list instead of the glob: an empty feed early-returns
     // (the glob would throw), version pruning drops pre-cutoff dirs
     // before the scan ever lists their files, and a multi-path read
     // skips Spark's FileStreamSink metadata probe — which, fed the
     // glob, logged a FileNotFoundException stack trace per read
-    val root = new Path(dir, TxnLake.CdcDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vDirs = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.matches("v\\d+"))
-      .map(st => (st.getPath.getName.drop(1).toLong, st.getPath.toString))
-      .filter(_._1 >= fromVersion)
-      .sortBy(_._1)
+    val vDirs = feedDirs(spark, dir, fromVersion).filter(_._1 <= end)
     if (vDirs.isEmpty)
       return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(spark, dir))
+    requireNoRenameBetween(spark, dir, vDirs.map(_._1), end)
+    val schema = schemaOf(spark, dir, if (end == head) -1L else end)
     derive(spark.read.schema(schema).parquet(vDirs.map(_._2).toIndexedSeq: _*))
       .filter(col(TxnLake.VersionCol) >= fromVersion)
   }
@@ -126,7 +171,13 @@ object CdcFeed {
     * whole retained feed. The cutoff rides the per-row
     * `_commit_version`, so the stream's first batch lists the retained
     * feed dirs once and discards pre-cutoff rows; every later batch
-    * touches only never-seen files. */
+    * touches only never-seen files.
+    *
+    * Retained entries across a column rename from the head fail the
+    * start ([[requireNoRenameBetween]]). A rename committed while the
+    * stream runs is not seen by this file stream; the version-granular
+    * `readChangeFeed` source ([[graft.lake.TxnCdcStream]]) checks every
+    * batch. */
   def stream(spark: SparkSession, dir: String,
              maxFilesPerTrigger: Option[Int] = None,
              startingVersion: Option[Long] = None,
@@ -136,6 +187,9 @@ object CdcFeed {
       "startingVersion and startingTimestamp are mutually exclusive")
     val from = startingVersion.orElse(
       startingTimestamp.map(firstVersionAtOrAfter(spark, dir, _)))
+    val head = TxnLake.currentVersion(spark, dir)
+    requireNoRenameBetween(spark, dir,
+      feedDirs(spark, dir, from.getOrElse(0L)).map(_._1), head)
     val reader = spark.readStream.schema(schemaOf(spark, dir))
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     val df = derive(reader.parquet(feedGlob(dir)))
@@ -250,3 +304,16 @@ object CdcFeed {
       .select(batch.columns.map(col).toIndexedSeq: _*)
   }
 }
+
+/** A change-feed read whose range crosses a [[TxnLake.renameColumn]]:
+  * the entry at `entryVersion` was written under other column names
+  * than the schema the read binds (that of `schemaVersion`), the
+  * rename committing at `renameVersion` between them. Read the feed
+  * from `renameVersion` on (or up to the version before it). */
+final class CdcRenameBarrierException(val dir: String, val renameVersion: Long,
+                                      val entryVersion: Long, val schemaVersion: Long)
+    extends IllegalStateException(
+      s"change feed of $dir crosses the column rename committed at version " +
+        s"$renameVersion: the entry of version $entryVersion was written under " +
+        s"other column names than the schema of version $schemaVersion the read " +
+        s"binds; read from version $renameVersion on")

@@ -68,4 +68,33 @@ trait SparkTestSession {
     assert(scans.nonEmpty, s"expected a FileSourceScanExec in the plan:\n$plan")
     scans.map(_.metrics("numFiles").value).sum
   }
+
+  /** Spark jobs `body` starts on this thread. A marker job follows the
+    * body; the listener bus delivers events in order, so once the
+    * marker's start has arrived every earlier job start has too. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tagKey = "graft.spec.jobTag"
+    val sc = spark.sparkContext
+    val tag = s"jobs-${java.util.UUID.randomUUID()}"
+    val marker = s"$tag-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      def tagged(t: String)(f: => Unit): Unit = {
+        sc.setLocalProperty(tagKey, t)
+        try f finally sc.setLocalProperty(tagKey, null)
+      }
+      tagged(tag)(body)
+      tagged(marker)(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "the marker job's start never reached the listener")
+      seen.toArray.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -1,7 +1,9 @@
 package graft.lake
 
 import graft.SparkTestSession
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -133,5 +135,95 @@ class DeletionVectorSpec extends AnyFunSuite with SparkTestSession {
     val left = fs.listStatus(dvRoot).map(_.getPath.getName).toSeq
     assert(left.size === 1, s"only v3's sidecar survives, got $left")
     assert(ids(TxnLake.read(spark, dir)) === (3L to 12L))
+  }
+
+  /** REFERENCE merge-on-read read of manifest `m`, built from the raw
+    * sidecars with Spark: every referenced sidecar read as parquet,
+    * each entry's positions restricted to its own path and the
+    * sidecars it references, and anti-joined with the data files' rows
+    * on `(file, row_index)`. Columns in logical names, plus the row's
+    * `__txn_file` / `__txn_pos`. */
+  private def reference(dir: String, m: TxnLake.Manifest): DataFrame = {
+    import spark.implicits._
+    val schema = StructType.fromDDL(m.schemaDdl)
+    val rel = concat(lit("_graft_data/"),
+      element_at(split(col("_metadata.file_path"), "/_graft_data/"), -1))
+    val data = spark.read.schema(schema).parquet(m.files.map(_.locate(dir)): _*)
+      .withColumn("__txn_file", rel)
+      .withColumn("__txn_pos", col("_metadata.row_index"))
+    val doomed = m.files.flatMap(e => e.dv.map(r => (TxnLake.locateDv(dir, r), e.path)))
+      .map { case (sidecar, path) =>
+        spark.read.parquet(sidecar).filter(col("file") === path)
+          .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
+      }
+      .foldLeft(Seq.empty[(String, Long)].toDF("__dv_file", "__dv_pos"))(_ union _)
+    val live = data.join(doomed,
+      col("__txn_file") === col("__dv_file") && col("__txn_pos") === col("__dv_pos"),
+      "left_anti")
+    live.select(live.columns.map(c => col(c).as(m.renames.getOrElse(c, c))).toIndexedSeq: _*)
+  }
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** Every read path of every retained version equals the reference:
+    * `readEntries` with row identity, `readVersion`, the graft-txn
+    * source at that version with a pushed filter, and (at the head)
+    * `read`. */
+  private def checkAllVersions(dir: String, tag: String): Unit = {
+    val head = TxnLake.currentVersion(spark, dir)
+    (0L to head).foreach { v =>
+      val m = TxnLake.resolveVersion(spark, dir, v)
+      val want = reference(dir, m)
+      val logical = want.columns.filterNot(_.startsWith("__txn_"))
+      val got = TxnLake.readEntries(spark, dir, StructType.fromDDL(m.schemaDdl), m.files,
+        keepMeta = true, renames = m.renames)
+      assert(rowsOf(got.select(want.columns.map(col).toIndexedSeq: _*)) === rowsOf(want),
+        s"$tag v$v: readEntries")
+      val wantRows = rowsOf(want.select(logical.map(col).toIndexedSeq: _*))
+      assert(rowsOf(TxnLake.readVersion(spark, dir, v)) === wantRows, s"$tag v$v: readVersion")
+      if (v == head) assert(rowsOf(TxnLake.read(spark, dir)) === wantRows, s"$tag: read")
+      val pushed = col("id") > 2L && col("part") =!= "p0"
+      val viaSource = spark.read.format("graft-txn").option("versionAsOf", v).load(dir)
+        .filter(pushed)
+      assert(rowsOf(viaSource) ===
+        rowsOf(want.filter(pushed).select(logical.map(col).toIndexedSeq: _*)),
+        s"$tag v$v: graft-txn source")
+    }
+  }
+
+  test("the in-scan filter equals a reference anti-join over the raw sidecars, every version") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_dvref")
+    val dir = root.resolve("t").toString
+    TxnLake.create(spark, dir,
+      (1L to 40L).map(i => (i, s"n$i", s"p${i % 4}")).toDF("id", "name", "part"), "part")
+    // several sidecars on one file: p1's file takes two vectors
+    TxnLake.deleteWhere(spark, dir, col("id") === 1L)
+    TxnLake.deleteWhere(spark, dir, col("id").isin(5L, 2L))
+    assert(TxnLake.resolve(spark, dir).get.files.exists(_.dv.size == 2))
+    // a sidecar spanning p2 and p3, then p2 rewritten by a merge: the
+    // sidecar keeps positions of p2's old path, which is no longer live
+    TxnLake.deleteWhere(spark, dir, col("id").isin(6L, 7L))
+    TxnLake.upsert(spark, dir, Seq((10L, "n10x", "p2")).toDF("id", "name", "part"), "id")
+    val m = TxnLake.resolve(spark, dir).get
+    assert(m.files.exists(f => f.dv.nonEmpty && f.parts == Set(Some("p3"))) &&
+      !m.files.exists(f => f.dv.nonEmpty && f.parts == Set(Some("p2"))))
+    // a renamed column, then a delete through the logical name
+    TxnLake.renameColumn(spark, dir, "name", "label")
+    TxnLake.deleteWhere(spark, dir, col("label") === "n11")
+    checkAllVersions(dir, "table")
+    // a clone: the source's sidecars come along as absolute refs, and
+    // the clone's own delete adds a relative one
+    val cloned = root.resolve("clone").toString
+    TxnLake.clone(spark, dir, cloned)
+    assert(TxnLake.resolve(spark, cloned).get.files.flatMap(_.dv).exists(_.startsWith("/")))
+    TxnLake.deleteWhere(spark, cloned, col("id") === 15L)
+    checkAllVersions(cloned, "clone")
+    // OPTIMIZE(purgeDv): a vector-free head, older versions still DV'd
+    TxnLake.optimize(spark, dir, minFiles = Int.MaxValue, purgeDv = true)
+    assert(TxnLake.resolve(spark, dir).get.files.forall(_.dv.isEmpty))
+    checkAllVersions(dir, "purged")
+    assert(TxnLake.read(spark, dir).count() === 40L - 6L)
   }
 }

@@ -6,13 +6,13 @@ import org.apache.spark.sql.functions._
 /** Dev driver: DELETION-VECTOR read amplification at scale — a
   * 16×-amplified sf0.1 orders lake (~2.4M rows), 1% of rows DV-deleted,
   * then the same aggregate through (a) the raw pre-delete snapshot,
-  * (b) the merge-on-read snapshot (positional anti-join), and (c) the
-  * post-OPTIMIZE(purgeDv) snapshot. Watch for: the MOR overhead staying
-  * a modest constant factor (the DV side is ~24k narrow rows — AQE
-  * should broadcast it), and the purged read returning to raw-scan
-  * cost. Also prints the deleteWhere wall itself: the O(deleted
-  * positions) claim vs the O(touched files) rewrite a copy-on-write
-  * delete would pay.
+  * (b) the merge-on-read snapshot (the sidecar decoded on the driver
+  * into per-file bitmaps, ~24k positions, applied inside the scan by
+  * row index), and (c) the post-OPTIMIZE(purgeDv) snapshot. Watch for:
+  * the MOR overhead staying a modest constant factor over the raw
+  * scan, and the purged read returning to raw-scan cost. Also prints
+  * the deleteWhere wall itself: the O(deleted positions) claim vs the
+  * O(touched files) rewrite a copy-on-write delete would pay.
   *
   * Run: sbt "Test/runMain graft.lake.DvScaleProbe /root/testdata/sf0.1"
   */

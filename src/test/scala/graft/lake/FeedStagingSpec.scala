@@ -49,7 +49,7 @@ class FeedStagingSpec extends AnyFunSuite with SparkTestSession {
     TxnLake.append(spark, dir, Seq((4L, "d", "p2")).toDF("id", "label", "part")
       .withColumn("ts", current_timestamp()))
     val appended = TxnLake.currentVersion(spark, dir)
-    def feedAt(v: Long, kind: String) = CdcFeed.batch(spark, dir)
+    def feedAt(v: Long, kind: String) = CdcFeed.batch(spark, dir, v)
       .filter(col(TxnLake.VersionCol) === v && col(TxnLake.ChangeTypeCol) === kind)
       .drop(TxnLake.VersionCol, TxnLake.ChangeTypeCol)
     assert(rowsOf(feedAt(appended, "insert")) ===
@@ -150,10 +150,13 @@ class FeedStagingSpec extends AnyFunSuite with SparkTestSession {
         .toDF("id", "name", "part").withColumn("id", probe(col("id"))), "id")
     }
     TxnLake.renameColumn(spark, dir, "name", "label")
+    val renamed = TxnLake.currentVersion(spark, dir)
     assertNoWorkAfterPublish(dir) {
       TxnLake.overwrite(spark, dir, Seq((5L, "e", "p1"))
         .toDF("id", "label", "part").withColumn("id", probe(col("id"))))
     }
-    assert(CdcFeed.batch(spark, dir).count() === 3L + 3L + 5L)
+    // the rename is a feed read barrier: each side reads on its own
+    assert(CdcFeed.batch(spark, dir, toVersion = renamed - 1).count() === 3L + 3L)
+    assert(CdcFeed.batch(spark, dir, fromVersion = renamed).count() === 5L)
   }
 }

@@ -123,10 +123,42 @@ class CdcFeedSpec extends AnyFunSuite with SparkTestSession {
          else TxnLake.changes(spark, dir, v - 1, v, "id", preimages = true))
           .withColumn(TxnLake.VersionCol, lit(v))
       }.reduce(_ unionByName _)
-      val feed = CdcFeed.batch(spark, dir)
+      // a rename is also a feed read barrier: read from the first
+      // comparable version
+      val feed = CdcFeed.batch(spark, dir, comparable.min)
         .filter(col(TxnLake.VersionCol).isin(comparable: _*))
       assert(rowsOf(feed) === rowsOf(diffed), s"history '$name'")
     }
+  }
+
+  test("a feed range across a renameColumn fails with the rename's version; " +
+      "each side of it reads in its own names") {
+    import spark.implicits._
+    val dir = freshDir("graft_cdc_rename")
+    TxnLake.create(spark, dir, Seq((1L, "a", "p1")).toDF("id", "name", "part"),
+      "part", changeFeed = true)                                        // v0
+    TxnLake.renameColumn(spark, dir, "name", "label")                   // v1
+    TxnLake.append(spark, dir, Seq((2L, "b", "p1")).toDF("id", "label", "part")) // v2
+    def barrier(read: => Unit): CdcRenameBarrierException =
+      intercept[CdcRenameBarrierException](read)
+    val e = barrier(CdcFeed.batch(spark, dir).collect())
+    assert(e.renameVersion === 1L && e.entryVersion === 0L && e.schemaVersion === 2L)
+    assert(e.getMessage.contains("version 1"))
+    assert(barrier(CdcFeed.stream(spark, dir)).renameVersion === 1L)
+    val q = spark.readStream.format("graft-txn").option("readChangeFeed", "true")
+      .load(dir).writeStream.format("memory").queryName("cdc_rename_barrier")
+      .option("checkpointLocation", freshDir("graft_cdc_rename_ck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q.awaitTermination())
+    assert(Iterator.iterate(failed: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[CdcRenameBarrierException]), failed)
+    // either side alone reads every row in the names of its own version
+    assert(CdcFeed.batch(spark, dir, fromVersion = 1L)
+      .select("id", "label").as[(Long, String)].collect().toSeq === Seq((2L, "b")))
+    assert(CdcFeed.batch(spark, dir, toVersion = 0L)
+      .select("id", "name").as[(Long, String)].collect().toSeq === Seq((1L, "a")))
   }
 
   test("a feed entry with _commit_version stored in its files (the older " +
