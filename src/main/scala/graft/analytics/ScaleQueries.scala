@@ -603,10 +603,11 @@ object ScaleQueries {
     * with the post-vacuum metadata counters (live version count, live
     * files per partition); the oracle recomputes the v2 state
     * relationally and derives the counters from the protocol's
-    * invariants (vacuum keeps exactly `keepVersions` manifests; create/
-    * upsert/delete each leave one file per touched partition) — so a
-    * hash match proves vacuum changed METADATA ONLY, never the
-    * snapshot. */
+    * invariants (vacuum keeps exactly `keepVersions` manifests; create
+    * leaves one file per partition, the merge-on-read upsert adds one
+    * post-image file per partition its rows land in, the delete only a
+    * deletion vector) — so a hash match proves vacuum changed METADATA
+    * ONLY, never the snapshot. */
   private def lk06(s: SparkSession, d: String): DataFrame = {
     import graft.lake.TxnLake
     val dir = java.nio.file.Files.createTempDirectory("graft_lk06")
@@ -652,7 +653,8 @@ object ScaleQueries {
       |    (SELECT o_orderkey FROM base WHERE o_orderkey % 27 = 0))
       |SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_rows,
       |  CAST(sum(o_price) AS DOUBLE) AS sum_price,
-      |  CAST(1 AS BIGINT) AS n_files,
+      |  CAST(CASE WHEN o_orderstatus IN (SELECT o_orderstatus FROM upd)
+      |    THEN 2 ELSE 1 END AS BIGINT) AS n_files,
       |  CAST(1 AS BIGINT) AS n_versions_live
       |FROM v2 GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin

@@ -19,10 +19,11 @@ import org.apache.spark.sql.graft.CatalystBridge
 import org.apache.spark.unsafe.types.UTF8String
 import org.roaringbitmap.RoaringBitmap
 
-/** DELETION VECTORS, read side: the one place a `_graft_dv/c<id>`
-  * sidecar is decoded. A sidecar is a parquet dir of `(file STRING,
-  * pos BIGINT)` rows — a table-relative data file identity and the
-  * parquet row index of a deleted row in it. The schema is fixed, so
+/** DELETION VECTORS: the one place a `_graft_dv/c<id>` sidecar is
+  * decoded, and where a sidecar whose positions are already on the
+  * driver is written ([[write]]). A sidecar is a parquet dir of
+  * `(file STRING, pos BIGINT)` rows — a table-relative data file
+  * identity and the parquet row index of a deleted row in it. The schema is fixed, so
   * the decoder opens each part file directly with parquet's column
   * readers on the driver: no Spark job, no schema inference. The
   * result is one `RoaringBitmap` of doomed row positions per file.
@@ -31,8 +32,9 @@ import org.roaringbitmap.RoaringBitmap
   * predicate over `_metadata.file_path` / `_metadata.row_index` that
   * looks a file's bitmap up once per file — no join, and filters the
   * query pushes into parquet still reach it. Delete counts come from
-  * the same decode ([[TxnLake.deleteWhere]] reads back the sidecar it
-  * just wrote). Sidecars are immutable, so every decode of one yields
+  * the same decode: of the sidecar a delete's tasks just wrote, or of
+  * the identity columns of a DML's stage, from which the sidecar is
+  * then written. Sidecars are immutable, so every decode of one yields
   * the same bitmaps. */
 private[lake] object DeletionVectors {
 
@@ -44,8 +46,11 @@ private[lake] object DeletionVectors {
     * the dir's parquet files; `_`/`.`-prefixed names are Spark's
     * markers and checksums. Row indexes are per file, so a position
     * past 2^32 cannot come from any parquet file Spark writes; it
-    * fails loudly rather than wrapping. */
-  def decode(conf: Configuration, sidecar: String): Vectors = {
+    * fails loudly rather than wrapping. `fileCol`/`posCol` name the
+    * identity columns: a sidecar's, or a DML stage's `__txn_file` /
+    * `__txn_pos`, whose rows without identity (new rows) are skipped. */
+  def decode(conf: Configuration, sidecar: String, fileCol: String = "file",
+             posCol: String = "pos"): Vectors = {
     val root = new Path(sidecar)
     val fs = root.getFileSystem(conf)
     val parts = fs.listStatus(root).filter { st =>
@@ -60,22 +65,22 @@ private[lake] object DeletionVectors {
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf), options)
       try {
         val schema = reader.getFooter.getFileMetaData.getSchema
-        val fileCol = schema.getColumnDescription(Array("file"))
-        val posCol = schema.getColumnDescription(Array("pos"))
+        val fileDesc = schema.getColumnDescription(Array(fileCol))
+        val posDesc = schema.getColumnDescription(Array(posCol))
         val version = scala.util.Try(org.apache.parquet.VersionParser.parse(
           reader.getFooter.getFileMetaData.getCreatedBy)).getOrElse(null)
         val ignore = new PrimitiveConverter {}
         var pages = reader.readNextRowGroup()
         while (pages != null) {
           if (pages.getRowCount > 0) {
-            val files = new ColumnReaderImpl(fileCol, pages.getPageReader(fileCol), ignore, version)
-            val poss = new ColumnReaderImpl(posCol, pages.getPageReader(posCol), ignore, version)
+            val files = new ColumnReaderImpl(fileDesc, pages.getPageReader(fileDesc), ignore, version)
+            val poss = new ColumnReaderImpl(posDesc, pages.getPageReader(posDesc), ignore, version)
             var last: Binary = null
             var bits: RoaringBitmap = null
             var i = 0L
             while (i < pages.getRowCount) {
-              if (files.getCurrentDefinitionLevel == fileCol.getMaxDefinitionLevel &&
-                  poss.getCurrentDefinitionLevel == posCol.getMaxDefinitionLevel) {
+              if (files.getCurrentDefinitionLevel == fileDesc.getMaxDefinitionLevel &&
+                  poss.getCurrentDefinitionLevel == posDesc.getMaxDefinitionLevel) {
                 val f = files.getBinary
                 if (!(f eq last) && f != last) {
                   last = f
@@ -98,6 +103,36 @@ private[lake] object DeletionVectors {
     out.toMap
   }
 
+  /** Write `vectors` as the sidecar dir `sidecar` (absolute): one
+    * parquet file of `(file, pos)` rows, written on the driver — for
+    * positions already decoded from a stage, which a Spark job would
+    * only read back and write again. */
+  def write(conf: Configuration, sidecar: String, vectors: Vectors): Unit = {
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message dv { required binary file (STRING); required int64 pos; }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new Path(sidecar, "part-00000.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    val rows = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+    try vectors.toSeq.sortBy(_._1).foreach { case (file, bits) =>
+      val it = bits.getIntIterator
+      while (it.hasNext) writer.write(rows.newGroup().append("file", file)
+        .append("pos", Integer.toUnsignedLong(it.next())))
+    } finally writer.close()
+  }
+
+  /** Sidecars decoded by the latest reads, by absolute path. A sidecar
+    * is never rewritten and its name (`c<commit id>`) never reused, so
+    * a decode stays valid; every read of a snapshot decodes the same
+    * sidecars, and a table's reads share them. Least recently used out
+    * past 64. */
+  private val recent = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, Vectors](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Vectors]): Boolean =
+        size() > 64
+    })
+
   /** The doomed positions of `entries`: every distinct sidecar they
     * reference is decoded once, and each entry takes the positions of
     * ITS OWN path from the sidecars IT references. A sidecar can hold
@@ -108,7 +143,14 @@ private[lake] object DeletionVectors {
     val refs = entries.flatMap(_.dv).distinct
     if (refs.isEmpty) return Map.empty
     val conf = spark.sparkContext.hadoopConfiguration
-    val decoded = refs.map(r => r -> decode(conf, TxnLake.locateDv(dir, r))).toMap
+    val decoded = refs.map { r =>
+      val path = TxnLake.locateDv(dir, r)
+      r -> Option(recent.get(path)).getOrElse {
+        val v = decode(conf, path)
+        recent.put(path, v)
+        v
+      }
+    }.toMap
     entries.filter(_.dv.nonEmpty).flatMap { e =>
       val own = e.dv.flatMap(r => decoded(r).get(e.path))
       if (own.isEmpty) None

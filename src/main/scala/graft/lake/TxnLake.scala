@@ -178,7 +178,11 @@ object TxnLake {
     * ([[publishFeed]]). `stagedDirs` lists every dir this staging
     * created (data `c<id>` dirs, a DV sidecar, the feed stage) — what
     * an aborted commit drops ([[dropStagedFiles]]). It has no default:
-    * every staging site states what it wrote. */
+    * every staging site states what it wrote. `readBase` marks a commit
+    * whose content depends on the base snapshot beyond the files it
+    * removes (a merge that only inserts read the table to find no
+    * match): it is conflict-checked like any rewrite, never rebased
+    * blindly. */
   private[lake] case class Staged(baseVersion: Long, partCol: String,
                                   schemaDdl: String, touched: Set[Option[String]],
                                   prunedPaths: Set[String], newFiles: Seq[FileEntry],
@@ -193,6 +197,7 @@ object TxnLake {
                                   copied: Set[String] = Set.empty,
                                   identityBase: Map[String, Long] = Map.empty,
                                   identityNew: Map[String, Long] = Map.empty,
+                                  readBase: Boolean = false,
                                   stagedDirs: Seq[String])
 
   private val DataDir = "_graft_data"
@@ -1470,45 +1475,17 @@ object TxnLake {
     }
   }
 
-  /** Transactional key-based delete: remove every target row whose `key`
-    * appears in `keys`, with the same partition pruning, staging, and
-    * optimistic-concurrency publish as [[upsert]] — only files holding
-    * doomed rows are rewritten, and a concurrent disjoint commit rebases
-    * rather than aborting. A key set touching nothing commits nothing. */
+  /** Transactional key-based delete: every live row whose `key`
+    * appears in `keys` is doomed through a deletion vector — the
+    * [[deleteWhere]] commit with the key semi-join as its matched rows,
+    * so no data file is rewritten and the change feed's delete
+    * pre-images come from the same pass. A key set touching nothing
+    * commits nothing. */
   def delete(spark: SparkSession, dir: String, keys: DataFrame, key: String): Unit = {
-    val base = resolve(fsOf(spark, dir), dir)
-      .getOrElse(throw new IllegalArgumentException(s"$dir is not a txn table (no $LogDir)"))
     require(keys.columns.contains(key), s"key column '$key' not in ${keys.columns.mkString(",")}")
-    val schema = StructType.fromDDL(base.schemaDdl)
-    val target = readEntries(spark, dir, schema, base.files, renames = base.renames)
-    val keyDf = keys.select(col(key).cast(target.schema(key).dataType).as("__txn_dkey")).distinct()
-    val touched = target
-      .join(keyDf, col(key) === col("__txn_dkey"), "left_semi")
-      .select(col(base.partCol)).distinct().collect().map(r => render(r.get(0))).toSet
-    if (touched.isEmpty) return
-    // legacy-spec files can't be value-pruned (their parts index another
-    // column) — include them conservatively; the rewrite migrates them
-    val pruned = base.files.filter(f =>
-      !f.onSpec(base.partCol) || f.parts.exists(touched.contains))
-    val remaining = readEntries(spark, dir, schema, pruned, renames = base.renames)
-      .join(keyDf, col(key) === col("__txn_dkey"), "left_anti")
-    val newFiles = stageFiles(spark, dir, toPhysical(remaining, base.renames),
-      base.partCol, touched.size, base.statsCol, base.bloomCol, base.bloomBits)
-    // change feed: the doomed rows (delete PRE-images), the semi-join
-    // complement of `remaining` — O(pruned files), not O(table)
-    val feedStage = newFeedStage(spark, dir)
-    feedStage.foreach(st =>
-      readEntries(spark, dir, schema, pruned, renames = base.renames)
-        .join(keyDf, col(key) === col("__txn_dkey"), "left_semi")
-        .withColumn(ChangeTypeCol, lit("delete"))
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$st"))
-    commitStaged(spark, dir, Staged(base.version, base.partCol, base.schemaDdl,
-      touched, pruned.map(_.path).toSet, newFiles, base.statsCol,
-      feedStage = feedStage,
-      bloomCol = base.bloomCol, bloomBits = base.bloomBits,
-      renames = base.renames, tombstones = base.tombstones,
-      stagedDirs = dataDirsOf(newFiles) ++ feedStage),
-      headHint = Some(base))
+    deleteRows(spark, dir, live => live.join(
+      keys.select(col(key).cast(live.schema(key).dataType).as("__txn_dkey")),
+      col(key) === col("__txn_dkey"), "left_semi"), () => ())
   }
 
   /** MERGE-ON-READ predicate delete via DELETION VECTORS: mark every
@@ -1520,15 +1497,15 @@ object TxnLake {
     * decoding that sidecar on the driver ([[DeletionVectors]]), and
     * one atomic commit re-publishes the affected files' manifest
     * entries with the sidecar appended to their `dv` list and their
-    * `doomed` counts raised. The whole delete is one Spark job, two
-    * with the change feed on (the pre-images, then the sidecar from
-    * them). Readers of this and later versions drop the positions
+    * `doomed` counts raised. The whole delete is one Spark job; with
+    * the change feed on that job writes the pre-images, and the
+    * sidecar is decoded from them and written on the driver. Readers of this and later versions drop the positions
     * inside the scan ([[readEntries]]); readers of older versions
     * never see the sidecar — time travel is untouched.
     *
     * This is the delete a 100 TB table wants when the doomed rows are a
-    * sliver of the files they sit in: [[delete]]'s copy-on-write
-    * rewrite moves O(touched files) bytes to drop O(doomed rows);
+    * sliver of the files they sit in: a copy-on-write rewrite moves
+    * O(touched files) bytes to drop O(doomed rows);
     * deletion vectors move O(doomed rows) and defer the rewrite to
     * [[optimize]]`(purgeDv = true)`, which folds outstanding vectors
     * into fresh files (restoring the zero-overhead scan path) — the
@@ -1543,35 +1520,79 @@ object TxnLake {
   def deleteWhere(spark: SparkSession, dir: String, predicate: Column): Long =
     deleteWhere(spark, dir, predicate, () => ())
 
-  /** The ONE predicate pass of a deletion-vector commit (deleteWhere,
-    * updateWhere): writes the DV sidecar `dvRel` — the `(file, pos)` of
-    * every `matched` row, straight from the scan's tasks — and returns
-    * its per-file positions, decoded from the sidecar just written
-    * ([[DeletionVectors.decode]], driver-side, no job). With a feed
-    * stage, the pass writes the full pre-images (tagged `changeType`,
-    * plus row identity) into the stage and the sidecar derives from
-    * THOSE bytes with a narrow two-column re-read: one live scan, and
-    * the feed and the DV come from the same evaluation. Nothing
-    * matched: sidecar and stage are dropped, and the result is empty. */
-  private def stageDoomed(spark: SparkSession, dir: String, matched: DataFrame,
-                          changeType: String, dvRel: String,
-                          feedStage: Option[String]): DeletionVectors.Vectors = {
-    val dvAbs = s"$dir/$dvRel"
-    val positions = feedStage match {
+  /** The ONE pass of a deletion-vector commit (deleteWhere, delete,
+    * updateWhere): `changes` are the doomed live rows with their
+    * identity (`__txn_file`, `__txn_pos`), tagged `_change_type`. With
+    * a feed stage the pass writes them there as the pre-images and the
+    * DV sidecar derives from THOSE bytes ([[sidecarOfStage]], no job):
+    * one live scan, and the feed and the DV come from the same
+    * evaluation. Without one the sidecar is written straight from the
+    * scan's tasks and decoded back ([[DeletionVectors.decode]],
+    * driver-side). Returns the per-file positions; nothing matched:
+    * sidecar and stage are dropped, and the result is empty. */
+  private def stageDoomed(spark: SparkSession, dir: String, changes: DataFrame,
+                          dvRel: String, feedStage: Option[String]): DeletionVectors.Vectors = {
+    val fs = fsOf(spark, dir)
+    feedStage match {
       case Some(rel) =>
-        val pre = matched.withColumn(ChangeTypeCol, lit(changeType))
-        pre.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
-        readStage(spark, dir, rel, pre.schema)
-      case None => matched
+        changes.write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$rel")
+        val doomed = sidecarOfStage(spark, dir, rel, dvRel)
+        if (doomed.isEmpty) fs.delete(new Path(dir, rel), true)
+        doomed
+      case None =>
+        val dvAbs = s"$dir/$dvRel"
+        changes.select(col("__txn_file").as("file"), col("__txn_pos").as("pos"))
+          .write.mode(SaveMode.ErrorIfExists).parquet(dvAbs)
+        val doomed = DeletionVectors.decode(spark.sparkContext.hadoopConfiguration, dvAbs)
+        if (doomed.isEmpty) fs.delete(new Path(dvAbs), true)
+        doomed
     }
-    positions.select(col("__txn_file").as("file"), col("__txn_pos").as("pos"))
-      .write.mode(SaveMode.ErrorIfExists).parquet(dvAbs)
-    val doomed = DeletionVectors.decode(spark.sparkContext.hadoopConfiguration, dvAbs)
-    if (doomed.isEmpty) {
-      val fs = fsOf(spark, dir)
-      (dvRel +: feedStage.toSeq).foreach(r => fs.delete(new Path(dir, r), true))
-    }
+  }
+
+  /** The DV sidecar `dvRel` over the doomed rows of the stage `rel`
+    * just written: their positions are decoded from the stage's
+    * identity columns on the driver (rows without one — a merge's new
+    * rows — are skipped) and the sidecar is written from there
+    * ([[DeletionVectors.write]]) — no Spark job. Nothing doomed writes
+    * no sidecar. */
+  private def sidecarOfStage(spark: SparkSession, dir: String, rel: String,
+                             dvRel: String): DeletionVectors.Vectors = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val doomed = DeletionVectors.decode(conf, s"$dir/$rel", "__txn_file", "__txn_pos")
+    if (doomed.nonEmpty) DeletionVectors.write(conf, s"$dir/$dvRel", doomed)
     doomed
+  }
+
+  /** The commit of a merge-on-read DML over `base`: every entry holding
+    * `doomed` positions is re-published with the sidecar `dvRel`
+    * appended to its `dv` list and its doomed count raised, beside the
+    * `newFiles` it staged. OCC: `touched` is the partitions of the DV'd
+    * entries plus those of the staged files, the DV'd paths are
+    * `removed`, and the commit never rebases blindly — it read the base
+    * to decide its rows, even when it dooms none. `schemaDdl`/`renames`
+    * are the commit's own (a merge may evolve them). */
+  private def dvCommit(base: Manifest, doomed: DeletionVectors.Vectors, dvRel: String,
+                       newFiles: Seq[FileEntry], feedStage: Option[String],
+                       schemaDdl: String, renames: Map[String, String]): Staged = {
+    val perFile = doomed.map { case (f, bits) => f -> bits.getLongCardinality }
+    val withDv = base.files.filter(f => perFile.contains(f.path))
+      .map(f => f.copy(dv = f.dv :+ dvRel,
+        // each entry's cumulative DOOMED-ROW COUNT rides the manifest
+        // (sidecar positions are disjoint — DML evaluates on live rows
+        // — so counts add exactly) and makes metadata COUNT(*) exact
+        // with zero sidecar reads. Only CONTINUE a complete count: an
+        // entry whose existing DVs predate doomed tracking (dv nonEmpty,
+        // doomed None) stays on the sidecar-count fallback, or the fast
+        // path would subtract only the new sidecar and over-count
+        doomed = if (f.dv.isEmpty || f.doomed.isDefined)
+          Some(f.doomed.getOrElse(0L) + perFile(f.path)) else None))
+    Staged(base.version, base.partCol, schemaDdl,
+      withDv.flatMap(_.parts).toSet ++ newFiles.flatMap(_.parts), perFile.keySet,
+      withDv ++ newFiles, base.statsCol, feedStage = feedStage,
+      bloomCol = base.bloomCol, bloomBits = base.bloomBits,
+      renames = renames, tombstones = base.tombstones, readBase = true,
+      // `withDv` re-adds LIVE files: drop only what this commit wrote
+      stagedDirs = Seq(dvRel) ++ dataDirsOf(newFiles) ++ feedStage)
   }
 
   /** Reads the part files of the feed stage `rel` that this commit
@@ -1582,12 +1603,18 @@ object TxnLake {
     * ignored" for a hidden root path instead of filtering it. */
   private def readStage(spark: SparkSession, dir: String, rel: String,
                         schema: StructType): DataFrame = {
-    val parts = fsOf(spark, dir).listStatus(new Path(dir, rel))
-      .filter(_.isFile).map(_.getPath)
-      .filterNot { p => val n = p.getName; n.startsWith("_") || n.startsWith(".") }
+    val parts = stageParts(fsOf(spark, dir), dir, rel)
     if (parts.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else spark.read.schema(schema).parquet(parts.map(_.toString).toIndexedSeq: _*)
+    else spark.read.schema(schema).parquet(parts.map(_.getPath.toString): _*)
   }
+
+  /** The part files of the stage `rel` (`_`/`.`-prefixed names are
+    * Spark's markers and checksums). */
+  private def stageParts(fs: FileSystem, dir: String, rel: String): Seq[FileStatus] =
+    fs.listStatus(new Path(dir, rel)).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
 
   /** CONTENTION SEAM: identical to the public form, but runs
     * `beforeCommit` after the base snapshot is resolved and the DV
@@ -1600,50 +1627,37 @@ object TxnLake {
     * relying on thread-timing luck. */
   private[graft] def deleteWhere(spark: SparkSession, dir: String,
                                  predicate: Column,
-                                 beforeCommit: () => Unit): Long = {
-    val fs = fsOf(spark, dir)
-    val base = resolve(fs, dir)
+                                 beforeCommit: () => Unit): Long =
+    deleteRows(spark, dir, { live =>
+      // nondeterministic predicates are rejected (the Delta rule): the
+      // DV is one evaluation, the change feed another — they must agree
+      requireDeterministic(live.filter(predicate), "deleteWhere")
+      live.filter(predicate)
+    }, beforeCommit)
+
+  /** A deletion-vector delete of the live rows `matched` picks out of
+    * the head snapshot — [[deleteWhere]]'s predicate, [[delete]]'s key
+    * semi-join. Only LIVE rows are doomed: prior vectors apply first,
+    * so a row is never deleted twice and sidecars never hold duplicate
+    * positions. Returns the number of rows deleted. */
+  private def deleteRows(spark: SparkSession, dir: String,
+                         matched: DataFrame => DataFrame,
+                         beforeCommit: () => Unit): Long = {
+    val base = resolve(fsOf(spark, dir), dir)
       .getOrElse(throw new IllegalArgumentException(s"$dir is not a txn table (no $LogDir)"))
-    val schema = StructType.fromDDL(base.schemaDdl)
-    // doom only LIVE rows: prior deletion vectors are applied first, so
-    // re-deleting an already-deleted row is impossible and sidecars
-    // never hold duplicate positions
-    val live = readEntries(spark, dir, schema, base.files, keepMeta = true,
-      renames = base.renames)
-    // nondeterministic predicates are rejected (the Delta rule): the DV
-    // is one evaluation, the change feed another — they must agree
-    requireDeterministic(live.filter(predicate), "deleteWhere")
+    val live = readEntries(spark, dir, StructType.fromDDL(base.schemaDdl), base.files,
+      keepMeta = true, renames = base.renames)
     val dvRel = s"$DvDir/c${newCommitId()}"
     val feedStage = newFeedStage(spark, dir)
-    val doomed = stageDoomed(spark, dir, live.filter(predicate), "delete",
-      dvRel, feedStage)
+    val doomed = stageDoomed(spark, dir,
+      matched(live).withColumn(ChangeTypeCol, lit("delete")), dvRel, feedStage)
     if (doomed.isEmpty) return 0L
-    // each entry's cumulative DOOMED-ROW COUNT rides the manifest
-    // (sidecar positions are disjoint — deletes evaluate on live rows —
-    // so counts add exactly): metadata COUNT(*) and plan-time rowCount
-    // become exact under DVs with ZERO sidecar reads
-    val perFile = doomed.map { case (f, bits) => f -> bits.getLongCardinality }
-    val deleted = perFile.values.sum
-    val touchedPaths = perFile.keySet
-    val updated = base.files.filter(f => touchedPaths.contains(f.path))
-      .map(f => f.copy(dv = f.dv :+ dvRel,
-        // only CONTINUE a complete count: an entry whose existing DVs
-        // predate doomed tracking (dv nonEmpty, doomed None) must stay
-        // on the sidecar-count fallback, or the fast path would subtract
-        // only the new sidecar and metadata COUNT(*) would over-count
-        doomed = if (f.dv.isEmpty || f.doomed.isDefined)
-          Some(f.doomed.getOrElse(0L) + perFile(f.path)) else None))
-    val touched = updated.flatMap(_.parts).toSet
     beforeCommit()
     // the feed stage (delete pre-images, written above in the same pass
     // that produced the DV) renames into its version inside commitStaged
-    commitStaged(spark, dir, Staged(base.version, base.partCol, base.schemaDdl,
-      touched, touchedPaths, updated, base.statsCol, feedStage = feedStage,
-      bloomCol = base.bloomCol, bloomBits = base.bloomBits,
-      renames = base.renames, tombstones = base.tombstones,
-      // `updated` re-adds LIVE files: only the sidecar and stage are ours
-      stagedDirs = Seq(dvRel) ++ feedStage), headHint = Some(base))
-    deleted
+    commitStaged(spark, dir, dvCommit(base, doomed, dvRel, Nil, feedStage,
+      base.schemaDdl, base.renames), headHint = Some(base))
+    doomed.valuesIterator.map(_.getLongCardinality).sum
   }
 
   /** Row-level `UPDATE ... SET` as a MERGE-ON-READ commit: every live
@@ -1700,17 +1714,10 @@ object TxnLake {
     // the UPDATE PRE-IMAGES ([[stageDoomed]]) — one live scan
     val dvRel = s"$DvDir/c${newCommitId()}"
     val feedStage = newFeedStage(spark, dir)
-    val doomed = stageDoomed(spark, dir, live.filter(predicate),
-      "update_preimage", dvRel, feedStage)
+    val doomed = stageDoomed(spark, dir,
+      live.filter(predicate).withColumn(ChangeTypeCol, lit("update_preimage")),
+      dvRel, feedStage)
     if (doomed.isEmpty) return 0L
-    val perFile = doomed.map { case (f, bits) => f -> bits.getLongCardinality }
-    val updatedCount = perFile.values.sum
-    val touchedPaths = perFile.keySet
-    val withDv = base.files.filter(f => touchedPaths.contains(f.path))
-      .map(f => f.copy(dv = f.dv :+ dvRel,
-        // same legacy-DV guard as deleteWhere: never start a partial count
-        doomed = if (f.dv.isEmpty || f.doomed.isDefined)
-          Some(f.doomed.getOrElse(0L) + perFile(f.path)) else None))
     // 2. matched rows from the MATERIALIZED single evaluation — the
     // staged feed bytes when the feed is on, else the touched files'
     // rows AT the sidecar's positions (the in-scan DV filter with keep
@@ -1723,7 +1730,7 @@ object TxnLake {
       case Some(rel) =>
         readStage(spark, dir, rel, live.schema).drop("__txn_file", "__txn_pos")
       case None =>
-        scanPositions(spark, dir, schema, base.files.filter(f => touchedPaths.contains(f.path)),
+        scanPositions(spark, dir, schema, base.files.filter(f => doomed.contains(f.path)),
           doomed, keep = true, keepMeta = false, base.renames)
     }
     // post-images: SET over the matched logical rows, each result cast
@@ -1752,7 +1759,6 @@ object TxnLake {
     val newFiles = stageFiles(spark, dir, postPhys, base.partCol,
       spark.conf.get("spark.sql.shuffle.partitions").toInt,
       base.statsCol, base.bloomCol, base.bloomBits)
-    val touched = withDv.flatMap(_.parts).toSet ++ newFiles.flatMap(_.parts)
     // change feed: pre-images were staged by the predicate pass above;
     // post-images are the staged files THEMSELVES, byte-copied into the
     // stage under the `upd_` prefix (read back in logical names on a
@@ -1761,15 +1767,9 @@ object TxnLake {
     feedStage.foreach(stageFeedImages(spark, dir, _, schema, base.renames,
       "update_postimage" -> newFiles))
     beforeCommit()
-    commitStaged(spark, dir, Staged(base.version, base.partCol, base.schemaDdl,
-      touched, touchedPaths, withDv ++ newFiles, base.statsCol,
-      feedStage = feedStage,
-      bloomCol = base.bloomCol, bloomBits = base.bloomBits,
-      renames = base.renames, tombstones = base.tombstones,
-      // `withDv` re-adds LIVE files: drop only what this update wrote
-      stagedDirs = Seq(dvRel) ++ dataDirsOf(newFiles) ++ feedStage),
-      headHint = Some(base))
-    updatedCount
+    commitStaged(spark, dir, dvCommit(base, doomed, dvRel, newFiles, feedStage,
+      base.schemaDdl, base.renames), headHint = Some(base))
+    doomed.valuesIterator.map(_.getLongCardinality).sum
   }
 
   /** Transactional blind APPEND: stage `rows` as new files and publish —
@@ -3007,10 +3007,11 @@ object TxnLake {
     }
   }
 
-  /** Transactional partition-pruned upsert: rows of `updates` replace
-    * target rows with the same `key`, unmatched rows insert; only files
-    * holding touched partitions are read and rewritten. The partition
-    * column comes from the table's manifest. */
+  /** Transactional upsert: rows of `updates` replace target rows with
+    * the same `key`, unmatched rows insert — a merge-on-read commit
+    * ([[stageMerge]]): replaced rows are doomed by a deletion vector,
+    * the source rows are staged as new files, and no file is
+    * rewritten. */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame,
              key: String): Unit =
     upsert(spark, dir, updates, key, schemaEvolution = true)
@@ -3059,18 +3060,19 @@ object TxnLake {
     * `deleteWhen` is a predicate over the TARGET row's columns (the
     * pre-image decides its own fate — "purge stale versions" /
     * "retention" clauses). Unmatched source rows never consult it.
-    * Same partition-pruned read-modify-write as [[upsert]] — only
-    * files holding touched partitions are rewritten — and the change
-    * feed carries every class: update post-images, insert rows,
-    * delete pre-images, and the by-source retire/update rows. A plain
-    * [[upsert]] is merge with `deleteWhen = lit(false)`.
+    * Same merge-on-read commit as [[upsert]] ([[stageMerge]]): changed
+    * target rows are doomed by a deletion vector, new rows are staged
+    * as new files, and the change feed carries every class: update
+    * post-images, insert rows, delete pre-images, and the by-source
+    * retire/update rows. A plain [[upsert]] is merge with
+    * `deleteWhen = lit(false)`.
     *
     * SCALE NOTE on `bySource`: finding rows ABSENT from the source is
-    * inherently a full-target anti-join (Delta pays the same full
-    * outer join) — but it rides in the ONE metadata job every merge
-    * already runs, and only partitions actually holding affected rows
-    * are rewritten, so a sync whose source mirrors the target still
-    * rewrites nothing. */
+    * inherently a full-target left join (Delta pays the same full
+    * outer join); it is the classification pass's own join, so it adds
+    * no pass, and only the rows a clause picks are doomed and
+    * re-staged — a sync whose source mirrors the target changes only
+    * the rows that differ. */
   def merge(spark: SparkSession, dir: String, source: DataFrame, key: String,
             deleteWhen: Column, bySource: Seq[BySourceAction] = Nil,
             schemaEvolution: Boolean = true): Unit = {
@@ -3099,9 +3101,37 @@ object TxnLake {
       .foreach(commitStaged(spark, dir, _, strictBase = true))
   }
 
-  /** Stage the merge against snapshot `base`: write the rewritten
-    * partitions' files (no manifest yet — invisible). Returns None for
-    * an empty update set (nothing to commit).
+  /** Stage the merge against snapshot `base` as a MERGE-ON-READ commit
+    * (no manifest yet — invisible). Returns None when the merge changes
+    * nothing.
+    *
+    * ONE classification pass: the aligned source rows and the live
+    * target rows the merge may change — rows whose key the source
+    * holds and, with by-source clauses, every other row the first
+    * matching clause picks — meet in one window partitioned by the
+    * key. A source row is withheld (the delete clause holds for its
+    * key), an `update_postimage` (its key matched) or an `insert`; a
+    * target row is doomed as a `delete` (the delete clause or a
+    * by-source DELETE) or an `update_preimage` (its key matched, or a
+    * by-source UPDATE, whose post-image is the row with the SET
+    * applied). A key is decided by all its rows: a delete clause that
+    * holds for any matched target row of a key deletes all of them and
+    * withholds all the key's source rows, and each target row is
+    * doomed once and each source row staged once however often the
+    * key repeats on either side.
+    *
+    * The classified rows are written ONCE — into the feed stage when
+    * the table captures a feed (they are exactly its rows), else into
+    * a scratch stage dropped before the commit — and everything else
+    * comes from those bytes: the DV sidecar over the doomed target
+    * rows ([[sidecarOfStage]], no job) and the new files of the
+    * post-images and inserts ([[stageFiles]]). The source is never
+    * evaluated again and no data file is rewritten: untouched rows
+    * stay where they are, and a legacy-spec file gets a vector, not a
+    * migration ([[optimize]] migrates). A NULL merge key (it can neither match nor insert) is
+    * counted by an observation on the same pass and aborts the merge
+    * with its stage dropped. The commit is [[dvCommit]]'s, as
+    * [[updateWhere]]'s.
     *
     * SCHEMA EVOLUTION: updates may carry NEW columns, which append to
     * the table schema (additive-only — the evolution every lake format
@@ -3119,7 +3149,8 @@ object TxnLake {
                                deleteWhen: Option[Column] = None,
                                bySource: Seq[BySourceAction] = Nil,
                                schemaEvolution: Boolean = true): Option[Staged] = {
-    val genCols = genColsOf(fsOf(spark, dir), dir)
+    val fs = fsOf(spark, dir)
+    val genCols = genColsOf(fs, dir)
     // DEFAULTs are an INSERT-path fallback, never a merge post-image
     // overwrite (the Delta rule — defaults fill absent columns for NEW
     // rows only): a source omitting a defaulted column gets the
@@ -3127,7 +3158,7 @@ object TxnLake {
     // column; matched keys then get the TARGET's stored value
     // substituted below, and generated-column recompute plus CHECK
     // enforcement run on the FINAL per-row values, not the placeholder.
-    val absentDefaulted = defaultsOf(fsOf(spark, dir), dir)
+    val absentDefaulted = defaultsOf(fs, dir)
       .filter { case (c, _) => !updatesIn.columns.contains(c) }
     val prelim = fillGenerated(fillDefaults(spark, dir, updatesIn), genCols)
     val updates =
@@ -3160,7 +3191,11 @@ object TxnLake {
     val schema = StructType(baseSchema.fields ++
       added.map { case (l, p) => updates.schema(l).copy(name = p) })
     val renames = base.renames ++ added.collect { case (l, p) if l != p => p -> l }
-    val target = readEntries(spark, dir, schema, base.files, renames = renames)
+    // the live snapshot with each row's identity, read once: the
+    // classification joins it, and its rows become the pre-images
+    val live = readEntries(spark, dir, schema, base.files, keepMeta = true,
+      renames = renames)
+    val target = live.drop("__txn_file", "__txn_pos")
     val cols = target.columns
     val aligned0 = castToTarget(updates, target)
       .select(cols.map(col).toIndexedSeq: _*)
@@ -3198,20 +3233,12 @@ object TxnLake {
         castToTarget(enforceChecks(spark, dir, regen), target)
           .select(cols.map(col).toIndexedSeq: _*)
       }
-    // NOTE (r20, measured and REVERTED): persisting `aligned` for the
-    // commit so the merge's feed job would not replay the source
-    // plan was A/B'd with CdcTaxProbe — the cache made the merge feed
-    // delta WORSE (337 -> 508 ms/commit at probe scale): the
-    // materialization pass plus InMemoryRelation planning cost more
-    // than the recompute it saved. The feed job's real bill is the
-    // pruned-file re-reads + classification joins, which only a
-    // staged-bytes derivation would remove.
     // WHEN NOT MATCHED BY SOURCE plumbing: validate the clauses up
     // front (deterministic conditions — the Delta UPDATE/DELETE rule,
-    // because each condition is evaluated twice: once planning the
-    // touched set, once rewriting — and no SET of a generated or
-    // unknown column), and build the first-matching-clause classifier
-    // the planning job and the rewrite share.
+    // because the classification pass evaluates a condition once for
+    // a row's pre-image and again for its post-image — and no SET of
+    // a generated or unknown column), and build the
+    // first-matching-clause classifier.
     bySource.foreach { a =>
       a.condition.foreach(c => requireDeterministic(target.filter(c),
         "merge WHEN NOT MATCHED BY SOURCE"))
@@ -3222,14 +3249,13 @@ object TxnLake {
             require(cols.contains(k), s"no column '$k' in ${cols.mkString(",")}")
             require(!genCols.contains(k),
               s"cannot SET generated column '$k' — it is GENERATED ALWAYS AS")
-            // SET values are evaluated in THREE separate jobs (the
-            // planning collect, the rewrite write, the CDC write) — a
-            // nondeterministic value would plan partition X, write the
-            // row into partition Y, and feed the change log a third
-            // value; same rule the clause conditions get. Checked on
-            // the ANALYZED projection (the fillGenerated discipline —
-            // parse-time `deterministic` is unreliable on unresolved
-            // functions).
+            // same rule the clause conditions get: the post-image is
+            // computed beside the pre-image in the classification
+            // pass, so a nondeterministic value could pair a
+            // post-image with a row another evaluation classified
+            // differently. Checked on the ANALYZED projection (the
+            // fillGenerated discipline — parse-time `deterministic` is
+            // unreliable on unresolved functions).
             val projected = target.select(v.as("__txn_chk"))
               .queryExecution.analyzed match {
               case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
@@ -3238,8 +3264,8 @@ object TxnLake {
             }
             require(projected.forall(_.deterministic),
               s"merge WHEN NOT MATCHED BY SOURCE SET '$k' must be a " +
-                "deterministic expression (it is evaluated once to plan " +
-                "touched partitions and again to stage the rewrite)")
+                "deterministic expression (the post-image must belong to " +
+                "the row its clause classified)")
           }
         case _ => ()
       }
@@ -3259,150 +3285,89 @@ object TxnLake {
       castToTarget(enforceChecks(spark, dir, postGen), target)
         .select(cols.map(col).toIndexedSeq: _*)
     }
-    val srcKeys = aligned.select(col(key).as("__txn_ukey")).distinct()
-    // ONE metadata job for the whole pre-commit picture: the
-    // touched-partition set (partitions the updates land in UNION
-    // partitions currently holding matched keys UNION partitions
-    // holding — or receiving, when a SET moves the partition column —
-    // by-source-affected rows) plus a null-merge-key flag rides along
-    // as a second column — a NULL key can neither match nor insert, so
-    // it aborts (NULL partitions are fine; they are ordinary manifest
-    // values)
-    val bsAffected =
-      if (bySource.isEmpty) None
-      else Some(target.join(srcKeys, col(key) === col("__txn_ukey"), "left_anti")
-        .withColumn("__txn_bs", bsIdx).filter(col("__txn_bs") >= 0))
-    val bsParts = bsAffected.map { aff =>
-      val pre = aff.select(col(partCol).as("__txn_p"), lit(false).as("__txn_nk"))
-      bySource.zipWithIndex.collect { case (u: BySourceUpdate, i) =>
-        applyBySourceSet(aff.filter(col("__txn_bs") === i), u)
-          .select(col(partCol).as("__txn_p"), lit(false).as("__txn_nk"))
-      }.foldLeft(pre)(_ unionByName _)
+    // 1. the candidate target rows: a semi-join with the source keys
+    // (a left join with by-source clauses, which also keeps the rows a
+    // clause picks); `__txn_bs` is the picking clause, -1 = matched
+    val srcKeys = aligned.select(col(key).as("__txn_ukey"))
+    val candidates =
+      if (bySource.isEmpty)
+        live.join(srcKeys, col(key) === col("__txn_ukey"), "left_semi")
+          .withColumn("__txn_bs", lit(-1))
+      else live.join(srcKeys.distinct(), col(key) === col("__txn_ukey"), "left")
+        .withColumn("__txn_bs", when(col("__txn_ukey").isNull, bsIdx).otherwise(lit(-1)))
+        .filter(col("__txn_ukey").isNotNull || col("__txn_bs") >= 0)
+        .drop("__txn_ukey")
+    // 2. classify per key, in one window over the source rows (side
+    // 0), the candidates (side 1) and the by-source UPDATE post-images
+    // (side 2: the SET over each row its clause picked)
+    val nullKeys = org.apache.spark.sql.Observation()
+    val noMeta = Seq(lit(null).cast("string").as("__txn_file"),
+      lit(null).cast("long").as("__txn_pos"))
+    val src = aligned.observe(nullKeys, count(when(col(key).isNull, 1)).as("n"))
+      .select(cols.map(col) ++ noMeta ++ Seq(lit(0).as("__txn_side"),
+        lit(-1).as("__txn_bs")): _*)
+    val bsPost = bySource.zipWithIndex.collect { case (u: BySourceUpdate, i) =>
+      applyBySourceSet(candidates.filter(col("__txn_bs") === i), u)
+        .select(cols.map(col) ++ noMeta ++ Seq(lit(2).as("__txn_side"), lit(i).as("__txn_bs")): _*)
     }
-    val meta = aligned.select(col(partCol).as("__txn_p"), col(key).isNull.as("__txn_nk"))
-      .unionByName(target
-        .join(aligned.select(col(key).as("__txn_ukey")), col(key) === col("__txn_ukey"), "left_semi")
-        .select(col(partCol).as("__txn_p"), lit(false).as("__txn_nk")))
-      .unionByName(bsParts.getOrElse(
-        aligned.limit(0).select(col(partCol).as("__txn_p"), lit(false).as("__txn_nk"))))
-      .distinct().collect()
-    require(!meta.exists(_.getBoolean(1)),
-      s"updates contain NULL values in merge key '$key'")
-    val touched = meta.map(r => render(r.get(0))).toSet
-    if (touched.isEmpty) return None
-    // legacy-spec files ride into every rewrite (their parts values
-    // index the pre-evolution column, so pruning them on current-column
-    // values would silently drop matched rows); rewriting re-stages
-    // them under the current partCol — evolution migrates lazily
-    val pruned = base.files.filter(f =>
-      !f.onSpec(base.partCol) || f.parts.exists(touched.contains))
-    val prunedDf = readEntries(spark, dir, schema, pruned, renames = renames)
-    // pruned files may also hold rows of UNtouched partitions (a writer
-    // task can emit several partition values into one file) — those rows
-    // ride along into the rewrite unchanged, so no row is ever dropped.
-    // A MERGE delete clause drops matched TARGET rows satisfying the
-    // predicate AND withholds their source rows — both sides of the
-    // match vanish in the same commit (the retention/purge clause).
-    val delKeys = deleteWhen match {
-      case Some(cond) => prunedDf
-        .join(srcKeys, col(key) === col("__txn_ukey"), "left_semi")
-        .filter(cond).select(col(key).as("__txn_dk")).distinct()
-      case None => null
+    val byKey = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
+    val matchedT = col("__txn_side") === 1 && col("__txn_bs") === -1
+    val bsType = bySource.zipWithIndex.foldLeft(lit("update_preimage")) {
+      case (els, (_: BySourceDelete, i)) =>
+        when(col("__txn_bs") === i, lit("delete")).otherwise(els)
+      case (els, _) => els
     }
-    val applied = deleteWhen match {
-      case Some(_) => aligned.join(delKeys, col(key) === col("__txn_dk"), "left_anti")
-      case None => aligned
-    }
-    // target rows with no source match: with by-source clauses the
-    // first matching clause decides each row (DELETE drops it, UPDATE
-    // rewrites it); clauseless rows — and everything, without
-    // by-source clauses — ride along unchanged. Classification runs on
-    // the PRUNED files only: an affected row's pre-image partition is
-    // in `touched` by the planning job above, so every affected row is
-    // in a pruned file by construction.
-    val unmatchedT = prunedDf.join(srcKeys, col(key) === col("__txn_ukey"), "left_anti")
-    val unmatchedKept =
-      if (bySource.isEmpty) unmatchedT.select(cols.map(col).toIndexedSeq: _*)
-      else {
-        val classified = unmatchedT.withColumn("__txn_bs", bsIdx)
-        val untouched = classified.filter(col("__txn_bs") === -1)
-          .select(cols.map(col).toIndexedSeq: _*)
-        bySource.zipWithIndex.collect { case (u: BySourceUpdate, i) =>
-          applyBySourceSet(classified.filter(col("__txn_bs") === i), u)
-        }.foldLeft(untouched)(_ unionByName _)
-      }
-    val merged = unmatchedKept
-      .unionByName(applied.select(cols.map(col).toIndexedSeq: _*))
-    val newFiles = stageFiles(spark, dir, toPhysical(merged, renames),
-      partCol, touched.size, base.statsCol, base.bloomCol, base.bloomBits)
-    // change feed, in the full PREIMAGE dialect (Delta-CDF's row set —
-    // the one [[IncrementalView.applyChanges]] can fold, because
-    // updates are subtractable): each applied row classified
-    // insert-vs-update_postimage by whether its key exists in the
-    // PRUNED snapshot files (matched keys live in touched partitions
-    // by construction, so the pruned subset decides membership
-    // exactly) — O(touched), not O(table) — plus the replaced target
-    // rows as update_preimages and, under a delete clause, the doomed
-    // target rows as delete pre-images. Only staged when the table
-    // opted into change capture: the classification joins are real
-    // work a non-consuming table should not pay for. Written into the
-    // feed stage here, before the commit publishes.
+    val changes = (candidates.withColumn("__txn_side", lit(1)) +: bsPost)
+      .foldLeft(src)(_ unionByName _)
+      .withColumn("__txn_has", max(matchedT).over(byKey))
+      .withColumn("__txn_del", deleteWhen.fold(lit(false))(c =>
+        max(when(matchedT, coalesce(c, lit(false))).otherwise(lit(false))).over(byKey)))
+      .withColumn(ChangeTypeCol,
+        when(col("__txn_side") === 0,
+          when(col("__txn_del"), lit(null).cast("string"))
+            .when(col("__txn_has"), lit("update_postimage")).otherwise(lit("insert")))
+          .when(col("__txn_side") === 2, lit("update_postimage"))
+          .when(col("__txn_bs") >= 0, bsType)
+          .when(col("__txn_del"), lit("delete")).otherwise(lit("update_preimage")))
+      .filter(col(ChangeTypeCol).isNotNull)
+      .select((cols ++ Seq("__txn_file", "__txn_pos", ChangeTypeCol)).map(col).toIndexedSeq: _*)
+    // 3. materialize the classification once
+    val counts = org.apache.spark.sql.Observation()
     val feedStage = newFeedStage(spark, dir)
-    feedStage.foreach { st =>
-      val upsertCdc = applied.select(cols.map(col).toIndexedSeq: _*)
-        .join(prunedDf.select(col(key).as("__txn_mk")).distinct(),
-          col(key) === col("__txn_mk"), "left")
-        .withColumn(ChangeTypeCol,
-          when(col("__txn_mk").isNull, lit("insert"))
-            .otherwise(lit("update_postimage")))
-        .drop("__txn_mk")
-      val appliedKeys = deleteWhen match {
-        case Some(_) => srcKeys.join(delKeys,
-          col("__txn_ukey") === col("__txn_dk"), "left_anti")
-        case None => srcKeys
-      }
-      val preImg = prunedDf
-        .join(appliedKeys, col(key) === col("__txn_ukey"), "left_semi")
-        .select(cols.map(col).toIndexedSeq: _*)
-        .withColumn(ChangeTypeCol, lit("update_preimage"))
-      val matchedCdc = deleteWhen match {
-        case Some(_) => upsertCdc.unionByName(preImg).unionByName(prunedDf
-          .join(delKeys, col(key) === col("__txn_dk"), "left_semi")
-          .select(cols.map(col).toIndexedSeq: _*)
-          .withColumn(ChangeTypeCol, lit("delete")))
-        case None => upsertCdc.unionByName(preImg)
-      }
-      // by-source rows: DELETE clauses emit delete pre-images,
-      // UPDATE clauses the same preimage-dialect pre/post pair the
-      // matched-update path writes — consumers fold all five classes
-      // with one code path. Classification re-runs on the pruned
-      // files (deterministic conditions, enforced above, so the
-      // rewrite and the feed agree row-for-row).
-      val bsCdc = bsAffected.toSeq.flatMap { _ =>
-        val classified = unmatchedT.withColumn("__txn_bs", bsIdx)
-        bySource.zipWithIndex.flatMap {
-          case (_: BySourceDelete, i) => Seq(
-            classified.filter(col("__txn_bs") === i)
-              .select(cols.map(col).toIndexedSeq: _*)
-              .withColumn(ChangeTypeCol, lit("delete")))
-          case (u: BySourceUpdate, i) =>
-            val hit = classified.filter(col("__txn_bs") === i)
-            Seq(hit.select(cols.map(col).toIndexedSeq: _*)
-                  .withColumn(ChangeTypeCol, lit("update_preimage")),
-                applyBySourceSet(hit, u)
-                  .withColumn(ChangeTypeCol, lit("update_postimage")))
-        }
-      }
-      bsCdc.foldLeft(matchedCdc)(_ unionByName _)
-        .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$st")
+    val stage = feedStage.getOrElse(s"$DvDir/.tmp-${newCommitId()}")
+    def dropStage(): Unit = fs.delete(new Path(dir, stage), true)
+    // a failed pass (a CHECK or generated-column violation aborts it)
+    // leaves no partial stage behind
+    try changes.observe(counts, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$stage")
+    catch { case e: Throwable => dropStage(); throw e }
+    // an input the optimizer proved empty runs no observed node: no
+    // metric then means nothing counted
+    def observed(o: org.apache.spark.sql.Observation, m: String): Long =
+      o.get.getOrElse(m, 0L).asInstanceOf[Long]
+    if (observed(nullKeys, "n") > 0L) {
+      dropStage()
+      throw new IllegalArgumentException(s"updates contain NULL values in merge key '$key'")
     }
+    val rows = observed(counts, "rows")
+    if (rows == 0L) { dropStage(); return None }
+    // 4. from the stage's bytes: the sidecar over the doomed target
+    // rows, and the post-images and inserts as new files
+    val dvRel = s"$DvDir/c${newCommitId()}"
+    val doomed = sidecarOfStage(spark, dir, stage, dvRel)
+    val parts = stageParts(fs, dir, stage)
+    val newFiles =
+      if (doomed.valuesIterator.map(_.getLongCardinality).sum == rows) Nil
+      else stageFiles(spark, dir,
+        toPhysical(readStage(spark, dir, stage, changes.schema)
+          .filter(col("__txn_file").isNull).select(cols.map(col).toIndexedSeq: _*), renames),
+        partCol, spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        base.statsCol, base.bloomCol, base.bloomBits,
+        materializedBytes = Some(parts.map(_.getLen).sum))
+    if (feedStage.isEmpty) dropStage()
     // the staged manifest carries the EVOLVED schema: readers of this
     // version null-fill added columns for files that predate them
-    Some(Staged(base.version, partCol, schema.toDDL, touched,
-      pruned.map(_.path).toSet, newFiles, base.statsCol, feedStage = feedStage,
-      bloomCol = base.bloomCol, bloomBits = base.bloomBits,
-      renames = renames, tombstones = base.tombstones,
-      stagedDirs = dataDirsOf(newFiles) ++ feedStage))
+    Some(dvCommit(base, doomed, dvRel, newFiles, feedStage, schema.toDDL, renames))
   }
 
   /** Publish a staged merge, with optimistic-concurrency retry: if the
@@ -3439,10 +3404,12 @@ object TxnLake {
           s"concurrent commit advanced $dir to v${head.version} past the " +
             s"pinned base v${staged.baseVersion} — re-run the merge")
       }
-      // a blind append (nothing pruned) rebases over ANY intervening
-      // commit: it invalidates no reader and read no base state that
-      // could be stale — only read-modify-write commits can conflict
-      if (head.version > staged.baseVersion && staged.prunedPaths.nonEmpty) {
+      // a blind append (nothing pruned, no base read) rebases over ANY
+      // intervening commit: it invalidates no reader and read no base
+      // state that could be stale — only read-modify-write commits can
+      // conflict
+      val blind = staged.prunedPaths.isEmpty && !staged.readBase
+      if (head.version > staged.baseVersion && !blind) {
         val intervening = (staged.baseVersion + 1 to head.version)
           .map(v => readRecord(fs, manifestPath(dir, v)))
         val othersTouched = intervening.flatMap(_.touched).toSet
@@ -3471,7 +3438,7 @@ object TxnLake {
       // an intervening schema evolution or partition-spec change (the
       // append's files keep their own spec/columns — readers null-fill)
       val (recPartCol, recSchema, recRenames, recTombstones) =
-        if (staged.prunedPaths.isEmpty && head.version > staged.baseVersion)
+        if (blind && head.version > staged.baseVersion)
           (head.partCol, head.schemaDdl, head.renames, head.tombstones)
         else (staged.partCol, staged.schemaDdl, staged.renames, staged.tombstones)
       // IDEMPOTENT WRITES (Delta's txnAppId/txnVersion discipline): a
@@ -4701,7 +4668,11 @@ object TxnLake {
     * INSIDE the scan ([[DeletionVectors.filter]]): `keep = false` drops
     * them (a snapshot read), `keep = true` keeps only them (the rows a
     * just-staged sidecar dooms). `keepMeta` adds each row's identity,
-    * `__txn_file` (table-relative path) and `__txn_pos` (row index). */
+    * `__txn_file` (table-relative path) and `__txn_pos` (row index).
+    * A snapshot read without identity scans the entries no vector
+    * touches as a plain scan — no `_metadata`, no per-row probe — in
+    * union with the filtered scan of the others, once those clean
+    * files fill a read split. */
   private def scanPositions(spark: SparkSession, dir: String, schema: StructType,
                             entries: Seq[FileEntry], vectors: DeletionVectors.Vectors,
                             keep: Boolean, keepMeta: Boolean,
@@ -4712,15 +4683,29 @@ object TxnLake {
     if (entries.isEmpty)
       return toLogical(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withMeta),
         renames)
-    val scan = scanEntries(spark, dir, schema, entries)
-    val live = if (vectors.isEmpty && !keep) scan
-      else DeletionVectors.filter(scan, vectors, keep)
-    toLogical(
-      if (!keepMeta) live
-      else live.withColumn("__txn_file", expr(dataRelSql("_metadata.file_path")))
-        .withColumn("__txn_pos", col("_metadata.row_index")),
-      renames)
+    // the plain scan pays once the clean files fill a read split of
+    // their own; below that a second scan only adds tasks
+    val (clean, dirty) = entries.partition(e => !vectors.contains(e.path)) match {
+      case (c, d) if !keep && !keepMeta &&
+          (c.exists(_.bytes.isEmpty) || c.flatMap(_.bytes).sum >= splitBytes(spark)) => (c, d)
+      case _ => (Nil, entries)
+    }
+    val filtered = if (dirty.isEmpty) None else {
+      val scan = scanEntries(spark, dir, schema, dirty)
+      val live = if (vectors.isEmpty && !keep) scan
+        else DeletionVectors.filter(scan, vectors, keep)
+      Some(if (!keepMeta) live
+        else live.withColumn("__txn_file", expr(dataRelSql("_metadata.file_path")))
+          .withColumn("__txn_pos", col("_metadata.row_index")))
+    }
+    val plain = if (clean.isEmpty) None else Some(scanEntries(spark, dir, schema, clean))
+    toLogical((plain ++ filtered).reduce(_ union _), renames)
   }
+
+  /** The bytes one parquet read task takes (`spark.sql.files.maxPartitionBytes`). */
+  private def splitBytes(spark: SparkSession): Long =
+    org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes"))
 
   /** Write `df` as immutable files under a fresh `_graft_data/c<id>/`
     * dir and return their manifest entries. Files are SINGLE-partition
@@ -4739,7 +4724,8 @@ object TxnLake {
                          bloomCol: Option[String] = None,
                          bloomBits: Int = DefaultBloomBits,
                          sortWithin: Seq[Column] = Nil,
-                         maxRecsOverride: Option[Long] = None): Seq[FileEntry] = {
+                         maxRecsOverride: Option[Long] = None,
+                         materializedBytes: Option[Long] = None): Seq[FileEntry] = {
     require(!df.columns.contains("__txn_pk"),
       s"TxnLake reserves the __txn_pk column name; input has ${df.columns.mkString(",")}")
     statsCol.foreach(sc => require(df.columns.contains(sc),
@@ -4782,17 +4768,20 @@ object TxnLake {
     // r14 bench's 120 s build phase). coalesce(1) writes them in ONE
     // task; the dynamic-partition writer still splits the output by
     // __txn_pk, so the one-value-per-file invariant and per-file zone
-    // maps are unchanged. Distributed inputs keep the repartition —
-    // at real scale the shuffle is what spreads writer load.
-    val smallLocal = df.queryExecution.optimizedPlan match {
+    // maps are unchanged. The same holds for an input the caller
+    // materialized and measured (`materializedBytes`, a merge's
+    // classified stage) when one read split covers it. Distributed
+    // inputs keep the repartition — at real scale the shuffle is what
+    // spreads writer load.
+    val small = df.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         l.data.lengthCompare(100000) <= 0
-      case _ => false
+      case _ => materializedBytes.exists(_ <= splitBytes(spark))
     }
     val arranged = {
       val keyed = df.withColumn("__txn_pk", hex(xxhash64(col(partCol).cast("string"))))
       val base =
-        if (smallLocal) keyed.coalesce(1)
+        if (small) keyed.coalesce(1)
         else keyed.repartition(n, col(partCol))
       if (sortWithin.isEmpty) base
       else {

@@ -10,9 +10,11 @@ import org.apache.spark.sql.functions._
   * sequence with and without the feed:
   *
   *   - `no feed`   — staging job + commit protocol only
-  *   - `feed`      — + the pre-publish feed staging (merge: one
-  *                   classification job; update/delete: pre-images
-  *                   written by the predicate pass, post-images copied)
+  *   - `feed`      — + the pre-publish feed staging (merge: none of
+  *                   its own — the classification pass writes its rows
+  *                   into the feed stage instead of a scratch stage;
+  *                   update/delete: pre-images written by the predicate
+  *                   pass, post-images copied)
   *   - the delta   — the feed's cost per commit
   *
   * Run: sbt "Test/runMain graft.lake.CdcTaxProbe [nCommits]"

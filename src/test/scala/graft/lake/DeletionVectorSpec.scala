@@ -202,13 +202,38 @@ class DeletionVectorSpec extends AnyFunSuite with SparkTestSession {
     TxnLake.deleteWhere(spark, dir, col("id") === 1L)
     TxnLake.deleteWhere(spark, dir, col("id").isin(5L, 2L))
     assert(TxnLake.resolve(spark, dir).get.files.exists(_.dv.size == 2))
-    // a sidecar spanning p2 and p3, then p2 rewritten by a merge: the
+    // a sidecar spanning p2 and p3, then p2 rewritten by OPTIMIZE: the
     // sidecar keeps positions of p2's old path, which is no longer live
     TxnLake.deleteWhere(spark, dir, col("id").isin(6L, 7L))
-    TxnLake.upsert(spark, dir, Seq((10L, "n10x", "p2")).toDF("id", "name", "part"), "id")
+    TxnLake.optimize(spark, dir, minFiles = Int.MaxValue, purgeDv = true,
+      where = Some(col("part") === "p2"))
     val m = TxnLake.resolve(spark, dir).get
     assert(m.files.exists(f => f.dv.nonEmpty && f.parts == Set(Some("p3"))) &&
       !m.files.exists(f => f.dv.nonEmpty && f.parts == Set(Some("p2"))))
+    // a merge: p0's file gains a vector, and a clean post-image file and
+    // a clean insert file land beside the DV'd ones — a mixed snapshot
+    TxnLake.upsert(spark, dir, Seq((8L, "n8x", "p0"), (41L, "n41", "p2"))
+      .toDF("id", "name", "part"), "id")
+    val mixed = TxnLake.resolve(spark, dir).get.files
+    assert(mixed.count(_.dv.nonEmpty) === 3 && mixed.count(_.dv.isEmpty) === 3)
+    // once the clean files fill a read split, only the scan of the
+    // DV'd files reads the row index and the clean files are a plain
+    // scan; below that they ride in the one filtered scan
+    def scans = TxnLake.read(spark, dir).queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+    def indexed(ss: Seq[org.apache.spark.sql.execution.FileSourceScanExec]) = ss.filter(
+      _.output.exists(a => a.name.startsWith("_metadata") || a.name.contains("row_index")))
+    assert(scans.size === 1 && indexed(scans).size === 1)
+    val split = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+      mixed.filter(_.dv.isEmpty).flatMap(_.bytes).sum.toString)
+    try {
+      val ss = scans
+      assert(ss.size === 2 && indexed(ss).size === 1, ss.map(_.output).mkString("; "))
+      assert(indexed(ss).head.relation.location.inputFiles.map(TxnLake.dataRel).toSet ===
+        mixed.filter(_.dv.nonEmpty).map(_.path).toSet)
+      checkAllVersions(dir, "split")
+    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", split)
     // a renamed column, then a delete through the logical name
     TxnLake.renameColumn(spark, dir, "name", "label")
     TxnLake.deleteWhere(spark, dir, col("label") === "n11")
@@ -224,6 +249,6 @@ class DeletionVectorSpec extends AnyFunSuite with SparkTestSession {
     TxnLake.optimize(spark, dir, minFiles = Int.MaxValue, purgeDv = true)
     assert(TxnLake.resolve(spark, dir).get.files.forall(_.dv.isEmpty))
     checkAllVersions(dir, "purged")
-    assert(TxnLake.read(spark, dir).count() === 40L - 6L)
+    assert(TxnLake.read(spark, dir).count() === 40L - 6L + 1L)
   }
 }

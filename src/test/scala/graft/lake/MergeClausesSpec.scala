@@ -57,14 +57,22 @@ class MergeClausesSpec extends AnyFunSuite with SparkTestSession {
   test("untouched partitions keep their files; CDC carries all three classes") {
     import spark.implicits._
     val dir = freshTable()
-    val before = TxnLake.detail(spark, dir).select("path").collect().map(_.getString(0)).toSet
+    val before = TxnLake.resolve(spark, dir).get.files
     TxnLake.merge(spark, dir,
       Seq((1L, 11L, "p1"), (2L, 999L, "p1"), (5L, 50L, "p2")).toDF("id", "v", "part"),
       "id", deleteWhen = col("v") > 100)
-    val after = TxnLake.detail(spark, dir).select("path").collect().map(_.getString(0)).toSet
-    // p3 (key 4) was never touched — its file survives the merge
-    assert((before -- after).nonEmpty) // p1/p2 rewritten
-    assert((before intersect after).nonEmpty) // p3 untouched
+    val after = TxnLake.resolve(spark, dir).get.files
+    // every base file keeps its path; p1's (keys 1 and 2 doomed) gains
+    // exactly one vector, p2's (only an insert lands in p2) and p3's
+    // (never touched) entries are unchanged
+    assert(before.map(_.path).toSet.subsetOf(after.map(_.path).toSet))
+    val (p1, others) = before.partition(_.parts == Set(Option("p1")))
+    val p1After = after.find(_.path == p1.head.path).get
+    assert(p1After.dv.size === 1 && p1After.doomed === Some(2L))
+    assert(others.forall(f => after.contains(f)))
+    // the new files hold only the post-image of 1 and the insert of 5
+    val added = after.filterNot(f => before.exists(_.path == f.path))
+    assert(added.flatMap(_.rows).sum === 2L)
     val v = TxnLake.history(spark, dir).agg(max("version")).head().getLong(0)
     val cdc = graft.streaming.CdcFeed.batch(spark, dir, fromVersion = v)
       .select(col("id"), col(TxnLake.ChangeTypeCol)).collect()

@@ -49,19 +49,26 @@ class PartitionEvolutionSpec extends AnyFunSuite with SparkTestSession {
     import spark.implicits._
     val dir = freshTable()
     TxnLake.evolvePartitioning(spark, dir, "cat")
-    // upsert keyed into cat=c1; the matched rows live in grp-spec files
-    // whose parts values ("g0"/"g1") say nothing about cat — they must
-    // ride into the rewrite conservatively
+    // upsert keyed into cat=c1; the matched row lives in a grp-spec
+    // file whose parts values ("g0"/"g1") say nothing about cat — the
+    // merge must find it anyway
+    val before = TxnLake.resolve(spark, dir).get.files
     TxnLake.upsert(spark, dir,
       Seq((4L, "g0", "c1", 999.0)).toDF("id", "grp", "cat", "v"), "id")
     val got = TxnLake.read(spark, dir).filter(col("id") === 4L)
-      .select("v").head().getDouble(0)
-    assert(got === 999.0)
-    assert(ids(dir) === (1L to 12L), "no row lost in the migration rewrite")
-    // the rewrite migrated every legacy file it dragged in
+      .select("v").collect().map(_.getDouble(0)).toSeq
+    assert(got === Seq(999.0), "the old image is gone, the new one present once")
+    assert(ids(dir) === (1L to 12L), "no row lost")
+    // merge-on-read: the legacy file keeps its path and spec and gains
+    // a vector (migration is OPTIMIZE's job, pinned below); the
+    // post-image is staged under the current column
     val head = TxnLake.resolve(spark, dir).get
-    assert(head.files.forall(_.spec.contains("cat")),
-      "post-evolution rewrite must re-stage legacy files under the new column")
+    val legacy = head.files.filter(_.spec.contains("grp"))
+    assert(legacy.map(_.path).toSet === before.map(_.path).toSet)
+    assert(legacy.count(_.dv.nonEmpty) === 1)
+    val added = head.files.filterNot(_.spec.contains("grp"))
+    assert(added.nonEmpty && added.forall(f =>
+      f.spec.contains("cat") && f.parts == Set(Option("c1"))))
   }
 
   test("OPTIMIZE migrates legacy-layout files to the current column") {

@@ -176,6 +176,46 @@ class RaceHardeningSpec extends AnyFunSuite with SparkTestSession {
       "the aborted delete must leave its target rows live")
   }
 
+  test("a merge and a deleteWhere on the same file: the loser aborts and leaves no staging behind") {
+    val root = Files.createTempDirectory("graft_occ")
+    val dir = root.resolve("t").toString
+    TxnLake.create(spark, dir,
+      (1L to 10L).map(i => (i, s"n$i", s"p${i % 2}")).toDF("id", "n", "part"), "part",
+      changeFeed = true)
+    def exists(rel: String) = new java.io.File(dir, rel).exists()
+    def feedStages = Option(new java.io.File(dir, "_graft_cdc").list()).toSeq.flatten
+      .filter(_.startsWith(".tmp-"))
+    // the merge stages first (dooming id 2 in p0's file), then a
+    // delete of another row of that file commits: the merge loses
+    val staged = TxnLake.stageMerge(spark, dir, TxnLake.resolve(spark, dir).get,
+      Seq((2L, "m2", "p0")).toDF("id", "n", "part"), "id").get
+    assert(staged.stagedDirs.exists(_.startsWith("_graft_dv/")) &&
+      staged.stagedDirs.exists(_.startsWith("_graft_data/")) &&
+      staged.stagedDirs.exists(_.startsWith("_graft_cdc/")))
+    assert(staged.stagedDirs.forall(exists))
+    assert(TxnLake.deleteWhere(spark, dir, col("id") === 4L) === 1L)
+    intercept[java.util.ConcurrentModificationException](
+      TxnLake.commitStaged(spark, dir, staged))
+    assert(!staged.stagedDirs.exists(exists), "the losing merge's sidecar and files are dropped")
+    assert(feedStages.isEmpty)
+    val after = TxnLake.read(spark, dir).select("id", "n").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(!after.contains(4L) && after(2L) === "n2" && after.size === 9)
+    // and the other way round: a delete staged on p1's file loses to a
+    // merge of the same file committed in its window
+    val dvBefore = new java.io.File(dir, "_graft_dv").list().toSet
+    intercept[java.util.ConcurrentModificationException] {
+      TxnLake.deleteWhere(spark, dir, col("id") === 5L, () => {
+        TxnLake.upsert(spark, dir, Seq((3L, "m3", "p1")).toDF("id", "n", "part"), "id") })
+    }
+    val dvAfter = new java.io.File(dir, "_graft_dv").list().toSet
+    assert((dvAfter -- dvBefore).size === 1, "only the merge's sidecar is new")
+    assert(feedStages.isEmpty)
+    val last = TxnLake.read(spark, dir).select("id", "n").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(last(5L) === "n5" && last(3L) === "m3" && last.size === 9)
+  }
+
   test("mergeAt pinned to a stale base aborts on ANY intervening commit") {
     val root = Files.createTempDirectory("graft_race")
     val dir = root.resolve("t").toString

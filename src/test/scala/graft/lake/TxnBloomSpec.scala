@@ -81,7 +81,18 @@ class TxnBloomSpec extends AnyFunSuite with SparkTestSession {
     assert(m.files.forall(_.bloom.nonEmpty))
     val hit = lake(dir).filter(col("clerk") === "clerk-upd-1")
     assert(hit.collect().map(_.getAs[Long]("id")).toSeq === Seq(5L))
-    assert(scannedFiles(hit) < m.files.size)
+    // the upsert doomed id 5's old image by a deletion vector, so the
+    // snapshot plans through TxnDvRelation: its manifest pruning keeps
+    // only the files whose blooms may hold the value — the post-image
+    // file's fresh bits among them
+    val rel = hit.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect { case r: TxnDvRelation => r }
+      .getOrElse(fail("a DV'd snapshot must plan through TxnDvRelation"))
+    val kept = rel.prunedEntries(Seq(org.apache.spark.sql.sources.EqualTo("clerk", "clerk-upd-1")))
+    assert(kept.size < m.files.size)
+    val post = m.files.filter(f => f.dv.isEmpty && f.parts == Set(Option("b5")))
+    assert(post.nonEmpty && post.forall(kept.contains))
     // the non-bloom read path is untouched
     assert(TxnLake.read(spark, dir).count() === 801)
   }
