@@ -122,17 +122,6 @@ private[lake] object DeletionVectors {
     } finally writer.close()
   }
 
-  /** Sidecars decoded by the latest reads, by absolute path. A sidecar
-    * is never rewritten and its name (`c<commit id>`) never reused, so
-    * a decode stays valid; every read of a snapshot decodes the same
-    * sidecars, and a table's reads share them. Least recently used out
-    * past 64. */
-  private val recent = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Vectors](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[String, Vectors]): Boolean =
-        size() > 64
-    })
-
   /** The doomed positions of `entries`: every distinct sidecar they
     * reference is decoded once, and each entry takes the positions of
     * ITS OWN path from the sidecars IT references. A sidecar can hold
@@ -143,14 +132,7 @@ private[lake] object DeletionVectors {
     val refs = entries.flatMap(_.dv).distinct
     if (refs.isEmpty) return Map.empty
     val conf = spark.sparkContext.hadoopConfiguration
-    val decoded = refs.map { r =>
-      val path = TxnLake.locateDv(dir, r)
-      r -> Option(recent.get(path)).getOrElse {
-        val v = decode(conf, path)
-        recent.put(path, v)
-        v
-      }
-    }.toMap
+    val decoded = refs.map(r => r -> decode(conf, TxnLake.locateDv(dir, r))).toMap
     entries.filter(_.dv.nonEmpty).flatMap { e =>
       val own = e.dv.flatMap(r => decoded(r).get(e.path))
       if (own.isEmpty) None

@@ -178,11 +178,9 @@ object TxnLake {
     * ([[publishFeed]]). `stagedDirs` lists every dir this staging
     * created (data `c<id>` dirs, a DV sidecar, the feed stage) — what
     * an aborted commit drops ([[dropStagedFiles]]). It has no default:
-    * every staging site states what it wrote. `readBase` marks a commit
-    * whose content depends on the base snapshot beyond the files it
-    * removes (a merge that only inserts read the table to find no
-    * match): it is conflict-checked like any rewrite, never rebased
-    * blindly. */
+    * every staging site states what it wrote. `readBase`: the commit
+    * read the base beyond the files it removes (an insert-only merge),
+    * so it is conflict-checked, never rebased blindly. */
   private[lake] case class Staged(baseVersion: Long, partCol: String,
                                   schemaDdl: String, touched: Set[Option[String]],
                                   prunedPaths: Set[String], newFiles: Seq[FileEntry],
@@ -1498,9 +1496,9 @@ object TxnLake {
     * one atomic commit re-publishes the affected files' manifest
     * entries with the sidecar appended to their `dv` list and their
     * `doomed` counts raised. The whole delete is one Spark job; with
-    * the change feed on that job writes the pre-images, and the
-    * sidecar is decoded from them and written on the driver. Readers of this and later versions drop the positions
-    * inside the scan ([[readEntries]]); readers of older versions
+    * the change feed on that job writes the pre-images, and the driver
+    * writes the sidecar from them. Readers of this and later versions
+    * drop the positions inside the scan ([[readEntries]]); readers of older versions
     * never see the sidecar — time travel is untouched.
     *
     * This is the delete a 100 TB table wants when the doomed rows are a
@@ -3128,10 +3126,9 @@ object TxnLake {
     * post-images and inserts ([[stageFiles]]). The source is never
     * evaluated again and no data file is rewritten: untouched rows
     * stay where they are, and a legacy-spec file gets a vector, not a
-    * migration ([[optimize]] migrates). A NULL merge key (it can neither match nor insert) is
-    * counted by an observation on the same pass and aborts the merge
-    * with its stage dropped. The commit is [[dvCommit]]'s, as
-    * [[updateWhere]]'s.
+    * migration ([[optimize]] migrates). A NULL merge key is counted by
+    * an observation on the same pass and aborts the merge with its
+    * stage dropped. The commit is [[dvCommit]]'s, as [[updateWhere]]'s.
     *
     * SCHEMA EVOLUTION: updates may carry NEW columns, which append to
     * the table schema (additive-only — the evolution every lake format
@@ -3249,13 +3246,10 @@ object TxnLake {
             require(cols.contains(k), s"no column '$k' in ${cols.mkString(",")}")
             require(!genCols.contains(k),
               s"cannot SET generated column '$k' — it is GENERATED ALWAYS AS")
-            // same rule the clause conditions get: the post-image is
-            // computed beside the pre-image in the classification
-            // pass, so a nondeterministic value could pair a
-            // post-image with a row another evaluation classified
-            // differently. Checked on the ANALYZED projection (the
-            // fillGenerated discipline — parse-time `deterministic` is
-            // unreliable on unresolved functions).
+            // the conditions' rule, for the same reason; checked on the
+            // ANALYZED projection (the fillGenerated discipline —
+            // parse-time `deterministic` is unreliable on unresolved
+            // functions)
             val projected = target.select(v.as("__txn_chk"))
               .queryExecution.analyzed match {
               case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
@@ -3330,15 +3324,19 @@ object TxnLake {
           .when(col("__txn_bs") >= 0, bsType)
           .when(col("__txn_del"), lit("delete")).otherwise(lit("update_preimage")))
       .filter(col(ChangeTypeCol).isNotNull)
-      .select((cols ++ Seq("__txn_file", "__txn_pos", ChangeTypeCol)).map(col).toIndexedSeq: _*)
-    // 3. materialize the classification once
-    val counts = org.apache.spark.sql.Observation()
+    // 3. materialize the classification once. Without a feed a doomed
+    // target row is only its identity: its data columns stage as NULL
     val feedStage = newFeedStage(spark, dir)
+    val staged = changes.select(cols.map { c =>
+      if (feedStage.isDefined) col(c)
+      else when(col("__txn_file").isNull, col(c)).as(c)
+    } ++ Seq("__txn_file", "__txn_pos", ChangeTypeCol).map(col): _*)
+    val counts = org.apache.spark.sql.Observation()
     val stage = feedStage.getOrElse(s"$DvDir/.tmp-${newCommitId()}")
     def dropStage(): Unit = fs.delete(new Path(dir, stage), true)
     // a failed pass (a CHECK or generated-column violation aborts it)
     // leaves no partial stage behind
-    try changes.observe(counts, count(lit(1)).as("rows"))
+    try staged.observe(counts, count(lit(1)).as("rows"))
       .write.mode(SaveMode.ErrorIfExists).parquet(s"$dir/$stage")
     catch { case e: Throwable => dropStage(); throw e }
     // an input the optimizer proved empty runs no observed node: no
@@ -3355,15 +3353,14 @@ object TxnLake {
     // rows, and the post-images and inserts as new files
     val dvRel = s"$DvDir/c${newCommitId()}"
     val doomed = sidecarOfStage(spark, dir, stage, dvRel)
-    val parts = stageParts(fs, dir, stage)
     val newFiles =
       if (doomed.valuesIterator.map(_.getLongCardinality).sum == rows) Nil
       else stageFiles(spark, dir,
-        toPhysical(readStage(spark, dir, stage, changes.schema)
+        toPhysical(readStage(spark, dir, stage, staged.schema)
           .filter(col("__txn_file").isNull).select(cols.map(col).toIndexedSeq: _*), renames),
         partCol, spark.conf.get("spark.sql.shuffle.partitions").toInt,
         base.statsCol, base.bloomCol, base.bloomBits,
-        materializedBytes = Some(parts.map(_.getLen).sum))
+        materializedBytes = Some(stageParts(fs, dir, stage).map(_.getLen).sum))
     if (feedStage.isEmpty) dropStage()
     // the staged manifest carries the EVOLVED schema: readers of this
     // version null-fill added columns for files that predate them
@@ -4668,11 +4665,7 @@ object TxnLake {
     * INSIDE the scan ([[DeletionVectors.filter]]): `keep = false` drops
     * them (a snapshot read), `keep = true` keeps only them (the rows a
     * just-staged sidecar dooms). `keepMeta` adds each row's identity,
-    * `__txn_file` (table-relative path) and `__txn_pos` (row index).
-    * A snapshot read without identity scans the entries no vector
-    * touches as a plain scan — no `_metadata`, no per-row probe — in
-    * union with the filtered scan of the others, once those clean
-    * files fill a read split. */
+    * `__txn_file` (table-relative path) and `__txn_pos` (row index). */
   private def scanPositions(spark: SparkSession, dir: String, schema: StructType,
                             entries: Seq[FileEntry], vectors: DeletionVectors.Vectors,
                             keep: Boolean, keepMeta: Boolean,
@@ -4683,29 +4676,15 @@ object TxnLake {
     if (entries.isEmpty)
       return toLogical(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withMeta),
         renames)
-    // the plain scan pays once the clean files fill a read split of
-    // their own; below that a second scan only adds tasks
-    val (clean, dirty) = entries.partition(e => !vectors.contains(e.path)) match {
-      case (c, d) if !keep && !keepMeta &&
-          (c.exists(_.bytes.isEmpty) || c.flatMap(_.bytes).sum >= splitBytes(spark)) => (c, d)
-      case _ => (Nil, entries)
-    }
-    val filtered = if (dirty.isEmpty) None else {
-      val scan = scanEntries(spark, dir, schema, dirty)
-      val live = if (vectors.isEmpty && !keep) scan
-        else DeletionVectors.filter(scan, vectors, keep)
-      Some(if (!keepMeta) live
-        else live.withColumn("__txn_file", expr(dataRelSql("_metadata.file_path")))
-          .withColumn("__txn_pos", col("_metadata.row_index")))
-    }
-    val plain = if (clean.isEmpty) None else Some(scanEntries(spark, dir, schema, clean))
-    toLogical((plain ++ filtered).reduce(_ union _), renames)
+    val scan = scanEntries(spark, dir, schema, entries)
+    val live = if (vectors.isEmpty && !keep) scan
+      else DeletionVectors.filter(scan, vectors, keep)
+    toLogical(
+      if (!keepMeta) live
+      else live.withColumn("__txn_file", expr(dataRelSql("_metadata.file_path")))
+        .withColumn("__txn_pos", col("_metadata.row_index")),
+      renames)
   }
-
-  /** The bytes one parquet read task takes (`spark.sql.files.maxPartitionBytes`). */
-  private def splitBytes(spark: SparkSession): Long =
-    org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes"))
 
   /** Write `df` as immutable files under a fresh `_graft_data/c<id>/`
     * dir and return their manifest entries. Files are SINGLE-partition
@@ -4776,7 +4755,8 @@ object TxnLake {
     val small = df.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         l.data.lengthCompare(100000) <= 0
-      case _ => materializedBytes.exists(_ <= splitBytes(spark))
+      case _ => materializedBytes.exists(_ <= org.apache.spark.network.util.JavaUtils
+        .byteStringAsBytes(spark.conf.get("spark.sql.files.maxPartitionBytes")))
     }
     val arranged = {
       val keyed = df.withColumn("__txn_pk", hex(xxhash64(col(partCol).cast("string"))))

@@ -216,24 +216,12 @@ class DeletionVectorSpec extends AnyFunSuite with SparkTestSession {
       .toDF("id", "name", "part"), "id")
     val mixed = TxnLake.resolve(spark, dir).get.files
     assert(mixed.count(_.dv.nonEmpty) === 3 && mixed.count(_.dv.isEmpty) === 3)
-    // once the clean files fill a read split, only the scan of the
-    // DV'd files reads the row index and the clean files are a plain
-    // scan; below that they ride in the one filtered scan
-    def scans = TxnLake.read(spark, dir).queryExecution.executedPlan.collect {
+    // clean and DV'd files ride in the one filtered scan
+    val scans = TxnLake.read(spark, dir).queryExecution.executedPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
-    def indexed(ss: Seq[org.apache.spark.sql.execution.FileSourceScanExec]) = ss.filter(
-      _.output.exists(a => a.name.startsWith("_metadata") || a.name.contains("row_index")))
-    assert(scans.size === 1 && indexed(scans).size === 1)
-    val split = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes",
-      mixed.filter(_.dv.isEmpty).flatMap(_.bytes).sum.toString)
-    try {
-      val ss = scans
-      assert(ss.size === 2 && indexed(ss).size === 1, ss.map(_.output).mkString("; "))
-      assert(indexed(ss).head.relation.location.inputFiles.map(TxnLake.dataRel).toSet ===
-        mixed.filter(_.dv.nonEmpty).map(_.path).toSet)
-      checkAllVersions(dir, "split")
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+    assert(scans.size === 1 &&
+      scans.head.relation.location.inputFiles.map(TxnLake.dataRel).toSet ===
+        mixed.map(_.path).toSet)
     // a renamed column, then a delete through the logical name
     TxnLake.renameColumn(spark, dir, "name", "label")
     TxnLake.deleteWhere(spark, dir, col("label") === "n11")

@@ -2,7 +2,9 @@ package graft.lake
 
 import graft.SparkTestSession
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec}
+import org.apache.spark.sql.execution.datasources.FileScanRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,6 +35,30 @@ class TxnBloomSpec extends AnyFunSuite with SparkTestSession {
 
   private def lake(dir: String): DataFrame =
     spark.read.format("graft-txn").load(dir)
+
+  /** The data files (table-relative paths) the scans that
+    * `TxnDvRelation.buildScan` built for `df` open: the file partitions
+    * of the parquet scan under each relation scan's RDD. */
+  private def dvScanFiles(df: DataFrame): Set[String] = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val scans = plan.collect {
+      case s: RowDataSourceScanExec if s.relation.isInstanceOf[TxnDvRelation] => s
+    }
+    assert(scans.nonEmpty, s"expected a TxnDvRelation scan in the plan:\n$plan")
+    def files(rdd: RDD[_]): Seq[String] = rdd match {
+      case f: FileScanRDD => f.filePartitions.flatMap(_.files.map(_.toPath.toString))
+      case other => other.dependencies.flatMap(d => files(d.rdd))
+    }
+    val root = new org.apache.hadoop.fs.Path(scans.head.relation
+      .asInstanceOf[TxnDvRelation].dir).toUri.getPath
+    scans.flatMap(s => files(s.rdd)).map { p =>
+      val abs = new org.apache.hadoop.fs.Path(p).toUri.getPath
+      abs.stripPrefix(root).stripPrefix("/")
+    }.toSet
+  }
 
 
   test("manifest carries a bloom per file; driver probe matches the staged bits") {
@@ -82,14 +108,13 @@ class TxnBloomSpec extends AnyFunSuite with SparkTestSession {
     val hit = lake(dir).filter(col("clerk") === "clerk-upd-1")
     assert(hit.collect().map(_.getAs[Long]("id")).toSeq === Seq(5L))
     // the upsert doomed id 5's old image by a deletion vector, so the
-    // snapshot plans through TxnDvRelation: its manifest pruning keeps
-    // only the files whose blooms may hold the value — the post-image
-    // file's fresh bits among them
-    val rel = hit.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
-    }.collect { case r: TxnDvRelation => r }
-      .getOrElse(fail("a DV'd snapshot must plan through TxnDvRelation"))
-    val kept = rel.prunedEntries(Seq(org.apache.spark.sql.sources.EqualTo("clerk", "clerk-upd-1")))
+    // snapshot plans through TxnDvRelation: the query's filter is pushed
+    // into its buildScan, whose manifest pruning keeps only the files
+    // whose blooms may hold the value — the post-image file's fresh
+    // bits among them — and the scan it builds opens only those
+    val read = dvScanFiles(hit)
+    val kept = m.files.filter(f => read.contains(f.path))
+    assert(kept.size === read.size, s"scan read files outside the manifest: $read")
     assert(kept.size < m.files.size)
     val post = m.files.filter(f => f.dv.isEmpty && f.parts == Set(Option("b5")))
     assert(post.nonEmpty && post.forall(kept.contains))
