@@ -39,10 +39,7 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType,
   *  - rowCount = Σ per-file rows − Σ per-entry DOOMED counts: each DV
   *    commit records its entry's cumulative deleted-row count in the
   *    manifest, so the subtraction is log-only and the count is EXACT
-  *    under deletion vectors. Entries whose DVs predate the field
-  *    contribute no subtraction — the old safe over-approximation.
-  *    Legacy manifests with any row-less entry attach nothing — never
-  *    guess.
+  *    under deletion vectors.
   *  - column min/max = the fold of every live file's zone map, emitted
   *    only when EVERY live file carries bounds for the column (a
   *    partial fold could under-state the range and make CBO prune a
@@ -97,29 +94,15 @@ object TxnCboStats extends Rule[LogicalPlan] {
       case dv: TxnDvRelation => Some((dv.dir, dv.manifest, dv.sizeInBytes))
       case _ => None
     }
-    src.flatMap { case (dir, m, size) =>
-      // no guessing: a legacy manifest with any row-less entry gets no
-      // rowCount, and without rowCount toPlanStats is size-only — skip
-      // the attach entirely so the plan is byte-identical to before.
-      // Same discipline for a DV'd entry WITHOUT a doomed count (legacy
-      // or sidecar-fallback commits): its deleted rows are knowable
-      // only by decoding the sidecars — file reads inside an optimizer
-      // rule — and attaching the undiminished sum would feed
-      // CBO an over-stated row count on mixed tables, so abstain and
-      // let size-based estimation stand.
-      if (m.files.exists(_.rows.isEmpty) ||
-          m.files.exists(f => f.dv.nonEmpty && f.doomed.isEmpty)) None
-      else {
-        // rowCount is EXACT under deletion vectors: each DV commit
-        // writes the entry's cumulative doomed-row count into the
-        // manifest, so the subtraction is a pure log read.
-        val doomed = m.files.filter(_.dv.nonEmpty).flatMap(_.doomed).sum
-        val rows = m.files.flatMap(_.rows).sum - doomed
-        Some(CatalogStatistics(
-          sizeInBytes = BigInt(size),
-          rowCount = Some(BigInt(rows)),
-          colStats = colStatsOf(dir, m, rows)))
-      }
+    src.map { case (dir, m, size) =>
+      // rowCount is EXACT under deletion vectors: each DV commit
+      // writes the entry's cumulative doomed-row count into the
+      // manifest, so the subtraction is a pure log read.
+      val rows = m.files.map(f => f.rows - f.doomed).sum
+      CatalogStatistics(
+        sizeInBytes = BigInt(size),
+        rowCount = Some(BigInt(rows)),
+        colStats = colStatsOf(dir, m, rows))
     }
   }
 

@@ -103,16 +103,21 @@ object TxnLake {
     * Keeping identity relative and location separate means every
     * identity-keyed code path (DV joins, OCC prune sets, vacuum)
     * works unchanged on cloned entries. */
+  /** `rows`, `bytes` and `mtime` are the file's row count, byte length
+    * and modification time, recorded at staging (Delta's AddFile
+    * `numRecords`/`size`/`modificationTime`): they make COUNT(*),
+    * DESCRIBE DETAIL, plan-time sizing and the scan's file statuses
+    * log-only reads. `doomed` is the cumulative count of rows the
+    * entry's deletion vectors delete — 0 when `dv` is empty. Every log
+    * record and checkpoint carries all four; the reader refuses an
+    * entry without them ([[TxnLogCorruptedException]]). */
   case class FileEntry(path: String, parts: Set[Option[String]],
                        zmin: Option[Double] = None, zmax: Option[Double] = None,
                        bloom: Option[String] = None, dv: Seq[String] = Nil,
                        spec: Option[String] = None,
                        stats: Map[String, (Double, Double)] = Map.empty,
                        base: Option[String] = None,
-                       rows: Option[Long] = None,
-                       bytes: Option[Long] = None,
-                       doomed: Option[Long] = None,
-                       mtime: Option[Long] = None) {
+                       rows: Long, bytes: Long, doomed: Long, mtime: Long) {
     /** Whether this file's partition values index `partCol` (legacy
       * in-memory entries without a spec are treated as current). */
     def onSpec(partCol: String): Boolean = spec.forall(_ == partCol)
@@ -150,14 +155,14 @@ object TxnLake {
 
   /** One committed version's LOG record: the delta this commit applied
     * (`add`/`remove`) plus the commit-scoped metadata OCC needs
-    * (`touched`). `full = true` marks a legacy full-manifest record
-    * (`add` is the complete file list) — replay treats it as a
-    * barrier. */
+    * (`touched`). `ts` is the in-commit timestamp, stamped at publish
+    * ([[publishRecord]]) and required by the reader; a `vN.json` is
+    * always a delta — one holding a full `files` list is refused. */
   private[lake] case class CommitRecord(version: Long, commitId: String,
                                         partCol: String, schemaDdl: String,
                                         touched: Set[Option[String]],
                                         add: Seq[FileEntry], remove: Set[String],
-                                        statsCol: Option[String], full: Boolean,
+                                        statsCol: Option[String],
                                         bloomCol: Option[String] = None,
                                         bloomBits: Int = DefaultBloomBits,
                                         renames: Map[String, String] = Map.empty,
@@ -917,7 +922,7 @@ object TxnLake {
         val head = resolve(fs, dir).get
         val rec = CommitRecord(head.version + 1, newCommitId(), head.partCol,
           head.schemaDdl, Set.empty, Nil, Set.empty, head.statsCol,
-          full = false, bloomCol = head.bloomCol, bloomBits = head.bloomBits,
+          bloomCol = head.bloomCol, bloomBits = head.bloomBits,
           renames = head.renames, tombstones = head.tombstones,
           dataChange = false, identity = Map(name -> high))
         done = publishRecord(fs, dir, rec)
@@ -1190,7 +1195,7 @@ object TxnLake {
     feedStage.foreach(stageFeedImages(spark, dir, _, df.schema, Map.empty,
       "insert" -> files))
     val rec = CommitRecord(0L, newCommitId(), partCol, df.schema.toDDL,
-      files.flatMap(_.parts).toSet, files, Set.empty, statsCol, full = false,
+      files.flatMap(_.parts).toSet, files, Set.empty, statsCol,
       bloomCol = bloomCol, bloomBits = bloomBits)
     require(publishRecord(fs, dir, rec),
       s"concurrent create of txn table at $dir")
@@ -1252,10 +1257,11 @@ object TxnLake {
     * published at-or-before `tsMillis`, resolved off each record's
     * IN-COMMIT TIMESTAMP — persisted inside the log record at publish
     * time and strictly monotonic across versions, so results survive
-    * table copies/migrations that rewrite file mtimes (pre-ICT records
-    * fall back to manifest mtime). Fails loudly when the timestamp
-    * predates the oldest retained version (vacuumed history cannot be
-    * served partially) or postdates nothing. */
+    * table copies/migrations that rewrite file mtimes; a record that
+    * fails its integrity check fails typed here too ([[commitTimeOf]]).
+    * Fails loudly when the timestamp predates the oldest retained
+    * version (vacuumed history cannot be served partially) or postdates
+    * nothing. */
   def versionAsOfTimestamp(spark: SparkSession, dir: String, tsMillis: Long): Long = {
     val fs = fsOf(spark, dir)
     val vs = listVersions(fs, dir).sorted
@@ -1274,8 +1280,9 @@ object TxnLake {
     readVersion(spark, dir, versionAsOfTimestamp(spark, dir, tsMillis))
 
   /** Commit history of the table: one row per retained version with its
-    * commit id, touched partition values and file count — metadata only,
-    * no data files are opened. */
+    * commit id, touched partition values, file count and in-commit
+    * timestamp (the record's `ts`) — metadata only, no data files are
+    * opened. */
   def history(spark: SparkSession, dir: String): DataFrame = {
     val fs = fsOf(spark, dir)
     import spark.implicits._
@@ -1285,21 +1292,16 @@ object TxnLake {
         .toDF("version", "commit_id", "touched_partitions", "n_files", "committed_at")
     // ONE forward replay for the whole history — per-version resolveAt
     // would be quadratic in retained versions
-    def tsOf(r: CommitRecord, v: Long): java.sql.Timestamp =
-      new java.sql.Timestamp(
-        if (r.ts > 0) r.ts // in-commit timestamp; legacy records fall back to mtime
-        else fs.getFileStatus(manifestPath(dir, v)).getModificationTime)
+    def row(r: CommitRecord, files: Seq[FileEntry]) =
+      (r.version, r.commitId, r.touched.toSeq.map(_.getOrElse("NULL")).sorted,
+        files.size, new java.sql.Timestamp(r.ts))
     var files = resolveAt(fs, dir, vs.head).files
-    val head = readRecord(fs, manifestPath(dir, vs.head))
     val rows = Seq.newBuilder[(Long, String, Seq[String], Int, java.sql.Timestamp)]
-    rows += ((head.version, head.commitId,
-      head.touched.toSeq.map(_.getOrElse("NULL")).sorted, files.size,
-      tsOf(head, vs.head)))
+    rows += row(readRecord(fs, manifestPath(dir, vs.head)), files)
     vs.tail.foreach { v =>
       val r = readRecord(fs, manifestPath(dir, v))
       files = applyRecord(files, r)
-      rows += ((r.version, r.commitId,
-        r.touched.toSeq.map(_.getOrElse("NULL")).sorted, files.size, tsOf(r, v)))
+      rows += row(r, files)
     }
     rows.result()
       .toDF("version", "commit_id", "touched_partitions", "n_files", "committed_at")
@@ -1327,13 +1329,9 @@ object TxnLake {
     * files opened (the manifest IS a partition index; Delta refuses
     * SHOW PARTITIONS outright because its log would have to be
     * replayed file-by-file — graft already holds the fold). `n_rows`
-    * is EXACT-OR-NULL: the per-file footer row counts summed when
-    * every file in the partition tracks rows and carries no
-    * outstanding deletion vector; any DV'd or legacy row-less file
-    * nulls the partition's count rather than over-reporting (the
-    * [[rowCount]] honesty rule — OPTIMIZE purgeDv / REORG restore
-    * exactness). Legacy multi-value files count under EACH of their
-    * values, like [[detail]]. */
+    * is exact: each entry's staged row count less its deletion
+    * vectors' `doomed` rows, as in [[rowCount]]. Multi-value files
+    * count under EACH of their values, like [[detail]]. */
   def partitions(spark: SparkSession, dir: String): DataFrame = {
     val fs = fsOf(spark, dir)
     val m = resolve(fs, dir)
@@ -1343,10 +1341,8 @@ object TxnLake {
       .groupBy(_._1).toSeq
       .map { case (p, grouped) =>
         val entries = grouped.map(_._2)
-        val exact = entries.forall(e => e.rows.isDefined && e.dv.isEmpty)
         (p.getOrElse("NULL"), entries.size.toLong,
-          (if (exact) java.lang.Long.valueOf(entries.flatMap(_.rows).sum)
-           else null): java.lang.Long)
+          entries.map(e => e.rows - e.doomed).sum)
       }
       .sortBy(_._1)
       .toDF("partition", "n_files", "n_rows")
@@ -1355,41 +1351,20 @@ object TxnLake {
   /** METADATA-ONLY COUNT(*) at a version (latest when negative): the
     * manifest's per-file row counts summed, minus each live file's
     * cumulative DOOMED-ROW count (written into its entry at DV-commit
-    * time) — a pure log read even under heavy deletes, zero data or
-    * sidecar files opened, O(manifest) — which is what makes
-    * `SELECT count(*)` on a 100 TB table instant (the Delta/Iceberg
-    * stats-only count). Entries whose DVs predate doomed-count
-    * tracking fall back to decoding the (file, pos) sidecars on the
-    * driver ([[DeletionVectors]]) — O(deleted rows), only the sidecars
-    * live files reference, no Spark job. Returns
-    * None when any live entry predates row-count tracking (legacy
-    * manifest without `rows`) — callers fall back to a scan; never
-    * guesses. */
+    * time, exact because DML evaluates on live rows, so sidecar
+    * positions are disjoint) — a pure log read even under heavy
+    * deletes, zero data or sidecar files opened, O(manifest) — which is
+    * what makes `SELECT count(*)` on a 100 TB table instant (the
+    * Delta/Iceberg stats-only count). Always `Some`: the reader
+    * requires both counts on every entry, so a log without them fails
+    * typed at resolution instead. */
   def rowCount(spark: SparkSession, dir: String, version: Long = -1L): Option[Long] = {
     val fs = fsOf(spark, dir)
     val m =
       if (version < 0) resolve(fs, dir)
         .getOrElse(throw new IllegalArgumentException(s"$dir is not a txn table (no $LogDir)"))
       else resolveAt(fs, dir, version)
-    if (m.files.exists(_.rows.isEmpty)) return None
-    val base = m.files.flatMap(_.rows).sum
-    // FAST PATH: every DV'd entry carries its cumulative doomed-row
-    // count in the manifest (written at DV-commit time, exact because
-    // deletes only evaluate on live rows so sidecar positions are
-    // disjoint) — the count is then a pure log read even under heavy
-    // deletes, zero sidecar I/O. Entries written before the field
-    // existed fall through to the sidecar decode below.
-    val dvEntries = m.files.filter(_.dv.nonEmpty)
-    if (dvEntries.forall(_.doomed.isDefined))
-      return Some(base - dvEntries.flatMap(_.doomed).sum)
-    // a sidecar can doom rows of files that were since rewritten (and
-    // re-added without the DV), so each entry counts only its own
-    // positions in the sidecars it still REFERENCES — deleteWhere
-    // evaluates on live (already-DV-filtered) rows, so no position is
-    // doomed twice across sidecars
-    val deleted = DeletionVectors.ofEntries(spark, dir, dvEntries)
-      .valuesIterator.map(_.getLongCardinality).sum
-    Some(base - deleted)
+    Some(m.files.map(f => f.rows - f.doomed).sum)
   }
 
   /** CDC / INCREMENTAL READ: the net row-level changes between two
@@ -1578,12 +1553,8 @@ object TxnLake {
         // each entry's cumulative DOOMED-ROW COUNT rides the manifest
         // (sidecar positions are disjoint — DML evaluates on live rows
         // — so counts add exactly) and makes metadata COUNT(*) exact
-        // with zero sidecar reads. Only CONTINUE a complete count: an
-        // entry whose existing DVs predate doomed tracking (dv nonEmpty,
-        // doomed None) stays on the sidecar-count fallback, or the fast
-        // path would subtract only the new sidecar and over-count
-        doomed = if (f.dv.isEmpty || f.doomed.isDefined)
-          Some(f.doomed.getOrElse(0L) + perFile(f.path)) else None))
+        // with zero sidecar reads
+        doomed = f.doomed + perFile(f.path)))
     Staged(base.version, base.partCol, schemaDdl,
       withDv.flatMap(_.parts).toSet ++ newFiles.flatMap(_.parts), perFile.keySet,
       withDv ++ newFiles, base.statsCol, feedStage = feedStage,
@@ -1960,7 +1931,7 @@ object TxnLake {
         catch { case _: java.util.ConcurrentModificationException => false }
       if (committed) {
         loaded += fresh.size.toLong
-        loadedRows += staged.newFiles.flatMap(_.rows).sum
+        loadedRows += staged.newFiles.map(_.rows).sum
         return CopyStats(loaded, loadedRows,
           (listed.size - loaded).toLong, currentVersion(spark, dir))
       }
@@ -2168,9 +2139,8 @@ object TxnLake {
     // (the default), layouts are unchanged.
     val maxRecs = spark.conf.getOption("spark.graft.txnlake.targetFileBytes")
       .flatMap(_.toLongOption).filter(_ > 0).flatMap { tb =>
-        val sized = pruned.filter(f => f.rows.isDefined && f.bytes.isDefined)
-        val rows = sized.flatMap(_.rows).sum
-        val bytes = sized.flatMap(_.bytes).sum
+        val rows = pruned.map(_.rows).sum
+        val bytes = pruned.map(_.bytes).sum
         if (bytes <= 0L || rows <= 0L) None
         else Some(math.max(1L, tb * rows / bytes))
       }
@@ -2346,7 +2316,7 @@ object TxnLake {
       val schema = StructType(fields.map(f =>
         if (f.name == phys) f.copy(dataType = newType) else f))
       val rec = CommitRecord(head.version + 1, newCommitId(), head.partCol,
-        schema.toDDL, Set.empty, Nil, Set.empty, head.statsCol, full = false,
+        schema.toDDL, Set.empty, Nil, Set.empty, head.statsCol,
         bloomCol = head.bloomCol, bloomBits = head.bloomBits,
         renames = head.renames, tombstones = head.tombstones)
       if (publishRecord(fs, dir, rec)) {
@@ -2387,7 +2357,7 @@ object TxnLake {
       val renames = head.renames ++
         (if (phys != name) Map(phys -> name) else Map.empty[String, String])
       val rec = CommitRecord(head.version + 1, newCommitId(), head.partCol,
-        schema.toDDL, Set.empty, Nil, Set.empty, head.statsCol, full = false,
+        schema.toDDL, Set.empty, Nil, Set.empty, head.statsCol,
         bloomCol = head.bloomCol, bloomBits = head.bloomBits,
         renames = renames, tombstones = head.tombstones)
       if (publishRecord(fs, dir, rec)) {
@@ -2446,7 +2416,7 @@ object TxnLake {
         }
       val renames = head.renames + (phys -> to)
       val rec = CommitRecord(head.version + 1, newCommitId(), head.partCol,
-        head.schemaDdl, Set.empty, Nil, Set.empty, head.statsCol, full = false,
+        head.schemaDdl, Set.empty, Nil, Set.empty, head.statsCol,
         bloomCol = head.bloomCol, bloomBits = head.bloomBits, renames = renames,
         tombstones = head.tombstones)
       if (publishRecord(fs, dir, rec)) {
@@ -2508,7 +2478,7 @@ object TxnLake {
         }
       val schema = StructType(fields.filterNot(_.name == phys))
       val rec = CommitRecord(head.version + 1, newCommitId(), head.partCol,
-        schema.toDDL, Set.empty, Nil, Set.empty, head.statsCol, full = false,
+        schema.toDDL, Set.empty, Nil, Set.empty, head.statsCol,
         bloomCol = head.bloomCol, bloomBits = head.bloomBits,
         renames = head.renames - phys, tombstones = head.tombstones + phys)
       if (publishRecord(fs, dir, rec)) {
@@ -2572,7 +2542,7 @@ object TxnLake {
       val touched = (head.files ++ target.files).flatMap(_.parts).toSet
       val rec = CommitRecord(head.version + 1, newCommitId(), target.partCol,
         target.schemaDdl, touched, target.files, head.files.map(_.path).toSet,
-        target.statsCol, full = false, bloomCol = target.bloomCol,
+        target.statsCol, bloomCol = target.bloomCol,
         bloomBits = target.bloomBits, renames = target.renames,
         tombstones = target.tombstones)
       if (publishRecord(fs, dir, rec)) {
@@ -2590,14 +2560,13 @@ object TxnLake {
 
   /** DESCRIBE DETAIL: one metadata-only row describing the table —
     * format, location, head version, live file count, live row count
-    * (from manifest row counts minus deletion vectors, None when a
-    * legacy file lacks counts), partition column, tracked stats
-    * columns, retained version count, and total size in bytes (summed
-    * from the manifest's per-file `bytes`, recorded at staging time —
-    * Delta's per-file `size` field; NULL when any live entry predates
-    * byte tracking, never a hidden O(files) stat sweep). Everything
-    * comes from the resolved manifest + one log listing; no data file
-    * is opened. The PER-FILE view is [[detail]]. */
+    * (from manifest row counts minus deletion vectors), partition
+    * column, tracked stats columns, retained version count, and total
+    * size in bytes (summed from the manifest's per-file `bytes`,
+    * recorded at staging time — Delta's per-file `size` field, never an
+    * O(files) stat sweep). Everything comes from the resolved manifest
+    * + one log listing; no data file is opened. The PER-FILE view is
+    * [[detail]]. */
   def tableDetail(spark: SparkSession, dir: String): DataFrame = {
     val fs = fsOf(spark, dir)
     // ONE version listing feeds BOTH the head resolution and
@@ -2613,15 +2582,11 @@ object TxnLake {
     import spark.implicits._
     // stats_columns = the primary stats column plus the additive
     // setStatsColumns set — both drive zone-map pruning.
-    val sizeBytes: Option[Long] = {
-      val known = m.files.flatMap(_.bytes)
-      if (known.size == m.files.size) Some(known.sum) else None
-    }
     Seq((
       "graft-txn", dir, m.version, m.files.size.toLong,
       rowCount(spark, dir, m.version), m.partCol,
       (m.statsCol.toSeq ++ statsColumnsOf(spark, dir)).distinct,
-      vs.size.toLong, sizeBytes))
+      vs.size.toLong, m.files.map(_.bytes).sum))
       .toDF("format", "location", "version", "num_files", "num_rows",
         "partition_column", "stats_columns", "retained_versions",
         "size_bytes")
@@ -2664,7 +2629,7 @@ object TxnLake {
         StructType.fromDDL(head.schemaDdl), head.renames, "delete" -> head.files))
       val rec = CommitRecord(head.version + 1, newCommitId(), head.partCol,
         head.schemaDdl, touched, Nil, head.files.map(_.path).toSet,
-        head.statsCol, full = false, bloomCol = head.bloomCol,
+        head.statsCol, bloomCol = head.bloomCol,
         bloomBits = head.bloomBits, renames = head.renames,
         tombstones = head.tombstones)
       if (publishRecord(fs, dir, rec)) {
@@ -2924,7 +2889,7 @@ object TxnLake {
     // double-load files its rows already carry
     val rec = CommitRecord(0L, newCommitId(), m.partCol, m.schemaDdl,
       external.flatMap(_.parts).toSet, external, Set.empty, m.statsCol,
-      full = false, bloomCol = m.bloomCol, bloomBits = m.bloomBits,
+      bloomCol = m.bloomCol, bloomBits = m.bloomBits,
       renames = m.renames, tombstones = m.tombstones,
       ts = nextCommitTs(dstFs, dst, 0L),
       copied = m.copied, identity = m.identity)
@@ -2990,7 +2955,7 @@ object TxnLake {
         s"cannot partition on renamed column '$newPartCol' — partition, " +
           "stats and bloom columns must keep physical == logical names")
       val rec = CommitRecord(head.version + 1, newCommitId(), newPartCol,
-        head.schemaDdl, Set.empty, Nil, Set.empty, head.statsCol, full = false,
+        head.schemaDdl, Set.empty, Nil, Set.empty, head.statsCol,
         bloomCol = head.bloomCol, bloomBits = head.bloomBits,
         renames = head.renames, tombstones = head.tombstones)
       if (publishRecord(fs, dir, rec)) {
@@ -3481,7 +3446,7 @@ object TxnLake {
       }
       val rec = CommitRecord(head.version + 1, newCommitId(), recPartCol,
         recSchema, staged.touched, staged.newFiles, staged.prunedPaths,
-        staged.statsCol, full = false, bloomCol = staged.bloomCol,
+        staged.statsCol, bloomCol = staged.bloomCol,
         bloomBits = staged.bloomBits, renames = recRenames,
         tombstones = recTombstones, txnApp = staged.txn.map(_._1),
         txnVer = staged.txn.map(_._2), dataChange = staged.dataChange,
@@ -4049,9 +4014,8 @@ object TxnLake {
                                        spec: Option[String],
                                        statsCols: Seq[String],
                                        statsMin: Seq[Double], statsMax: Seq[Double],
-                                       base: Option[String], rows: Option[Long],
-                                       bytes: Option[Long], doomed: Option[Long],
-                                       mtime: Option[Long])
+                                       base: Option[String], rows: Long,
+                                       bytes: Long, doomed: Long, mtime: Long)
 
   private[lake] def toCkptRow(f: FileEntry): CkptFileRow = {
     val st = f.stats.toSeq.sortBy(_._1)
@@ -4168,12 +4132,21 @@ object TxnLake {
     * parquet read, driver-side only the compact decoded entries.
     * `numFiles` guards part loss — a payload dir missing a part (or
     * grown a stray file) fails typed instead of silently dropping
-    * table files. */
+    * table files. A null in a required column fails the typed decode,
+    * and that fails typed too, naming the column. */
   private def readCkptFiles(filesDir: Path, expect: Option[Long],
                             defaultSpec: String): Seq[FileEntry] = {
     val spark = SparkSession.active
-    val rows = spark.read.schema(ckptRowEncoder.schema)
+    val rows = try spark.read.schema(ckptRowEncoder.schema)
       .parquet(filesDir.toString).as[CkptFileRow](ckptRowEncoder).collect()
+    catch {
+      case e: RuntimeException with org.apache.spark.SparkThrowable
+          if e.getCondition == "NOT_NULL_ASSERT_VIOLATION" =>
+        // Spark's message walks the type path: `name: "<column>"`
+        val field = "name: \"(\\w+)\"".r.findFirstMatchIn(e.getMessage)
+          .fold("a required field")(_.group(1))
+        throw missingField(filesDir, ckptVersionOf(filesDir), field, "an entry")
+    }
     expect.filter(_ != rows.length).foreach { n =>
       throw new TxnLogCorruptedException(
         s"checkpoint payload $filesDir holds ${rows.length} entries, " +
@@ -4185,12 +4158,10 @@ object TxnLake {
   /** Survivor-side planning stats of a snapshot, computed in ONE
     * metadata-scale Spark job over the checkpoint payload (plus a
     * driver-side fold of the delta tail): everything relation
-    * construction needs — entry count, whether every entry carries its
-    * byte size (the synthesized-status gate), total bytes (plan-time
+    * construction needs — entry count, total bytes (plan-time
     * `sizeInBytes`), outstanding deletion vectors (the DV-fallback
     * gate), and partition-aware-mode eligibility. */
-  private[lake] case class PlanStats(count: Long, allBytes: Boolean,
-                                     sumBytes: Long, anyDv: Boolean,
+  private[lake] case class PlanStats(count: Long, sumBytes: Long, anyDv: Boolean,
                                      allSinglePartOnSpec: Boolean)
 
   /** The file list of a PARQUET-CHECKPOINTED snapshot as a LAZY
@@ -4220,8 +4191,7 @@ object TxnLake {
     *
     * Delta-tail semantics mirror [[fileEntriesDf]]: re-adds supersede
     * base entries (`deadBase` carries every removed AND re-added
-    * path), and a `full` record upstream falls back to an eager Seq
-    * before this wrapper is ever constructed. */
+    * path). */
   private[lake] final class LazyCkptFiles(
       private[lake] val payload: String,
       private[lake] val numFiles: Option[Long],
@@ -4299,9 +4269,10 @@ object TxnLake {
 
     /** One aggregate job answering every relation-construction
       * question (keyed by the caller's partCol — partition-mode
-      * eligibility depends on it). Doubles as the part-loss guard: the
-      * payload's total row count is checked against the header's
-      * `numFiles` exactly like the eager read. */
+      * eligibility depends on it). Doubles as the payload's shape
+      * guard: the total row count is checked against the header's
+      * `numFiles` exactly like the eager read, and a null in a required
+      * column fails typed, naming the column. */
     private[lake] def planAgg(spark: SparkSession, partCol: String): PlanStats =
       aggCache.computeIfAbsent(partCol, pc => computeAgg(spark, pc))
 
@@ -4315,30 +4286,33 @@ object TxnLake {
       val live =
         if (dead.isEmpty) Fn.lit(true)
         else !Fn.udf((p: String) => dead.contains(p)).apply(Fn.col("path"))
-      val row = full.select(
+      val required = Seq("rows", "bytes", "mtime", "doomed")
+      val row = full.select(Seq(
         Fn.count(Fn.lit(1)).as("total"),
         Fn.count(Fn.when(live, 1)).as("n"),
-        Fn.min(Fn.when(live, Fn.col("bytes").isNotNull.cast("int"))).as("ab"),
         Fn.sum(Fn.when(live, Fn.col("bytes"))).as("sb"),
         Fn.max(Fn.when(live, (Fn.size(Fn.col("dv")) > 0).cast("int"))).as("dv"),
         Fn.min(Fn.when(live, (Fn.size(Fn.col("parts")) === 1 &&
           Fn.coalesce(Fn.col("spec"), Fn.lit(spec)) === Fn.lit(partCol))
-          .cast("int"))).as("p1")
+          .cast("int"))).as("p1")) ++
+        required.map(c => Fn.count(Fn.when(Fn.col(c).isNull, 1)).as(s"null_$c")): _*
       ).collect()(0)
       numFiles.filter(_ != row.getLong(0)).foreach { want =>
         throw new TxnLogCorruptedException(
           s"checkpoint payload $payload holds ${row.getLong(0)} entries, " +
             s"header says $want — parquet part lost or foreign file added")
       }
+      required.find(c => row.getAs[Long](s"null_$c") > 0L).foreach { c =>
+        val p = new Path(payload)
+        throw missingField(p, ckptVersionOf(p), c, "an entry")
+      }
       PlanStats(
         count = row.getLong(1) + tailAdds.size,
-        allBytes = (row.isNullAt(2) || row.getInt(2) == 1) &&
-          tailAdds.forall(_.bytes.isDefined),
-        sumBytes = (if (row.isNullAt(3)) 0L else row.getLong(3)) +
-          tailAdds.flatMap(_.bytes).sum,
-        anyDv = (!row.isNullAt(4) && row.getInt(4) == 1) ||
+        sumBytes = (if (row.isNullAt(2)) 0L else row.getLong(2)) +
+          tailAdds.map(_.bytes).sum,
+        anyDv = (!row.isNullAt(3) && row.getInt(3) == 1) ||
           tailAdds.exists(_.dv.nonEmpty),
-        allSinglePartOnSpec = (row.isNullAt(5) || row.getInt(5) == 1) &&
+        allSinglePartOnSpec = (row.isNullAt(4) || row.getInt(4) == 1) &&
           tailAdds.forall(f => f.parts.size == 1 && f.onSpec(partCol)))
     }
   }
@@ -4370,9 +4344,9 @@ object TxnLake {
     val v = version.getOrElse(math.max(versions.maxOption.getOrElse(-1L),
       ckpts.maxOption.getOrElse(-1L)))
     val base = ckpts.filter(_ <= v).maxOption
-    // the lazy path needs a parquet-backed base whose tail has no
-    // full-manifest barrier; anything else falls back to the resolved
-    // (driver-side) manifest served as a local Dataset
+    // the lazy path needs a parquet-backed base; anything else falls
+    // back to the resolved (driver-side) manifest served as a local
+    // Dataset
     // ONE verified header read serves both the filesRef dispatch and
     // the numFiles guard below (folded per VERDICT r18 wrong #4 — this
     // is on its way to becoming the planning path)
@@ -4397,10 +4371,6 @@ object TxnLake {
         }
         val tail = ((c + 1) to v)
           .map(i => readRecord(fs, manifestPath(dir, i), recSt.get(i)))
-        if (tail.exists(_.full))
-          return spark.createDataset(
-            resolveFrom(fs, dir, v, versions, ckpts, recSt, ckptSt)
-              .files.map(toCkptRow))(ckptRowEncoder).toDF()
         val removed = tail.flatMap(_.remove).toSet ++
           tail.flatMap(_.add.map(_.path)) // re-adds supersede base entries
         val adds = tail.foldLeft(Seq.empty[FileEntry]) { (acc, r) =>
@@ -4496,11 +4466,9 @@ object TxnLake {
   /** Forward-apply one log record to a snapshot's file list. An
     * unmaterialized lazy base folds in the lazy domain (dead set +
     * adds) so delta replay over a parquet checkpoint never decodes the
-    * payload on the driver; a `full` record replaces the list outright
-    * either way. */
+    * payload on the driver. */
   private def applyRecord(prev: Seq[FileEntry], r: CommitRecord): Seq[FileEntry] =
-    if (r.full) r.add
-    else prev match {
+    prev match {
       case l: LazyCkptFiles if !l.isMaterialized => l.applied(r)
       case _ => prev.filterNot(f => r.remove.contains(f.path)) ++ r.add
     }
@@ -4603,20 +4571,14 @@ object TxnLake {
     }
 
   /** Snapshot scan over an explicit entry list, planned through
-    * [[ExplicitEntriesIndex]]: file statuses come from manifest bytes
-    * (zero fs calls — the `spark.read.parquet(paths)` form listed every
-    * path on the driver per call, ~2 ms/file, on EVERY internal
-    * snapshot read of every commit op). Filter/column pushdown is
-    * unchanged: the relation is stock parquet behind a FileIndex.
-    * `spark.graft.txnlake.manifestStatuses=false` forces the listing
-    * path — the A/B seam, and the escape hatch if a manifest's
-    * recorded size ever disagreed with the bytes. */
+    * [[ExplicitEntriesIndex]]: file statuses come from each entry's
+    * recorded `bytes` and `mtime` (zero fs calls — a
+    * `spark.read.parquet(paths)` form would list every path on the
+    * driver per call, ~2 ms/file, on EVERY internal snapshot read of
+    * every commit op). Filter/column pushdown is unchanged: the
+    * relation is stock parquet behind a FileIndex. */
   private def scanEntries(spark: SparkSession, dir: String, schema: StructType,
                           entries: Seq[FileEntry]): DataFrame = {
-    val listingOff = spark.conf
-      .getOption("spark.graft.txnlake.manifestStatuses").exists(!_.toBoolean)
-    if (listingOff || entries.exists(_.bytes.isEmpty))
-      return spark.read.schema(schema).parquet(entries.map(_.locate(dir)): _*)
     val index = new ExplicitEntriesIndex(spark, new Path(dir), entries)
     // deep-nullable = DataFrameReader's own discipline for user schemas
     // (its private StructType.asNullable): an evolved column may be
@@ -4840,13 +4802,12 @@ object TxnLake {
         spec = Some(partCol), stats = stats,
         // per-file counts in the manifest make COUNT(*) a log-only read
         // ([[rowCount]]) and give OPTIMIZE/bin-packing real sizes
-        rows = Some(f.rows),
+        rows = f.rows,
         // physical size + mtime from the staging glob; manifest-recorded
         // bytes make DESCRIBE DETAIL / plan-time sizing log-only (Delta's
         // per-file `size`/`modificationTime` fields), and mtime keeps
-        // `_metadata.file_modification_time` identical between the
-        // synthesized-status fast path and a real listing
-        bytes = Some(st.getLen), mtime = Some(st.getModificationTime))
+        // `_metadata.file_modification_time` equal to the file's own
+        bytes = st.getLen, mtime = st.getModificationTime, doomed = 0L)
     }.toSeq.sortBy(_.path)
   }
 
@@ -4976,10 +4937,10 @@ object TxnLake {
     files.foreach { f =>
       val fn = fsArr.addObject()
       fn.put("path", f.path)
-      f.rows.foreach { r => fn.put("rows", r); () }
-      f.bytes.foreach { b => fn.put("bytes", b); () }
-      f.mtime.foreach { t => fn.put("mtime", t); () }
-      f.doomed.foreach { d => fn.put("doomed", d); () }
+      fn.put("rows", f.rows)
+      fn.put("bytes", f.bytes)
+      fn.put("mtime", f.mtime)
+      if (f.dv.nonEmpty) fn.put("doomed", f.doomed)
       f.base.foreach(fn.put("base", _))
       f.zmin.foreach(fn.put("zmin", _))
       f.zmax.foreach(fn.put("zmax", _))
@@ -5005,7 +4966,7 @@ object TxnLake {
     }
   }
 
-  /** Full snapshot (checkpoint / legacy manifest) bytes: `files`. */
+  /** Full snapshot (checkpoint) bytes: `files`. */
   private def writeManifestBytes(m: Manifest): Array[Byte] = {
     val root = headerNode(m.version, m.commitId, m.partCol, m.schemaDdl,
       m.touched, m.statsCol, m.bloomCol, m.bloomBits, m.renames, m.tombstones)
@@ -5029,10 +4990,9 @@ object TxnLake {
   private def writeRecordBytes(r: CommitRecord): Array[Byte] = {
     val root = headerNode(r.version, r.commitId, r.partCol, r.schemaDdl,
       r.touched, r.statsCol, r.bloomCol, r.bloomBits, r.renames, r.tombstones)
-    if (r.ts > 0) root.put("ts", r.ts)
-    // serialized only when FALSE — absent means true, so every legacy
-    // record (and every record written by older code) reads as a data
-    // change, the conservative default for streaming consumers
+    root.put("ts", r.ts)
+    // serialized only when FALSE — absent means true, the conservative
+    // default for streaming consumers
     if (!r.dataChange) root.put("dataChange", false)
     r.txnApp.foreach(root.put("txnApp", _))
     r.txnVer.foreach { v => root.put("txnVer", v); () }
@@ -5050,19 +5010,37 @@ object TxnLake {
     mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root)
   }
 
+  /** The log's shape is fixed: a field current code always writes is
+    * required, and a log file without it fails typed, naming the file,
+    * the version and the field — the reader never guesses. */
+  private def missingField(file: Path, version: Long, field: String,
+                           where: String): TxnLogCorruptedException =
+    new TxnLogCorruptedException(s"$file (version $version): $where lacks the " +
+      s"required field `$field` — not a log shape this reader accepts")
+
+  /** The version a parquet checkpoint payload (`vNNNNNNNN.ckpt.files`) serves. */
+  private def ckptVersionOf(payload: Path): Long =
+    payload.getName.substring(1, 9).toLong
+
+  /** File entries of a record (`add`) or JSON checkpoint (`files`) at
+    * `src`. `rows`, `bytes` and `mtime` are required on every entry,
+    * `doomed` on every entry with a deletion vector. */
   private def parseFiles(node: com.fasterxml.jackson.databind.JsonNode,
-                         defaultSpec: String): Seq[FileEntry] = {
+                         defaultSpec: String, src: Path, version: Long): Seq[FileEntry] = {
     import scala.jdk.CollectionConverters._
     def optStr(n: com.fasterxml.jackson.databind.JsonNode): Option[String] =
       if (n.isNull) None else Some(n.asText())
     node.elements().asScala.map { fn =>
-      FileEntry(fn.get("path").asText(),
+      val path = fn.get("path").asText()
+      def req(field: String): Long = Option(fn.get(field))
+        .getOrElse(throw missingField(src, version, field, s"entry $path")).asLong()
+      val dv = Option(fn.get("dv")).toSeq.flatMap(_.elements().asScala.map(_.asText()))
+      FileEntry(path,
         fn.get("parts").elements().asScala.map(optStr).toSet,
         Option(fn.get("zmin")).map(_.asDouble()),
         Option(fn.get("zmax")).map(_.asDouble()),
         bloom = Option(fn.get("bloom")).map(_.asText()),
-        dv = Option(fn.get("dv")).toSeq
-          .flatMap(_.elements().asScala.map(_.asText())),
+        dv = dv,
         spec = Some(Option(fn.get("spec")).map(_.asText()).getOrElse(defaultSpec)),
         stats = Option(fn.get("stats")).fold(Map.empty[String, (Double, Double)]) { st =>
           st.properties().asScala.map { e =>
@@ -5070,10 +5048,8 @@ object TxnLake {
           }.toMap
         },
         base = Option(fn.get("base")).map(_.asText()),
-        rows = Option(fn.get("rows")).map(_.asLong()),
-        bytes = Option(fn.get("bytes")).map(_.asLong()),
-        doomed = Option(fn.get("doomed")).map(_.asLong()),
-        mtime = Option(fn.get("mtime")).map(_.asLong()))
+        rows = req("rows"), bytes = req("bytes"), mtime = req("mtime"),
+        doomed = if (dv.isEmpty) 0L else req("doomed"))
     }.toSeq
   }
 
@@ -5284,7 +5260,8 @@ object TxnLake {
     }
   }
 
-  /** Full-snapshot file (checkpoint or legacy manifest). */
+  /** Full-snapshot file (a JSON checkpoint, or a parquet checkpoint's
+    * header). */
   private[lake] def readManifest(fs: FileSystem, p: Path,
                                  known: Option[FileStatus] = None): Manifest =
     cached(checkpointCache, fs, p, known)(readManifestUncached(fs, p))
@@ -5310,7 +5287,8 @@ object TxnLake {
           new Path(p.getParent, ref.asText()).toString,
           Option(root.get("numFiles")).map(_.asLong()),
           root.get("partCol").asText(), Set.empty, Nil)
-        case None => parseFiles(root.get("files"), root.get("partCol").asText())
+        case None => parseFiles(root.get("files"), root.get("partCol").asText(),
+          p, root.get("version").asLong())
       },
       Option(root.get("statsCol")).map(_.asText()),
       bloomCol = Option(root.get("bloomCol")).map(_.asText()),
@@ -5327,11 +5305,10 @@ object TxnLake {
       })
   }
 
-  /** Per-version log record; a legacy full manifest parses as a
-    * `full = true` record (replay barrier). Served from the
-    * validated-record cache when the file's (mtime, length) is
-    * unchanged; `known` lets resolution paths that already hold the
-    * log listing's FileStatus skip the per-record probe. */
+  /** Per-version log record. Served from the validated-record cache
+    * when the file's (mtime, length) is unchanged; `known` lets
+    * resolution paths that already hold the log listing's FileStatus
+    * skip the per-record probe. */
   private[lake] def readRecord(fs: FileSystem, p: Path,
                                known: Option[FileStatus] = None): CommitRecord =
     cached(recordCache, fs, p, known)(readRecordUncached(fs, p))
@@ -5342,23 +5319,24 @@ object TxnLake {
     import scala.jdk.CollectionConverters._
     def optStr(n: com.fasterxml.jackson.databind.JsonNode): Option[String] =
       if (n.isNull) None else Some(n.asText())
-    val full = root.has("files")
+    val version = root.get("version").asLong()
+    // a full `files` list is a checkpoint's shape, never a record's
+    if (root.has("files")) throw missingField(p, version, "add",
+      "a record holding a full `files` manifest")
     CommitRecord(
-      root.get("version").asLong(),
+      version,
       root.get("commitId").asText(),
       root.get("partCol").asText(),
       root.get("schemaDdl").asText(),
       root.get("touched").elements().asScala.map(optStr).toSet,
-      parseFiles(if (full) root.get("files") else root.get("add"),
-        root.get("partCol").asText()),
-      if (full) Set.empty
-      else root.get("remove").elements().asScala.map(_.asText()).toSet,
+      parseFiles(root.get("add"), root.get("partCol").asText(), p, version),
+      root.get("remove").elements().asScala.map(_.asText()).toSet,
       Option(root.get("statsCol")).map(_.asText()),
-      full,
       bloomCol = Option(root.get("bloomCol")).map(_.asText()),
       bloomBits = Option(root.get("bloomBits")).map(_.asInt()).getOrElse(DefaultBloomBits),
       renames = parseRenames(root), tombstones = parseTombstones(root),
-      ts = Option(root.get("ts")).map(_.asLong()).getOrElse(0L),
+      ts = Option(root.get("ts"))
+        .getOrElse(throw missingField(p, version, "ts", "the record")).asLong(),
       txnApp = Option(root.get("txnApp")).map(_.asText()),
       txnVer = Option(root.get("txnVer")).map(_.asLong()),
       dataChange = Option(root.get("dataChange")).forall(_.asBoolean()),
@@ -5375,8 +5353,7 @@ object TxnLake {
     * persisted INSIDE the log record, so timestamp time travel survives
     * table copies/migrations (distcp, rsync, backup restore) that
     * rewrite file mtimes, and near-simultaneous commits can never
-    * reorder. Pre-ICT records (ts absent) fall back to manifest mtime
-    * at resolution time. */
+    * reorder. */
   private def nextCommitTs(fs: FileSystem, dir: String, version: Long): Long = {
     val prev =
       if (version <= 0) 0L
@@ -5385,13 +5362,10 @@ object TxnLake {
     math.max(System.currentTimeMillis(), prev + 1)
   }
 
-  /** The instant `version` committed: the record's in-commit timestamp
-    * when present, else the manifest file's mtime (legacy records). */
-  private def commitTimeOf(fs: FileSystem, dir: String, version: Long): Long = {
-    val p = manifestPath(dir, version)
-    val ict = try readRecord(fs, p).ts catch { case _: Exception => 0L }
-    if (ict > 0) ict else fs.getFileStatus(p).getModificationTime
-  }
+  /** The instant `version` committed: the record's in-commit timestamp.
+    * A damaged record fails typed here like on every other read. */
+  private def commitTimeOf(fs: FileSystem, dir: String, version: Long): Long =
+    readRecord(fs, manifestPath(dir, version)).ts
 
   /** Publish a commit record at its version slot, stamping the
     * in-commit timestamp at publish time (the only instant that IS the

@@ -304,23 +304,9 @@ private[lake] class TxnDvRelation(spark: SparkSession,
     * and what Delta surfaces for DV tables: deletion vectors only
     * remove rows, so the sum is a safe over-approximation (a table can
     * only look BIGGER than it is — broadcasts stay conservative).
-    * LOG-ONLY when every live entry carries its staged byte size (the
-    * manifest `bytes` field, recorded at commit time) — zero fs calls;
-    * legacy manifests fall back to one bounded listing per commit dir,
-    * lazily, only when the planner asks. */
-  override lazy val sizeInBytes: Long = {
-    val known = manifest.files.flatMap(_.bytes)
-    if (known.size == manifest.files.size) known.sum
-    else {
-      // sum ONLY the snapshot's own manifest entries — statusesFor
-      // already filters its commit-dir listings to manifest paths, and
-      // keying the sum by entry makes that contract self-evident: a
-      // half-pruned file awaiting vacuum can never inflate the estimate
-      val statuses = TxnFileIndex.statusesFor(
-        spark, new org.apache.hadoop.fs.Path(dir), manifest)
-      manifest.files.flatMap(f => statuses.get(f.path)).map(_.getLen).sum
-    }
-  }
+    * LOG-ONLY: every entry carries its staged byte size (the manifest
+    * `bytes` field, recorded at commit time) — zero fs calls. */
+  override lazy val sizeInBytes: Long = manifest.files.map(_.bytes).sum
 
   /** Filter value → the double unit manifest bounds use. Pushed source
     * filters compare an attribute directly (casts block pushdown), so
@@ -568,80 +554,32 @@ private[graft] object TxnFileIndex {
     else Some(tests.map(t => Fn.coalesce(t, Fn.lit(true))).reduce(_ && _))
   }
 
-  /** FileStatus for every manifest entry, keyed by the entry's relative
-    * identity. One recursive listing per COMMIT DIRECTORY, not one RPC
-    * per file: commit dirs are few (one per commit) and each holds its
-    * files flat under `__txn_pk=<token>/` subdirs. Zero-copy cloned
-    * entries list under their SOURCE root (`FileEntry.base`); keys stay
-    * the relative identity, which UUID commit dirs keep collision-free
-    * across roots. Shared by the fast-path [[TxnFileIndex]] and the
-    * DV-fallback [[TxnDvRelation]] (its plan-time `sizeInBytes`). */
-  def statusesFor(spark: SparkSession, root: Path,
-                  manifest: TxnLake.Manifest): Map[String, FileStatus] =
-    statusesFor(spark, root, manifest.files)
-
-  /** The Seq[FileEntry] form, shared with [[TxnLake.readEntries]]'s
-    * manifest-backed relation: entries that all carry their staged byte
-    * size resolve with ZERO fs calls. */
+  /** FileStatus for every entry, keyed by the entry's relative
+    * identity, synthesized from the entry alone — ZERO fs calls.
+    * Committed files are immutable and every entry records the byte
+    * size and mtime captured from the staging glob at commit time
+    * (Delta's AddFile `size`/`modificationTime`), which is all the scan
+    * planner needs: FilePartition splitting and the parquet footer read
+    * use the path and exact length, and `_metadata` columns the path
+    * and mtime. A per-commit-dir listing costs ~11 ms on Hadoop's
+    * LocalFileSystem (1.3 s to plan a 120-commit snapshot) and grows
+    * with the table at 100 TB. Zero-copy cloned entries resolve under
+    * their SOURCE root (`FileEntry.base`); keys stay the relative
+    * identity, which UUID commit dirs keep collision-free across
+    * roots. */
   def statusesFor(spark: SparkSession, root: Path,
                   files: Seq[TxnLake.FileEntry]): Map[String, FileStatus] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    // `spark.graft.txnlake.manifestStatuses=false` forces the listing
-    // path on EVERY consumer (format reads via TxnFileIndex included,
-    // not just scanEntries) — one A/B seam / escape hatch for the whole
-    // synthesized-status discipline
-    val listingOff = spark.conf
-      .getOption("spark.graft.txnlake.manifestStatuses").exists(!_.toBoolean)
-    // LOG-ONLY fast path: every entry records the byte size captured
-    // from the staging glob at commit time, and committed files are
-    // immutable — so the statuses the scan planner needs (path + exact
-    // length; FilePartition splitting and the parquet footer read use
-    // nothing else) synthesize straight from the manifest, zero fs
-    // calls. Measured: planning a 120-commit snapshot spent 1.3 s in
-    // per-commit-dir listings (~11 ms each on Hadoop's LocalFileSystem)
-    // — the dominant cost of every graft-txn read — and at 100 TB this
-    // is the difference between O(commits) driver listings and none.
-    // Any entry without bytes (legacy manifest) falls back to listing.
-    // mtime comes from the manifest too (captured from the staging
-    // glob at commit time, like Delta's AddFile.modificationTime), so
-    // `_metadata.file_modification_time` agrees with the listing path;
-    // pre-mtime manifests synthesize 0 — immutable files make it
-    // meaningless and nothing on the read path consumes it.
-    if (!listingOff && files.nonEmpty && files.forall(_.bytes.isDefined)) {
-      // scheme-qualify like a real listing would (file:/... on local
-      // fs), so `_metadata.file_path` is byte-identical between the
-      // synthesized and listing paths; one FileSystem per distinct base
-      // (Hadoop caches them — URI work only, no RPC)
-      val fsByBase = files.map(_.base).distinct.map { b =>
-        val r = b.map(new Path(_)).getOrElse(root)
-        b -> r.getFileSystem(conf)
-      }.toMap
-      return files.map { f =>
-        val p = fsByBase(f.base).makeQualified(new Path(f.locate(root.toString)))
-        f.path -> new FileStatus(f.bytes.get, false, 1, 134217728L,
-          f.mtime.getOrElse(0L), p)
-      }.toMap
-    }
-    files.groupBy(_.base).toSeq.flatMap { case (b, group) =>
-      val groupRoot = b.map(new Path(_)).getOrElse(root)
-      val fs = groupRoot.getFileSystem(conf)
-      val wanted = group.map(_.path).toSet
-      val commitDirs = wanted.map(_.split("/").take(2).mkString("/"))
-      commitDirs.toSeq.sorted.flatMap { c =>
-        val d = new Path(groupRoot, c)
-        if (!fs.exists(d)) Seq.empty
-        else {
-          val it = fs.listFiles(d, true)
-          val buf = Seq.newBuilder[(String, FileStatus)]
-          while (it.hasNext) {
-            val st = it.next()
-            val p = st.getPath.toUri.getPath
-            val rel = TxnLake.dataRel(p)
-            if (wanted.contains(rel)) buf += rel -> st
-          }
-          buf.result()
-        }
-      }
+    // scheme-qualify like a real listing would (file:/... on local fs),
+    // so `_metadata.file_path` matches the file system's own form; one
+    // FileSystem per distinct base (Hadoop caches them — URI work only,
+    // no RPC)
+    val fsByBase = files.map(_.base).distinct.map { b =>
+      b -> b.map(new Path(_)).getOrElse(root).getFileSystem(conf)
+    }.toMap
+    files.map { f =>
+      val p = fsByBase(f.base).makeQualified(new Path(f.locate(root.toString)))
+      f.path -> new FileStatus(f.bytes, false, 1, 134217728L, f.mtime, p)
     }.toMap
   }
 }
@@ -651,26 +589,18 @@ private[graft] object TxnFileIndex {
   * pruning logic of its own (Catalyst's FileSourceStrategy still
   * pushes filters/column pruning into the parquet scan); its whole
   * point is that [[TxnFileIndex.statusesFor]] resolves the statuses
-  * from manifest-recorded byte sizes with zero fs calls, where the
-  * previous `spark.read.parquet(paths: _*)` form paid one driver
-  * listing per file per snapshot read (~2 ms each — several hundred
-  * ms per commit op on a 100-file table, unbounded at 100 TB). */
+  * from manifest-recorded byte sizes with zero fs calls, where a
+  * `spark.read.parquet(paths: _*)` form pays one driver listing per
+  * file per snapshot read (~2 ms each — several hundred ms per commit
+  * op on a 100-file table, unbounded at 100 TB). */
 private[lake] class ExplicitEntriesIndex(spark: SparkSession, root: Path,
                                          entries: Seq[TxnLake.FileEntry])
     extends FileIndex {
-  private val statusByRel: Map[String, FileStatus] =
-    TxnFileIndex.statusesFor(spark, root, entries)
-  // entry order preserved: deterministic scan order (same as the
-  // explicit-path read's path order)
-  private val ordered: Array[FileStatus] =
-    entries.flatMap(e => statusByRel.get(e.path)).toArray
-  // every entry MUST resolve a status: scanEntries only routes here
-  // when all entries carry bytes (statusesFor's zero-fs fast path), but
-  // if the two guards ever diverge a silent drop here would EXCLUDE
-  // table files from the scan — wrong results instead of a loud error
-  require(ordered.length == entries.size,
-    s"ExplicitEntriesIndex: ${entries.size - ordered.length} of " +
-      s"${entries.size} entries resolved no FileStatus under $root")
+  // entry order preserved: deterministic scan order
+  private val ordered: Array[FileStatus] = {
+    val byRel = TxnFileIndex.statusesFor(spark, root, entries)
+    entries.map(e => byRel(e.path)).toArray
+  }
   override def rootPaths: Seq[Path] = Seq(root)
   override def partitionSchema: StructType = new StructType()
   override def listFiles(partitionFilters: Seq[Expression],
@@ -695,32 +625,22 @@ private[graft] class TxnFileIndex(spark: SparkSession,
     * pruning predicate into an executor-parallel filter over the
     * checkpoint payload and collects ONLY surviving entries, and the
     * construction-time questions (partition-aware eligibility,
-    * `sizeInBytes`) come from ONE aggregate job. Gated on every
-    * surviving entry carrying its byte size (statuses must synthesize
-    * — a distributed prune that then paid per-file listings would be
-    * slower, not faster) and on the `manifestStatuses` escape hatch
-    * staying enabled; either failing falls back to the eager path,
-    * which materializes exactly like before. */
-  private val lazyStats: Option[(TxnLake.LazyCkptFiles, TxnLake.PlanStats)] = {
-    val listingOff = spark.conf
-      .getOption("spark.graft.txnlake.manifestStatuses").exists(!_.toBoolean)
+    * `sizeInBytes`) come from ONE aggregate job, which also refuses a
+    * payload with a null in a required column. Statuses of the
+    * survivors synthesize from their entries like everywhere else. An
+    * already-materialized list takes the eager path. */
+  private val lazyStats: Option[(TxnLake.LazyCkptFiles, TxnLake.PlanStats)] =
     manifest.files match {
-      case l: TxnLake.LazyCkptFiles if !listingOff && !l.isMaterialized =>
-        val a = l.planAgg(spark, manifest.partCol)
-        if (a.allBytes) Some((l, a)) else None
+      case l: TxnLake.LazyCkptFiles if !l.isMaterialized =>
+        Some((l, l.planAgg(spark, manifest.partCol)))
       case _ => None
     }
-  }
 
-  // one listStatus per commit directory, not one RPC per file: commit
-  // dirs are few (one per commit) and each holds its files flat under
-  // __txn_pk=<token>/ subdirs — two bounded listings. Zero-copy cloned
-  // entries list under their SOURCE root (`FileEntry.base`); keys stay
-  // the relative identity, which UUID commit dirs keep collision-free
-  // across roots. Lazy planning mode never touches this (statuses
-  // synthesize per pruned survivor set instead).
+  // the eager path's statuses, synthesized from the manifest (zero fs
+  // calls); lazy planning mode never touches this (statuses synthesize
+  // per pruned survivor set instead)
   private lazy val statusByRel: Map[String, FileStatus] =
-    TxnFileIndex.statusesFor(spark, root, manifest)
+    TxnFileIndex.statusesFor(spark, root, manifest.files)
 
   override def rootPaths: Seq[Path] = Seq(root)
 
@@ -809,7 +729,6 @@ private[graft] class TxnFileIndex(spark: SparkSession,
           val pre = TxnFileIndex.planPrefilter(pc, sc, rn, cr, ps, l.defaultSpec)
           val survivors = l.prunedEntries(spark,
             f => TxnFileIndex.entrySurvives(f, pc, sc, rn, cr, ps, bs), pre)
-          // survivors all carry bytes (lazy-mode gate) → zero fs calls
           val st = TxnFileIndex.statusesFor(spark, root, survivors)
           (survivors, st.get)
         case None =>

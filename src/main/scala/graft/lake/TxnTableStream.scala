@@ -69,19 +69,11 @@ private[graft] class TxnTableStream(spark: SparkSession, dir: String,
   private val maxFilesPerTrigger: Int =
     opts.get("maxfilespertrigger").map(_.toInt).filter(_ > 0).getOrElse(Int.MaxValue)
   /** Delta's soft byte cap: a batch stops ADDING files once its
-    * accumulated manifest bytes pass the cap, but always takes at
-    * least one file (a single oversized file must still flow). Files
-    * without recorded bytes (legacy entries) count as one
-    * maxPartitionBytes so unknown sizes throttle conservatively. */
+    * accumulated manifest bytes (each entry's recorded `bytes`) pass
+    * the cap, but always takes at least one file (a single oversized
+    * file must still flow). */
   private val maxBytesPerTrigger: Long =
     opts.get("maxbytespertrigger").map(_.toLong).filter(_ > 0).getOrElse(Long.MaxValue)
-  private val unknownFileBytes: Long =
-    spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-      .flatMap(v => scala.util.Try(
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)).toOption)
-      .getOrElse(128L * 1024 * 1024)
-  private def fileBytes(f: TxnLake.FileEntry): Long =
-    f.bytes.getOrElse(unknownFileBytes)
   private val ignoreDeletes = opts.get("ignoredeletes").exists(_.toBoolean)
   private val ignoreChanges = opts.get("ignorechanges").exists(_.toBoolean)
   private val skipChangeCommits = opts.get("skipchangecommits").exists(_.toBoolean)
@@ -131,11 +123,7 @@ private[graft] class TxnTableStream(spark: SparkSession, dir: String,
          r.renames != sourceManifest.renames ||
          r.tombstones != sourceManifest.tombstones))
       refuse("schema change", "restart the stream to adopt the new schema")
-    if (r.full) {
-      // a legacy full-manifest barrier cannot be diffed into adds
-      if (skipChangeCommits) Seq.empty
-      else refuse("full-manifest barrier", "set skipChangeCommits=true")
-    } else if (!r.dataChange) Seq.empty // OPTIMIZE/ZORDER/REORG: rows unchanged
+    if (!r.dataChange) Seq.empty // OPTIMIZE/ZORDER/REORG: rows unchanged
     else if (r.remove.isEmpty) r.add.sortBy(_.path)
     else if (r.add.isEmpty) {
       if (ignoreDeletes || skipChangeCommits) Seq.empty
@@ -167,7 +155,7 @@ private[graft] class TxnTableStream(spark: SparkSession, dir: String,
       val files = addsOf(v)
       var i = (if (v == lastV) lastI else -1L) + 1L
       while (i < files.size && fileBudget > 0 && (byteBudget > 0 || !moved)) {
-        byteBudget -= fileBytes(files(i.toInt))
+        byteBudget -= files(i.toInt).bytes
         fileBudget -= 1
         posV = v
         posI = i
@@ -187,7 +175,7 @@ private[graft] class TxnTableStream(spark: SparkSession, dir: String,
     var i = fromIdx + 1L
     var taken = 0L
     while (i < files.size && fileBudget > 0 && (byteBudget > 0 || taken == 0L)) {
-      byteBudget -= fileBytes(files(i.toInt))
+      byteBudget -= files(i.toInt).bytes
       fileBudget -= 1
       taken += 1
       i += 1

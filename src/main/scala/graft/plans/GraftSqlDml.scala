@@ -908,16 +908,15 @@ case class GraftShowPropertiesCommand(dir: String) extends GraftDmlCommand {
 
 /** `SHOW PARTITIONS <graft table>` — the manifest's live partition
   * values with file and row counts ([[TxnLake.partitions]]):
-  * metadata-only, one log resolve, zero data files. `n_rows` is
-  * exact-or-NULL (a DV'd or legacy row-less file nulls its
-  * partition's count rather than over-reporting). Non-graft targets
-  * keep stock `SHOW PARTITIONS` semantics. */
+  * metadata-only, one log resolve, zero data files. `n_rows` is exact
+  * (each entry's rows less its deletion vectors' doomed rows).
+  * Non-graft targets keep stock `SHOW PARTITIONS` semantics. */
 case class GraftShowPartitionsCommand(dir: String) extends GraftDmlCommand {
   import org.apache.spark.sql.types.StringType
   override val output: Seq[Attribute] = Seq(
     AttributeReference("partition", StringType, nullable = false)(),
     AttributeReference("n_files", LongType, nullable = false)(),
-    AttributeReference("n_rows", LongType, nullable = true)())
+    AttributeReference("n_rows", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] =
     TxnLake.partitions(spark, dir).collect().toSeq
 }

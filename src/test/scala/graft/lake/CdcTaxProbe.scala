@@ -17,6 +17,12 @@ import org.apache.spark.sql.functions._
   *                   pass, post-images copied)
   *   - the delta   — the feed's cost per commit
   *
+  * The two sides run INTERLEAVED, one commit at a time, and the side
+  * that goes first flips every round, so JIT warm-up and cache state
+  * fall on both alike (a whole no-feed sequence before the feed one
+  * makes the feed side the warmer one, and its delta reads low or
+  * negative).
+  *
   * Run: sbt "Test/runMain graft.lake.CdcTaxProbe [nCommits]"
   */
 object CdcTaxProbe {
@@ -34,41 +40,39 @@ object CdcTaxProbe {
     def seed = (0 until 400).map(i => (i.toLong, s"p${i % 4}", i * 1.0))
       .toDF("id", "part", "v")
 
-    def run(changeFeed: Boolean): (Double, Double, Double) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_cdctax")
-        .resolve("t").toString
-      TxnLake.create(spark, dir, seed, "part", changeFeed = changeFeed)
-      var updMs = 0.0
-      (0 until n).foreach { k =>
-        val t0 = System.nanoTime()
-        TxnLake.updateWhere(spark, dir, col("id") % 7 === (k % 7).toLong,
-          Map("v" -> (col("v") + 1.0)))
-        updMs += ms(t0)
+    val kinds: Seq[(String, (String, Int) => Unit)] = Seq(
+      "update" -> ((dir, k) => TxnLake.updateWhere(spark, dir,
+        col("id") % 7 === (k % 7).toLong, Map("v" -> (col("v") + 1.0)))),
+      "delete" -> ((dir, k) => TxnLake.deleteWhere(spark, dir, col("id") === (k * 3).toLong)),
+      "merge " -> ((dir, k) => TxnLake.upsert(spark, dir, (0 until 40).map(i =>
+        (k * 37L + i * 11L, s"p${i % 4}", -1.0 * k)).toDF("id", "part", "v"), "id")))
+
+    /** ms/commit per kind, (no feed, feed): one table per side, every
+      * kind's commits interleaved between the two. */
+    def run(): Seq[(String, Double, Double)] = {
+      val dirs = Seq(false, true).map { feed =>
+        val dir = java.nio.file.Files.createTempDirectory("graft_cdctax")
+          .resolve("t").toString
+        TxnLake.create(spark, dir, seed, "part", changeFeed = feed)
+        feed -> dir
+      }.toMap
+      kinds.map { case (name, op) =>
+        val total = scala.collection.mutable.Map(false -> 0.0, true -> 0.0)
+        (0 until n).foreach { k =>
+          (if (k % 2 == 0) Seq(false, true) else Seq(true, false)).foreach { feed =>
+            val t0 = System.nanoTime()
+            op(dirs(feed), k)
+            total(feed) += ms(t0)
+          }
+        }
+        (name, total(false) / n, total(true) / n)
       }
-      var delMs = 0.0
-      (0 until n).foreach { k =>
-        val t0 = System.nanoTime()
-        TxnLake.deleteWhere(spark, dir, col("id") === (k * 3).toLong)
-        delMs += ms(t0)
-      }
-      var mrgMs = 0.0
-      (0 until n).foreach { k =>
-        val src = (0 until 40).map(i =>
-          (k * 37L + i * 11L, s"p${i % 4}", -1.0 * k)).toDF("id", "part", "v")
-        val t0 = System.nanoTime()
-        TxnLake.upsert(spark, dir, src, "id")
-        mrgMs += ms(t0)
-      }
-      (updMs / n, delMs / n, mrgMs / n)
     }
 
-    // warmup (JIT + session)
-    run(changeFeed = false)
-    val (updNo, delNo, mrgNo) = run(changeFeed = false)
-    val (updCdc, delCdc, mrgCdc) = run(changeFeed = true)
-    println(f"[cdc-tax] update x$n: no-feed ${updNo}%7.1f ms/commit | feed ${updCdc}%7.1f ms/commit | cdc delta ${updCdc - updNo}%7.1f ms")
-    println(f"[cdc-tax] delete x$n: no-feed ${delNo}%7.1f ms/commit | feed ${delCdc}%7.1f ms/commit | cdc delta ${delCdc - delNo}%7.1f ms")
-    println(f"[cdc-tax] merge  x$n: no-feed ${mrgNo}%7.1f ms/commit | feed ${mrgCdc}%7.1f ms/commit | cdc delta ${mrgCdc - mrgNo}%7.1f ms")
+    run() // warmup (JIT + session)
+    run().foreach { case (name, no, cdc) =>
+      println(f"[cdc-tax] $name x$n: no-feed $no%7.1f ms/commit | feed $cdc%7.1f ms/commit | cdc delta ${cdc - no}%7.1f ms")
+    }
     spark.stop()
   }
 }

@@ -146,7 +146,7 @@ class DvJobCountSpec extends AnyFunSuite with SparkTestSession with AdaptiveSpar
     assert(hit.size === 1)
     val merged = after.find(_.path == hit.head.path).get
     assert(merged.dv.size === hit.head.dv.size + 1 && merged.dv.init === hit.head.dv)
-    assert(merged.doomed === hit.head.doomed.map(_ + 1L))
+    assert(merged.doomed === hit.head.doomed + 1L)
     assert(rest.forall(after.contains), "untouched entries are republished as they were")
     assert(after.size === before.size + 1, "one new file: the post-image")
   }

@@ -11,9 +11,8 @@ import java.nio.file.Files
   * size questions — `DESCRIBE DETAIL`, the DV relation's plan-time
   * `sizeInBytes` — are LOG-ONLY, no per-file stat sweep. Staging
   * records them (FooterStatsSpec compares them with the file lengths
-  * for every staging shape), they must survive checkpoints, and every
-  * consumer must go NULL/fallback — never guess — when a legacy entry
-  * lacks them. */
+  * for every staging shape) and they must survive checkpoints; a log
+  * entry without them is refused at read (TxnLogShapeSpec). */
 class FileSizeStatsSpec extends AnyFunSuite with SparkTestSession {
 
   private def freshDir(): String =
@@ -30,7 +29,7 @@ class FileSizeStatsSpec extends AnyFunSuite with SparkTestSession {
     val dir = freshDir()
     mk(dir)
     val det = TxnLake.tableDetail(spark, dir).collect()(0)
-    val expected = TxnLake.resolve(spark, dir).get.files.flatMap(_.bytes).sum
+    val expected = TxnLake.resolve(spark, dir).get.files.map(_.bytes).sum
     assert(det.getAs[Long]("size_bytes") === expected)
     // SQL surface agrees
     val viaSql = graft.plans.GraftSqlDml
@@ -49,7 +48,7 @@ class FileSizeStatsSpec extends AnyFunSuite with SparkTestSession {
           Seq((s"p${k % 3}", 1000L + k, k * 1.0)).toDF("part", "id", "v"))
       }
       val m = TxnLake.resolve(spark, dir).get
-      assert(m.files.forall(_.bytes.exists(_ > 0L)),
+      assert(m.files.forall(_.bytes > 0L),
         "checkpoint round-trip must preserve every entry's bytes")
     } finally spark.conf.unset("spark.graft.txnlake.checkpointInterval")
   }
@@ -63,9 +62,9 @@ class FileSizeStatsSpec extends AnyFunSuite with SparkTestSession {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l
     }.head.relation
     assert(rel.isInstanceOf[TxnDvRelation])
-    val expected = TxnLake.resolve(spark, dir).get.files.flatMap(_.bytes).sum
+    val expected = TxnLake.resolve(spark, dir).get.files.map(_.bytes).sum
     assert(rel.sizeInBytes === expected,
-      "with full byte coverage the estimate must be the manifest sum")
+      "the estimate must be the manifest sum")
   }
 
   test("byte-targeted OPTIMIZE packs to spark.graft.txnlake.targetFileBytes") {
@@ -76,7 +75,7 @@ class FileSizeStatsSpec extends AnyFunSuite with SparkTestSession {
       .map(i => ("p0", k * 10000L + i, "x" * 64)).toDF("part", "id", "pad")
     TxnLake.create(spark, dir, batch(0), "part", statsCol = Some("id"))
     (1 to 3).foreach(k => TxnLake.append(spark, dir, batch(k)))
-    val totalBytes = TxnLake.resolve(spark, dir).get.files.flatMap(_.bytes).sum
+    val totalBytes = TxnLake.resolve(spark, dir).get.files.map(_.bytes).sum
     val target = totalBytes / 6
     spark.conf.set("spark.graft.txnlake.targetFileBytes", target.toString)
     try {
@@ -85,42 +84,10 @@ class FileSizeStatsSpec extends AnyFunSuite with SparkTestSession {
         s"a target of total/6 must split the compaction output, got ${st.filesAfter}")
       val m = TxnLake.resolve(spark, dir).get
       // packed files land near the target (parquet framing gives slack)
-      m.files.flatMap(_.bytes).foreach(b =>
+      m.files.map(_.bytes).foreach(b =>
         assert(b <= target * 3,
           s"packed file $b bytes overshoots the $target target beyond framing slack"))
       assert(TxnLake.read(spark, dir).count() === 8000L)
     } finally spark.conf.unset("spark.graft.txnlake.targetFileBytes")
-  }
-
-  test("a legacy entry without bytes yields NULL size_bytes, never a guess") {
-    import spark.implicits._
-    val dir = freshDir()
-    mk(dir)
-    // simulate a legacy manifest: strip `bytes` from one live entry by
-    // rewriting the newest log record without the field
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sparkContext.hadoopConfiguration)
-    val logDir = new java.io.File(s"$dir/_graft_log")
-    // strip from the delta record AND the v0 checkpoint (resolve
-    // prefers the checkpoint, and create lands on the interval grid)
-    val recs = logDir.listFiles()
-      .filter(_.getName.matches("v\\d{8}(\\.ckpt)?\\.json"))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    recs.foreach { rec =>
-      val node = mapper.readTree(rec)
-      Seq("add", "files").flatMap(f => Option(node.get(f)))
-        .foreach(_.elements().forEachRemaining {
-          case o: com.fasterxml.jackson.databind.node.ObjectNode => o.remove("bytes"); ()
-          case _ => ()
-        })
-      java.nio.file.Files.write(rec.toPath, mapper.writeValueAsBytes(node))
-      // the CRC sidecar no longer matches — drop it (legacy logs
-      // predate sidecars too)
-      new java.io.File(rec.getPath + ".crc").delete()
-    }
-    TxnLake.clearCrcCacheForTests()
-    val det = TxnLake.tableDetail(spark, dir).collect()(0)
-    assert(det.isNullAt(det.fieldIndex("size_bytes")),
-      "partial byte coverage must surface as NULL, not a partial sum")
   }
 }

@@ -119,7 +119,7 @@ class FooterStatsSpec extends AnyFunSuite with SparkTestSession {
     TxnLake.append(spark, dir, batch(1000.0))
     TxnLake.append(spark, dir, batch(2000.0))
     val m = TxnLake.resolve(spark, dir).get
-    assert(m.files.forall(f => f.zmin.isDefined && f.rows.exists(_ > 0)))
+    assert(m.files.forall(f => f.zmin.isDefined && f.rows > 0))
     val hit = spark.read.format("graft-txn").load(dir).filter(col("v") >= 2000.0)
     assert(scannedFiles(hit) === 2L, "only the last commit's two files hold v >= 2000")
     assert(hit.count() === 20)

@@ -11,7 +11,7 @@ import java.nio.file.Files
   * snapshot must plan without driver-materializing its file list —
   * `resolve` returns a [[TxnLake.LazyCkptFiles]], [[TxnFileIndex]]
   * prunes it with an executor-parallel filter over the payload, and
-  * results/pruning are byte-identical to the eager listing path. */
+  * results are identical to a read over the materialized list. */
 class LazyCkptPlanningSpec extends AnyFunSuite with SparkTestSession {
 
   private def freshDir(): String =
@@ -75,16 +75,15 @@ class LazyCkptPlanningSpec extends AnyFunSuite with SparkTestSession {
         scannedFiles(lake(dir)))
       assert(scannedFiles(lake(dir).filter(col("part") === "p2")) <
         scannedFiles(lake(dir)))
-      // eager twin: the escape hatch forces the listing path end-to-end
-      spark.conf.set("spark.graft.txnlake.manifestStatuses", "false")
-      try {
-        assert(rows(lake(dir)) === lazyAll)
-        assert(rows(lake(dir).filter(col("price") >= 2000.0)) === lazyFiltered)
-      } finally spark.conf.unset("spark.graft.txnlake.manifestStatuses")
-      // plan-time size estimate: aggregate job ≡ summed statuses
+      // plan-time size estimate: aggregate job ≡ summed entry bytes
       val m = TxnLake.resolve(spark, dir).get
       val idx = new TxnFileIndex(spark, dir, m)
-      assert(idx.sizeInBytes === m.files.flatMap(_.bytes).sum)
+      assert(idx.sizeInBytes === m.files.map(_.bytes).sum)
+      // eager twin: a read of the same snapshot over its materialized
+      // file list (TxnLake.read decodes the whole payload)
+      val eager = TxnLake.read(spark, dir)
+      assert(rows(eager) === lazyAll)
+      assert(rows(eager.filter(col("price") >= 2000.0)) === lazyFiltered)
     }
   }
 
@@ -129,8 +128,7 @@ class LazyCkptPlanningSpec extends AnyFunSuite with SparkTestSession {
         bloom = None, dv = Nil,
         spec = Seq(Some("part"), Some("other"), None)(rnd.nextInt(3)),
         statsCols = sc, statsMin = lo, statsMax = lo.map(_ + 30),
-        base = None, rows = Some(1L), bytes = Some(1L), doomed = None,
-        mtime = None)
+        base = None, rows = 1L, bytes = 1L, doomed = 0L, mtime = 1L)
     }
     val renames = Map("p_phys" -> "renamed")
     val scenarios = Seq(

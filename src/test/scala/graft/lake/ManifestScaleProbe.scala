@@ -52,7 +52,8 @@ object ManifestScaleProbe {
           spec = Some("part"),
           stats = Map("o_orderdate" -> (i.toDouble, i + 50.0),
             "o_totalprice" -> (i * 2.0, i * 2.0 + 99.0)),
-          rows = Some(50000L), bytes = Some(128L * 1024 * 1024))
+          rows = 50000L, bytes = 128L * 1024 * 1024, doomed = 0L,
+          mtime = 1L)
       }
       val m = TxnLake.Manifest(10L, f"probe$n%08d", "part",
         "id BIGINT, part STRING, o_orderdate DOUBLE, o_totalprice DOUBLE",

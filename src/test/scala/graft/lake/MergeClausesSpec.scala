@@ -68,11 +68,11 @@ class MergeClausesSpec extends AnyFunSuite with SparkTestSession {
     assert(before.map(_.path).toSet.subsetOf(after.map(_.path).toSet))
     val (p1, others) = before.partition(_.parts == Set(Option("p1")))
     val p1After = after.find(_.path == p1.head.path).get
-    assert(p1After.dv.size === 1 && p1After.doomed === Some(2L))
+    assert(p1After.dv.size === 1 && p1After.doomed === 2L)
     assert(others.forall(f => after.contains(f)))
     // the new files hold only the post-image of 1 and the insert of 5
     val added = after.filterNot(f => before.exists(_.path == f.path))
-    assert(added.flatMap(_.rows).sum === 2L)
+    assert(added.map(_.rows).sum === 2L)
     val v = TxnLake.history(spark, dir).agg(max("version")).head().getLong(0)
     val cdc = graft.streaming.CdcFeed.batch(spark, dir, fromVersion = v)
       .select(col("id"), col(TxnLake.ChangeTypeCol)).collect()

@@ -73,7 +73,7 @@ class MetadataCountSpec extends AnyFunSuite with SparkTestSession {
     // resolve re-reads the log from disk
     val m = TxnLake.resolve(spark, dir).get
     val dvd = m.files.filter(_.dv.nonEmpty)
-    assert(dvd.nonEmpty && dvd.forall(_.doomed.exists(_ > 0L)))
+    assert(dvd.nonEmpty && dvd.forall(_.doomed > 0L))
   }
 
   test("counts survive checkpoint + vacuum") {
@@ -86,40 +86,6 @@ class MetadataCountSpec extends AnyFunSuite with SparkTestSession {
     TxnLake.vacuum(spark, dir, keepVersions = 2, graceMs = 0L)
     assert(TxnLake.rowCount(spark, dir).get === 5L)
     assertMatchesScan(dir, 4L)
-  }
-
-  test("legacy DV entries (no doomed count) stay on the sidecar fallback " +
-      "after a NEW delete — never a partial count") {
-    import spark.implicits._
-    val dir = freshDir("graft_metacount_legacy")
-    TxnLake.create(spark, dir,
-      (1L to 10L).map(i => (i, s"n$i", "p1")).toDF("id", "name", "part"), "part")
-    TxnLake.deleteWhere(spark, dir, col("id") <= 3) // v1: DV + doomed=3
-    // simulate a PRE-TRACKING log: strip the doomed counts from v1's
-    // record (and its checksum sidecar) — the shape every table written
-    // by older code has
-    val fs = TxnLake.fsOf(spark, dir)
-    val recP = new org.apache.hadoop.fs.Path(dir, "_graft_log/v00000001.json")
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = m.readTree(fs.open(recP).readAllBytes())
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    root.withArray("add").forEach {
-      case on: com.fasterxml.jackson.databind.node.ObjectNode =>
-        on.remove("doomed"); ()
-      case _ => ()
-    }
-    val out = fs.create(recP, true)
-    try out.write(m.writeValueAsBytes(root)) finally out.close()
-    fs.delete(new org.apache.hadoop.fs.Path(dir,
-      "_graft_log/v00000001.json.crc"), false)
-    // a NEW delete on the same (legacy-DV'd) files must NOT begin a
-    // count covering only its own sidecar: the fast path would then
-    // subtract 1 instead of 4 and COUNT(*) silently over-counts
-    TxnLake.deleteWhere(spark, dir, col("id") === 10L) // v2
-    assert(TxnLake.readVersion(spark, dir, 2L).count() === 6L)
-    assert(TxnLake.rowCount(spark, dir).get === 6L,
-      "metadata COUNT(*) over-counted on a mixed legacy/tracked DV entry")
-    assertMatchesScan(dir, 2L)
   }
 
   test("clone preserves counts and diverges independently") {

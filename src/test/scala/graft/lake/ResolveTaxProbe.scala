@@ -55,7 +55,7 @@ object ResolveTaxProbe {
         val m2 = TxnLake.resolve(spark, dir).get
         val tResolve = ms(t0)
         t0 = System.nanoTime()
-        val st = TxnFileIndex.statusesFor(spark, new org.apache.hadoop.fs.Path(dir), m2)
+        val st = TxnFileIndex.statusesFor(spark, new org.apache.hadoop.fs.Path(dir), m2.files)
         val tStatuses = ms(t0)
         t0 = System.nanoTime()
         val idx = new TxnFileIndex(spark, dir, m2)

@@ -132,7 +132,7 @@ private[lake] object StatsShapes {
   /** An entry's recorded fields, doubles as raw bits so NaN and the
     * sign of zero compare exactly. */
   type Fields = (String, Set[Option[String]], Option[Long], Option[Long],
-    Map[String, (Long, Long)], Option[Long], Option[Long], Option[String], Option[String])
+    Map[String, (Long, Long)], Long, Long, Option[String], Option[String])
 
   private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
 
@@ -179,8 +179,8 @@ private[lake] object StatsShapes {
       (e.path, rs.map(r => Option(r.get(1)).map(String.valueOf)).toSet,
         z.map(b => bits(b._1)), z.map(b => bits(b._2)),
         shape.statsCols.flatMap(c => bound(c).map(b => c -> ((bits(b._1), bits(b._2))))).toMap,
-        Some(rs.map(_.getAs[Long]("n")).sum),
-        Some(new java.io.File(e.locate(dir)).length()),
+        rs.map(_.getAs[Long]("n")).sum,
+        new java.io.File(e.locate(dir)).length(),
         Some(shape.partCol), blooms.get(e.path))
     }
   }

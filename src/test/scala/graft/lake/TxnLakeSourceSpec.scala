@@ -295,22 +295,23 @@ class TxnLakeSourceSpec extends AnyFunSuite with SparkTestSession {
 
   test("_metadata.file_modification_time agrees between synthesized statuses and listing") {
     val dir = priceTable()
-    def mtimes(statuses: Boolean): Map[String, java.sql.Timestamp] = {
-      spark.conf.set("spark.graft.txnlake.manifestStatuses", statuses.toString)
-      try lake(dir)
-        .select(col("_metadata.file_path"), col("_metadata.file_modification_time"))
-        .distinct().collect()
-        .map(r => r.getString(0) -> r.getTimestamp(1)).toMap
-      finally spark.conf.unset("spark.graft.txnlake.manifestStatuses")
-    }
-    val fast = mtimes(statuses = true)    // FileStatus synthesized from the manifest
-    val listed = mtimes(statuses = false) // FileStatus from a real fs listing
+    // FileStatus synthesized from the manifest
+    val fast = lake(dir)
+      .select(col("_metadata.file_path"), col("_metadata.file_modification_time"))
+      .distinct().collect()
+      .map(r => r.getString(0) -> r.getTimestamp(1).getTime).toMap
+    // FileStatus from the file system itself, for every live file
+    val fs = TxnLake.fsOf(spark, dir)
+    val listed = TxnLake.resolve(spark, dir).get.files.map { f =>
+      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(f.locate(dir)))
+      st.getPath.toString -> st.getModificationTime
+    }.toMap
     assert(fast.keySet === listed.keySet,
-      "file_path must be scheme-qualified identically on both plan paths")
-    // manifest mtime is captured from the same staging statuses the
-    // listing path re-reads, and committed files are immutable — the
-    // user-queryable metadata column must not depend on the plan path
+      "file_path must be scheme-qualified like the file system's own status")
+    // manifest mtime is captured from the staging statuses, and
+    // committed files are immutable — the user-queryable metadata
+    // column must equal what the file system reports
     assert(fast === listed)
-    assert(fast.values.forall(_.getTime > 0L), "mtime must be real, not epoch 0")
+    assert(fast.values.forall(_ > 0L), "mtime must be real, not epoch 0")
   }
 }

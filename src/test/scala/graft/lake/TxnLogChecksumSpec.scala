@@ -63,6 +63,16 @@ class TxnLogChecksumSpec extends AnyFunSuite with SparkTestSession {
     assert(e.getMessage.contains("integrity"))
   }
 
+  test("timestamp time travel over a damaged record fails typed, not on mtime") {
+    val dir = freshTable()
+    flipDigit(Paths.get(dir, "_graft_log", "v00000001.json"))
+    // the commit instant is the record's own `ts`: a record that fails
+    // its integrity check has none, and the file's mtime is no stand-in
+    intercept[TxnLake.TxnLogCorruptedException] {
+      TxnLake.versionAsOfTimestamp(spark, dir, Long.MaxValue)
+    }
+  }
+
   test("corrupting a checkpoint is detected on resolve") {
     import spark.implicits._
     val dir = freshTable()

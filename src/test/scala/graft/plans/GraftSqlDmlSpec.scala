@@ -505,15 +505,13 @@ class GraftSqlDmlSpec extends AnyFunSuite with SparkTestSession {
         s.sql("SHOW TBLPROPERTIES no_such_tbl_xyz").collect())
 
       // SHOW PARTITIONS: the manifest partition index — file counts
-      // pin the commit cascade, rows are exact-or-NULL (a DV'd
-      // partition must null out instead of over-reporting)
+      // pin the commit cascade, rows are exact (a DV'd partition
+      // subtracts its entries' doomed rows, never over-reporting)
       val partsDir = freshTable(s)
       TxnLake.deleteWhere(s, partsDir, col("id") === 4L) // DV on p3
       val parts = s.sql(s"SHOW PARTITIONS graft_txn.`$partsDir`")
-        .collect().map(r => (r.getString(0), r.getLong(1),
-          if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSeq
-      assert(parts === Seq(("p1", 1L, Some(2L)), ("p2", 1L, Some(1L)),
-        ("p3", 1L, None)))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(parts === Seq(("p1", 1L, 2L), ("p2", 1L, 1L), ("p3", 1L, 0L)))
       // stock SHOW PARTITIONS keeps stock semantics for non-graft
       intercept[Exception](
         s.sql("SHOW PARTITIONS no_such_tbl_xyz").collect())
