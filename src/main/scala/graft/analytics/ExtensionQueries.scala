@@ -1703,9 +1703,9 @@ object ExtensionQueries {
     * predicate-delete %7==2, then upsert %11==0 with the NEGATED
     * embedding — an update is remove-from-old-cell + add-to-new-cell,
     * and re-inserts the deleted %77-family keys. The stream drains
-    * AvailableNow (per-file pacing and every intermediate index state
+    * AvailableNow (per-version pacing and every intermediate index state
     * are pinned by `IndexMaintenanceSpec`; the registered query should
-    * not pay one dynamic-overwrite cycle per feed FILE). The answer
+    * not pay one dynamic-overwrite cycle per commit). The answer
     * probes the maintained index
     * for two query vectors; the oracle replays codebook-from-base +
     * final-corpus assignment + probe relationally, so a hash match

@@ -791,8 +791,8 @@ object ScaleQueries {
     * (version, change type). Each commit writes its own change rows
     * (preimage dialect: insert / update_preimage / update_postimage /
     * delete pre-images) at commit time —
-    * O(changed rows), never a snapshot diff — and the same files are
-    * what `CdcFeed.stream` tails as a checkpointed file stream
+    * O(changed rows), never a snapshot diff — and the same entries are
+    * what `readChangeFeed` tails as a checkpointed stream
     * (stream == batch pinned in CdcFeedSpec). The oracle rebuilds every
     * commit's expected change set relationally, including the doubled
     * pre-image price of keys updated before deletion (%42), so a hash

@@ -424,8 +424,8 @@ object StreamingQueries {
     * through create → append → upsert → delete (+ a merge-on-read
     * DELETION-VECTOR delete — the feed carries its pre-images like any
     * other delete), and a Structured Streaming job
-    * ([[graft.streaming.CdcFeed.replicate]]: checkpointed file stream
-    * over `_graft_cdc`, `foreachBatch` → per-key last-change reduction
+    * ([[graft.streaming.CdcFeed.replicate]]: the checkpointed
+    * `readChangeFeed` stream, `foreachBatch` → per-key last-change reduction
     * → transactional upsert+delete on the replica) converges an
     * independent table to the source head WITHOUT ever scanning the
     * source. The query aggregates the REPLICA; the oracle replays the
@@ -568,7 +568,7 @@ object StreamingQueries {
   /** st19 — LATE-ATTACHING CDC consumer ([[graft.streaming.CdcFeed]]
     * `startingVersion`): a 5-commit feed history (create, append,
     * doubling upsert, predicate delete, append) read from version 2 —
-    * the same per-row cutoff `CdcFeed.stream(startingVersion = 2)`
+    * the same cutoff `readChangeFeed` with `startingVersion = 2`
     * applies for a consumer attaching mid-history (stream==batch is
     * pinned in CdcFeedSpec), emitted one row per change. The oracle
     * replays commits 2..4 relationally: v2's upsert doubles every %21

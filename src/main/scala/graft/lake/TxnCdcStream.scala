@@ -1,37 +1,31 @@
 package graft.lake
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.types.StructType
 
 /** `spark.readStream.format("graft-txn").option("readChangeFeed",
-  * "true").load(dir)` — Delta CDF's streaming front door, served as a
-  * first-class V1 `Source` over the commit-time change feed
-  * (`_graft_cdc/v<version>` dirs, [[graft.streaming.CdcFeed]]'s
-  * storage).
+  * "true").load(dir)` — Delta CDF's streaming front door and the one
+  * stream reader of the commit-time change feed (the `_graft_cdc/c<id>`
+  * entries the log records name, [[graft.streaming.CdcFeed]]'s
+  * storage), served as a first-class V1 `Source`.
   *
-  * Why a dedicated source when [[graft.streaming.CdcFeed.stream]]
-  * already tails the feed as a checkpointed FILE stream: offsets here
-  * are COMMIT VERSIONS, so every micro-batch carries whole commits —
-  * the file source's batches can split one commit's change files
-  * across triggers (`maxFilesPerTrigger` cuts mid-commit), which
-  * forces downstream consumers to handle partial-commit batches. A
-  * version-granular source makes "apply each commit's changes
-  * atomically" the DEFAULT consumer contract, the shape incremental
-  * view maintenance wants. `CdcFeed.stream` remains for file-paced
-  * backfills.
+  * Offsets are COMMIT VERSIONS, so every micro-batch carries whole
+  * commits: "apply each commit's changes atomically" is the DEFAULT
+  * consumer contract, the shape incremental view maintenance wants,
+  * and no batch splits one commit's change files.
   *
   * Options: `startingVersion` (changes of that commit and later) or
   * `startingTimestamp` (first commit whose in-commit timestamp is at
   * or after it — epoch millis), mutually exclusive, default = the
   * whole retained feed; `maxVersionsPerTrigger` paces backfills at
   * commit granularity. Offsets are plain version numbers, so restart
-  * replay reconstructs batches purely from the immutable feed dirs.
-  * Retention contract: checkpointed versions must outlive
+  * replay reconstructs batches purely from the log and its immutable
+  * entries. Retention contract: checkpointed versions must outlive
   * [[TxnLake.vacuum]], as with Delta CDF. A batch holding entries
   * across a column rename from the version the stream's schema binds
-  * fails ([[graft.streaming.CdcFeed.requireNoRenameBetween]]). */
+  * fails ([[graft.streaming.CdcFeed.requireNoRenameBetween]]), a
+  * rename committed while the stream runs included. */
 private[graft] class TxnCdcStream(spark: SparkSession, dir: String,
                                   options: Map[String, String]) extends Source
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
@@ -49,12 +43,6 @@ private[graft] class TxnCdcStream(spark: SparkSession, dir: String,
     opts.get("maxversionspertrigger").map(_.toLong).filter(_ > 0)
       .getOrElse(Long.MaxValue)
 
-  private val fs = TxnLake.fsOf(spark, dir)
-  private val cdcRoot = new Path(dir, TxnLake.CdcDir)
-  require(fs.exists(cdcRoot),
-    s"$dir has no ${TxnLake.CdcDir} feed — create the table with " +
-      "changeFeed = true (or use the plain table stream)")
-
   // the version whose column names `schema` binds: every batch's
   // entries must share them (the rename read barrier)
   private val schemaVersion: Long = TxnLake.currentVersion(spark, dir)
@@ -63,26 +51,24 @@ private[graft] class TxnCdcStream(spark: SparkSession, dir: String,
   private var lastOffered: Option[Long] = None
   private var headCap: Option[Long] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    headCap = Some(feedVersions().lastOption.getOrElse(-1L))
+    headCap = Some(entryVersions(None).lastOption.getOrElse(-1L))
 
-  /** Retained feed (version, dir name) pairs, ascending — one listing
-    * of the cdc root (version-count scale, no data files touched).
-    * Dir names come back verbatim (they are zero-padded, `v00000003`),
-    * never rebuilt from the parsed number. */
-  private def feedEntries(): Seq[(Long, String)] =
-    fs.listStatus(cdcRoot).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.length > 1 && n.drop(1).forall(_.isDigit))
-      .map(n => n.drop(1).toLong -> n).filter(_._1 >= startFrom).sortBy(_._1)
+  /** The first version a stream positioned at `after` has not read. */
+  private def firstAfter(after: Option[Long]): Long =
+    after.fold(startFrom)(v => math.max(startFrom, v + 1))
 
-  private def feedVersions(): Seq[Long] = feedEntries().map(_._1)
+  /** Versions after `after` whose commits staged a feed entry,
+    * ascending — read through the log ([[TxnLake.feedLog]]). */
+  private def entryVersions(after: Option[Long]): Seq[Long] =
+    TxnLake.feedLog(spark, dir, firstAfter(after))
+      .collect { case e if e.entry.isDefined => e.version }
 
   private def advance(from: Option[Long]): Option[Long] = {
-    val avail = feedVersions()
+    val avail = entryVersions(from)
     val capped = headCap.fold(avail)(h => avail.filter(_ <= h))
-    val fresh = from.fold(capped)(f => capped.filter(_ > f))
-    if (fresh.isEmpty) from
-    else Some(fresh.take(
-      math.min(fresh.size.toLong, maxVersionsPerTrigger).toInt).last)
+    if (capped.isEmpty) from
+    else Some(capped.take(
+      math.min(capped.size.toLong, maxVersionsPerTrigger).toInt).last)
   }
 
   override def getOffset: Option[OffsetV1] = synchronized {
@@ -108,17 +94,15 @@ private[graft] class TxnCdcStream(spark: SparkSession, dir: String,
     synchronized {
       if (lastOffered.forall(_ < endV)) lastOffered = Some(endV)
     }
-    // whole commits between the offsets, reconstructed from the
-    // immutable v-dirs — replay-identical after restart
-    val entries = feedEntries().filter { case (v, _) => fromV.forall(v > _) && v <= endV }
-    CdcFeed.requireNoRenameBetween(spark, dir, entries.map(_._1), schemaVersion)
-    val dirs = entries.map { case (_, name) => s"$dir/${TxnLake.CdcDir}/$name" }
-    val batch =
-      if (dirs.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else CdcFeed.derive(
-        spark.read.schema(schema).parquet(dirs: _*))
+    // whole commits between the offsets, reconstructed from the log
+    // and its immutable entries — replay-identical after restart. The
+    // log read spans the schema's version too, for the rename barrier
+    val lo = firstAfter(fromV)
+    val log = TxnLake.feedLog(spark, dir, math.min(lo, schemaVersion),
+      math.max(endV, schemaVersion))
+    val entries = log.filter(e => e.version >= lo && e.version <= endV && e.entry.isDefined)
+    CdcFeed.requireNoRenameBetween(dir, log, entries, schemaVersion)
+    val batch = CdcFeed.readFeed(spark, dir, entries, schema)
     org.apache.spark.sql.graft.StreamingFrameBridge.asStreaming(spark, batch)
   }
 

@@ -157,7 +157,9 @@ object TxnLake {
     * (`add`/`remove`) plus the commit-scoped metadata OCC needs
     * (`touched`). `ts` is the in-commit timestamp, stamped at publish
     * ([[publishRecord]]) and required by the reader; a `vN.json` is
-    * always a delta — one holding a full `files` list is refused. */
+    * always a delta — one holding a full `files` list is refused.
+    * `feed` names the commit's change-feed entry (`_graft_cdc/c<id>`),
+    * absent when the commit staged no change rows. */
   private[lake] case class CommitRecord(version: Long, commitId: String,
                                         partCol: String, schemaDdl: String,
                                         touched: Set[Option[String]],
@@ -172,17 +174,18 @@ object TxnLake {
                                         txnVer: Option[Long] = None,
                                         dataChange: Boolean = true,
                                         copied: Set[String] = Set.empty,
-                                        identity: Map[String, Long] = Map.empty)
+                                        identity: Map[String, Long] = Map.empty,
+                                        feed: Option[String] = None)
 
   /** A staged-but-uncommitted commit: data files already written under
     * `_graft_data`, invisible until [[commitStaged]] publishes a
     * manifest referencing them. `feedStage` is the commit's row-level
-    * CHANGE FEED, already complete in a version-independent
-    * `_graft_cdc/.tmp-<id>` dir ([[newFeedStage]]); it renames into
-    * `_graft_cdc/v<version>` once the commit wins its version
-    * ([[publishFeed]]). `stagedDirs` lists every dir this staging
-    * created (data `c<id>` dirs, a DV sidecar, the feed stage) — what
-    * an aborted commit drops ([[dropStagedFiles]]). It has no default:
+    * CHANGE FEED, already complete in its `_graft_cdc/c<id>` dir
+    * ([[newFeedStage]]); the record the commit publishes names it, and
+    * that record is the entry's only commit point. `stagedDirs` lists
+    * every dir this staging created (data `c<id>` dirs, a DV sidecar,
+    * the feed stage) — what an aborted commit drops
+    * ([[dropStagedFiles]]). It has no default:
     * every staging site states what it wrote. `readBase`: the commit
     * read the base beyond the files it removes (an insert-only merge),
     * so it is conflict-checked, never rebased blindly. */
@@ -243,19 +246,18 @@ object TxnLake {
   private[lake] val DvDir = "_graft_dv"
 
   /** Root of the commit-time CHANGE-DATA feed (Delta CDF-style): one
-    * `v<version>` parquet directory per row-changing commit, rows in
-    * the full preimage dialect — [[ChangeTypeCol]] ∈ insert /
+    * `c<id>` parquet directory per row-changing commit, rows in the
+    * full preimage dialect — [[ChangeTypeCol]] ∈ insert /
     * update_preimage / update_postimage / delete (deletes carry their
     * pre-image) — so sums are SUBTRACTABLE and the feed can maintain
     * aggregates ([[IncrementalView.applyChanges]]) downstream. The
-    * committing writer fills a `.tmp-<id>` stage BEFORE it publishes,
-    * O(changed rows) per commit, and renames it to `v<version>` after
-    * the publish wins ([[publishFeed]] — the one site that creates a
-    * `v<N>` dir), so a feed entry appears whole. [[VersionCol]] is
-    * never stored: readers take it from the `v<N>` dir name
-    * ([[graft.streaming.CdcFeed]], which tails the root as a plain
-    * checkpointed file stream, so downstream incremental consumers
-    * never diff snapshots). */
+    * committing writer fills the entry BEFORE it publishes, O(changed
+    * rows) per commit, and the record it publishes names it
+    * ([[CommitRecord.feed]]): the record is the entry's commit point,
+    * an entry no record names is an orphan [[vacuum]] collects, and no
+    * fs op on the feed follows the publish. [[VersionCol]] is never
+    * stored: readers map entries to versions through the log
+    * ([[feedLog]]). */
   val CdcDir = "_graft_cdc"
   val ChangeTypeCol = "_change_type"
   val VersionCol = "_commit_version"
@@ -1190,16 +1192,14 @@ object TxnLake {
     // The staged data files ARE the inserts: the stage gets byte copies
     // and readers derive the change-type/version columns — zero write
     // amplification through the engine. Staged before the publish and
-    // renamed into v0 after it, like every commit's feed.
-    val feedStage = newFeedStage(spark, dir)
-    feedStage.foreach(stageFeedImages(spark, dir, _, df.schema, Map.empty,
-      "insert" -> files))
+    // named by v0's record, like every commit's feed.
+    val feed = newFeedStage(spark, dir).filter(stageFeedImages(spark, dir, _,
+      df.schema, Map.empty, "insert" -> files))
     val rec = CommitRecord(0L, newCommitId(), partCol, df.schema.toDDL,
       files.flatMap(_.parts).toSet, files, Set.empty, statsCol,
-      bloomCol = bloomCol, bloomBits = bloomBits)
+      bloomCol = bloomCol, bloomBits = bloomBits, feed = feed)
     require(publishRecord(fs, dir, rec),
       s"concurrent create of txn table at $dir")
-    publishFeed(fs, dir, feedStage, 0L)
     // v0 checkpoint: cold resolution of a fresh table is one read
     maybeCheckpoint(spark, fs, dir,
       Manifest(0L, rec.commitId, partCol, rec.schemaDdl, rec.touched, files, statsCol,
@@ -1239,17 +1239,30 @@ object TxnLake {
     vs.max
   }
 
-  /** The physical → logical name of every column at each retained log
-    * version, ascending: the names a version's files and change-feed
-    * entries were written under ([[renameColumn]] changes them).
-    * Metadata only — one record read per version, no data file. */
-  private[graft] def columnNamesByVersion(spark: SparkSession,
-                                          dir: String): Seq[(Long, Map[String, String])] = {
+  /** One retained log version as the change feed sees it: the feed
+    * entry its record names (None when the commit staged no change
+    * rows) and the physical → logical name of every column, the names
+    * the entry was written under ([[renameColumn]] changes them). */
+  private[graft] case class FeedVersion(version: Long, entry: Option[String],
+                                        names: Map[String, String])
+
+  /** The change feed through the log: every retained version in
+    * `[from, to]`, ascending — the only map from versions to feed
+    * entries ([[graft.streaming.CdcFeed]], [[TxnCdcStream]] and the
+    * rename barrier read it). Metadata only — one log listing and one
+    * (cached) record read per version; no listing of the feed root,
+    * no data file. Fails on a table that captures no feed. */
+  private[graft] def feedLog(spark: SparkSession, dir: String, from: Long = 0L,
+                             to: Long = Long.MaxValue): Seq[FeedVersion] = {
+    require(cdcEnabled(spark, dir),
+      s"$dir has no $CdcDir feed — create the table with changeFeed = true " +
+        "or call enableChangeFeed (TxnLake.changes diffs any two snapshots)")
     val fs = fsOf(spark, dir)
-    listVersions(fs, dir).sorted.map { v =>
-      val r = readRecord(fs, manifestPath(dir, v))
-      v -> StructType.fromDDL(r.schemaDdl).fieldNames
-        .map(p => p -> r.renames.getOrElse(p, p)).toMap
+    val (versions, _, statuses, _) = listLogFull(fs, dir)
+    versions.filter(v => v >= from && v <= to).sorted.map { v =>
+      val r = readRecord(fs, manifestPath(dir, v), statuses.get(v))
+      FeedVersion(v, r.feed, StructType.fromDDL(r.schemaDdl).fieldNames
+        .map(p => p -> r.renames.getOrElse(p, p)).toMap)
     }
   }
 
@@ -1564,12 +1577,13 @@ object TxnLake {
       stagedDirs = Seq(dvRel) ++ dataDirsOf(newFiles) ++ feedStage)
   }
 
-  /** Reads the part files of the feed stage `rel` that this commit
-    * just wrote, by path and with an explicit `schema` (a zero-match
+  /** Reads the part files of the stage `rel` that this commit just
+    * wrote, by path and with an explicit `schema` (a zero-match
     * predicate may stage no part file, and an empty frame of `schema`
     * stands in). The stage dir itself is never handed to `spark.read`:
-    * its `.tmp-` name is hidden to Spark, which warns "All paths were
-    * ignored" for a hidden root path instead of filtering it. */
+    * a merge's scratch stage (`_graft_dv/.tmp-<id>`) is hidden to
+    * Spark, which warns "All paths were ignored" for a hidden root path
+    * instead of filtering it. */
   private def readStage(spark: SparkSession, dir: String, rel: String,
                         schema: StructType): DataFrame = {
     val parts = stageParts(fsOf(spark, dir), dir, rel)
@@ -1623,7 +1637,7 @@ object TxnLake {
     if (doomed.isEmpty) return 0L
     beforeCommit()
     // the feed stage (delete pre-images, written above in the same pass
-    // that produced the DV) renames into its version inside commitStaged
+    // that produced the DV) is named by the record commitStaged publishes
     commitStaged(spark, dir, dvCommit(base, doomed, dvRel, Nil, feedStage,
       base.schemaDdl, base.renames), headHint = Some(base))
     doomed.valuesIterator.map(_.getLongCardinality).sum
@@ -1731,8 +1745,8 @@ object TxnLake {
     // change feed: pre-images were staged by the predicate pass above;
     // post-images are the staged files THEMSELVES, byte-copied into the
     // stage under the `upd_` prefix (read back in logical names on a
-    // renamed table) — no second evaluation of the SET. The whole feed
-    // entry then renames into its version at commit.
+    // renamed table) — no second evaluation of the SET. The commit's
+    // record then names the whole entry.
     feedStage.foreach(stageFeedImages(spark, dir, _, schema, base.renames,
       "update_postimage" -> newFiles))
     beforeCommit()
@@ -1977,9 +1991,8 @@ object TxnLake {
       // a blind append's change feed is the appended rows themselves,
       // staged from the staged files (byte copies; a read-back in
       // logical names on a renamed table) — never a second run of `rows`
-      val feedStage = newFeedStage(spark, dir)
-      feedStage.foreach(stageFeedImages(spark, dir, _, schema, base.renames,
-        "insert" -> newFiles))
+      val feedStage = newFeedStage(spark, dir).filter(stageFeedImages(spark, dir, _,
+        schema, base.renames, "insert" -> newFiles))
       Some(Staged(base.version, base.partCol, base.schemaDdl,
         newFiles.flatMap(_.parts).toSet, Set.empty, newFiles, base.statsCol,
         feedStage = feedStage,
@@ -2051,9 +2064,8 @@ object TxnLake {
     // row as an insert — truncate's feed plus an append's. Both are
     // whole-file images: byte copies where the bytes are the rows, one
     // read-back job for DV'd old files and renamed tables
-    val feedStage = newFeedStage(spark, dir)
-    feedStage.foreach(stageFeedImages(spark, dir, _, schema, renames,
-      "delete" -> base.files, "insert" -> newFiles))
+    val feedStage = newFeedStage(spark, dir).filter(stageFeedImages(spark, dir, _,
+      schema, renames, "delete" -> base.files, "insert" -> newFiles))
     commitStaged(spark, dir, Staged(base.version, base.partCol, schema.toDDL,
       base.files.flatMap(_.parts).toSet ++ newFiles.flatMap(_.parts),
       base.files.map(_.path).toSet, newFiles, base.statsCol,
@@ -2611,9 +2623,9 @@ object TxnLake {
     * carrying deletion vectors (whose dead rows must NOT re-surface as
     * pre-images) or renamed-schema tables (copied bytes carry physical
     * names) pay an explicit rewrite, and only for those files. The
-    * stage is filled against each attempt's head before the publish,
-    * renamed into the won version after it, and dropped when the
-    * attempt loses the version race. */
+    * entry is filled against each attempt's head before the publish,
+    * named by the won version's record, and dropped when the attempt
+    * loses the version race. */
   def truncate(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
     var attempts = 0
@@ -2624,16 +2636,14 @@ object TxnLake {
         .getOrElse(throw new IllegalArgumentException(s"$dir is not a txn table (no $LogDir)"))
       if (head.files.isEmpty) return // already empty
       val touched = head.files.flatMap(_.parts).toSet
-      val feedStage = newFeedStage(spark, dir)
-      feedStage.foreach(stageFeedImages(spark, dir, _,
+      val feed = newFeedStage(spark, dir).filter(stageFeedImages(spark, dir, _,
         StructType.fromDDL(head.schemaDdl), head.renames, "delete" -> head.files))
       val rec = CommitRecord(head.version + 1, newCommitId(), head.partCol,
         head.schemaDdl, touched, Nil, head.files.map(_.path).toSet,
         head.statsCol, bloomCol = head.bloomCol,
         bloomBits = head.bloomBits, renames = head.renames,
-        tombstones = head.tombstones)
+        tombstones = head.tombstones, feed = feed)
       if (publishRecord(fs, dir, rec)) {
-        publishFeed(fs, dir, feedStage, rec.version)
         maybeCheckpoint(spark, fs, dir,
           Manifest(rec.version, rec.commitId, rec.partCol, rec.schemaDdl,
             touched, Nil, rec.statsCol, bloomCol = rec.bloomCol,
@@ -2642,7 +2652,7 @@ object TxnLake {
             identity = head.identity))
         return
       }
-      feedStage.foreach(r => fs.delete(new Path(dir, r), true))
+      feed.foreach(r => fs.delete(new Path(dir, r), true))
     }
   }
 
@@ -3289,13 +3299,11 @@ object TxnLake {
           .when(col("__txn_bs") >= 0, bsType)
           .when(col("__txn_del"), lit("delete")).otherwise(lit("update_preimage")))
       .filter(col(ChangeTypeCol).isNotNull)
-    // 3. materialize the classification once. Without a feed a doomed
-    // target row is only its identity: its data columns stage as NULL
+    // 3. materialize the classification once, into the feed entry when
+    // the table has a feed, else into a scratch stage dropped below
     val feedStage = newFeedStage(spark, dir)
-    val staged = changes.select(cols.map { c =>
-      if (feedStage.isDefined) col(c)
-      else when(col("__txn_file").isNull, col(c)).as(c)
-    } ++ Seq("__txn_file", "__txn_pos", ChangeTypeCol).map(col): _*)
+    val staged = changes.select(
+      (cols ++ Seq("__txn_file", "__txn_pos", ChangeTypeCol)).map(col).toIndexedSeq: _*)
     val counts = org.apache.spark.sql.Observation()
     val stage = feedStage.getOrElse(s"$DvDir/.tmp-${newCommitId()}")
     def dropStage(): Unit = fs.delete(new Path(dir, stage), true)
@@ -3450,13 +3458,13 @@ object TxnLake {
         bloomBits = staged.bloomBits, renames = recRenames,
         tombstones = recTombstones, txnApp = staged.txn.map(_._1),
         txnVer = staged.txn.map(_._2), dataChange = staged.dataChange,
-        copied = staged.copied, identity = staged.identityNew)
-      if (publishRecord(fs, dir, rec)) {
+        copied = staged.copied, identity = staged.identityNew,
         // the feed was staged complete before the publish (every
-        // commit kind); it renames into the won version here, so
-        // readers never see a half-written entry and no feed work runs
-        // after the publish
-        publishFeed(fs, dir, staged.feedStage, rec.version)
+        // commit kind), and this record is its commit point: readers
+        // never see a half-written entry, and no feed work runs after
+        // the publish
+        feed = staged.feedStage)
+      if (publishRecord(fs, dir, rec)) {
         maybeCheckpoint(spark, fs, dir,
           Manifest(rec.version, rec.commitId, rec.partCol, rec.schemaDdl, rec.touched,
             // applyRecord keeps a lazy head LAZY (dead-set fold) — the
@@ -3602,12 +3610,16 @@ object TxnLake {
   }
 
   /** The retention decision both [[vacuumLocked]] and [[vacuumDryRun]]
-    * share: which versions drop, which stay, and which data files / DV
-    * sidecar dirs the retained chain still references. Pure selection —
-    * reads the log, mutates nothing. */
-  private def vacuumSelection(fs: FileSystem, dir: String,
-                              versions: Seq[Long], keepVersions: Int)
-      : (Seq[Long], Seq[Long], Long, Set[String], Set[String]) = {
+    * share: which versions drop, which data files the retained chain
+    * still references, and the sidecar dirs to collect — every
+    * `_graft_dv` and `_graft_cdc` dir no retained version names
+    * (a file entry's `dv`, a record's `feed`) that is older than
+    * `cutoff`. Pure selection — reads the log, mutates nothing. */
+  private case class VacuumPlan(dropV: Seq[Long], minKeep: Long, referenced: Set[String],
+                                cutoff: Long, sidecarDirs: Seq[(Path, String)])
+
+  private def vacuumSelection(fs: FileSystem, dir: String, versions: Seq[Long],
+                              keepVersions: Int, graceMs: Long): VacuumPlan = {
     // named refs ([[tag]], clone pins) are a retention FLOOR: every
     // version >= the oldest pin keeps its records and files, whatever
     // `keepVersions` says — [[dropRef]] releases
@@ -3617,18 +3629,30 @@ object TxnLake {
     val (dropV, keepV) = sorted.partition(_ < keepFrom)
     val minKeep = keepV.head
     // ONE forward replay over the retained chain for the live-file set
-    // (and the deletion-vector dirs those versions still reference)
+    // and the deletion-vector dirs and feed entries it names
     var cur = resolveAt(fs, dir, minKeep).files
     val refBuilder = Set.newBuilder[String]
-    val dvRefBuilder = Set.newBuilder[String]
+    val dirRefBuilder = Set.newBuilder[String]
     refBuilder ++= cur.map(_.path)
-    dvRefBuilder ++= cur.flatMap(_.dv)
-    keepV.tail.foreach { v =>
-      cur = applyRecord(cur, readRecord(fs, manifestPath(dir, v)))
+    dirRefBuilder ++= cur.flatMap(_.dv)
+    keepV.foreach { v =>
+      val r = readRecord(fs, manifestPath(dir, v))
+      if (v > minKeep) cur = applyRecord(cur, r)
       refBuilder ++= cur.map(_.path)
-      dvRefBuilder ++= cur.flatMap(_.dv)
+      dirRefBuilder ++= cur.flatMap(_.dv) ++ r.feed
     }
-    (dropV, keepV, minKeep, refBuilder.result(), dvRefBuilder.result())
+    val dirRefs = dirRefBuilder.result()
+    val cutoff = System.currentTimeMillis() - graceMs
+    val sidecarDirs = Seq(DvDir -> "dv_sidecar_dir", CdcDir -> "cdc_dir").flatMap {
+      case (root, kind) =>
+        val rootPath = new Path(dir, root)
+        if (!fs.exists(rootPath)) Nil
+        else fs.listStatus(rootPath).toSeq.filter { st =>
+          !dirRefs.contains(s"$root/${st.getPath.getName}") &&
+            st.getModificationTime < cutoff
+        }.map(_.getPath -> kind)
+    }
+    VacuumPlan(dropV, minKeep, refBuilder.result(), cutoff, sidecarDirs)
   }
 
   /** `VACUUM ... DRY RUN`: everything [[vacuum]] WOULD remove right
@@ -3645,38 +3669,25 @@ object TxnLake {
     val (versions, ckpts) = listLog(fs, dir)
     import spark.implicits._
     if (versions.isEmpty) return Seq.empty[(String, String)].toDF("path", "kind")
-    val (dropV, _, minKeep, referenced, dvReferenced) =
-      vacuumSelection(fs, dir, versions, keepVersions)
+    val plan = vacuumSelection(fs, dir, versions, keepVersions, graceMs)
     val out = Seq.newBuilder[(String, String)]
-    dropV.foreach(v => out += manifestPath(dir, v).toString -> "log_record")
-    ckpts.filter(_ < minKeep).foreach { v =>
+    plan.dropV.foreach(v => out += manifestPath(dir, v).toString -> "log_record")
+    ckpts.filter(_ < plan.minKeep).foreach { v =>
       out += checkpointPath(dir, v).toString -> "checkpoint"
       if (fs.exists(ckptFilesPath(dir, v)))
         out += ckptFilesPath(dir, v).toString -> "checkpoint_files"
     }
-    val cutoff = System.currentTimeMillis() - graceMs
     val dataRoot = new Path(dir, DataDir)
     if (fs.exists(dataRoot)) fs.listStatus(dataRoot).foreach { cdir =>
       val it = fs.listFiles(cdir.getPath, true)
       while (it.hasNext) {
         val f = it.next()
         val rel = dataRel(f.getPath.toUri.getPath)
-        if (!referenced.contains(rel) && f.getModificationTime < cutoff)
+        if (!plan.referenced.contains(rel) && f.getModificationTime < plan.cutoff)
           out += f.getPath.toString -> "data_file"
       }
     }
-    val dvRoot = new Path(dir, DvDir)
-    if (fs.exists(dvRoot)) fs.listStatus(dvRoot).foreach { st =>
-      val rel = s"$DvDir/${st.getPath.getName}"
-      if (!dvReferenced.contains(rel) && st.getModificationTime < cutoff)
-        out += st.getPath.toString -> "dv_sidecar_dir"
-    }
-    val cdcRoot = new Path(dir, CdcDir)
-    if (fs.exists(cdcRoot)) fs.listStatus(cdcRoot).foreach { st =>
-      val digits = st.getPath.getName.stripPrefix("v")
-      if (digits.nonEmpty && digits.forall(_.isDigit) && digits.toLong < minKeep)
-        out += st.getPath.toString -> "cdc_dir"
-    }
+    plan.sidecarDirs.foreach { case (p, kind) => out += p.toString -> kind }
     out.result().sorted.toDF("path", "kind")
   }
 
@@ -3684,8 +3695,8 @@ object TxnLake {
                            versions: Seq[Long], ckpts: Seq[Long],
                            keepVersions: Int, graceMs: Long,
                            assertOwned: () => Unit): Unit = {
-    val (dropV, _, minKeep, referenced, dvReferenced) =
-      vacuumSelection(fs, dir, versions, keepVersions)
+    val VacuumPlan(dropV, minKeep, referenced, cutoff, sidecarDirs) =
+      vacuumSelection(fs, dir, versions, keepVersions, graceMs)
     // retention-proof resolution: checkpoint the oldest retained
     // version BEFORE any older record disappears (derived data —
     // create-if-absent, a lost race is fine)
@@ -3727,7 +3738,6 @@ object TxnLake {
     // older than the grace window (an abandoned stage from a crashed
     // publisher, or a hidden checksum whose record vacuum dropped),
     // never while possibly in flight.
-    val sweepCutoff = System.currentTimeMillis() - graceMs
     // list through the RAW filesystem: ChecksumFileSystem.listStatus
     // hides every `.<name>.crc` path (its own checksum convention), so
     // the dot-name branch would never see the abandoned staging files
@@ -3743,18 +3753,18 @@ object TxnLake {
       // harmless (nothing reads claim paths) but collected here once
       // past the grace window, same discipline as abandoned stages
       if (n.startsWith(s"$VacuumLockName.claim.") &&
-          st.getModificationTime < sweepCutoff)
+          st.getModificationTime < cutoff)
         fs.delete(st.getPath, false)
       // a crashed publisher's abandoned stage: a `.tmp-` record file or
       // parquet-checkpoint payload dir that never renamed into place
       // (winners delete their stage in-line; grace covers in-flight)
-      else if (n.startsWith(".tmp-") && st.getModificationTime < sweepCutoff)
+      else if (n.startsWith(".tmp-") && st.getModificationTime < cutoff)
         rawFs.delete(st.getPath, true)
       // a payload dir whose HEADER never published (crash between the
       // rename and the header's create-if-absent): no header means no
       // reader can ever reference it — collect once past grace
       else if (n.matches("v\\d{8}\\.ckpt\\.files") &&
-          st.getModificationTime < sweepCutoff &&
+          st.getModificationTime < cutoff &&
           !fs.exists(new Path(st.getPath.getParent,
             n.stripSuffix(".files") + ".json")))
         fs.delete(st.getPath, true)
@@ -3766,7 +3776,7 @@ object TxnLake {
         } else {
           val hiddenBase = new Path(st.getPath.getParent,
             n.stripPrefix(".").stripSuffix(".crc"))
-          if (!rawFs.exists(hiddenBase) && st.getModificationTime < sweepCutoff)
+          if (!rawFs.exists(hiddenBase) && st.getModificationTime < cutoff)
             rawFs.delete(st.getPath, false)
         }
       }
@@ -3774,7 +3784,6 @@ object TxnLake {
     assertOwned()
     val dataRoot = new Path(dir, DataDir)
     if (fs.exists(dataRoot)) {
-      val cutoff = System.currentTimeMillis() - graceMs
       val commitDirs = fs.listStatus(dataRoot).map(_.getPath).toSeq
       val parMin = spark.conf
         .getOption("spark.graft.txnlake.vacuumParallelMinDirs")
@@ -3807,51 +3816,30 @@ object TxnLake {
           fs.delete(cpath, true)
       }
     }
-    // deletion-vector sidecars referenced by no retained version go the
-    // way of their data files (dir-granular — one sidecar dir per
-    // delete commit)
+    // deletion-vector sidecars and feed entries no retained version
+    // names go the way of their data files (dir-granular — one per
+    // commit): feed retention rides log retention, since the feed of a
+    // dropped version serves no retained consumer start point, and a
+    // crashed writer's entry, named by no record, is collected past
+    // grace like the log's abandoned stages
     assertOwned()
-    val dvRoot = new Path(dir, DvDir)
-    if (fs.exists(dvRoot)) {
-      val cutoff = System.currentTimeMillis() - graceMs
-      fs.listStatus(dvRoot).foreach { st =>
-        val rel = s"$DvDir/${st.getPath.getName}"
-        if (!dvReferenced.contains(rel) && st.getModificationTime < cutoff)
-          fs.delete(st.getPath, true)
-      }
-    }
-    // change-feed retention rides log retention: CDC of a dropped
-    // version serves no retained consumer start point
-    val cdcRoot = new Path(dir, CdcDir)
-    if (fs.exists(cdcRoot)) {
-      val cdcCutoff = System.currentTimeMillis() - graceMs
-      fs.listStatus(cdcRoot).foreach { st =>
-        val n = st.getPath.getName
-        val digits = n.stripPrefix("v")
-        if (digits.nonEmpty && digits.forall(_.isDigit) && digits.toLong < minKeep)
-          fs.delete(st.getPath, true)
-        // a crashed writer's abandoned feed stage (written but never
-        // renamed into its version): collect once past grace, the same
-        // discipline as the log's orphaned .tmp- stages
-        else if (n.startsWith(".tmp-") && st.getModificationTime < cdcCutoff)
-          fs.delete(st.getPath, true)
-      }
-    }
+    sidecarDirs.foreach { case (p, _) => fs.delete(p, true) }
   }
 
   // ---- internals ----
 
-  /** A fresh CHANGE-FEED STAGE for one commit — `_graft_cdc/.tmp-<id>`
+  /** A fresh CHANGE-FEED ENTRY for one commit — `_graft_cdc/c<id>`
     * when the table captures a feed ([[cdcEnabled]]), else None. Every
-    * feed-writing commit fills its stage BEFORE publishing: explicit
-    * change rows written by the caller, whole-file images through
-    * [[stageFeedImages]]. [[publishFeed]] renames it into the won
-    * version; an aborted commit drops it with the rest of its staging
-    * ([[dropStagedFiles]]); a crashed writer's stage is an orphan
-    * [[vacuum]] sweeps after its grace. The name is version-independent,
-    * so a commit that loses the version race and rebases keeps it. */
+    * feed-writing commit fills it BEFORE publishing: explicit change
+    * rows written by the caller, whole-file images through
+    * [[stageFeedImages]]. The record the commit publishes names it
+    * ([[CommitRecord.feed]]); an aborted commit drops it with the rest
+    * of its staging ([[dropStagedFiles]]); a crashed writer's entry is
+    * named by no record, an orphan [[vacuum]] collects after its grace.
+    * The name is version-independent, so a commit that loses the
+    * version race and rebases keeps it. */
   private def newFeedStage(spark: SparkSession, dir: String): Option[String] =
-    if (cdcEnabled(spark, dir)) Some(s"$CdcDir/.tmp-${newCommitId()}") else None
+    if (cdcEnabled(spark, dir)) Some(s"$CdcDir/c${newCommitId()}") else None
 
   /** Feed-file prefix per whole-file change type: readers derive the
     * `_change_type` of a byte-copied file from it
@@ -3873,10 +3861,11 @@ object TxnLake {
     * exactly the committed values — never a second evaluation of the
     * writer's input plan. Copies run from a small driver pool: on
     * object stores a FileSystem copy is a server-side COPY (no data
-    * bytes transit the driver). */
+    * bytes transit the driver). Returns whether the stage holds files:
+    * no image files, no entry for the record to name. */
   private def stageFeedImages(spark: SparkSession, dir: String, stage: String,
                               schema: StructType, renames: Map[String, String],
-                              images: (String, Seq[FileEntry])*): Unit = {
+                              images: (String, Seq[FileEntry])*): Boolean = {
     val explicit = images.flatMap { case (changeType, files) =>
       val (copy, read) =
         if (renames.isEmpty) files.partition(_.dv.isEmpty) else (Nil, files)
@@ -3887,6 +3876,7 @@ object TxnLake {
     }
     explicit.reduceOption(_ unionByName _)
       .foreach(_.write.mode(SaveMode.Append).parquet(s"$dir/$stage"))
+    images.exists(_._2.nonEmpty)
   }
 
   private def copyFeedFiles(spark: SparkSession, dir: String, stage: String,
@@ -3910,25 +3900,6 @@ object TxnLake {
     }.foreach(_.get())
     finally pool.shutdown()
   }
-
-  /** Rename a won commit's feed stage to `_graft_cdc/v<version>` — the
-    * ONE site that creates a feed version dir, called right after the
-    * publish by [[commitStaged]], [[truncate]] and [[create]]. The won
-    * version is fresh, so the target cannot exist. A stage nothing
-    * wrote to (a commit with no change rows) publishes no dir; a failed
-    * rename of a written stage would silently lose the entry — fail
-    * loudly. A crash between the publish and this rename leaves the
-    * version without its entry ([[changes]]' snapshot diff stays the
-    * recovery path). */
-  private def publishFeed(fs: FileSystem, dir: String, stage: Option[String],
-                          version: Long): Unit =
-    stage.foreach { rel =>
-      val tmp = new Path(dir, rel)
-      val vdir = new Path(dir, f"$CdcDir/v$version%08d")
-      if (fs.exists(tmp) && !fs.rename(tmp, vdir))
-        throw new IllegalStateException(
-          s"could not publish staged change feed $tmp -> $vdir")
-    }
 
   private[lake] def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -5004,6 +4975,7 @@ object TxnLake {
       val idn = root.putObject("identity")
       r.identity.toSeq.sortBy(_._1).foreach { case (c, v) => idn.put(c, v); () }
     }
+    r.feed.foreach(root.put("feed", _))
     addFileArray(root, "add", r.add, r.partCol)
     val rm = root.putArray("remove")
     r.remove.toSeq.sorted.foreach(rm.add)
@@ -5345,7 +5317,8 @@ object TxnLake {
       },
       identity = Option(root.get("identity")).fold(Map.empty[String, Long]) { idn =>
         idn.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-      })
+      },
+      feed = Option(root.get("feed")).map(_.asText()))
   }
 
   /** IN-COMMIT TIMESTAMP (Delta's ICT discipline): strictly monotonic

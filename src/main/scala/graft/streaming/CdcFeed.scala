@@ -1,36 +1,32 @@
 package graft.streaming
 
 import graft.lake.TxnLake
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
-/** Streaming CHANGE-DATA-CAPTURE feed over a [[TxnLake]] table — the
-  * incremental feed [[graft.lake.IncrementalView]] consumes in batch,
-  * delivered as a Structured Streaming source.
+/** The CHANGE-DATA-CAPTURE feed of a [[TxnLake]] table — the
+  * incremental feed [[graft.lake.IncrementalView]] consumes in batch
+  * and `readChangeFeed` ([[graft.lake.TxnCdcStream]]) streams.
   *
   * Every row-changing commit materializes its change rows in the full
   * preimage dialect (insert / update_preimage / update_postimage /
   * delete pre-images — subtractable, so the feed can maintain
-  * aggregates downstream) under `_graft_cdc/v<version>`
-  * at commit time, O(changed rows). Tailing the table is therefore a
-  * plain checkpointed parquet FILE STREAM over that directory — Spark's
-  * file source discovers each commit's new files, tracks them in the
-  * stream checkpoint (exactly-once within the engine), and re-globs per
-  * micro-batch, so new versions flow with no custom `MicroBatchStream`:
-  * the declarative source Spark already has expresses "tail the log
-  * version-by-version" exactly. Row-preserving commits (OPTIMIZE,
-  * Z-order) emit nothing — a CDC consumer never re-processes rewritten
-  * ride-along rows, which is what makes the feed O(logical change) while
-  * snapshot diffs are O(rewritten files).
+  * aggregates downstream) in its own `_graft_cdc/c<id>` entry at
+  * commit time, O(changed rows), and the commit's log record names the
+  * entry. Readers map versions to entries through the log
+  * ([[TxnLake.feedLog]]) and read the range as one parquet scan.
+  * Row-preserving commits (OPTIMIZE, Z-order) emit nothing — a CDC
+  * consumer never re-processes rewritten ride-along rows, which is
+  * what makes the feed O(logical change) while snapshot diffs are
+  * O(rewritten files).
   *
   * Scale shape at 100 TB: feed volume tracks the MUTATION rate, not
-  * table size; the stream scans only never-seen files (no listing of
-  * data dirs, no snapshot diff); and downstream apply is one
-  * partition-pruned transactional upsert + delete per micro-batch via
-  * [[applyCdc]] — the same idempotent discipline as
+  * table size; a read touches only the entries of its version range
+  * (no listing of data dirs, no snapshot diff); and downstream apply is
+  * one partition-pruned transactional upsert + delete per micro-batch
+  * via [[applyCdc]] — the same idempotent discipline as
   * [[UpsertSink.applyBatchTxn]], so replayed batches cannot drift the
   * replica.
   */
@@ -46,87 +42,74 @@ object CdcFeed {
       .add(TxnLake.ChangeTypeCol, StringType)
       .add(TxnLake.VersionCol, LongType)
 
-  private def feedGlob(dir: String): String = s"$dir/${TxnLake.CdcDir}/v*"
-
   /** The feed READ BARRIER at a column rename (Delta CDF's rule for
     * non-additive schema changes): feed entries keep the logical names
     * of their own version, and a reader binds one schema, so entries on
     * the far side of a [[TxnLake.renameColumn]] from `schemaVersion`
     * would read the renamed column as NULL. Fails with
     * [[CdcRenameBarrierException]] naming the rename's version when any
-    * of `entryVersions` sits across one. Metadata only. */
-  private[graft] def requireNoRenameBetween(spark: SparkSession, dir: String,
-                                            entryVersions: Seq[Long],
+    * entry of `entries` sits across one. `log` covers every version
+    * from the lowest of `entries` and `schemaVersion` to the highest.
+    * Metadata only. */
+  private[graft] def requireNoRenameBetween(dir: String, log: Seq[TxnLake.FeedVersion],
+                                            entries: Seq[TxnLake.FeedVersion],
                                             schemaVersion: Long): Unit = {
-    if (entryVersions.isEmpty) return
-    val names = TxnLake.columnNamesByVersion(spark, dir)
     def at(v: Long): Option[Map[String, String]] =
-      names.takeWhile(_._1 <= v).lastOption.map(_._2)
+      log.takeWhile(_.version <= v).lastOption.map(_.names)
     at(schemaVersion).foreach { target =>
       def differs(m: Map[String, String]): Boolean =
         m.exists { case (p, l) => target.get(p).exists(_ != l) }
-      entryVersions.distinct.sorted.foreach { v =>
-        if (at(v).exists(differs)) {
-          val (lo, hi) = (math.min(v, schemaVersion), math.max(v, schemaVersion))
-          val renamed = names.sliding(2).collectFirst {
-            case Seq((_, a), (u, b)) if u > lo && u <= hi && a != b => u
+      entries.foreach { e =>
+        if (differs(e.names)) {
+          val (lo, hi) = (math.min(e.version, schemaVersion),
+            math.max(e.version, schemaVersion))
+          val renamed = log.sliding(2).collectFirst {
+            case Seq(a, b) if b.version > lo && b.version <= hi && a.names != b.names =>
+              b.version
           }.getOrElse(hi)
-          throw new CdcRenameBarrierException(dir, renamed, v, schemaVersion)
+          throw new CdcRenameBarrierException(dir, renamed, e.version, schemaVersion)
         }
       }
     }
   }
 
-  /** Retained feed versions at or after `fromVersion`, with their
-    * dirs, ascending — one listing of the feed root. */
-  private def feedDirs(spark: SparkSession, dir: String,
-                       fromVersion: Long): Seq[(Long, String)] = {
-    val root = new Path(dir, TxnLake.CdcDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.matches("v\\d+"))
-      .map(st => (st.getPath.getName.drop(1).toLong, st.getPath.toString))
-      .filter(_._1 >= fromVersion)
-      .sortBy(_._1)
-  }
-
-  private def requireFeed(spark: SparkSession, dir: String): Unit = {
-    val root = new Path(dir, TxnLake.CdcDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root),
-      s"$dir has no ${TxnLake.CdcDir} feed — the table predates change capture; " +
-        "use TxnLake.changes for a snapshot diff")
-  }
-
-  /** Feed files never store `_commit_version`: every commit stages its
-    * entry before it knows its version and renames the stage to
-    * `v<N>` after the publish ([[TxnLake]] `publishFeed`), so the
-    * version comes from the `v<N>` dir name. Whole-file images (a
-    * create's, append's or overwrite's inserts, an overwrite's or
-    * TRUNCATE's deletes, UPDATE's post-images) are byte copies of data
-    * files ([[TxnLake]] `stageFeedImages` — zero write amplification),
-    * so they carry no `_change_type` either: the schema-by-name read
-    * null-fills both and this projection derives them — the type from
-    * the controlled basename prefix (`ins_*` = 'insert', `del_*` =
-    * 'delete', `upd_*` = 'update_postimage'; anchored on the basename
-    * so a table PATH containing either substring cannot flip it).
-    * Explicitly-written change rows keep their stored `_change_type`,
-    * and entries written with `_commit_version` baked in (the layout
-    * of older feed dirs) keep theirs — both coalesces are no-ops
-    * there. */
-  private[graft] def derive(df: DataFrame): DataFrame =
-    df.withColumn("__cdc_file", col("_metadata.file_path"))
-      .withColumn(TxnLake.VersionCol, coalesce(col(TxnLake.VersionCol),
-        regexp_extract(col("__cdc_file"),
-          "/" + TxnLake.CdcDir + "/v(\\d+)/", 1).cast("long")))
+  /** One parquet scan of the feed `entries` under `schema`. Feed files
+    * never store `_commit_version`: an entry is staged before its commit
+    * knows its version, and the record that publishes it names it, so
+    * the version comes from a driver-built map from entry name to
+    * version. Whole-file images (a create's, append's or overwrite's
+    * inserts, an overwrite's or TRUNCATE's deletes, UPDATE's
+    * post-images) are byte copies of data files ([[TxnLake]]
+    * `stageFeedImages` — zero write amplification), so they carry no
+    * `_change_type` either: the schema-by-name read null-fills it and
+    * this projection derives it from the controlled basename prefix
+    * (`ins_*` = 'insert', `del_*` = 'delete', `upd_*` =
+    * 'update_postimage'; anchored on the basename so a table PATH
+    * containing either substring cannot flip it). Explicitly-written
+    * change rows keep their stored `_change_type`. */
+  private[graft] def readFeed(spark: SparkSession, dir: String,
+                              entries: Seq[TxnLake.FeedVersion],
+                              schema: StructType): DataFrame = {
+    val located = entries.flatMap(e => e.entry.map(_ -> e.version))
+    if (located.isEmpty)
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    // entries are flat dirs with commit-unique names: a file's parent
+    // dir name keys its version (cut with substring_index — a regex
+    // anchored at the path's end backtracks through every segment and
+    // doubled the scan's cost)
+    val versionOf = located.map { case (e, v) => e.substring(e.lastIndexOf('/') + 1) -> v }
+    val file = col("_metadata.file_path")
+    spark.read.schema(schema).parquet(located.map(e => s"$dir/${e._1}"): _*)
+      .withColumn(TxnLake.VersionCol, typedLit(versionOf.toMap).apply(
+        substring_index(substring_index(file, "/", -2), "/", 1)))
       .withColumn(TxnLake.ChangeTypeCol,
         coalesce(col(TxnLake.ChangeTypeCol),
-          when(regexp_extract(col("__cdc_file"),
-            "/del_\\d+\\.parquet$", 0) =!= "", lit("delete"))
-            .when(regexp_extract(col("__cdc_file"),
-              "/upd_\\d+\\.parquet$", 0) =!= "", lit("update_postimage"))
+          when(regexp_extract(file, "/del_\\d+\\.parquet$", 0) =!= "", lit("delete"))
+            .when(regexp_extract(file, "/upd_\\d+\\.parquet$", 0) =!= "",
+              lit("update_postimage"))
             .otherwise(lit("insert"))))
-      .drop("__cdc_file")
+  }
 
   /** Batch read of the feed: every retained change from `fromVersion`
     * to `toVersion` (the head when negative), one row per changed row
@@ -136,64 +119,12 @@ object CdcFeed {
     * [[CdcRenameBarrierException]] ([[requireNoRenameBetween]]). */
   def batch(spark: SparkSession, dir: String, fromVersion: Long = 0L,
             toVersion: Long = -1L): DataFrame = {
-    requireFeed(spark, dir)
-    val head = TxnLake.currentVersion(spark, dir)
-    val end = if (toVersion >= 0) math.min(toVersion, head) else head
-    // ONE driver listing resolves the v-dirs, and the read takes the
-    // CONCRETE dir list instead of the glob: an empty feed early-returns
-    // (the glob would throw), version pruning drops pre-cutoff dirs
-    // before the scan ever lists their files, and a multi-path read
-    // skips Spark's FileStreamSink metadata probe — which, fed the
-    // glob, logged a FileNotFoundException stack trace per read
-    val vDirs = feedDirs(spark, dir, fromVersion).filter(_._1 <= end)
-    if (vDirs.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf(spark, dir))
-    requireNoRenameBetween(spark, dir, vDirs.map(_._1), end)
-    val schema = schemaOf(spark, dir, if (end == head) -1L else end)
-    derive(spark.read.schema(schema).parquet(vDirs.map(_._2).toIndexedSeq: _*))
-      .filter(col(TxnLake.VersionCol) >= fromVersion)
-  }
-
-  /** The feed as a streaming source. `maxFilesPerTrigger` caps each
-    * micro-batch's file intake (backfill pacing); version ordering
-    * within the stream follows file order (the v-dirs sort by version).
-    * Pair with [[applyCdc]] in `foreachBatch` — or any stateful
-    * pipeline — and the checkpoint makes delivery exactly-once
-    * end-to-end against an idempotent sink.
-    *
-    * A LATE-ATTACHING consumer picks its replay point with
-    * `startingVersion` (changes of that commit and later — Delta CDF's
-    * option of the same name) or `startingTimestamp` (the first commit
-    * whose IN-COMMIT timestamp is at or after it — resolved through
-    * the ICT in each log record, so the boundary survives file-mtime
-    * rewrites; epoch millis). Mutually exclusive; default replays the
-    * whole retained feed. The cutoff rides the per-row
-    * `_commit_version`, so the stream's first batch lists the retained
-    * feed dirs once and discards pre-cutoff rows; every later batch
-    * touches only never-seen files.
-    *
-    * Retained entries across a column rename from the head fail the
-    * start ([[requireNoRenameBetween]]). A rename committed while the
-    * stream runs is not seen by this file stream; the version-granular
-    * `readChangeFeed` source ([[graft.lake.TxnCdcStream]]) checks every
-    * batch. */
-  def stream(spark: SparkSession, dir: String,
-             maxFilesPerTrigger: Option[Int] = None,
-             startingVersion: Option[Long] = None,
-             startingTimestamp: Option[Long] = None): DataFrame = {
-    requireFeed(spark, dir)
-    require(startingVersion.isEmpty || startingTimestamp.isEmpty,
-      "startingVersion and startingTimestamp are mutually exclusive")
-    val from = startingVersion.orElse(
-      startingTimestamp.map(firstVersionAtOrAfter(spark, dir, _)))
-    val head = TxnLake.currentVersion(spark, dir)
-    requireNoRenameBetween(spark, dir,
-      feedDirs(spark, dir, from.getOrElse(0L)).map(_._1), head)
-    val reader = spark.readStream.schema(schemaOf(spark, dir))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val df = derive(reader.parquet(feedGlob(dir)))
-    from.fold(df)(v => df.filter(col(TxnLake.VersionCol) >= v))
+    val log = TxnLake.feedLog(spark, dir, fromVersion,
+      if (toVersion >= 0) toVersion else Long.MaxValue)
+    val end = log.lastOption.fold(-1L)(_.version)
+    val entries = log.filter(_.entry.isDefined)
+    requireNoRenameBetween(dir, log, entries, end)
+    readFeed(spark, dir, entries, schemaOf(spark, dir, if (toVersion < 0) -1L else end))
   }
 
   /** Parse a `startingTimestamp` OPTION value — Delta accepts both a
@@ -277,7 +208,8 @@ object CdcFeed {
     }
   }
 
-  /** One-call replication: tail `sourceDir`'s feed and maintain a
+  /** One-call replication: tail `sourceDir`'s feed through
+    * `readChangeFeed` (whole commits per micro-batch) and maintain a
     * transactional replica at `targetDir`. AvailableNow by default so
     * backfills drain and stop; pass `oneShot = false` for a continuous
     * tail. The replica equals the source snapshot at every drained
@@ -285,7 +217,8 @@ object CdcFeed {
   def replicate(spark: SparkSession, sourceDir: String, targetDir: String,
                 key: String, partCol: String, checkpointDir: String,
                 oneShot: Boolean = true): StreamingQuery = {
-    val writer = stream(spark, sourceDir).writeStream
+    val writer = spark.readStream.format("graft-txn").option("readChangeFeed", "true")
+      .load(sourceDir).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyCdc(batch, targetDir, key, partCol)

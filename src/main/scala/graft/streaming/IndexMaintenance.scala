@@ -13,8 +13,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * lake; the serving index follows, never rebuilding). ss12 pins the
   * per-call update API; this object wires the STREAM end to end:
   *
-  *   commits → `_graft_cdc` feed → [[CdcFeed.stream]] (checkpointed)
-  *     → [[applyBatch]] → [[Similarity.updateIvfIndex]]
+  *   commits → `_graft_cdc` feed → `readChangeFeed` (checkpointed,
+  *     whole commits per micro-batch) → [[applyBatch]]
+  *     → [[Similarity.updateIvfIndex]]
   *
   * Scale shape: each commit's work is O(its changed rows + their
   * cells' postings) — the feed carries only changed rows, the probe
@@ -44,12 +45,10 @@ object IndexMaintenance {
     * pay 100 touched-cell overwrite rounds for state the last writes
     * fully determine.
     * `update_preimage` rows are deliberately ignored (the
-    * [[CdcFeed.applyCdc]] discipline): a micro-batch boundary can
-    * split one commit's pre- and post-image FILES across batches, and
-    * a preimage-driven remove arriving after its postimage's batch
-    * would delete the row the update just placed — id-keyed replace
-    * needs no pairing, so application is order-independent below
-    * version granularity. Replays (foreachBatch is at-least-once)
+    * [[CdcFeed.applyCdc]] discipline): id-keyed replace needs no
+    * pairing of pre- and post-images, so application holds for any
+    * batch of feed rows, not only the whole-commit batches
+    * `readChangeFeed` delivers. Replays (foreachBatch is at-least-once)
     * re-land the same posting instead of duplicating it: checkpoint +
     * idempotent application give exactly-once index state. */
   def applyBatch(batch: DataFrame, indexDir: String): Unit = {
@@ -76,15 +75,17 @@ object IndexMaintenance {
     * `indexDir`. AvailableNow by default (drain pending commits and
     * stop — the backfill/catch-up shape); `oneShot = false` tails
     * continuously. `startingVersion` is the attach point — typically
-    * the first commit AFTER the snapshot the index was built from. */
+    * the first commit AFTER the snapshot the index was built from;
+    * `maxVersionsPerTrigger` paces a backfill, whole commits per
+    * micro-batch. */
   def maintain(spark: SparkSession, sourceDir: String, indexDir: String,
                checkpointDir: String, startingVersion: Option[Long] = None,
-               maxFilesPerTrigger: Option[Int] = None,
+               maxVersionsPerTrigger: Option[Int] = None,
                oneShot: Boolean = true): StreamingQuery = {
-    val writer = CdcFeed.stream(spark, sourceDir,
-        maxFilesPerTrigger = maxFilesPerTrigger,
-        startingVersion = startingVersion)
-      .writeStream
+    val reader = spark.readStream.format("graft-txn").option("readChangeFeed", "true")
+    startingVersion.foreach(v => reader.option("startingVersion", v))
+    maxVersionsPerTrigger.foreach(n => reader.option("maxVersionsPerTrigger", n.toLong))
+    val writer = reader.load(sourceDir).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         applyBatch(batch, indexDir)

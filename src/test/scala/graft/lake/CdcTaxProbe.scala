@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev driver: CHANGE-FEED WRITE TAX. Every commit on a changeFeed
-  * table fills a feed stage before it publishes (explicit change rows
-  * and/or byte copies) and renames it into its version after; this
+  * table fills a feed entry before it publishes (explicit change rows
+  * and/or byte copies), which the published record names; this
   * probe isolates that cost by running the same update/delete/merge
   * sequence with and without the feed:
   *

@@ -19,8 +19,8 @@ object FeedStagingProbe {
 }
 
 /** The change feed's one lifecycle: every commit stages its feed entry
-  * before the publish and renames it into the won version; an aborted
-  * commit drops everything its staging wrote. */
+  * before the publish and the record it publishes names the entry; an
+  * aborted commit drops everything its staging wrote. */
 class FeedStagingSpec extends AnyFunSuite with SparkTestSession {
 
   import spark.implicits._

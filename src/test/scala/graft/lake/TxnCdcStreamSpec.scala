@@ -95,6 +95,27 @@ class TxnCdcStreamSpec extends AnyFunSuite with SparkTestSession {
       .select(col("_change_type")).head().getString(0) === "insert")
   }
 
+  test("a renameColumn committed while the stream runs fails its next batch " +
+      "at the rename barrier") {
+    val dir = mkHistory()
+    val q = spark.readStream.format("graft-txn")
+      .option("readChangeFeed", "true").load(dir)
+      .writeStream.format("memory").queryName("cdc_midrun_rename")
+      .option("checkpointLocation", fresh("ck5")).start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table("cdc_midrun_rename").count() === CdcFeed.batch(spark, dir).count())
+      TxnLake.renameColumn(spark, dir, "v", "w")
+      TxnLake.append(spark, dir, Seq((9L, "p1", 90L)).toDF("id", "part", "w"))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      val barrier = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case b: graft.streaming.CdcRenameBarrierException => b }
+      assert(barrier.map(b => (b.renameVersion, b.entryVersion, b.schemaVersion)) ===
+        Some((4L, 5L, 3L)), e)
+    } finally q.stop()
+  }
+
   test("a table without a change feed refuses the option loudly") {
     val dir = fresh("nofeed")
     TxnLake.create(spark, dir, Seq((1L, "p0", 1L)).toDF("id", "part", "v"), "part")

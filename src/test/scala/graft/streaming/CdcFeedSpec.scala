@@ -4,6 +4,7 @@ import graft.SparkTestSession
 import graft.lake.TxnLake
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -11,8 +12,8 @@ import java.nio.file.Files
 /** The commit-time change feed vs its two independent counterparts:
   * the snapshot-diff [[TxnLake.changes]] (post-hoc file diff — a
   * different computation of the same facts) and the streamed form of
-  * the feed itself (stream == batch), plus downstream replication with
-  * replay idempotence. */
+  * the feed itself (the `readChangeFeed` stream == batch), plus
+  * downstream replication with replay idempotence. */
 class CdcFeedSpec extends AnyFunSuite with SparkTestSession {
 
   private def freshDir(prefix: String): String =
@@ -32,6 +33,22 @@ class CdcFeedSpec extends AnyFunSuite with SparkTestSession {
     TxnLake.delete(spark, dir, Seq(1L, 6L).toDF("id"), "id")
     dir
   }
+
+  /** Drain the `readChangeFeed` stream of `dir`, with the reader
+    * `options`, into the memory table `name` and return it. */
+  private def drainFeed(dir: String, name: String,
+                        options: (String, String)*): DataFrame = {
+    val reader = spark.readStream.format("graft-txn").option("readChangeFeed", "true")
+    options.foreach { case (k, v) => reader.option(k, v) }
+    reader.load(dir).writeStream.format("memory").queryName(name)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    spark.table(name)
+  }
+
+  /** Messages along `t`'s cause chain. */
+  private def messages(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .flatMap(c => Option(c.getMessage)).toSeq
 
   private def changeSet(df: DataFrame): Set[(Long, String, String, String, Long)] =
     df.collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("name"),
@@ -139,19 +156,11 @@ class CdcFeedSpec extends AnyFunSuite with SparkTestSession {
       "part", changeFeed = true)                                        // v0
     TxnLake.renameColumn(spark, dir, "name", "label")                   // v1
     TxnLake.append(spark, dir, Seq((2L, "b", "p1")).toDF("id", "label", "part")) // v2
-    def barrier(read: => Unit): CdcRenameBarrierException =
-      intercept[CdcRenameBarrierException](read)
-    val e = barrier(CdcFeed.batch(spark, dir).collect())
+    val e = intercept[CdcRenameBarrierException](CdcFeed.batch(spark, dir).collect())
     assert(e.renameVersion === 1L && e.entryVersion === 0L && e.schemaVersion === 2L)
     assert(e.getMessage.contains("version 1"))
-    assert(barrier(CdcFeed.stream(spark, dir)).renameVersion === 1L)
-    val q = spark.readStream.format("graft-txn").option("readChangeFeed", "true")
-      .load(dir).writeStream.format("memory").queryName("cdc_rename_barrier")
-      .option("checkpointLocation", freshDir("graft_cdc_rename_ck"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
     val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
-      q.awaitTermination())
+      drainFeed(dir, "cdc_rename_barrier"))
     assert(Iterator.iterate(failed: Throwable)(_.getCause).takeWhile(_ != null)
       .exists(_.isInstanceOf[CdcRenameBarrierException]), failed)
     // either side alone reads every row in the names of its own version
@@ -161,51 +170,23 @@ class CdcFeedSpec extends AnyFunSuite with SparkTestSession {
       .select("id", "name").as[(Long, String)].collect().toSeq === Seq((1L, "a")))
   }
 
-  test("a feed entry with _commit_version stored in its files (the older " +
-      "layout) reads unchanged in the batch feed and the readChangeFeed stream") {
+  test("records name their entries; files store no _commit_version") {
     val dir = mutatedTable()
-    val want = rowsOf(CdcFeed.batch(spark, dir))
-    // rewrite v2 (the upsert) as older writers laid entries out:
-    // explicit rows with _change_type AND _commit_version in the files
-    val v2 = CdcFeed.batch(spark, dir).filter(col(TxnLake.VersionCol) === 2L)
-    val stored = spark.createDataFrame(
-      spark.sparkContext.parallelize(v2.collect().toSeq), v2.schema)
-    val v2Dir = new java.io.File(dir, TxnLake.CdcDir + "/v00000002")
-    org.apache.commons.io.FileUtils.deleteDirectory(v2Dir)
-    stored.write.parquet(v2Dir.getPath)
-    assert(spark.read.parquet(v2Dir.getPath).columns.contains(TxnLake.VersionCol))
-    assert(rowsOf(CdcFeed.batch(spark, dir)) === want)
-    val q = spark.readStream.format("graft-txn")
-      .option("readChangeFeed", "true").load(dir)
-      .writeStream.format("memory").queryName("cdc_stored_version")
-      .option("checkpointLocation", freshDir("graft_cdc_stored_ck"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assert(rowsOf(spark.table("cdc_stored_version")) === want)
-  }
-
-  test("new feed files store no _commit_version: it comes from the v<N> dir") {
-    val dir = mutatedTable()
-    val vDirs = new java.io.File(dir, TxnLake.CdcDir).listFiles()
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-    assert(vDirs.map(_.getName).sorted.toSeq ===
-      Seq("v00000000", "v00000001", "v00000002", "v00000003"))
-    vDirs.foreach(d => assert(
-      !spark.read.parquet(d.getPath).columns.contains(TxnLake.VersionCol), d.getName))
-    // every stage was renamed into its version: none is left behind
+    val log = TxnLake.feedLog(spark, dir)
+    assert(log.map(_.version) === Seq(0L, 1L, 2L, 3L))
+    val entries = log.flatMap(_.entry)
+    assert(entries.size === 4 && entries.forall(_.matches(TxnLake.CdcDir + "/c[0-9a-f]+")),
+      entries)
+    // every dir under the feed root is an entry some record names
     assert(new java.io.File(dir, TxnLake.CdcDir).list().toSeq.sorted ===
-      vDirs.map(_.getName).sorted.toSeq)
+      entries.map(_.stripPrefix(TxnLake.CdcDir + "/")).sorted)
+    entries.foreach(e => assert(
+      !spark.read.parquet(s"$dir/$e").columns.contains(TxnLake.VersionCol), e))
   }
 
   test("streamed feed equals the batch feed (stream == batch)") {
     val dir = mutatedTable()
-    val q = CdcFeed.stream(spark, dir, maxFilesPerTrigger = Some(2))
-      .writeStream.format("memory").queryName("cdc_feed_stream")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assert(changeSet(spark.table("cdc_feed_stream")) ===
+    assert(changeSet(drainFeed(dir, "cdc_feed_stream", "maxVersionsPerTrigger" -> "2")) ===
       changeSet(CdcFeed.batch(spark, dir)))
   }
 
@@ -251,15 +232,16 @@ class CdcFeedSpec extends AnyFunSuite with SparkTestSession {
     val rebuild = IncrementalView.build(TxnLake.read(spark, dir), g, sums)
     assert(viewSet(batchFold) === viewSet(rebuild))
     assert(viewSet(rebuild) === Set(("p1", 2L, 35L), ("p2", 1L, 40L), ("p3", 1L, 50L)))
-    // the STREAMED fold: one commit's files per micro-batch, folded in
+    // the STREAMED fold: one commit per micro-batch, folded in
     // foreachBatch — the continuous MV-maintenance deployment shape
     var view = empty.localCheckpoint(true)
-    val q = CdcFeed.stream(spark, dir, maxFilesPerTrigger = Some(1))
+    val q = spark.readStream.format("graft-txn").option("readChangeFeed", "true")
+      .option("maxVersionsPerTrigger", "1").load(dir)
       .writeStream.option("checkpointLocation", freshDir("graft_cdc_mv_ckpt"))
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         view = IncrementalView.applyChanges(view, b, g, sums).localCheckpoint(true)
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     assert(viewSet(view) === viewSet(rebuild))
@@ -275,11 +257,7 @@ class CdcFeedSpec extends AnyFunSuite with SparkTestSession {
 
   test("late-attach startingVersion replays exactly that suffix (stream == batch)") {
     val dir = fiveCommitTable()
-    val q = CdcFeed.stream(spark, dir, startingVersion = Some(2L))
-      .writeStream.format("memory").queryName("cdc_feed_sv")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainFeed(dir, "cdc_feed_sv", "startingVersion" -> "2")
     assert(changeSet(spark.table("cdc_feed_sv")) ===
       changeSet(CdcFeed.batch(spark, dir, fromVersion = 2L)))
     // pinned: nothing from v0/v1, everything from v2 on
@@ -296,20 +274,17 @@ class CdcFeedSpec extends AnyFunSuite with SparkTestSession {
       .map(r => r.getLong(0) -> r.getTimestamp(1).getTime).toMap
     // ICTs are strictly monotonic, so v3's own ICT is a deterministic
     // boundary: exactly versions 3 and 4 are at-or-after it
-    val q = CdcFeed.stream(spark, dir, startingTimestamp = Some(ict(3L)))
-      .writeStream.format("memory").queryName("cdc_feed_st")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    assert(changeSet(spark.table("cdc_feed_st")) ===
+    assert(changeSet(drainFeed(dir, "cdc_feed_st",
+      "startingTimestamp" -> ict(3L).toString)) ===
       changeSet(CdcFeed.batch(spark, dir, fromVersion = 3L)))
     // past the newest commit there is nothing to replay — refuse loudly
-    val e = intercept[IllegalArgumentException](
-      CdcFeed.stream(spark, dir, startingTimestamp = Some(ict(4L) + 1L)))
-    assert(e.getMessage.contains("no commit at or after"))
+    val e = intercept[Exception](drainFeed(dir, "cdc_feed_st_late",
+      "startingTimestamp" -> (ict(4L) + 1L).toString))
+    assert(messages(e).exists(_.contains("no commit at or after")), messages(e))
     // the two attach options are mutually exclusive
-    intercept[IllegalArgumentException](CdcFeed.stream(spark, dir,
-      startingVersion = Some(1L), startingTimestamp = Some(ict(2L))))
+    val both = intercept[Exception](drainFeed(dir, "cdc_feed_st_both",
+      "startingVersion" -> "1", "startingTimestamp" -> ict(2L).toString))
+    assert(messages(both).exists(_.contains("mutually exclusive")), messages(both))
   }
 
   test("change capture is opt-in: a default table pays nothing and has no feed") {
@@ -335,7 +310,8 @@ class CdcFeedSpec extends AnyFunSuite with SparkTestSession {
       "part", changeFeed = true)
     val dataFiles = TxnLake.detail(spark, dir).select("path").collect()
       .map(r => new java.io.File(dir, r.getString(0)))
-    val feedFiles = new java.io.File(dir, TxnLake.CdcDir + "/v00000000").listFiles()
+    val v0 = TxnLake.feedLog(spark, dir).head.entry.get
+    val feedFiles = new java.io.File(dir, v0).listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(feedFiles.nonEmpty)
     // every feed file's bytes equal SOME staged data file's bytes

@@ -51,7 +51,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with SparkTestSession {
     val (dir, ix, root) = scriptedHistory()
     IndexMaintenance.maintain(spark, dir, ix,
         checkpointDir = root.resolve("ckpt").toString,
-        startingVersion = Some(1L), maxFilesPerTrigger = Some(1))
+        startingVersion = Some(1L), maxVersionsPerTrigger = Some(1))
       .awaitTermination()
 
     // control: the SAME deterministic build, then the whole feed
