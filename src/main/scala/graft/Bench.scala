@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   // Locale.ROOT: the f-interpolator is locale-sensitive — a comma-decimal
@@ -9,24 +8,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match the dev-probe condition (ClusterProbe.scala): lets AQE
-      // re-plan on top of cached frames instead of pinning their
-      // pre-AQE output partitioning — the one config the dd07 dev
-      // timings had that graded runs lacked (VERDICT r7 #1)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // lake manifest rowCount → plan stats (graft.lake.TxnCboStats)
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.lake.TxnCboStats.install(spark)
-    graft.lake.GeneratedPartitionPruning.install(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = LocalSession(cpus)
     // Warm the session (codegen, parquet footer reads, shuffle machinery)
     // so the first measured query isn't charged ~4s of JVM startup.
     spark.range(1000000).selectExpr("sum(id)").collect()

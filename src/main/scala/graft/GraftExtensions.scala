@@ -1,10 +1,8 @@
 package graft
 
-import graft.functions.{CosineSimilarity, ShingleHashCombine, StringPolyHash, TokenHashes, TopKOrderedAgg}
-import graft.ingest.WktNormalizeExpr
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: installs the engine's custom Catalyst
   * expressions as PERMANENT functions at session build time —
@@ -16,8 +14,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * This is the deployment-grade registration path: every session on the
   * cluster gets `wkt_normalize` / `cosine_similarity` / `top_k_by` in
   * SQL with no per-session setup. [[graft.functions.GraftFunctions]]
-  * remains the per-session (temp-function) alternative for notebooks
-  * attached to an already-running session.
+  * holds the function table and remains the per-session
+  * (temp-function) alternative for notebooks attached to an
+  * already-running session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -36,43 +35,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL DML statements (UPDATE/DELETE/MERGE INTO) on graft-txn tables
     ext.injectParser((session, delegate) =>
       new graft.plans.GraftSqlParser(session, delegate))
-    ext.injectFunction((
-      FunctionIdentifier("wkt_normalize"),
-      new ExpressionInfo(WktNormalizeExpr.getClass.getName, "wkt_normalize"),
-      (exprs: Seq[Expression]) => WktNormalizeExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(CosineSimilarity.getClass.getName, "cosine_similarity"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("string_poly_hash"),
-      new ExpressionInfo(StringPolyHash.getClass.getName, "string_poly_hash"),
-      (exprs: Seq[Expression]) => StringPolyHash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("token_hashes"),
-      new ExpressionInfo(TokenHashes.getClass.getName, "token_hashes"),
-      (exprs: Seq[Expression]) => TokenHashes(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(ShingleHashCombine.getClass.getName, "shingle_hashes"),
-      (exprs: Seq[Expression]) => {
-        val w = exprs(1) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"shingle_hashes width must be an integer literal, got $other")
-        }
-        ShingleHashCombine(exprs.head, w)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("top_k_by"),
-      new ExpressionInfo(TopKOrderedAgg.getClass.getName, "top_k_by"),
-      (exprs: Seq[Expression]) => {
-        val k = exprs(2) match {
-          case Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"top_k_by k must be an integer literal, got $other")
-        }
-        TopKOrderedAgg(exprs(0), exprs(1), k).toAggregateExpression()
-      }))
+    graft.functions.GraftFunctions.builders.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls, name), build))
+    }
   }
 }

@@ -99,19 +99,7 @@ object ScaleBench {
     val srcDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/graft_sf1")
     val copies = args.lift(2).flatMap(_.toIntOption).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // lake manifest rowCount → plan stats (graft.lake.TxnCboStats)
-      .config("spark.sql.cbo.planStats.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.lake.TxnCboStats.install(spark)
-    graft.lake.GeneratedPartitionPruning.install(spark)
+    val spark = LocalSession(32)
     val marker = new java.io.File(s"$outDir/_SCALE_READY")
     if (!marker.exists()) {
       synthesize(spark, srcDir, outDir, copies)

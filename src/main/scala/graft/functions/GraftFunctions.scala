@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.ingest.WktNormalizeExpr
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
 /** SQL registration for the engine's custom Catalyst expressions, so
   * `spark.sql` users get the same operators as the Column API:
@@ -11,36 +12,38 @@ import org.apache.spark.sql.SparkSession
   *
   * Registration is per-session (temp functions), the idiomatic extension
   * point short of a SparkSessionExtensions build — and what a catalog
-  * would do at startup. */
+  * would do at startup. [[graft.GraftExtensions]] injects the same
+  * [[builders]] as permanent functions. */
 object GraftFunctions {
+
+  /** Every SQL function: its name, the class its ExpressionInfo
+    * reports, and its builder over the call's arguments — the one table
+    * both registration paths iterate. */
+  private[graft] val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("wkt_normalize", WktNormalizeExpr.getClass.getName,
+      exprs => WktNormalizeExpr(exprs.head)),
+    ("cosine_similarity", CosineSimilarity.getClass.getName,
+      exprs => CosineSimilarity(exprs(0), exprs(1))),
+    ("string_poly_hash", StringPolyHash.getClass.getName,
+      exprs => StringPolyHash(exprs.head)),
+    ("token_hashes", TokenHashes.getClass.getName,
+      exprs => TokenHashes(exprs.head)),
+    ("shingle_hashes", ShingleHashCombine.getClass.getName, exprs =>
+      ShingleHashCombine(exprs.head, intLiteral(exprs(1), "shingle_hashes width"))),
+    ("top_k_by", TopKOrderedAgg.getClass.getName, exprs =>
+      TopKOrderedAgg(exprs(0), exprs(1), intLiteral(exprs(2), "top_k_by k"))
+        .toAggregateExpression()))
+
+  private def intLiteral(e: Expression, what: String): Int = e match {
+    case Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an integer literal, got $other")
+  }
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("wkt_normalize",
-      exprs => WktNormalizeExpr(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction("cosine_similarity",
-      exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction("string_poly_hash",
-      exprs => StringPolyHash(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction("token_hashes",
-      exprs => TokenHashes(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction("shingle_hashes",
-      { exprs =>
-        val w = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"shingle_hashes width must be an integer literal, got $other")
-        }
-        ShingleHashCombine(exprs.head, w)
-      }, "scala_udf")
-    registry.createOrReplaceTempFunction("top_k_by",
-      { exprs =>
-        val k = exprs(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"top_k_by k must be an integer literal, got $other")
-        }
-        TopKOrderedAgg(exprs(0), exprs(1), k).toAggregateExpression()
-      }, "scala_udf")
+    builders.foreach { case (name, _, build) =>
+      registry.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 }

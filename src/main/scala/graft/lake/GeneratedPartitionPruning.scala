@@ -28,8 +28,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * fold — parse, substitute, analyze over OneRowRelation, eval; no
   * jobs, no I/O), and conjoins the implied predicate
   * `pt IN (expr(v1), expr(v2), ...)` — which the existing manifest
-  * pruning ([[TxnFileIndex.listFiles]] / [[TxnDvRelation]]) then turns
-  * into file skips. Soundness leans on the declare-time discipline:
+  * pruning ([[TxnFileIndex.listFiles]], beneath [[TxnDvRelation]] too)
+  * then turns into file skips. Soundness leans on the declare-time discipline:
   * generated expressions are deterministic and evaluation-time-
   * independent (enforced in [[TxnLake.setGeneratedColumns]]), and
   * every committed row satisfies `pt <=> expr(src)` (validated
@@ -71,10 +71,15 @@ object GeneratedPartitionPruning extends Rule[LogicalPlan] with PredicateHelper 
         spark.experimental.extraOptimizations :+ this
   }
 
+  /** The lake table under `lr`: a `graft-txn` source relation. An
+    * engine-internal scan ([[TxnFileIndex]]`.table` false) abstains —
+    * the entries it reads may predate the declaration (an older
+    * version, a restore of one), where the invariant need not hold,
+    * and it carries the files' physical column names. */
   private def relInfo(lr: LogicalRelation): Option[(String, TxnLake.Manifest)] =
     lr.relation match {
       case h: HadoopFsRelation => h.location match {
-        case idx: TxnFileIndex => Some((idx.dir, idx.manifest))
+        case idx: TxnFileIndex if idx.table => Some((idx.dir, idx.manifest))
         case _ => None
       }
       case dv: TxnDvRelation => Some((dv.dir, dv.manifest))

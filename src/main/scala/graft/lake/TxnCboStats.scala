@@ -88,7 +88,9 @@ object TxnCboStats extends Rule[LogicalPlan] {
   private def statsFor(lr: LogicalRelation): Option[CatalogStatistics] = {
     val src: Option[(String, TxnLake.Manifest, Long)] = lr.relation match {
       case h: HadoopFsRelation => h.location match {
-        case idx: TxnFileIndex => Some((idx.dir, idx.manifest, idx.sizeInBytes))
+        // an internal scan's entries are no table: it emits raw rows
+        // below any DV filter and may be any subset of the files
+        case idx: TxnFileIndex if idx.table => Some((idx.dir, idx.manifest, idx.sizeInBytes))
         case _ => None
       }
       case dv: TxnDvRelation => Some((dv.dir, dv.manifest, dv.sizeInBytes))

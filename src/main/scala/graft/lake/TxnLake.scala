@@ -1193,17 +1193,18 @@ object TxnLake {
     // and readers derive the change-type/version columns — zero write
     // amplification through the engine. Staged before the publish and
     // named by v0's record, like every commit's feed.
+    val v0 = Manifest(0L, newCommitId(), partCol, df.schema.toDDL,
+      files.flatMap(_.parts).toSet, files, statsCol,
+      bloomCol = bloomCol, bloomBits = bloomBits)
     val feed = newFeedStage(spark, dir).filter(stageFeedImages(spark, dir, _,
-      df.schema, Map.empty, "insert" -> files))
-    val rec = CommitRecord(0L, newCommitId(), partCol, df.schema.toDDL,
-      files.flatMap(_.parts).toSet, files, Set.empty, statsCol,
+      v0, "insert" -> files))
+    val rec = CommitRecord(0L, v0.commitId, partCol, v0.schemaDdl,
+      v0.touched, files, Set.empty, statsCol,
       bloomCol = bloomCol, bloomBits = bloomBits, feed = feed)
     require(publishRecord(fs, dir, rec),
       s"concurrent create of txn table at $dir")
     // v0 checkpoint: cold resolution of a fresh table is one read
-    maybeCheckpoint(spark, fs, dir,
-      Manifest(0L, rec.commitId, partCol, rec.schemaDdl, rec.touched, files, statsCol,
-        bloomCol = bloomCol, bloomBits = bloomBits))
+    maybeCheckpoint(spark, fs, dir, v0)
   }
 
   /** Snapshot read of the latest committed version. The returned
@@ -1212,8 +1213,7 @@ object TxnLake {
   def read(spark: SparkSession, dir: String): DataFrame = {
     val m = resolve(fsOf(spark, dir), dir)
       .getOrElse(throw new IllegalArgumentException(s"$dir is not a txn table (no $LogDir)"))
-    readEntries(spark, dir, StructType.fromDDL(m.schemaDdl), m.files,
-      renames = m.renames)
+    readEntries(spark, dir, m, m.files)
   }
 
   /** TIME TRAVEL: snapshot read of a specific committed version. Every
@@ -1224,8 +1224,7 @@ object TxnLake {
     * loudly here rather than serving a partial file list. */
   def readVersion(spark: SparkSession, dir: String, version: Long): DataFrame = {
     val m = resolveAt(fsOf(spark, dir), dir, version)
-    readEntries(spark, dir, StructType.fromDDL(m.schemaDdl), m.files,
-      renames = m.renames)
+    readEntries(spark, dir, m, m.files)
   }
 
   /** Head snapshot version — the version [[read]] serves right now.
@@ -1422,12 +1421,10 @@ object TxnLake {
     // side reads with ITS OWN version's vectors applied)
     val fromKeys = mFrom.files.map(f => (f.path, f.dv)).toSet
     val toKeys = mTo.files.map(f => (f.path, f.dv)).toSet
-    val added = readEntries(spark, dir, schema,
-      mTo.files.filterNot(f => fromKeys.contains((f.path, f.dv))).sortBy(_.path),
-      renames = mTo.renames)
-    val dropped = readEntries(spark, dir, schema,
-      mFrom.files.filterNot(f => toKeys.contains((f.path, f.dv))).sortBy(_.path),
-      renames = mFrom.renames)
+    val added = readEntries(spark, dir, mTo,
+      mTo.files.filterNot(f => fromKeys.contains((f.path, f.dv))).sortBy(_.path))
+    val dropped = readEntries(spark, dir, mFrom,
+      mFrom.files.filterNot(f => toKeys.contains((f.path, f.dv))).sortBy(_.path))
     // both set-differences from ONE full-row shuffle (a signed-count
     // aggregate), instead of two independent exceptAll set ops: rows in
     // both sides (the ride-alongs, the bulk of rewritten files) net to 0
@@ -1628,8 +1625,7 @@ object TxnLake {
                          beforeCommit: () => Unit): Long = {
     val base = resolve(fsOf(spark, dir), dir)
       .getOrElse(throw new IllegalArgumentException(s"$dir is not a txn table (no $LogDir)"))
-    val live = readEntries(spark, dir, StructType.fromDDL(base.schemaDdl), base.files,
-      keepMeta = true, renames = base.renames)
+    val live = readEntries(spark, dir, base, base.files, keepMeta = true)
     val dvRel = s"$DvDir/c${newCommitId()}"
     val feedStage = newFeedStage(spark, dir)
     val doomed = stageDoomed(spark, dir,
@@ -1685,8 +1681,7 @@ object TxnLake {
     val logicalNames = schema.fieldNames.map(p => base.renames.getOrElse(p, p)).toSet
     set.keys.foreach(k => require(logicalNames.contains(k),
       s"no column '$k' in ${logicalNames.mkString(",")}"))
-    val live = readEntries(spark, dir, schema, base.files, keepMeta = true,
-      renames = base.renames)
+    val live = readEntries(spark, dir, base, base.files, keepMeta = true)
     // the predicate must be DETERMINISTIC (the check Delta performs for
     // UPDATE/DELETE): it is evaluated once to build the DV, and a
     // rand()-style predicate would otherwise doom one row set while
@@ -1713,8 +1708,8 @@ object TxnLake {
       case Some(rel) =>
         readStage(spark, dir, rel, live.schema).drop("__txn_file", "__txn_pos")
       case None =>
-        scanPositions(spark, dir, schema, base.files.filter(f => doomed.contains(f.path)),
-          doomed, keep = true, keepMeta = false, base.renames)
+        scanPositions(spark, dir, base, base.files.filter(f => doomed.contains(f.path)),
+          doomed, keep = true, keepMeta = false)
     }
     // post-images: SET over the matched logical rows, each result cast
     // back to the table's own column types (storeAssignmentPolicy
@@ -1747,7 +1742,7 @@ object TxnLake {
     // stage under the `upd_` prefix (read back in logical names on a
     // renamed table) — no second evaluation of the SET. The commit's
     // record then names the whole entry.
-    feedStage.foreach(stageFeedImages(spark, dir, _, schema, base.renames,
+    feedStage.foreach(stageFeedImages(spark, dir, _, base,
       "update_postimage" -> newFiles))
     beforeCommit()
     commitStaged(spark, dir, dvCommit(base, doomed, dvRel, newFiles, feedStage,
@@ -1992,7 +1987,7 @@ object TxnLake {
       // staged from the staged files (byte copies; a read-back in
       // logical names on a renamed table) — never a second run of `rows`
       val feedStage = newFeedStage(spark, dir).filter(stageFeedImages(spark, dir, _,
-        schema, base.renames, "insert" -> newFiles))
+        base, "insert" -> newFiles))
       Some(Staged(base.version, base.partCol, base.schemaDdl,
         newFiles.flatMap(_.parts).toSet, Set.empty, newFiles, base.statsCol,
         feedStage = feedStage,
@@ -2065,7 +2060,8 @@ object TxnLake {
     // whole-file images: byte copies where the bytes are the rows, one
     // read-back job for DV'd old files and renamed tables
     val feedStage = newFeedStage(spark, dir).filter(stageFeedImages(spark, dir, _,
-      schema, renames, "delete" -> base.files, "insert" -> newFiles))
+      base.copy(schemaDdl = schema.toDDL, renames = renames),
+      "delete" -> base.files, "insert" -> newFiles))
     commitStaged(spark, dir, Staged(base.version, base.partCol, schema.toDDL,
       base.files.flatMap(_.parts).toSet ++ newFiles.flatMap(_.parts),
       base.files.map(_.path).toSet, newFiles, base.statsCol,
@@ -2143,7 +2139,7 @@ object TxnLake {
     val pruned = (base.files.filter(_.parts.exists(fragmented.contains)) ++ legacy)
       .distinct
     val touched = pruned.flatMap(_.parts).toSet
-    val rewritten = readEntries(spark, dir, schema, pruned, renames = base.renames)
+    val rewritten = readEntries(spark, dir, base, pruned)
     // BYTE-TARGETED packing (Delta's optimize.targetFileSize), opt-in
     // via `spark.graft.txnlake.targetFileBytes`: the rows-per-file cap
     // derives from the PRUNED entries' own manifest rows/bytes ratio —
@@ -2210,8 +2206,7 @@ object TxnLake {
       s"ZORDER supports 1..6 columns, got ${zCols.size}")
     val base = resolve(fsOf(spark, dir), dir)
       .getOrElse(throw new IllegalArgumentException(s"$dir is not a txn table (no $LogDir)"))
-    val schema = StructType.fromDDL(base.schemaDdl)
-    val live = readEntries(spark, dir, schema, base.files, renames = base.renames)
+    val live = readEntries(spark, dir, base, base.files)
     zCols.foreach(c => require(live.columns.contains(c),
       s"z-order column '$c' not in ${live.columns.mkString(",")}"))
     val phys = toPhysical(live, base.renames)
@@ -2637,7 +2632,7 @@ object TxnLake {
       if (head.files.isEmpty) return // already empty
       val touched = head.files.flatMap(_.parts).toSet
       val feed = newFeedStage(spark, dir).filter(stageFeedImages(spark, dir, _,
-        StructType.fromDDL(head.schemaDdl), head.renames, "delete" -> head.files))
+        head, "delete" -> head.files))
       val rec = CommitRecord(head.version + 1, newCommitId(), head.partCol,
         head.schemaDdl, touched, Nil, head.files.map(_.path).toSet,
         head.statsCol, bloomCol = head.bloomCol,
@@ -3165,8 +3160,8 @@ object TxnLake {
     val renames = base.renames ++ added.collect { case (l, p) if l != p => p -> l }
     // the live snapshot with each row's identity, read once: the
     // classification joins it, and its rows become the pre-images
-    val live = readEntries(spark, dir, schema, base.files, keepMeta = true,
-      renames = renames)
+    val live = readEntries(spark, dir,
+      base.copy(schemaDdl = schema.toDDL, renames = renames), base.files, keepMeta = true)
     val target = live.drop("__txn_file", "__txn_pos")
     val cols = target.columns
     val aligned0 = castToTarget(updates, target)
@@ -3862,16 +3857,16 @@ object TxnLake {
     * writer's input plan. Copies run from a small driver pool: on
     * object stores a FileSystem copy is a server-side COPY (no data
     * bytes transit the driver). Returns whether the stage holds files:
-    * no image files, no entry for the record to name. */
+    * no image files, no entry for the record to name. `m` is the
+    * table the images are read in: its schema and renames. */
   private def stageFeedImages(spark: SparkSession, dir: String, stage: String,
-                              schema: StructType, renames: Map[String, String],
-                              images: (String, Seq[FileEntry])*): Boolean = {
+                              m: Manifest, images: (String, Seq[FileEntry])*): Boolean = {
     val explicit = images.flatMap { case (changeType, files) =>
       val (copy, read) =
-        if (renames.isEmpty) files.partition(_.dv.isEmpty) else (Nil, files)
+        if (m.renames.isEmpty) files.partition(_.dv.isEmpty) else (Nil, files)
       copyFeedFiles(spark, dir, stage, copy, FeedCopyPrefix(changeType))
       if (read.isEmpty) None
-      else Some(readEntries(spark, dir, schema, read, renames = renames)
+      else Some(readEntries(spark, dir, m, read)
         .withColumn(ChangeTypeCol, lit(changeType)))
     }
     explicit.reduceOption(_ unionByName _)
@@ -4541,38 +4536,20 @@ object TxnLake {
         col(c).as(inv.getOrElse(c, c))).toIndexedSeq: _*)
     }
 
-  /** Snapshot scan over an explicit entry list, planned through
-    * [[ExplicitEntriesIndex]]: file statuses come from each entry's
-    * recorded `bytes` and `mtime` (zero fs calls — a
-    * `spark.read.parquet(paths)` form would list every path on the
-    * driver per call, ~2 ms/file, on EVERY internal snapshot read of
-    * every commit op). Filter/column pushdown is unchanged: the
-    * relation is stock parquet behind a FileIndex. */
-  private def scanEntries(spark: SparkSession, dir: String, schema: StructType,
-                          entries: Seq[FileEntry]): DataFrame = {
-    val index = new ExplicitEntriesIndex(spark, new Path(dir), entries)
-    // deep-nullable = DataFrameReader's own discipline for user schemas
-    // (its private StructType.asNullable): an evolved column may be
-    // declared non-null, but files staged BEFORE the evolution lack it
-    // and must null-fill — the vectorized reader refuses a missing
-    // non-nullable column outright
-    def deepNullable(dt: DataType): DataType = dt match {
-      case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = deepNullable(f.dataType), nullable = true)))
-      case a: org.apache.spark.sql.types.ArrayType =>
-        a.copy(elementType = deepNullable(a.elementType), containsNull = true)
-      case m: org.apache.spark.sql.types.MapType =>
-        m.copy(keyType = deepNullable(m.keyType),
-          valueType = deepNullable(m.valueType), valueContainsNull = true)
-      case other => other
-    }
-    val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      index, index.partitionSchema,
-      deepNullable(schema).asInstanceOf[StructType], None,
-      new TxnReadOnlyParquetFormat, Map.empty[String, String])(spark)
+  /** Snapshot scan of `entries` (files of the table `m` describes),
+    * planned through [[TxnFileIndex]] — the one index every snapshot
+    * read shares: file statuses come from each entry's recorded
+    * `bytes` and `mtime` (zero fs calls), and predicates pushed into
+    * the scan prune files against the entries' partition values, zone
+    * maps and blooms. The scan carries the files' PHYSICAL column
+    * names; the [[toLogical]] projection sits above it. The list is
+    * handed over materialized, so an explicit list never takes the lazy
+    * parquet-checkpoint planning mode (its aggregate is a Spark job). */
+  private def scanEntries(spark: SparkSession, dir: String, m: Manifest,
+                          entries: Seq[FileEntry]): DataFrame =
     org.apache.spark.sql.graft.CatalystBridge.ofRows(spark,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
-  }
+      org.apache.spark.sql.execution.datasources.LogicalRelation(TxnFileIndex.relation(
+        spark, dir, m.copy(files = entries.toIndexedSeq), table = false)))
 
   /** Snapshot read of a set of manifest entries with their DELETION
     * VECTORS applied — the merge-on-read path. The sidecars the entries
@@ -4586,37 +4563,38 @@ object TxnLake {
     * [[optimize]]`(purgeDv = true)` rewrites the vectors away — the
     * read-amplification trade merge-on-read formats (Iceberg v2
     * positional deletes, Delta DVs) make. Entries without DVs take the
-    * plain vectorized-scan path untouched. */
-  private[lake] def readEntries(spark: SparkSession, dir: String, schema: StructType,
+    * plain vectorized-scan path untouched. `m` gives the schema, the
+    * renames and the pruning layout (partition, stats and bloom
+    * columns); `entries` are some of its files. */
+  private[lake] def readEntries(spark: SparkSession, dir: String, m: Manifest,
                                 entries: Seq[FileEntry],
-                                keepMeta: Boolean = false,
-                                renames: Map[String, String] = Map.empty): DataFrame =
-    scanPositions(spark, dir, schema, entries,
-      DeletionVectors.ofEntries(spark, dir, entries), keep = false, keepMeta, renames)
+                                keepMeta: Boolean = false): DataFrame =
+    scanPositions(spark, dir, m, entries,
+      DeletionVectors.ofEntries(spark, dir, entries), keep = false, keepMeta)
 
   /** Scan of `entries` filtered by the row positions in `vectors`
     * INSIDE the scan ([[DeletionVectors.filter]]): `keep = false` drops
     * them (a snapshot read), `keep = true` keeps only them (the rows a
     * just-staged sidecar dooms). `keepMeta` adds each row's identity,
     * `__txn_file` (table-relative path) and `__txn_pos` (row index). */
-  private def scanPositions(spark: SparkSession, dir: String, schema: StructType,
+  private def scanPositions(spark: SparkSession, dir: String, m: Manifest,
                             entries: Seq[FileEntry], vectors: DeletionVectors.Vectors,
-                            keep: Boolean, keepMeta: Boolean,
-                            renames: Map[String, String]): DataFrame = {
+                            keep: Boolean, keepMeta: Boolean): DataFrame = {
+    val schema = StructType.fromDDL(m.schemaDdl)
     val withMeta = if (!keepMeta) schema else StructType(schema.fields :+
       org.apache.spark.sql.types.StructField("__txn_file", org.apache.spark.sql.types.StringType) :+
       org.apache.spark.sql.types.StructField("__txn_pos", org.apache.spark.sql.types.LongType))
     if (entries.isEmpty)
       return toLogical(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], withMeta),
-        renames)
-    val scan = scanEntries(spark, dir, schema, entries)
+        m.renames)
+    val scan = scanEntries(spark, dir, m, entries)
     val live = if (vectors.isEmpty && !keep) scan
       else DeletionVectors.filter(scan, vectors, keep)
     toLogical(
       if (!keepMeta) live
       else live.withColumn("__txn_file", expr(dataRelSql("_metadata.file_path")))
         .withColumn("__txn_pos", col("_metadata.row_index")),
-      renames)
+      m.renames)
   }
 
   /** Write `df` as immutable files under a fresh `_graft_data/c<id>/`
@@ -4829,27 +4807,21 @@ object TxnLake {
     !(mx < lo) && !(mn > hi)
 
   /** ZONE-MAP range read: the snapshot restricted to `statsCol` ∈
-    * [lo, hi] (inclusive), opening ONLY files whose manifest min/max
-    * intersects the range — planning-time file skipping off commit
-    * metadata, no footer reads. Files without bounds (all-NULL stats or
-    * written before stats tracking) are kept conservatively; the
-    * predicate is re-applied to the survivors, so the result equals a
-    * full-scan filter regardless of pruning sharpness. */
+    * [lo, hi] (inclusive). The range is an ordinary filter over
+    * [[read]]'s frame; [[TxnFileIndex]] unwraps the monotone cast and
+    * opens ONLY files whose manifest bounds intersect it — planning-time
+    * file skipping off commit metadata, no footer reads. Files without
+    * bounds (all-NULL stats or written before stats tracking) are kept
+    * conservatively. */
   def readRange(spark: SparkSession, dir: String, lo: Double, hi: Double): DataFrame = {
     val m = resolve(fsOf(spark, dir), dir)
       .getOrElse(throw new IllegalArgumentException(s"$dir is not a txn table (no $LogDir)"))
     val sc = m.statsCol.getOrElse(throw new IllegalArgumentException(
       s"$dir tracks no stats column — create(..., statsCol = Some(...)) to enable zone maps"))
-    val keep = m.files.filter { f =>
-      (f.zmin, f.zmax) match {
-        case (Some(mn), Some(mx)) => boundsMayOverlap(mn, mx, lo, hi)
-        case _ => true
-      }
-    }
-    readEntries(spark, dir, StructType.fromDDL(m.schemaDdl), keep,
-        renames = m.renames)
-      .filter(col(sc).cast("double").between(lo, hi))
+    readEntries(spark, dir, m, m.files)
+      .filter(col(m.renames.getOrElse(sc, sc)).cast("double").between(lo, hi))
   }
+
 
   /** Abort cleanup for a lost commit: drop exactly the dirs THIS
     * commit's staging created ([[Staged.stagedDirs]]) — never a dir

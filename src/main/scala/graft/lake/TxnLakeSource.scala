@@ -3,18 +3,19 @@ package graft.lake
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, BoundReference, Cast, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNull, LessThan, LessThanOrEqual, Literal, Predicate => CatalystPredicate}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, EqualNullSafe, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNull, LessThan, LessThanOrEqual, Literal, Not, Predicate => CatalystPredicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graft.CatalystBridge
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider}
-import org.apache.spark.sql.types.{StructField, StructType, StringType, IntegerType, LongType, ShortType, ByteType, BooleanType, FloatType, DoubleType, DecimalType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType, StringType, IntegerType, LongType, ShortType, ByteType, BooleanType, FloatType, DoubleType, DecimalType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `spark.read.format("graft-txn").load(dir)` — the [[TxnLake]] commit
   * log surfaced as a first-class Spark data source, so lake snapshots
-  * compose with Catalyst on ANY predicate instead of only through the
-  * bespoke `TxnLake.read` / `readRange` API (and are reachable from
-  * pure SQL via `CREATE TABLE ... USING `graft-txn``).
+  * are reachable from pure SQL (`CREATE TABLE ... USING `graft-txn``)
+  * and from any Spark reader, not only through `TxnLake.read`.
   *
   * Architecture: a V1 `RelationProvider` returning a `HadoopFsRelation`
   * over [[TxnFileIndex]] — the same integration point the public
@@ -198,26 +199,16 @@ class TxnLakeSource extends RelationProvider with CreatableRelationProvider
       case _ => TxnLake.resolve(spark, dir).getOrElse(
         throw new IllegalArgumentException(s"$dir is not a txn table (no _graft_log)"))
     }
-    val schema = StructType.fromDDL(manifest.schemaDdl)
-    if (TxnLake.snapshotHasDv(spark, manifest) || manifest.renames.nonEmpty) {
-      // MERGE-ON-READ / NAME-MAPPING fallback: outstanding deletion
-      // vectors mean the raw files over-report rows, and renamed
-      // columns mean the files' physical names differ from the logical
-      // schema — either way the file-index fast path would read the
-      // bytes wrong. Serve the snapshot through a PrunedFilteredScan
-      // that keeps the lake's planning-time muscle: pushed filters
-      // prune the MANIFEST first (zone map / bloom / partition checks
-      // stay valid under DVs — a deletion vector only removes rows, so
-      // every surviving stat is still an over-approximation), then the
-      // surviving files are read through TxnLake's own path (in-scan
-      // DV filter + logical projection) with the filters re-applied
-      // INSIDE that plan, so parquet row-group skipping and pushdown
-      // still fire within each surviving file. Catalyst re-evaluates
-      // every filter on the returned rows (unhandledFilters default),
-      // so all pruning here is conservative, never wrong.
-      new TxnDvRelation(spark, dir, schema, manifest)
-    } else {
-      val index = new TxnFileIndex(spark, dir, manifest)
+    if (TxnLake.snapshotHasDv(spark, manifest) || manifest.renames.nonEmpty)
+      // MERGE-ON-READ / NAME-MAPPING: outstanding deletion vectors mean
+      // the raw files over-report rows, and renamed columns mean the
+      // files' physical names differ from the logical schema — a
+      // relation straight over the files would read the bytes wrong.
+      // [[TxnDvRelation]] serves the snapshot through TxnLake's own read
+      // (in-scan DV filter + logical projection), which plans through
+      // the same [[TxnFileIndex]] as the branch below.
+      new TxnDvRelation(spark, dir, manifest)
+    else
       // PARTITION-AWARE MODE: when every manifest entry maps a file to
       // exactly ONE partition value of a cleanly round-trippable type,
       // the index exposes the partition column through `partitionSchema`
@@ -232,9 +223,7 @@ class TxnLakeSource extends RelationProvider with CreatableRelationProvider
       // overlapped column in its manifest position (column order is
       // unchanged for readers) while serving its VALUE from the
       // partition row, so the parquet reader never decodes it.
-      HadoopFsRelation(index, index.partitionSchema, schema, None,
-        new TxnReadOnlyParquetFormat, Map.empty[String, String])(spark)
-    }
+      TxnFileIndex.relation(spark, dir, manifest, table = true)
   }
 }
 
@@ -264,18 +253,18 @@ private[lake] class TxnReadOnlyParquetFormat extends ParquetFileFormat {
         "SQL INSERT INTO commits transactionally.")
 }
 
-/** DV / rename fallback relation: `PrunedFilteredScan` over the
-  * snapshot's manifest. Pushed filters (logical names) prune files
-  * against the manifest's zone maps, blooms and partition-value sets
-  * BEFORE any data file opens; the survivors are served through
-  * [[TxnLake.readEntries]] (the surviving files' deletion vectors
-  * decoded on the driver and applied inside the scan by row index, no
-  * join and no Spark job to build the frame; physical→logical
-  * projection) with the translatable filters re-applied inside that
-  * plan so parquet pushdown still reaches the scan. */
+/** DV / rename relation: `PrunedFilteredScan` over the snapshot's
+  * manifest. The scan is [[TxnLake.readEntries]] of the entries a
+  * [[TxnFileIndex]] over the manifest keeps for the pushed filters
+  * ([[TxnFileIndex.survivors]]: partition values, zone maps, blooms —
+  * DVs only remove rows, so every recorded stat stays a safe
+  * over-approximation), so only those entries' sidecars are decoded
+  * on the driver and applied inside the scan by row index (no join and
+  * no Spark job to build the frame; physical→logical projection). The
+  * translatable pushed filters are re-applied on top, reaching that
+  * read's own index and parquet pushdown inside each surviving file. */
 private[lake] class TxnDvRelation(spark: SparkSession,
                                   private[lake] val dir: String,
-                                  physSchema: StructType,
                                   private[lake] val manifest: TxnLake.Manifest)
     extends BaseRelation with org.apache.spark.sql.sources.PrunedFilteredScan {
   import org.apache.spark.sql.sources.{And => FAnd, EqualNullSafe => FEqNs,
@@ -284,16 +273,13 @@ private[lake] class TxnDvRelation(spark: SparkSession,
     LessThanOrEqual => FLe, Not => FNot, Or => FOr,
     StringContains => FContains, StringEndsWith => FEnds,
     StringStartsWith => FStarts}
-  import org.apache.spark.sql.functions.{col, lit}
-
-  private def logicalName(phys: String): String =
-    manifest.renames.getOrElse(phys, phys)
-  private val bloomL = manifest.bloomCol.map(logicalName)
-  private val partL = logicalName(manifest.partCol)
+  import org.apache.spark.sql.catalyst.expressions.{Contains, EndsWith, IsNotNull, Or, StartsWith}
+  import org.apache.spark.sql.functions.col
 
   override def sqlContext: SQLContext = spark.sqlContext
-  override val schema: StructType = StructType(physSchema.fields.map(f =>
-    f.copy(name = logicalName(f.name))))
+  override val schema: StructType = StructType(
+    StructType.fromDDL(manifest.schemaDdl).fields.map(f =>
+      f.copy(name = manifest.renames.getOrElse(f.name, f.name))))
 
   /** Plan-time size = the snapshot's physical bytes (VERDICT r14 #5).
     * `BaseRelation`'s default is `spark.sql.defaultSizeInBytes`
@@ -308,176 +294,128 @@ private[lake] class TxnDvRelation(spark: SparkSession,
     * `bytes` field, recorded at commit time) — zero fs calls. */
   override lazy val sizeInBytes: Long = manifest.files.map(_.bytes).sum
 
-  /** Filter value → the double unit manifest bounds use. Pushed source
-    * filters compare an attribute directly (casts block pushdown), so
-    * the value's runtime type IS the column's type: numbers for numeric
-    * columns, Timestamp/Instant (→ epoch seconds, the same `us / 1e6`
-    * as Spark's timestamp→double cast) for timestamp columns. Dates,
-    * strings, booleans abstain — their bounds share no numeric unit. */
-  private def num(v: Any): Option[Double] = v match {
-    case n: Number => Some(n.doubleValue())
-    case t: java.sql.Timestamp =>
-      Some(org.apache.spark.sql.catalyst.util.DateTimeUtils
-        .fromJavaTimestamp(t).toDouble / 1e6)
-    case i: java.time.Instant =>
-      Some(org.apache.spark.sql.catalyst.util.DateTimeUtils
-        .instantToMicros(i).toDouble / 1e6)
-    case _ => None
-  }
-
-  /** (column, [lo, hi]) implied by one pushed range-shaped conjunct on
-    * ANY column — only columns with recorded bounds actually prune. */
-  private def anyRangeOf(f: Filter): Option[(String, (Double, Double))] = {
-    def mk(a: String, r: Option[(Double, Double)]) = r.map(a -> _)
+  /** Pushed filter → Catalyst predicate, each column made by `attr`
+    * from its name in the relation's schema (unhandled shapes just
+    * don't push — Spark re-applies everything). */
+  private def toExpr(f: Filter, attr: String => Expression): Option[Expression] = {
+    def of(c: Filter): Option[Expression] = toExpr(c, attr)
+    def lit(v: Any): Option[Expression] = scala.util.Try(Literal.create(v)).toOption
     f match {
-      case FGt(a, v) => mk(a, num(v).map(x => (x, Double.MaxValue)))
-      case FGe(a, v) => mk(a, num(v).map(x => (x, Double.MaxValue)))
-      case FLt(a, v) => mk(a, num(v).map(x => (Double.MinValue, x)))
-      case FLe(a, v) => mk(a, num(v).map(x => (Double.MinValue, x)))
-      case FEq(a, v) => mk(a, num(v).map(x => (x, x)))
+      case FEq(a, v) => lit(v).map(EqualTo(attr(a), _))
+      case FEqNs(a, v) => lit(v).map(EqualNullSafe(attr(a), _))
+      case FGt(a, v) => lit(v).map(GreaterThan(attr(a), _))
+      case FGe(a, v) => lit(v).map(GreaterThanOrEqual(attr(a), _))
+      case FLt(a, v) => lit(v).map(LessThan(attr(a), _))
+      case FLe(a, v) => lit(v).map(LessThanOrEqual(attr(a), _))
       case FIn(a, vs) =>
-        val ns = vs.toSeq.flatMap(num)
-        mk(a, if (ns.isEmpty) None else Some((ns.min, ns.max)))
+        val ls = vs.toSeq.flatMap(lit)
+        if (ls.size == vs.length) Some(In(attr(a), ls)) else None
+      case FNull(a) => Some(IsNull(attr(a)))
+      case FNotNull(a) => Some(IsNotNull(attr(a)))
+      case FStarts(a, v) => lit(v).map(StartsWith(attr(a), _))
+      case FEnds(a, v) => lit(v).map(EndsWith(attr(a), _))
+      case FContains(a, v) => lit(v).map(Contains(attr(a), _))
+      case FAnd(l, r) => for { lc <- of(l); rc <- of(r) } yield And(lc, rc)
+      case FOr(l, r) => for { lc <- of(l); rc <- of(r) } yield Or(lc, rc)
+      case FNot(c) => of(c).map(Not(_))
       case _ => None
-    }
-  }
-
-  /** Reverse name mapping + bounds lookup (multi-column stats first,
-    * legacy single statsCol second). */
-  private def boundsOf(e: TxnLake.FileEntry, logical: String): Option[(Double, Double)] = {
-    val phys = manifest.renames.collectFirst { case (p, l) if l == logical => p }
-      .getOrElse(logical)
-    e.stats.get(phys).orElse {
-      if (manifest.statsCol.contains(phys)) e.zmin.zip(e.zmax) else None
-    }
-  }
-
-  /** Allowed partition-value set implied by one pushed conjunct —
-    * rendering must match the writer's `String.valueOf` (string /
-    * integral / floating only; anything else abstains). */
-  private def partSetOf(f: Filter): Option[Set[Option[String]]] = {
-    def rendered(v: Any): Option[Option[String]] = v match {
-      case null => Some(None)
-      case s: String => Some(Some(s))
-      case n @ (_: java.lang.Byte | _: java.lang.Short | _: Integer |
-                _: java.lang.Long | _: java.lang.Float | _: java.lang.Double) =>
-        Some(Some(String.valueOf(n)))
-      case b: java.lang.Boolean => Some(Some(String.valueOf(b)))
-      case _ => None
-    }
-    f match {
-      case FEq(a, v) if a == partL => rendered(v).map(Set(_))
-      case FEqNs(a, v) if a == partL => rendered(v).map(Set(_))
-      case FNull(a) if a == partL => Some(Set(None: Option[String]))
-      case FIn(a, vs) if a == partL =>
-        val rs = vs.toSeq.map(rendered)
-        if (rs.exists(_.isEmpty)) None else Some(rs.flatten.toSet)
-      case _ => None
-    }
-  }
-
-  /** Allowed string values implied by one pushed conjunct on the bloom
-    * column (a bloom proves nothing about NULL — abstain). */
-  private def bloomValuesOf(f: Filter): Option[Seq[String]] = bloomL.flatMap { bc =>
-    f match {
-      case FEq(a, v: String) if a == bc => Some(Seq(v))
-      case FIn(a, vs) if a == bc && vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        Some(vs.toSeq.map(_.asInstanceOf[String]))
-      case _ => None
-    }
-  }
-
-  /** Pushed filter → Column over the LOGICAL schema, when expressible
-    * (unhandled shapes just don't push — Spark re-applies everything). */
-  private def toColumn(f: Filter): Option[org.apache.spark.sql.Column] = f match {
-    case FEq(a, v) => Some(col(a) === lit(v))
-    case FEqNs(a, v) => Some(col(a) <=> lit(v))
-    case FGt(a, v) => Some(col(a) > lit(v))
-    case FGe(a, v) => Some(col(a) >= lit(v))
-    case FLt(a, v) => Some(col(a) < lit(v))
-    case FLe(a, v) => Some(col(a) <= lit(v))
-    case FIn(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case FNull(a) => Some(col(a).isNull)
-    case FNotNull(a) => Some(col(a).isNotNull)
-    case FStarts(a, v) => Some(col(a).startsWith(v))
-    case FEnds(a, v) => Some(col(a).endsWith(v))
-    case FContains(a, v) => Some(col(a).contains(v))
-    case FAnd(l, r) => for { lc <- toColumn(l); rc <- toColumn(r) } yield lc && rc
-    case FOr(l, r) => for { lc <- toColumn(l); rc <- toColumn(r) } yield lc || rc
-    case FNot(c) => toColumn(c).map(!_)
-    case _ => None
-  }
-
-  /** Manifest entries surviving the pushed conjuncts — mirror of
-    * TxnFileIndex.listFiles: a file survives only if every recognized
-    * conjunct MIGHT match it (DVs only shrink files, so manifest stats
-    * stay valid over-approximations). Package-visible for the spec. */
-  private[lake] def prunedEntries(filters: Seq[Filter]): Seq[TxnLake.FileEntry] = {
-    val ranges = filters.flatMap(anyRangeOf)
-    val psets = filters.flatMap(partSetOf)
-    val blooms = filters.flatMap(bloomValuesOf)
-    manifest.files.filter { e =>
-      val zoneOk = ranges.forall { case (cname, (lo, hi)) =>
-        boundsOf(e, cname).forall { case (mn, mx) => TxnLake.boundsMayOverlap(mn, mx, lo, hi) }
-      }
-      val partOk = !e.onSpec(manifest.partCol) ||
-        psets.forall(s => e.parts.exists(s.contains))
-      val bloomOk = blooms.forall(vs =>
-        vs.exists(v => TxnLake.bloomMightContain(e.bloom, v)))
-      zoneOk && partOk && bloomOk
     }
   }
 
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]):
       org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val keep = prunedEntries(filters.toIndexedSeq)
-    val base = TxnLake.readEntries(spark, dir, physSchema, keep,
-      renames = manifest.renames)
-    val filtered = filters.toSeq.flatMap(toColumn)
-      .foldLeft(base)((df, c) => df.filter(c))
+    // the entries the index keeps for the pushed filters, so only their
+    // sidecars are decoded: the filters over the files' physical
+    // names, as the index reads them. A pushed value has its column's
+    // external type; a conjunct whose literal still differs in type
+    // from its column does not resolve, and is left to the scan.
+    val physOf = StructType.fromDDL(manifest.schemaDdl).fields
+      .map(f => manifest.renames.getOrElse(f.name, f.name) -> f).toMap
+    val conjuncts = filters.toSeq.flatMap(toExpr(_, n => physOf.get(n)
+      .map(f => AttributeReference(f.name, f.dataType)())
+      .getOrElse(UnresolvedAttribute.quotedString(n)))).filter(_.resolved)
+    val kept = new TxnFileIndex(spark, dir,
+      manifest.copy(files = manifest.files.toIndexedSeq), table = false).survivors(conjuncts)
+    val base = TxnLake.readEntries(spark, dir, manifest, kept)
+    // the same filters over the read's LOGICAL names, for the analyzer
+    val pushed = filters.toSeq.flatMap(toExpr(_, UnresolvedAttribute.quotedString))
+      .map(CatalystBridge.column)
+    val filtered = pushed.foldLeft(base)((df, c) => df.filter(c))
     (if (requiredColumns.isEmpty) filtered.select()
      else filtered.select(requiredColumns.toIndexedSeq.map(col): _*)).rdd
   }
 }
 
 /** Manifest-backed `FileIndex`: the lake's planning-time file-skipping
-  * brain. `listFiles` receives the query's data filters as Catalyst
-  * conjuncts and drops every file whose manifest metadata PROVES it
-  * holds no matching row:
+  * brain, and the only one — every snapshot read plans through it (the
+  * `graft-txn` relation directly, [[TxnLake.readEntries]] and so every
+  * internal read, DML scan and [[TxnDvRelation]] beneath their
+  * projections). `listFiles` receives the query's data filters as
+  * Catalyst conjuncts and drops every file whose manifest metadata
+  * PROVES it holds no matching row:
   *
-  *  - range/equality/IN predicates on the table's STATS column test
-  *    against the file's zone map (`zmin`/`zmax`; files without bounds
-  *    — all-NULL or pre-stats — are kept conservatively);
+  *  - range/equality/IN predicates on any column with recorded bounds
+  *    (the stats column's zone map `zmin`/`zmax`, the additive
+  *    `stats` columns) test against the file's bounds (files without
+  *    bounds — all-NULL or pre-stats — are kept conservatively);
   *  - equality/IN/IS NULL predicates on the PARTITION column test
-  *    against the file's recorded partition-value set.
+  *    against the file's recorded partition-value set;
+  *  - equality/IN predicates on the BLOOM column test the file's bloom.
   *
-  * Anything unrecognizable (ORs, UDFs, other columns) simply doesn't
-  * prune — correctness never depends on the analyzer, because Spark
-  * re-evaluates the full predicate on every surviving row. Monotone
-  * numeric casts around the stats column are unwrapped, so
-  * `CAST(price AS DOUBLE) > 900` prunes like `price > 900`.
+  * Long IN lists arrive as `InSet` (Spark's OptimizeIn) and prune like
+  * short ones. Anything unrecognizable (ORs, UDFs, other columns)
+  * simply doesn't prune — correctness never depends on the analyzer,
+  * because Spark re-evaluates the full predicate on every surviving
+  * row. Monotone numeric casts around the stats column are unwrapped,
+  * so `CAST(price AS DOUBLE) > 900` prunes like `price > 900`.
   *
   * All metadata here is commit-manifest scale (file count × partition
   * values), resolved on the driver with zero data-file reads.
   */
 private[graft] object TxnFileIndex {
+  /** The snapshot relation over `manifest`'s files: stock parquet
+    * behind a [[TxnFileIndex]], in the files' physical column names
+    * (`manifest.renames` maps them to the logical ones; a reader of a
+    * renamed table projects above this relation). The schema is
+    * deep-nullable — DataFrameReader's own discipline for user schemas
+    * (its private StructType.asNullable): an evolved column may be
+    * declared non-null, but files staged BEFORE the evolution lack it
+    * and must null-fill — the vectorized reader refuses a missing
+    * non-nullable column outright. `table` is true for the relation
+    * the `graft-txn` source serves a reader (see [[TxnFileIndex]]),
+    * false for an engine-internal scan ([[TxnLake.readEntries]]). */
+  private[lake] def relation(spark: SparkSession, dir: String,
+                             manifest: TxnLake.Manifest,
+                             table: Boolean): HadoopFsRelation = {
+    def deepNullable(dt: DataType): DataType = dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = deepNullable(f.dataType), nullable = true)))
+      case a: ArrayType =>
+        a.copy(elementType = deepNullable(a.elementType), containsNull = true)
+      case m: MapType =>
+        m.copy(keyType = deepNullable(m.keyType),
+          valueType = deepNullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    val index = new TxnFileIndex(spark, dir, manifest, table)
+    HadoopFsRelation(index, index.partitionSchema,
+      deepNullable(StructType.fromDDL(manifest.schemaDdl)).asInstanceOf[StructType],
+      None, new TxnReadOnlyParquetFormat, Map.empty[String, String])(spark)
+  }
+
   /** The per-entry manifest-pruning predicate, SHARED by the eager
     * driver-side filter and the lazy distributed prune (one code path
     * — the two modes cannot diverge). Takes only plain serializable
     * values so the closure ships to executors without dragging the
-    * index or the session along. */
+    * index or the session along. Column names are the files' physical
+    * names, as the index's relation carries them. */
   private[lake] def entrySurvives(f: TxnLake.FileEntry, partCol: String,
-      statsCol: Option[String], renames: Map[String, String],
+      statsCol: Option[String],
       colRanges: Seq[(String, (Double, Double))],
       partSets: Seq[Set[Option[String]]],
       bloomSets: Seq[Seq[String]]): Boolean = {
-    def boundsOf(logical: String): Option[(Double, Double)] = {
-      val phys = renames.collectFirst { case (p, l) if l == logical => p }
-        .getOrElse(logical)
-      f.stats.get(phys).orElse {
-        if (statsCol.contains(phys)) f.zmin.zip(f.zmax) else None
-      }
-    }
+    def boundsOf(c: String): Option[(Double, Double)] =
+      f.stats.get(c).orElse(if (statsCol.contains(c)) f.zmin.zip(f.zmax) else None)
     val zoneOk = colRanges.forall { case (cname, (lo, hi)) =>
       boundsOf(cname).forall { case (mn, mx) => TxnLake.boundsMayOverlap(mn, mx, lo, hi) }
     }
@@ -503,14 +441,11 @@ private[graft] object TxnFileIndex {
     * about what the deserialization does); `None` when nothing
     * translates, so callers skip the extra Filter node entirely. */
   private[lake] def planPrefilter(partCol: String, statsCol: Option[String],
-      renames: Map[String, String],
       colRanges: Seq[(String, (Double, Double))],
       partSets: Seq[Set[Option[String]]],
       defaultSpec: String): Option[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.{functions => Fn}
-    val zoneTests = colRanges.map { case (cname, (lo, hi)) =>
-      val phys = renames.collectFirst { case (p, l) if l == cname => p }
-        .getOrElse(cname)
+    val zoneTests = colRanges.map { case (phys, (lo, hi)) =>
       // boundsOf mirror: per-column stats when recorded, the zone map
       // only when the range column IS the stats column, else no bounds
       val pos = Fn.array_position(Fn.col("statsCols"), phys)
@@ -584,36 +519,21 @@ private[graft] object TxnFileIndex {
   }
 }
 
-/** Minimal [[FileIndex]] over an EXPLICIT entry list — the relation
-  * [[TxnLake.readEntries]] plans its snapshot reads through. No
-  * pruning logic of its own (Catalyst's FileSourceStrategy still
-  * pushes filters/column pruning into the parquet scan); its whole
-  * point is that [[TxnFileIndex.statusesFor]] resolves the statuses
-  * from manifest-recorded byte sizes with zero fs calls, where a
-  * `spark.read.parquet(paths: _*)` form pays one driver listing per
-  * file per snapshot read (~2 ms each — several hundred ms per commit
-  * op on a 100-file table, unbounded at 100 TB). */
-private[lake] class ExplicitEntriesIndex(spark: SparkSession, root: Path,
-                                         entries: Seq[TxnLake.FileEntry])
-    extends FileIndex {
-  // entry order preserved: deterministic scan order
-  private val ordered: Array[FileStatus] = {
-    val byRel = TxnFileIndex.statusesFor(spark, root, entries)
-    entries.map(e => byRel(e.path)).toArray
-  }
-  override def rootPaths: Seq[Path] = Seq(root)
-  override def partitionSchema: StructType = new StructType()
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty, ordered))
-  override def inputFiles: Array[String] = ordered.map(_.getPath.toString)
-  override def sizeInBytes: Long = ordered.map(_.getLen).sum
-  override def refresh(): Unit = () // snapshot-bound by design
-}
-
+/** `table`: this index is the one the `graft-txn` source serves a
+  * reader — the table (or its pinned version) as addressed, which is
+  * what the table-level plan rules describe: [[GeneratedPartitionPruning]]
+  * leans on the generated-column invariant, which holds for the table
+  * the columns were declared on, not for every entry set an engine
+  * scan reads (an older version, a restored one), and [[TxnCboStats]]
+  * attaches table-level ANALYZE statistics and the DV-adjusted row
+  * count. Internal scans ([[TxnLake.readEntries]]: every
+  * `TxnLake.read`, DML scan, feed read-back, and the scan beneath
+  * [[TxnDvRelation]]) pass false; both rules leave them alone. Pruning
+  * does not look at it. */
 private[graft] class TxnFileIndex(spark: SparkSession,
                                   private[lake] val dir: String,
-                                  private[lake] val manifest: TxnLake.Manifest)
+                                  private[lake] val manifest: TxnLake.Manifest,
+                                  private[lake] val table: Boolean = true)
     extends FileIndex {
 
   private val root = new Path(dir)
@@ -694,49 +614,57 @@ private[graft] class TxnFileIndex(spark: SparkSession,
 
   override def refresh(): Unit = () // snapshot-bound by design
 
-  override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+  /** The entries that may hold a row satisfying every conjunct in
+    * `filters` — Catalyst conjuncts over this relation's columns — by
+    * partition value, zone map and bloom. */
+  private[lake] def survivors(filters: Seq[Expression]): Seq[TxnLake.FileEntry] = {
+    // an IN list longer than spark.sql.optimizer.inSetConversionThreshold
+    // arrives as the InSet OptimizeIn made of it: read it as that In,
+    // so every analyzer below sees one shape whatever the list length
+    def asIn(e: Expression): Expression = e match {
+      case InSet(a, hset) => In(a, hset.toSeq.map(Literal(_, a.dataType)))
+      case other => other
+    }
+    val conjuncts = filters.map(asIn)
     // (column, [lo, hi]) for every range-shaped conjunct on ANY column —
     // only columns with recorded bounds actually prune
-    val colRanges = dataFilters.flatMap(anyRangeOf)
-    // flat mode: partition predicates arrive as dataFilters and the
-    // bespoke analyzer recognizes eq/IN/IS NULL shapes. In
-    // partition-aware mode they arrive as partitionFilters instead —
-    // the recognizable shapes still feed the (distributed) prune, and
-    // EVERY partition predicate is additionally evaluated exactly on
-    // the typed PartitionDirectory values below.
-    val partSets =
-      (if (partField.isEmpty) dataFilters else partitionFilters)
-        .flatMap(partSetOf(_, manifest.partCol))
+    val colRanges = conjuncts.flatMap(anyRangeOf)
+    // eq/IN/IS NULL shapes on the partition column; in partition-aware
+    // mode listFiles additionally evaluates EVERY partition predicate
+    // exactly on the typed PartitionDirectory values
+    val partSets = conjuncts.flatMap(partSetOf(_, manifest.partCol))
     // equality/IN on the BLOOM column: each conjunct yields the allowed
     // value set; a file survives a conjunct if its bloom might contain
     // at least one of the values (absent bloom = conservatively yes)
     val bloomSets = manifest.bloomCol.toSeq.flatMap(bc =>
-      dataFilters.flatMap(bloomValuesOf(_, bc)))
-    val (keep, statusOf): (Seq[TxnLake.FileEntry], String => Option[FileStatus]) =
-      lazyStats match {
-        case Some((l, _)) =>
-          // capture ONLY plain values — the predicate ships to executors
-          val pc = manifest.partCol
-          val sc = manifest.statsCol
-          val rn = manifest.renames
-          val cr = colRanges
-          val ps = partSets
-          val bs = bloomSets
-          // codegen-domain relaxation of the same conjuncts: kills
-          // most non-survivors before the typed per-row decode (the
-          // typed predicate still decides every survivor).
-          val pre = TxnFileIndex.planPrefilter(pc, sc, rn, cr, ps, l.defaultSpec)
-          val survivors = l.prunedEntries(spark,
-            f => TxnFileIndex.entrySurvives(f, pc, sc, rn, cr, ps, bs), pre)
-          val st = TxnFileIndex.statusesFor(spark, root, survivors)
-          (survivors, st.get)
-        case None =>
-          val survivors = manifest.files.filter(f =>
-            TxnFileIndex.entrySurvives(f, manifest.partCol, manifest.statsCol,
-              manifest.renames, colRanges, partSets, bloomSets))
-          (survivors, statusByRel.get)
-      }
+      conjuncts.flatMap(bloomValuesOf(_, bc)))
+    lazyStats match {
+      case Some((l, _)) =>
+        // capture ONLY plain values — the predicate ships to executors
+        val pc = manifest.partCol
+        val sc = manifest.statsCol
+        // codegen-domain relaxation of the same conjuncts: kills most
+        // non-survivors before the typed per-row decode (the typed
+        // predicate still decides every survivor).
+        val pre = TxnFileIndex.planPrefilter(pc, sc, colRanges, partSets, l.defaultSpec)
+        l.prunedEntries(spark,
+          f => TxnFileIndex.entrySurvives(f, pc, sc, colRanges, partSets, bloomSets), pre)
+      case None =>
+        manifest.files.filter(f =>
+          TxnFileIndex.entrySurvives(f, manifest.partCol, manifest.statsCol,
+            colRanges, partSets, bloomSets))
+    }
+  }
+
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    // flat mode: partition predicates arrive as dataFilters; in
+    // partition-aware mode as partitionFilters. Either way every one
+    // is a conjunct of the query.
+    val keep = survivors(partitionFilters ++ dataFilters)
+    val statusOf: String => Option[FileStatus] =
+      if (lazyStats.isEmpty) statusByRel.get
+      else TxnFileIndex.statusesFor(spark, root, keep).get
     partField match {
       case None =>
         Seq(PartitionDirectory(InternalRow.empty,
@@ -848,7 +776,7 @@ private[graft] class TxnFileIndex(spark: SparkSession,
   /** Allowed partition-value set implied by one conjunct on the
     * partition column. Rendering matches the writer's `String.valueOf`
     * for the types whose Catalyst literal prints identically (string,
-    * integral, floating) — anything else abstains. */
+    * integral, floating, boolean) — anything else abstains. */
   private def partSetOf(e: Expression, partCol: String): Option[Set[Option[String]]] = {
     def isPart(a: Expression): Boolean = a match {
       case ar: AttributeReference => ar.name == partCol
@@ -859,6 +787,7 @@ private[graft] class TxnFileIndex(spark: SparkSession,
       case (v, StringType) => Some(Some(v.toString))
       case (v: Number, ByteType | ShortType | IntegerType | LongType |
                         FloatType | DoubleType) => Some(Some(String.valueOf(v)))
+      case (v: java.lang.Boolean, BooleanType) => Some(Some(String.valueOf(v)))
       case _ => None // timestamps/decimals render engine-specifically: abstain
     }
     e match {
@@ -867,6 +796,9 @@ private[graft] class TxnFileIndex(spark: SparkSession,
       case EqualNullSafe(a, l: Literal) if isPart(a) => rendered(l).map(Set(_))
       case EqualNullSafe(l: Literal, a) if isPart(a) => rendered(l).map(Set(_))
       case IsNull(a) if isPart(a) => Some(Set(None: Option[String]))
+      // the optimizer folds `flag = true` / `flag = false` into these
+      case a if isPart(a) && a.dataType == BooleanType => Some(Set(Some("true")))
+      case Not(a) if isPart(a) && a.dataType == BooleanType => Some(Set(Some("false")))
       case In(a, ls) if isPart(a) && ls.forall(_.isInstanceOf[Literal]) =>
         val vs = ls.map(l => rendered(l.asInstanceOf[Literal]))
         if (vs.exists(_.isEmpty)) None else Some(vs.flatten.toSet)

@@ -84,9 +84,9 @@ private[graft] class TxnTableStream(spark: SparkSession, dir: String,
   private val sourceManifest: TxnLake.Manifest =
     TxnLake.resolve(fs, dir).getOrElse(throw new IllegalArgumentException(
       s"$dir is not a txn table (no _graft_log)"))
-  private val physSchema = StructType.fromDDL(sourceManifest.schemaDdl)
-  override val schema: StructType = StructType(physSchema.fields.map(f =>
-    f.copy(name = sourceManifest.renames.getOrElse(f.name, f.name))))
+  override val schema: StructType = StructType(
+    StructType.fromDDL(sourceManifest.schemaDdl).fields.map(f =>
+      f.copy(name = sourceManifest.renames.getOrElse(f.name, f.name))))
 
   startingVersion.foreach { sv =>
     require(sv >= 0, s"startingVersion must be >= 0, got $sv")
@@ -280,8 +280,7 @@ private[graft] class TxnTableStream(spark: SparkSession, dir: String,
       if (entries.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else TxnLake.readEntries(spark, dir, physSchema, entries,
-        renames = sourceManifest.renames)
+      else TxnLake.readEntries(spark, dir, sourceManifest, entries)
     org.apache.spark.sql.graft.StreamingFrameBridge.asStreaming(spark, batch)
   }
 

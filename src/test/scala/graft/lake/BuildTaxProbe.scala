@@ -103,9 +103,8 @@ object BuildTaxProbe {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(
         spark.sparkContext.hadoopConfiguration)
       val base = phase("  resolve")(TxnLake.resolve(spark, dir).get)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(base.schemaDdl)
       val live = phase("  readEntries plan")(
-        TxnLake.readEntries(spark, dir, schema, base.files, renames = base.renames))
+        TxnLake.readEntries(spark, dir, base, base.files))
       val zcols = Seq("l_extendedprice", "l_quantity", "l_discount")
       val b = phase("  min/max agg job") {
         live.agg(
@@ -203,9 +202,8 @@ object BuildTaxProbe {
         spark.sparkContext.hadoopConfiguration)
       val base = phase("  resolve")(TxnLake.resolve(spark, dir2).get)
       println(s"[build-tax]   files: ${base.files.size}, dv'd: ${base.files.count(_.dv.nonEmpty)}")
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(base.schemaDdl)
       val live = phase("  readEntries(keepMeta)")(
-        TxnLake.readEntries(spark, dir2, schema, base.files, keepMeta = true))
+        TxnLake.readEntries(spark, dir2, base, base.files, keepMeta = true))
       val dvAbs = dir2 + "/_graft_dv/cprobe"
       phase("  DV write job") {
         live.filter(col("id") % 10 === 4)

@@ -176,8 +176,7 @@ class DeletionVectorSpec extends AnyFunSuite with SparkTestSession {
       val m = TxnLake.resolveVersion(spark, dir, v)
       val want = reference(dir, m)
       val logical = want.columns.filterNot(_.startsWith("__txn_"))
-      val got = TxnLake.readEntries(spark, dir, StructType.fromDDL(m.schemaDdl), m.files,
-        keepMeta = true, renames = m.renames)
+      val got = TxnLake.readEntries(spark, dir, m, m.files, keepMeta = true)
       assert(rowsOf(got.select(want.columns.map(col).toIndexedSeq: _*)) === rowsOf(want),
         s"$tag v$v: readEntries")
       val wantRows = rowsOf(want.select(logical.map(col).toIndexedSeq: _*))

@@ -110,7 +110,7 @@ class LazyCkptPlanningSpec extends AnyFunSuite with SparkTestSession {
     // typed predicate — a row it drops that entrySurvives keeps would
     // silently exclude a live file from the scan. Enumerate adversarial
     // row shapes (null partition values, off-spec files, missing
-    // bounds, stats-map vs zone-map sources, renames) × predicate
+    // bounds, stats-map vs zone-map sources) × predicate
     // shapes and assert the implication on every pair.
     val rnd = new scala.util.Random(42)
     val partVals = Seq("p0", "p1", "p2", null)
@@ -130,11 +130,10 @@ class LazyCkptPlanningSpec extends AnyFunSuite with SparkTestSession {
         statsCols = sc, statsMin = lo, statsMax = lo.map(_ + 30),
         base = None, rows = 1L, bytes = 1L, doomed = 0L, mtime = 1L)
     }
-    val renames = Map("p_phys" -> "renamed")
     val scenarios = Seq(
       // (partCol, statsCol, colRanges, partSets)
       ("part", Some("price"), Seq("price" -> (10.0, 40.0)), Nil),
-      ("part", Some("price"), Seq("a" -> (0.0, 20.0), "renamed" -> (50.0, 60.0)),
+      ("part", Some("price"), Seq("a" -> (0.0, 20.0), "p_phys" -> (50.0, 60.0)),
         Seq(Set(Option("p1")))),
       ("part", None, Seq("missing" -> (0.0, 1.0)),
         Seq(Set(Option("p0"), Option.empty[String]))),
@@ -143,7 +142,7 @@ class LazyCkptPlanningSpec extends AnyFunSuite with SparkTestSession {
       ("part", None, Nil, Seq(Set.empty[Option[String]])))
     val df = spark.createDataset(rows)(TxnLake.ckptRowEncoder).toDF()
     scenarios.foreach { case (pc, statsCol, ranges, psets) =>
-      val pre = TxnFileIndex.planPrefilter(pc, statsCol, renames, ranges,
+      val pre = TxnFileIndex.planPrefilter(pc, statsCol, ranges,
         psets, defaultSpec = "part")
       assert(pre.nonEmpty === (ranges.nonEmpty || psets.nonEmpty))
       val keptByPre: Set[String] = pre match {
@@ -151,7 +150,7 @@ class LazyCkptPlanningSpec extends AnyFunSuite with SparkTestSession {
         case None => rows.map(_.path).toSet
       }
       val keptByTyped = rows.filter(r => TxnFileIndex.entrySurvives(
-        TxnLake.fromCkptRow(r, "part"), pc, statsCol, renames, ranges, psets,
+        TxnLake.fromCkptRow(r, "part"), pc, statsCol, ranges, psets,
         Nil)).map(_.path)
       val dropped = keptByTyped.filterNot(keptByPre)
       assert(dropped.isEmpty,

@@ -43,10 +43,10 @@ object LazyPrefilterPlanDump {
     val ranges = Seq("price" -> (1000.0, Double.MaxValue))
     val psets = Seq(Set(Option("p2")))
     // plain captures only — the typed predicate ships to executors
-    val (pc, sc, rn, ds) = (m.partCol, m.statsCol, m.renames, l.defaultSpec)
+    val (pc, sc, ds) = (m.partCol, m.statsCol, l.defaultSpec)
     val typed = (f: TxnLake.FileEntry) =>
-      TxnFileIndex.entrySurvives(f, pc, sc, rn, ranges, psets, Nil)
-    val pre = TxnFileIndex.planPrefilter(pc, sc, rn, ranges, psets, ds)
+      TxnFileIndex.entrySurvives(f, pc, sc, ranges, psets, Nil)
+    val pre = TxnFileIndex.planPrefilter(pc, sc, ranges, psets, ds)
 
     // mirror prunedEntries' exact chain (same encoder, same order of
     // operations) so the dumped plan IS the prune job's plan

@@ -64,15 +64,12 @@ class MultiStatsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("the DV fallback prunes on multi-column stats too") {
-    import org.apache.spark.sql.sources.GreaterThanOrEqual
     val dir = freshTable()
     TxnLake.deleteWhere(spark, dir, col("id") === "p1-0-0")
     val m = TxnLake.resolve(spark, dir).get
     assert(m.files.exists(_.dv.nonEmpty))
-    val rel = new TxnDvRelation(spark, dir,
-      org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl), m)
-    val all = rel.prunedEntries(Nil).size
-    assert(rel.prunedEntries(Seq(GreaterThanOrEqual("qty", 2000L))).size < all)
+    val all = LakeScans.dvScanFiles(lake(dir)).size
+    assert(LakeScans.dvScanFiles(lake(dir).filter(col("qty") >= 2000L)).size < all)
     assert(lake(dir).filter(col("qty") >= 2000L).count() === 20)
     assert(lake(dir).count() === 59)
   }

@@ -1,11 +1,8 @@
 package graft.lake
 
 import graft.SparkTestSession
+import graft.lake.LakeScans.dvScanFiles
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec}
-import org.apache.spark.sql.execution.datasources.FileScanRDD
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,31 +32,6 @@ class TxnBloomSpec extends AnyFunSuite with SparkTestSession {
 
   private def lake(dir: String): DataFrame =
     spark.read.format("graft-txn").load(dir)
-
-  /** The data files (table-relative paths) the scans that
-    * `TxnDvRelation.buildScan` built for `df` open: the file partitions
-    * of the parquet scan under each relation scan's RDD. */
-  private def dvScanFiles(df: DataFrame): Set[String] = {
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val scans = plan.collect {
-      case s: RowDataSourceScanExec if s.relation.isInstanceOf[TxnDvRelation] => s
-    }
-    assert(scans.nonEmpty, s"expected a TxnDvRelation scan in the plan:\n$plan")
-    def files(rdd: RDD[_]): Seq[String] = rdd match {
-      case f: FileScanRDD => f.filePartitions.flatMap(_.files.map(_.toPath.toString))
-      case other => other.dependencies.flatMap(d => files(d.rdd))
-    }
-    val root = new org.apache.hadoop.fs.Path(scans.head.relation
-      .asInstanceOf[TxnDvRelation].dir).toUri.getPath
-    scans.flatMap(s => files(s.rdd)).map { p =>
-      val abs = new org.apache.hadoop.fs.Path(p).toUri.getPath
-      abs.stripPrefix(root).stripPrefix("/")
-    }.toSet
-  }
-
 
   test("manifest carries a bloom per file; driver probe matches the staged bits") {
     val dir = clerkTable()

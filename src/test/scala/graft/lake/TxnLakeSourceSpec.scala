@@ -133,18 +133,16 @@ class TxnLakeSourceSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("DV fallback keeps manifest pruning: files drop BEFORE any data read") {
-    import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual}
     val dir = priceTable()
     TxnLake.deleteWhere(spark, dir, col("id") === "p1-0")
     val m = TxnLake.resolve(spark, dir).get
     assert(m.files.exists(_.dv.nonEmpty), "precondition: a DV is outstanding")
-    val rel = new TxnDvRelation(spark, dir,
-      org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl), m)
-    val all = rel.prunedEntries(Nil).size
+    // the files the DV relation's scan opens, planned before any read
+    val all = LakeScans.dvScanFiles(lake(dir)).size
     assert(all >= 3)
-    assert(rel.prunedEntries(Seq(GreaterThanOrEqual("price", 2000.0))).size < all,
+    assert(LakeScans.dvScanFiles(lake(dir).filter(col("price") >= 2000.0)).size < all,
       "zone maps must keep pruning under outstanding DVs")
-    assert(rel.prunedEntries(Seq(EqualTo("part", "p2"))).size < all,
+    assert(LakeScans.dvScanFiles(lake(dir).filter(col("part") === "p2")).size < all,
       "partition values must keep pruning under outstanding DVs")
     // pruning is conservative: results through the fallback stay exact
     assert(lake(dir).filter(col("price") >= 2000.0).count() === 20)
@@ -153,14 +151,10 @@ class TxnLakeSourceSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("rename fallback prunes on stats/partition predicates and serves logical names") {
-    import org.apache.spark.sql.sources.EqualTo
     val dir = priceTable()
     TxnLake.renameColumn(spark, dir, "id", "doc_id")
-    val m = TxnLake.resolve(spark, dir).get
-    val rel = new TxnDvRelation(spark, dir,
-      org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl), m)
-    val all = rel.prunedEntries(Nil).size
-    assert(rel.prunedEntries(Seq(EqualTo("part", "p3"))).size < all,
+    val all = LakeScans.dvScanFiles(lake(dir)).size
+    assert(LakeScans.dvScanFiles(lake(dir).filter(col("part") === "p3")).size < all,
       "a rename elsewhere must not disable partition pruning")
     val got = lake(dir).filter(col("part") === "p3").select("doc_id")
     assert(got.columns.toSeq === Seq("doc_id"))
